@@ -1,9 +1,6 @@
 """Extra measurements for the optimization round (bench.py is frozen).
 
 Modes (first argv):
-  build_phases  — CB_BUILD_VERBOSE phase timings for the two build shapes
-                  the bench exercises (headline 20k-doc corpus @ n_buckets=32,
-                  gate-shaped 5k-doc documents @ n_buckets=8 positions=True)
   query NAME [N] — time one declared query N times (noop-style: .collect()
                   exactly like bench.py) and print each sample
   jobs          — count Spark jobs per build via a job-start listener
@@ -27,52 +24,6 @@ from conveyorbelt_spark.session import get_spark
 def _spark():
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     return get_spark("bench_extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
-
-
-def build_phases() -> None:
-    os.environ["CB_BUILD_VERBOSE"] = "1"
-    from conveyorbelt_spark.corpus import corpus_spark_df
-    from conveyorbelt_spark.index.build import build_index, write_docstore
-
-    spark = _spark()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    # --- headline shape: 20k synthetic docs, n_buckets=32 (bench.py line 53)
-    corpus_dir = tempfile.mkdtemp(prefix="cbx_corpus_")
-    idx = tempfile.mkdtemp(prefix="cbx_idx_")
-    try:
-        corpus_spark_df(spark, 20000, seed=42, n_parts=64).write.mode(
-            "overwrite"
-        ).parquet(corpus_dir)
-        docs = spark.read.parquet(corpus_dir)
-        for i in range(2):
-            shutil.rmtree(idx, ignore_errors=True)
-            t0 = time.time()
-            print(f"--- headline build (run {i}) ---", flush=True)
-            build_index(spark, docs, idx, n_buckets=32)
-            print(f"headline build total: {time.time() - t0:.2f}s", flush=True)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-        shutil.rmtree(corpus_dir, ignore_errors=True)
-
-    # --- gate shape: sf documents, n_buckets=8, positions, docstore
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    idx = tempfile.mkdtemp(prefix="cbx_idx2_")
-    try:
-        for i in range(2):
-            shutil.rmtree(idx, ignore_errors=True)
-            t0 = time.time()
-            print(f"--- gate build (run {i}) ---", flush=True)
-            build_index(spark, docs, idx, url_col=None, n_buckets=8, positions=True)
-            t1 = time.time()
-            print(f"gate build total: {t1 - t0:.2f}s", flush=True)
-            write_docstore(spark, docs, idx, url_col=None, extra_cols=("text",))
-            print(f"gate docstore: {time.time() - t1:.2f}s", flush=True)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
-    spark.stop()
 
 
 def query(name: str, n: int = 3) -> None:
@@ -116,12 +67,10 @@ def jobs() -> None:
 
 
 if __name__ == "__main__":
-    mode = sys.argv[1] if len(sys.argv) > 1 else "build_phases"
-    if mode == "build_phases":
-        build_phases()
-    elif mode == "query":
+    mode = sys.argv[1] if len(sys.argv) > 1 else None
+    if mode == "query":
         query(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 3)
     elif mode == "jobs":
         jobs()
     else:
-        raise SystemExit(f"unknown mode {mode}")
+        raise SystemExit(f"usage: bench_extra.py query NAME [N] | jobs (got {mode!r})")

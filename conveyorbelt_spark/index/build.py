@@ -50,12 +50,21 @@ re-read of the whole index (the per-run partition count grows until
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import json
 import os
+import shutil
 import time
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -77,22 +86,19 @@ DEFAULT_TERM_BUCKETS = 64
 # the builder stage's AQE-coalesced task count is ~n_term_buckets or less
 # (postings bytes ≈ docs × a few hundred B vs AQE's 1 MB min partition →
 # ~1250 docs of postings per task), so files-per-tb-dir stays a handful
-# without the extra shuffle (env CB_REORG_DOCS_PER_BUCKET overrides)
-_REORG_DOCS_PER_BUCKET = int(os.environ.get("CB_REORG_DOCS_PER_BUCKET", "1250"))
+# without the extra shuffle
+_REORG_DOCS_PER_BUCKET = 1250
 
 
-def _adaptive_term_buckets(n_docs: int, cap: int | None = None) -> int:
+def _adaptive_term_buckets(n_docs: int) -> int:
     """Scale the term-hash bucket count with corpus size instead of pinning
     it to one constant (guide §2: partitioning must be derived from input
     size, not tuned to a fixed cluster).  Target ~2.5k docs of postings per
-    bucket, power of two, floor 8, capped at DEFAULT_TERM_BUCKETS (override
-    the cap for very large corpora via ``CB_TERM_BUCKETS`` or the explicit
-    ``n_term_buckets`` argument).  Query-side pruning reads the chosen value
-    from stats.json, so any value is self-consistent."""
-    if cap is None:
-        cap = int(os.environ.get("CB_TERM_BUCKETS", str(DEFAULT_TERM_BUCKETS)))
+    bucket, power of two, floor 8, capped at DEFAULT_TERM_BUCKETS (the
+    explicit ``n_term_buckets`` argument overrides it).  Query-side pruning
+    reads the chosen value from stats.json, so any value is self-consistent."""
     b = 8
-    while b < cap and n_docs > b * 2500:
+    while b < DEFAULT_TERM_BUCKETS and n_docs > b * 2500:
         b *= 2
     return b
 
@@ -117,10 +123,8 @@ def _dyn_overwrite(df: DataFrame, path: str, partition_cols: tuple[str, ...]) ->
 
 def _run_dirs(root: str) -> list[tuple[str, str]]:
     """[(dir, run_value)] for every run=... partition directory under root."""
-    import glob as _glob
-
     out = []
-    for d in _glob.glob(os.path.join(root, "**", "run=*"), recursive=True):
+    for d in glob.glob(os.path.join(root, "**", "run=*"), recursive=True):
         if os.path.isdir(d):
             out.append((d, os.path.basename(d).split("=", 1)[1]))
     return out
@@ -129,8 +133,6 @@ def _run_dirs(root: str) -> list[tuple[str, str]]:
 def _clean_uncommitted_runs(root: str, committed: set[str]) -> int:
     """Delete run partitions that have no manifest commit (the crash window
     between a segment write and its manifest append). Returns dirs removed."""
-    import shutil
-
     n = 0
     for d, run_val in _run_dirs(root):
         if run_val not in committed:
@@ -139,83 +141,30 @@ def _clean_uncommitted_runs(root: str, committed: set[str]) -> int:
     return n
 
 
-def _manifest_for_run(
-    delta_blocks: DataFrame,
-    doc_stats: DataFrame,
-    run_id: str,
-    run_val: str,
-) -> DataFrame:
-    """Per-bucket lineage row set for one run: block metadata aggregates
-    (from the run's own blocks — never a whole-index re-read) joined with
-    the run's (bucket, n_docs, sum_dl) doc ledger. ``sum_dl``/``n_docs``
-    feed the stats.json derivation (Σ over committed manifest rows)."""
-    blk = delta_blocks.groupBy("bucket").agg(
-        F.countDistinct("term").alias("n_terms"),
-        F.count("*").alias("n_blocks"),
-        F.sum("n").alias("n_postings"),
-        F.sum(
-            F.crc32(F.concat_ws("|", "term", "blk", "n", "min_doc", "max_doc"))
-        ).alias("checksum"),
-    )
-    man = blk.join(doc_stats, "bucket", "full_outer")
-    zero = {c: 0 for c in ("n_terms", "n_blocks", "n_postings", "checksum", "n_docs", "sum_dl")}
-    return (
-        man.na.fill(zero)
-        .withColumn("committed_at", F.lit(time.time()).cast("timestamp"))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("run", F.lit(run_val))
-    )
-
-
-MANIFEST_COLS = (
-    "bucket", "n_terms", "n_blocks", "n_postings", "checksum",
-    "sum_dl", "n_docs", "committed_at", "run_id", "run",
+MANIFEST_SCHEMA = pa.schema(
+    [
+        ("bucket", pa.int32()),
+        ("n_terms", pa.int64()),
+        ("n_blocks", pa.int64()),
+        ("n_postings", pa.int64()),
+        ("checksum", pa.int64()),
+        ("sum_dl", pa.int64()),
+        ("n_docs", pa.int64()),
+        ("committed_at", pa.timestamp("ns")),
+        ("run_id", pa.string()),
+        ("run", pa.string()),
+    ]
 )
-
-
-def _append_manifest(man_dir: str, rows: list[dict]) -> None:
-    """Driver-side manifest append. The ledger is runs × buckets rows —
-    tiny — so the commit is one parquet file written directly with pyarrow
-    instead of a Spark job chain (agg → join → write). Schema is
-    byte-compatible with the Spark writer (int96 timestamps), so Spark and
-    pyarrow readers merge old and new files transparently.
-    ``committed_at`` in each row is epoch seconds (float)."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(man_dir, exist_ok=True)
-    schema = pa.schema(
-        [
-            ("bucket", pa.int32()),
-            ("n_terms", pa.int64()),
-            ("n_blocks", pa.int64()),
-            ("n_postings", pa.int64()),
-            ("checksum", pa.int64()),
-            ("sum_dl", pa.int64()),
-            ("n_docs", pa.int64()),
-            ("committed_at", pa.timestamp("ns")),
-            ("run_id", pa.string()),
-            ("run", pa.string()),
-        ]
-    )
-    arrays = []
-    for field in schema:
-        vals = [r[field.name] for r in rows]
-        if field.name == "committed_at":
-            vals = [int(v * 1e9) for v in vals]
-        arrays.append(pa.array(vals, type=field.type))
-    tbl = pa.Table.from_arrays(arrays, schema=schema)
-    path = os.path.join(man_dir, f"part-{uuid.uuid4().hex}.parquet")
-    pq.write_table(tbl, path, use_deprecated_int96_timestamps=True)
+_BLOCK_COUNTS = ("n_terms", "n_blocks", "n_postings", "checksum")
 
 
 def _delta_manifest_rows(delta_blocks: DataFrame) -> list:
-    """One per-bucket metadata aggregation over a delta run's blocks —
-    the collectable half of the manifest commit (≤ n_buckets rows).
+    """One per-bucket metadata aggregation over a run's blocks — the
+    collectable half of the manifest commit (≤ n_buckets rows), checksum
+    over block METADATA only (no read of the binary posting columns).
     ``sum_dl`` = Σ sum_tf over main-field blocks (keyword/extra-field
-    postings excluded, same rule as _manifest_for_run)."""
+    postings excluded: keyword tf is 0 and extra analyzed fields keep
+    their own length stats)."""
     return (
         delta_blocks.groupBy("bucket")
         .agg(
@@ -235,6 +184,146 @@ def _delta_manifest_rows(delta_blocks: DataFrame) -> list:
     )
 
 
+def _manifest_for_run(
+    delta_rows: list, ledger: dict[int, tuple[int, int]], run_id: str, run_val: str,
+) -> list[dict]:
+    """Per-bucket lineage rows for one run: its block aggregates
+    (``_delta_manifest_rows``) beside its doc ledger ``{bucket: (n_docs,
+    sum_dl)}``. A bucket in either side gets a row, zeros where the other
+    side has none; ``n_docs``/``sum_dl`` feed the stats.json derivation
+    (Σ over committed manifest rows)."""
+    blk = {int(r["bucket"]): r for r in delta_rows}
+    now = time.time()
+    rows = []
+    for bkt in sorted(set(blk) | set(ledger)):
+        a = blk.get(bkt)
+        n_docs, sum_dl = ledger.get(bkt, (0, 0))
+        rows.append(
+            {
+                **{c: int(a[c]) if a else 0 for c in _BLOCK_COUNTS},
+                "bucket": bkt,
+                "sum_dl": int(sum_dl),
+                "n_docs": int(n_docs),
+                "committed_at": now,
+                "run_id": run_id,
+                "run": run_val,
+            }
+        )
+    return rows
+
+
+def _fold_markers(run_ids, run_val: str) -> list[dict]:
+    """bucket=-1 zero rows keeping folded run_ids known to
+    ``_committed_runs`` (a replayed foreachBatch epoch stays a no-op after
+    a compaction) without counting toward stats."""
+    now = time.time()
+    return [
+        {**dict.fromkeys(_BLOCK_COUNTS + ("sum_dl", "n_docs"), 0),
+         "bucket": -1, "committed_at": now, "run_id": rid, "run": run_val}
+        for rid in sorted(run_ids)
+    ]
+
+
+def _manifest_table(rows: list[dict]) -> pa.Table:
+    """Manifest rows (``committed_at`` in epoch seconds) → an Arrow table."""
+    arrays = []
+    for field in MANIFEST_SCHEMA:
+        vals = [r[field.name] for r in rows]
+        if field.name == "committed_at":
+            vals = [int(v * 1e9) for v in vals]
+        arrays.append(pa.array(vals, type=field.type))
+    return pa.Table.from_arrays(arrays, schema=MANIFEST_SCHEMA)
+
+
+def _write_manifest_file(man_dir: str, tbl: pa.Table) -> None:
+    """One parquet part file, int96 timestamps (the Spark writer's
+    encoding, so older Spark-written manifests read back alongside)."""
+
+    os.makedirs(man_dir, exist_ok=True)
+    path = os.path.join(man_dir, f"part-{uuid.uuid4().hex}.parquet")
+    pq.write_table(tbl, path, use_deprecated_int96_timestamps=True)
+
+
+def _append_manifest(man_dir: str, rows: list[dict]) -> None:
+    """THE commit of a build group or batch: the manifest has one
+    driver-side writer — the ledger is runs × buckets rows, tiny — so a
+    commit is one parquet file appended with pyarrow."""
+    _write_manifest_file(man_dir, _manifest_table(rows))
+
+
+def _read_manifest(man_dir: str, columns: list[str] | None = None) -> pa.Table:
+    """The committed manifest ledger as one Arrow table (empty when no part
+    file exists: an empty first batch writes none). Read errors on real
+    files — permissions, corruption — surface rather than read as empty."""
+    if os.path.isdir(man_dir):
+        dset = pds.dataset(man_dir, format="parquet")
+        if dset.files:
+            return dset.to_table(columns=columns or MANIFEST_SCHEMA.names)
+    empty = MANIFEST_SCHEMA.empty_table()
+    return empty.select(columns) if columns else empty
+
+
+def _compacting(live: str) -> str:
+    """Fresh ``<live>_compacting`` dir path for a rebuilt copy of ``live``
+    (a crashed attempt's leftover is removed)."""
+    tmp = live + "_compacting"
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)
+    return tmp
+
+
+def _swap_in(tmp: str, live: str) -> str:
+    """Rename-swap a rebuilt tree into place — NOT one atomic rename: posix
+    can't rename onto a non-empty dir, so ``live`` moves aside to
+    ``<live>_old`` first. Returns that path; the caller deletes it once the
+    new tree is verified (a crash between the renames leaves it intact
+    for manual recovery)."""
+    old = live + "_old"
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+    os.rename(live, old)
+    os.rename(tmp, live)
+    return old
+
+
+def _rewrite_manifest(out_dir: str, drop_runs, rows: list[dict]) -> None:
+    """THE commit of a compaction: the manifest becomes its rows outside
+    ``drop_runs`` (None drops all) plus ``rows``, written to
+    ``manifest_compacting`` and swapped in by rename (a crash before the
+    swap leaves the old manifest live)."""
+
+    man_dir = os.path.join(out_dir, "manifest")
+    keep = _read_manifest(man_dir)
+    if drop_runs is None:
+        keep = keep.slice(0, 0)
+    else:
+        keep = keep.filter(pc.invert(pc.is_in(keep["run"], pa.array(sorted(drop_runs), pa.string()))))
+    tbl = pa.concat_tables(
+        [keep.select(MANIFEST_SCHEMA.names).cast(MANIFEST_SCHEMA), _manifest_table(rows)]
+    )
+    man_tmp = _compacting(man_dir)
+    _write_manifest_file(man_tmp, tbl)
+    shutil.rmtree(_swap_in(man_tmp, man_dir))
+
+
+def _run_recency(out_dir: str, runs: list[str]) -> dict[str, float]:
+    """Run name → epoch seconds of its newest commit: the manifest's max
+    committed_at per run_id; a ``storefold-<epoch_us>-<hash>`` docstore run
+    carries its epoch in the name instead."""
+    ts: dict[str, float] = {}
+    pdf = _read_manifest(
+        os.path.join(out_dir, "manifest"), ["run_id", "committed_at"]
+    ).to_pandas()
+    if len(pdf):
+        for r, t in pdf.groupby("run_id")["committed_at"].max().items():
+            ts[str(r)] = t.timestamp() if hasattr(t, "timestamp") else float(t)
+    for r in runs:
+        fts = _storefold_ts(r)
+        if fts is not None:
+            ts[r] = fts
+    return ts
+
+
 def refresh_stats(spark: SparkSession, out_dir: str, defaults: dict | None = None) -> dict:
     """Derive stats.json from the committed manifest ledger (tiny read):
     n_docs = Σ per-run-per-bucket doc counts, total_tokens = Σ sum_dl.
@@ -251,34 +340,17 @@ def refresh_stats(spark: SparkSession, out_dir: str, defaults: dict | None = Non
         cfg = {k: prev.get(k, fallback.get(k)) for k in keys}
     elif defaults:
         cfg = {k: defaults.get(k, fallback.get(k)) for k in keys}
-    man_dir = os.path.join(out_dir, "manifest")
-    n_docs, total_tokens = 0, 0
-    committed_runs: list[str] = []
-    if os.path.isdir(man_dir):
-        # the manifest is a tiny driver-local ledger (runs × buckets rows);
-        # one pyarrow read replaces the two Spark jobs (sum agg + distinct
-        # collect) this derivation used to launch per build/batch commit
-        import pyarrow.dataset as _pds
-
-        dset = _pds.dataset(man_dir, format="parquet")
-        if getattr(dset, "files", None):
-            # an existing-but-empty manifest dir (empty first batch wrote no
-            # part files) legitimately means zero stats; read errors on real
-            # files — permissions, corruption, storage hiccup — surface
-            # rather than silently zeroing a live index's corpus stats
-            import pyarrow.compute as _pc
-
-            tbl = dset.to_table(columns=["run", "bucket", "n_docs", "sum_dl"])
-            n_docs = int(_pc.sum(tbl.column("n_docs")).as_py() or 0)
-            total_tokens = int(_pc.sum(tbl.column("sum_dl")).as_py() or 0)
-            # the committed-run set IS the read snapshot: query paths scan
-            # only these run partitions, so uncommitted/orphaned partitions
-            # (mid-write batches, tiered-compaction leftovers) are invisible
-            # — exact df/scores across every crash window. Bounded by the
-            # compaction cadence (tombstone rows, bucket<0, excluded).
-            bk = tbl.column("bucket").to_numpy(zero_copy_only=False)
-            runs = tbl.column("run").to_pylist()
-            committed_runs = sorted({r for r, b in zip(runs, bk) if b >= 0})
+    tbl = _read_manifest(os.path.join(out_dir, "manifest"), ["run", "bucket", "n_docs", "sum_dl"])
+    n_docs = int(pc.sum(tbl.column("n_docs")).as_py() or 0)
+    total_tokens = int(pc.sum(tbl.column("sum_dl")).as_py() or 0)
+    # the committed-run set IS the read snapshot: query paths scan only
+    # these run partitions, so uncommitted/orphaned partitions (mid-write
+    # batches, tiered-compaction leftovers) are invisible — exact df/scores
+    # across every crash window. Bounded by the compaction cadence (fold
+    # marker rows, bucket<0, excluded).
+    bk = tbl.column("bucket").to_numpy(zero_copy_only=False)
+    runs = tbl.column("run").to_pylist()
+    committed_runs = sorted({r for r, b in zip(runs, bk) if b >= 0})
     stats = {
         "n_docs": n_docs,
         "total_tokens": total_tokens,
@@ -370,18 +442,12 @@ def field_postings(
     dl — per-field BM25 falls out of the ordinary machinery because the
     namespaced terms have their own df/cf in the dictionary. The main text
     column stays unprefixed (back-compatible single-field queries)."""
-    from ..functions.tokenize import tokenize_to_postings, tokenize_to_postings_pos
-
     tokenizer = tokenize_to_postings_pos if positions else tokenize_to_postings
     parts = []
     for fc in field_cols:
         name, expr = fc if isinstance(fc, tuple) else (fc, F.col(fc).cast("string"))
         sub = docs.select("doc_id", expr.cast("string").alias("text"))
-        toks = (
-            tokenizer(sub, "doc_id", "text", analyzer=analyzer)
-            if analyzer
-            else tokenizer(sub, "doc_id", "text")
-        )
+        toks = tokenizer(sub, "doc_id", "text", analyzer=analyzer)
         toks = toks.withColumn(
             "term", F.concat(F.lit(name + KEYWORD_SEP), F.col("term"))
         )
@@ -518,6 +584,96 @@ def _make_block_builder(block_size: int, with_positions: bool = False):
     return run
 
 
+def _normalise_docs(
+    docs: DataFrame, url_col: str | None, text_col: str, keyword_cols, field_cols,
+) -> tuple[DataFrame, list, list]:
+    """The build input shape: (doc_id, text, __kw_<name>..., __ff_<name>...).
+    Keyword and field expressions resolve against the FULL input row, then
+    ride the narrowing select as materialized columns. Returns that frame
+    plus the (name, column) pairs ``keyword_postings``/``field_postings``
+    take. ``url_col=None``: the input already carries a stable doc_id."""
+
+    def resolve(cols, prefix):
+        pairs = [c if isinstance(c, tuple) else (c, F.col(c).cast("string")) for c in cols]
+        return (
+            [expr.cast("string").alias(f"{prefix}{name}") for name, expr in pairs],
+            [(name, F.col(f"{prefix}{name}")) for name, _ in pairs],
+        )
+
+    kw_sel, kw_cols = resolve(keyword_cols, "__kw_")
+    ff_sel, ff_cols = resolve(field_cols, "__ff_")
+    base = with_doc_id(docs, url_col) if url_col else docs
+    return base.select("doc_id", F.col(text_col).alias("text"), *kw_sel, *ff_sel), kw_cols, ff_cols
+
+
+def _tag_run(blocks: DataFrame, n_term_buckets: int, run_val: str) -> DataFrame:
+    return blocks.withColumn(
+        "tb", F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int")
+    ).withColumn("run", F.lit(run_val))
+
+
+def _reorg(blocks: DataFrame, n_term_buckets: int) -> DataFrame:
+    """Second (small) shuffle of the already-compressed blocks so each
+    term-hash dir gets one file instead of one per upstream task — shuffle
+    volume = compressed index size, a fraction of the raw tokenize shuffle;
+    term-sorted row groups let parquet min/max stats prune term lookups."""
+    return blocks.repartition(n_term_buckets, "tb").sortWithinPartitions("term", "bucket", "blk")
+
+
+def _run_blocks(
+    docs: DataFrame, kw_cols: list, ff_cols: list, run_val: str, *,
+    n_buckets: int, block_size: int, n_term_buckets: int, positions: bool,
+    analyzer: dict | None,
+) -> DataFrame:
+    """Normalised docs → one run's posting blocks, tagged with tb and run,
+    BEFORE any block reorg (each caller owns its reorg rule): tokenize (+
+    keyword and analyzed-field postings, same analyzer as the text) →
+    range bucket → (term, bucket) shuffle — the one wide shuffle — sorted
+    by (term, bucket, doc_id, tf, dl) so duplicate doc_ids keep-first
+    deterministically, matching the compaction sort → block builder."""
+    tokenizer = tokenize_to_postings_pos if positions else tokenize_to_postings
+    tokens = tokenizer(docs, "doc_id", "text", analyzer=analyzer)
+    if kw_cols:
+        tokens = tokens.unionByName(keyword_postings(docs, kw_cols, positions))
+    if ff_cols:
+        tokens = tokens.unionByName(field_postings(docs, ff_cols, positions, analyzer=analyzer))
+    blocks = (
+        tokens.withColumn("bucket", _bucket_col(n_buckets))
+        .repartition("term", "bucket")
+        .sortWithinPartitions("term", "bucket", "doc_id", "tf", "dl")
+        .mapInPandas(
+            _make_block_builder(block_size, with_positions=positions),
+            schema=BLOCKS_POS_SCHEMA if positions else BLOCKS_SCHEMA,
+        )
+    )
+    return _tag_run(blocks, n_term_buckets, run_val)
+
+
+class _Overlap(ThreadPoolExecutor):
+    """Driver threads running Spark work that is independent of the
+    caller's next jobs, so the two overlap (guide §2.6: back-fill executors
+    freed by another job's tail). Leaving the ``with`` block waits for
+    every submitted call — whether the block ends normally or raises — so
+    no background Spark work outlives a failed build or commit; on a clean
+    exit the first failed call re-raises."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self._futs: list = []
+
+    def submit(self, fn, /, *args, **kwargs):
+        fut = super().submit(fn, *args, **kwargs)
+        self._futs.append(fut)
+        return fut
+
+    def __exit__(self, exc_type, exc, tb):
+        super().__exit__(exc_type, exc, tb)
+        if exc_type is None:
+            for fut in self._futs:
+                fut.result()
+        return False
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -581,36 +737,16 @@ def build_index(
 
     analyzer = analyzer_config(analyzer)
     docs_in = docs
-    # resolve keyword expressions against the FULL input row, then carry
-    # them as materialized __kw_ columns through the narrowing select
-    kw_resolved = [
-        kc if isinstance(kc, tuple) else (kc, F.col(kc).cast("string"))
-        for kc in keyword_cols
-    ]
-    kw_cols = [(name, F.col(f"__kw_{name}")) for name, _ in kw_resolved]
-    ff_resolved = [
-        fc if isinstance(fc, tuple) else (fc, F.col(fc).cast("string"))
-        for fc in field_cols
-    ]
-    ff_cols = [(name, F.col(f"__ff_{name}")) for name, _ in ff_resolved]
-    # url_col=None → the input already carries a stable doc_id column
-    docs = (with_doc_id(docs, url_col) if url_col else docs).select(
-        "doc_id", F.col(text_col).alias("text"),
-        *[expr.cast("string").alias(f"__kw_{name}") for name, expr in kw_resolved],
-        *[expr.cast("string").alias(f"__ff_{name}") for name, expr in ff_resolved],
-    )
+    docs, kw_cols, ff_cols = _normalise_docs(docs, url_col, text_col, keyword_cols, field_cols)
 
     seg_dir = os.path.join(out_dir, "segments")
     man_dir = os.path.join(out_dir, "manifest")
     done: set[int] = set()
     if resume and os.path.isdir(man_dir):
-        man_prev = spark.read.parquet(man_dir).select("bucket", "run").collect()
-        done = {r.bucket for r in man_prev}
-        committed_runs = {r.run for r in man_prev}
-        _clean_uncommitted_runs(seg_dir, committed_runs)
+        man_prev = _read_manifest(man_dir, ["bucket", "run"])
+        done = set(man_prev.column("bucket").to_pylist())
+        _clean_uncommitted_runs(seg_dir, set(man_prev.column("run").to_pylist()))
     else:
-        import shutil
-
         for sub in ("segments", "manifest", "dictionary", "doclens"):
             p = os.path.join(out_dir, sub)
             if os.path.isdir(p):
@@ -619,183 +755,112 @@ def build_index(
         if os.path.exists(stats_path):
             os.remove(stats_path)  # a stale config must not outlive its index
 
-    verbose = os.environ.get("CB_BUILD_VERBOSE")
-    t_last = time.time()
-
-    def _mark(phase: str) -> None:
-        nonlocal t_last
-        if verbose:
-            print(f"[build_index] {phase}: {time.time() - t_last:.1f}s", flush=True)
-        t_last = time.time()
-
-    # the docstore is independent of every index artifact — run it as a
-    # concurrent driver thread so its scan+write overlaps the build's jobs
-    # (guide §2.6: back-fill executors freed by another job's tail)
-    docstore_fut = None
-    if store_docs or store_cols:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _ds_pool = ThreadPoolExecutor(max_workers=1)
-        docstore_fut = _ds_pool.submit(
-            write_docstore, spark, docs_in, out_dir, run_id, url_col,
-            extra_cols=store_cols, n_buckets=n_buckets,
-        )
-        _ds_pool.shutdown(wait=False)
-
-    bucket_expr = _bucket_col(n_buckets)
-
-    # ---- pass 1: per-bucket distinct doc counts (JVM-only agg over doc
-    # ids; buckets partition the id space so Σ = N — no tokenize pre-pass,
-    # avgdl falls out of the manifest's sum_dl ledger after the build)
-    bstats = {
-        int(r["bucket"]): int(r["nd"])
-        for r in docs.groupBy(bucket_expr.alias("bucket"))
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .collect()
-    }
-    _mark("pass1 bucket doc counts")
-
-    total_docs = sum(bstats.values())
-    if n_term_buckets is None:
-        # resuming an existing index must keep ITS layout; otherwise derive
-        # the term-hash bucket count from the corpus size pass 1 just gave
-        # us (guide §2: scale-adaptive partitioning, not a fixed constant)
-        prev_stats_path = os.path.join(out_dir, "stats.json")
-        if resume and os.path.exists(prev_stats_path):
-            with open(prev_stats_path) as f:
-                n_term_buckets = json.load(f).get(
-                    "n_term_buckets", DEFAULT_TERM_BUCKETS
-                )
-        else:
-            n_term_buckets = _adaptive_term_buckets(total_docs)
-
-    # ---- pass 2: postings → blocks, committed bucket-group at a time
-    all_buckets = [bkt for bkt in range(n_buckets) if bkt not in done]
-    groups = [
-        all_buckets[i :: commit_groups] for i in range(commit_groups)
-    ] if commit_groups > 1 else [all_buckets]
-    groups = [g for g in groups if g]
-
-    builder = _make_block_builder(block_size, with_positions=positions)
-    blocks_schema = BLOCKS_POS_SCHEMA if positions else BLOCKS_SCHEMA
-    tokenizer = tokenize_to_postings_pos if positions else tokenize_to_postings
-    dict_fut = None
-    for gi, group in enumerate(groups):
-        run_val = f"{run_id}-g{min(group)}"
-        # pre-filter docs BY DOC-ID RANGE before tokenizing, so c commit
-        # groups tokenize each doc once, not c times (bucket = top id bits)
-        docs_g = docs.where(bucket_expr.isin(group)) if len(group) < n_buckets else docs
-        tokens = (
-            tokenizer(docs_g, "doc_id", "text", analyzer=analyzer)
-            if analyzer
-            else tokenizer(docs_g, "doc_id", "text")
-        )
-        if kw_cols:
-            tokens = tokens.unionByName(keyword_postings(docs_g, kw_cols, positions))
-        if ff_cols:
-            tokens = tokens.unionByName(
-                field_postings(docs_g, ff_cols, positions, analyzer=analyzer)
+    with _Overlap() as bg:
+        # the docstore is independent of every index artifact — its
+        # scan+write overlaps the build's jobs
+        docstore_fut = None
+        if store_docs or store_cols:
+            docstore_fut = bg.submit(
+                write_docstore, spark, docs_in, out_dir, run_id, url_col,
+                extra_cols=store_cols, n_buckets=n_buckets,
             )
-        tokens = tokens.withColumn("bucket", _bucket_col(n_buckets))
-        blocks = (
-            tokens.repartition("term", "bucket")
-            # tf/dl in the sort key: duplicate doc_ids keep-first is then
-            # deterministic and matches the compaction sort
-            .sortWithinPartitions("term", "bucket", "doc_id", "tf", "dl")
-            .mapInPandas(builder, schema=blocks_schema)
-            .withColumn("tb", F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int"))
-            .withColumn("run", F.lit(run_val))
+
+        bucket_expr = _bucket_col(n_buckets)
+
+        # ---- pass 1: per-bucket distinct doc counts (JVM-only agg over doc
+        # ids; buckets partition the id space so Σ = N — no tokenize
+        # pre-pass, avgdl falls out of the manifest's sum_dl ledger)
+        bstats = {
+            int(r["bucket"]): int(r["nd"])
+            for r in docs.groupBy(bucket_expr.alias("bucket"))
+            .agg(F.countDistinct("doc_id").alias("nd"))
+            .collect()
+        }
+
+        total_docs = sum(bstats.values())
+        if n_term_buckets is None:
+            # resuming an existing index must keep ITS layout; otherwise
+            # derive the term-hash bucket count from the corpus size pass 1
+            # just gave us (guide §2: scale-adaptive partitioning)
+            prev_stats_path = os.path.join(out_dir, "stats.json")
+            if resume and os.path.exists(prev_stats_path):
+                with open(prev_stats_path) as f:
+                    n_term_buckets = json.load(f).get(
+                        "n_term_buckets", DEFAULT_TERM_BUCKETS
+                    )
+            else:
+                n_term_buckets = _adaptive_term_buckets(total_docs)
+
+        # ---- pass 2: postings → blocks, committed bucket-group at a time
+        all_buckets = [bkt for bkt in range(n_buckets) if bkt not in done]
+        groups = [
+            all_buckets[i :: commit_groups] for i in range(commit_groups)
+        ] if commit_groups > 1 else [all_buckets]
+        groups = [g for g in groups if g]
+
+        dict_fut = None
+        for gi, group in enumerate(groups):
+            run_val = f"{run_id}-g{min(group)}"
+            # pre-filter docs BY DOC-ID RANGE before tokenizing, so c commit
+            # groups tokenize each doc once, not c times (bucket = top bits)
+            docs_g = docs.where(bucket_expr.isin(group)) if len(group) < n_buckets else docs
+            blocks = _run_blocks(
+                docs_g, kw_cols, ff_cols, run_val, n_buckets=n_buckets,
+                block_size=block_size, n_term_buckets=n_term_buckets,
+                positions=positions, analyzer=analyzer,
+            )
+            # Input-size-adaptive reorg (guide §2.4 — remove shuffles
+            # outright): below the threshold AQE has already coalesced the
+            # builder stage to ~n_term_buckets tasks or fewer, so the per-tb
+            # file count is tiny without the extra exchange (the builder's
+            # output is still (term,bucket,blk)-sorted within each task,
+            # keeping parquet min/max pruning intact). Larger corpora keep
+            # it: one file per tb dir is what the serving path's footer
+            # probes are sized for.
+            if total_docs > n_term_buckets * _REORG_DOCS_PER_BUCKET:
+                blocks = _reorg(blocks, n_term_buckets)
+            _dyn_overwrite(blocks, seg_dir, ("tb", "run"))
+            if gi == len(groups) - 1:
+                # every group's segments are on disk — the full-dictionary
+                # refresh (segments scan → dictionary + term_index) is
+                # independent of the manifest commit below. A dictionary
+                # without the last manifest row is exactly what the resume
+                # path already rebuilds.
+                dict_fut = bg.submit(refresh_dictionary, spark, out_dir, n_term_buckets)
+            # manifest AFTER segment write (commit ordering); aggregates
+            # come from THIS run's partitions only (pruned read). sum_dl per
+            # bucket = Σ tf over kept MAIN-field postings (= Σ doc lengths,
+            # every text token lands in exactly one posting).
+            delta_rows = _delta_manifest_rows(
+                spark.read.parquet(seg_dir).where(F.col("run") == run_val)
+            )
+            sum_dl = {int(r["bucket"]): int(r["sum_dl"]) for r in delta_rows}
+            ledger = {bkt: (bstats.get(bkt, 0), sum_dl.get(bkt, 0)) for bkt in group}
+            _append_manifest(man_dir, _manifest_for_run(delta_rows, ledger, run_id, run_val))
+
+        if dict_fut is not None:
+            dict_fut.result()
+        else:  # no groups ran (fully-resumed build): refresh synchronously
+            refresh_dictionary(spark, out_dir, n_term_buckets)
+
+        stats = refresh_stats(
+            spark,
+            out_dir,
+            defaults={
+                "k1": k1,
+                "b": b,
+                "n_buckets": n_buckets,
+                "block_size": block_size,
+                "n_term_buckets": n_term_buckets,
+                "positions": positions,
+                "analyzer": analyzer,
+            },
         )
-        # Second (small) shuffle of the already-compressed blocks so each
-        # term-hash dir gets one file instead of one per upstream task —
-        # shuffle volume = compressed index size, a fraction of the raw
-        # tokenize shuffle; buys query-side partition pruning over few files.
-        # Input-size-adaptive (guide §2.4 — remove shuffles outright): below
-        # the reorg threshold AQE has already coalesced the builder stage to
-        # ~n_term_buckets tasks or fewer, so the per-tb file count is tiny
-        # without the extra exchange (the builder's output is still
-        # (term,bucket,blk)-sorted within each task, keeping parquet min/max
-        # pruning intact). Larger corpora keep the reorg: one file per tb
-        # dir is what the serving path's footer probes are sized for.
-        if total_docs > n_term_buckets * _REORG_DOCS_PER_BUCKET:
-            blocks = blocks.repartition(n_term_buckets, "tb").sortWithinPartitions(
-                "term", "bucket", "blk"
-            )  # term-sorted row groups → parquet min/max stats prune term lookups
-        _dyn_overwrite(blocks, seg_dir, ("tb", "run"))
-        _mark("pass2 segments")
-        if gi == len(groups) - 1:
-            # every group's segments are on disk — the full-dictionary
-            # refresh (segments scan → dictionary + term_index) is
-            # independent of the manifest commit below, so run it as a
-            # concurrent driver thread (guide §2.6). Crash window is
-            # unchanged in spirit: a dictionary without the last manifest
-            # row is exactly what the resume path already rebuilds.
-            from concurrent.futures import ThreadPoolExecutor
-
-            _dict_pool = ThreadPoolExecutor(max_workers=1)
-            dict_fut = _dict_pool.submit(
-                refresh_dictionary, spark, out_dir, n_term_buckets
-            )
-            _dict_pool.shutdown(wait=False)
-        # manifest AFTER segment write (commit ordering); aggregates come
-        # from THIS run's partitions only (pruned read), checksum over block
-        # METADATA only — no re-read of the binary posting columns
-        delta = spark.read.parquet(seg_dir).where(F.col("run") == run_val)
-        # sum_dl per bucket = Σ tf over kept MAIN-field postings (= Σ doc
-        # lengths, since every text token lands in exactly one posting);
-        # namespaced keyword/field postings are excluded — keyword tf is 0
-        # and extra analyzed fields keep their own length stats.  One
-        # per-bucket metadata aggregation (collect: ≤ n_buckets rows), then
-        # the commit itself is a driver-side parquet append — replaces the
-        # old agg → createDataFrame → full_outer join → write job chain.
-        blk = {int(r["bucket"]): r for r in _delta_manifest_rows(delta)}
-        now = time.time()
-        rows = []
-        for bkt in sorted(set(group) | set(blk)):
-            a = blk.get(bkt)
-            rows.append(
-                {
-                    "bucket": bkt,
-                    "n_terms": int(a["n_terms"]) if a else 0,
-                    "n_blocks": int(a["n_blocks"]) if a else 0,
-                    "n_postings": int(a["n_postings"]) if a else 0,
-                    "checksum": int(a["checksum"]) if a else 0,
-                    "sum_dl": int(a["sum_dl"]) if a else 0,
-                    "n_docs": bstats.get(bkt, 0),
-                    "committed_at": now,
-                    "run_id": run_id,
-                    "run": run_val,
-                }
-            )
-        _append_manifest(man_dir, rows)
-
-    if dict_fut is not None:
-        dict_fut.result()
-    else:  # no groups ran (fully-resumed build): refresh synchronously
-        refresh_dictionary(spark, out_dir, n_term_buckets)
-    _mark("dictionary")
-
-    stats = refresh_stats(
-        spark,
-        out_dir,
-        defaults={
-            "k1": k1,
-            "b": b,
-            "n_buckets": n_buckets,
-            "block_size": block_size,
-            "n_term_buckets": n_term_buckets,
-            "positions": positions,
-            "analyzer": analyzer,
-        },
-    )
-    _mark("stats")
-    if fuzzy_deletes:
-        kw = fuzzy_deletes if isinstance(fuzzy_deletes, dict) else {}
-        enable_fuzzy_deletes(spark, out_dir, **kw)
-        _mark("fuzzy_deletes")
-    if docstore_fut is not None:
-        docstore_fut.result()  # surface any docstore failure before returning
-        _mark("docstore join")
+        if fuzzy_deletes:
+            kw = fuzzy_deletes if isinstance(fuzzy_deletes, dict) else {}
+            enable_fuzzy_deletes(spark, out_dir, **kw)
+        if docstore_fut is not None:
+            docstore_fut.result()  # surface any docstore failure before returning
     return stats
 
 
@@ -837,13 +902,11 @@ def write_docstore(
 def docstore_runs(out_dir: str) -> list[str]:
     """Distinct run partition values present in the docstore (one driver
     listing — the same cost every dataset probe already pays)."""
-    import glob as _glob
-
     store = os.path.join(out_dir, "docstore")
     return sorted(
         {
             os.path.basename(d).split("=", 1)[1]
-            for d in _glob.glob(os.path.join(store, "bucket=*", "run=*"))
+            for d in glob.glob(os.path.join(store, "bucket=*", "run=*"))
         }
     )
 
@@ -870,23 +933,8 @@ def docstore_run_rank(out_dir: str) -> dict[str, int]:
     doc to its NEWEST stored version (update_docs appends the new
     version as a delta docstore run; the old run's row stays on disk
     until a ``compact_docstore`` fold)."""
-    import pyarrow.dataset as pds
-
     runs = docstore_runs(out_dir)
-    ts: dict[str, float] = {}
-    man = os.path.join(out_dir, "manifest")
-    if len(runs) > 1 and os.path.isdir(man):
-        tbl = pds.dataset(man, format="parquet").to_table(
-            columns=["run_id", "committed_at"]
-        )
-        pdf = tbl.to_pandas()
-        if len(pdf):
-            for r, t in pdf.groupby("run_id")["committed_at"].max().items():
-                ts[str(r)] = t.timestamp() if hasattr(t, "timestamp") else float(t)
-    for r in runs:
-        fts = _storefold_ts(r)
-        if fts is not None:
-            ts[r] = fts
+    ts = _run_recency(out_dir, runs) if len(runs) > 1 else {}
     order = sorted(runs, key=lambda r: (ts.get(r, float("-inf")), r))
     return {r: i for i, r in enumerate(order)}
 
@@ -906,31 +954,13 @@ def compact_docstore(spark: SparkSession, out_dir: str, *,
     docs' rows (the ES merge-expunges-deletes analogue; changes the
     significant_terms background denominator exactly like an ES merge
     would). Returns the number of old run partitions removed."""
-    import hashlib
-    import shutil as _shutil
 
     from .query import _docstore_scan
 
     runs = docstore_runs(out_dir)
     if len(runs) <= 1 and not purge_deleted:
         return 0
-    # the numeric recency the rank rule uses, for the new name's epoch
-    import pyarrow.dataset as pds
-
-    ts: dict[str, float] = {}
-    man = os.path.join(out_dir, "manifest")
-    if os.path.isdir(man):
-        tbl = pds.dataset(man, format="parquet").to_table(
-            columns=["run_id", "committed_at"]
-        )
-        pdf = tbl.to_pandas()
-        if len(pdf):
-            for r, t in pdf.groupby("run_id")["committed_at"].max().items():
-                ts[str(r)] = t.timestamp() if hasattr(t, "timestamp") else float(t)
-    for r in runs:
-        fts = _storefold_ts(r)
-        if fts is not None:
-            ts[r] = fts
+    ts = _run_recency(out_dir, runs)  # the rank rule's recency, for the name's epoch
     max_us = max(int(ts.get(r, 0) * 1e6) for r in runs)
     h = hashlib.md5("|".join(sorted(runs)).encode()).hexdigest()[:8]
     new_run = f"storefold-{max_us + 1:020d}-{h}"
@@ -945,11 +975,9 @@ def compact_docstore(spark: SparkSession, out_dir: str, *,
 
     removed = 0
     store = os.path.join(out_dir, "docstore")
-    import glob as _glob
-
-    for d in _glob.glob(os.path.join(store, "bucket=*", "run=*")):
+    for d in glob.glob(os.path.join(store, "bucket=*", "run=*")):
         if os.path.basename(d) != f"run={new_run}":
-            _shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(d, ignore_errors=True)
             removed += 1
     return removed
 
@@ -1072,10 +1100,6 @@ def write_term_index(
     scale (10^8 terms, 64 range files) a prefix touches ~1/64 of the
     dictionary bytes. Incremental batches append a run=<batch> delta here
     exactly like the hash dictionary; expansions merge runs on read."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
     ti_dir = os.path.join(out_dir, "term_index")
     if "cf" not in dictionary.columns:
         dictionary = dictionary.withColumn("cf", F.lit(0).cast("long"))
@@ -1091,8 +1115,6 @@ def write_term_index(
     else:
         d = d.repartitionByRange(nf, "term").sortWithinPartitions("term")
     if replace:
-        import shutil
-
         if os.path.isdir(ti_dir):
             shutil.rmtree(ti_dir)
         d.write.mode("overwrite").partitionBy("run").parquet(ti_dir)
@@ -1110,8 +1132,8 @@ def write_term_index(
             rel: mm for rel, mm in ranges.items()
             if not rel.startswith(f"run={run_val}/") and os.path.exists(os.path.join(ti_dir, rel))
         }
-    for path in _glob.glob(os.path.join(ti_dir, f"run={run_val}", "*.parquet")):
-        md = _pq.ParquetFile(path).metadata
+    for path in glob.glob(os.path.join(ti_dir, f"run={run_val}", "*.parquet")):
+        md = pq.ParquetFile(path).metadata
         ti = next(
             i for i in range(md.num_columns) if md.schema.column(i).name == "term"
         )
@@ -1153,8 +1175,6 @@ def delete_variants(term: str, max_edits: int) -> set[str]:
 def delete_hash(s: str) -> int:
     """Stable 63-bit key for a delete variant (md5-derived: deterministic
     across processes/runs, unlike PYTHONHASHSEED-dependent hash())."""
-    import hashlib
-
     return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") >> 1
 
 
@@ -1205,8 +1225,6 @@ def write_fuzzy_deletes(
     )
     dd = os.path.join(out_dir, FUZZY_DELETES_DIR)
     if replace:
-        import shutil
-
         if os.path.isdir(dd):
             shutil.rmtree(dd)
         d.write.mode("overwrite").partitionBy("db", "run").parquet(dd)
@@ -1358,30 +1376,45 @@ def _recompact_df(
 
         yield from builder(complete_group_chunks())
 
-    return (
+    blocks = (
         seg.repartition("term", "bucket")
         .sortWithinPartitions("term", "bucket", "blk")
         .mapInPandas(recode, schema=BLOCKS_POS_SCHEMA if pos_flag else BLOCKS_SCHEMA)
-        .withColumn("tb", F.pmod(F.xxhash64("term"), F.lit(stats["n_term_buckets"])).cast("int"))
-        .withColumn("run", F.lit(run_val))
-        .repartition(stats["n_term_buckets"], "tb")
-        .sortWithinPartitions("term", "bucket", "blk")
+    )
+    return _reorg(_tag_run(blocks, stats["n_term_buckets"], run_val), stats["n_term_buckets"])
+
+
+
+def _fold_doclens(spark: SparkSession, dl_src: DataFrame, tomb: dict, run_val: str) -> DataFrame:
+    """doclens rows → one deduplicated run (keep min dl, the builder's
+    keep-first rule). Tombstoned (doc, run) rows drop first — an UPDATED
+    doc keeps its new run's row, a DELETED doc loses every row."""
+    if tomb:
+        rows = [(int(d), r) for r, ids in tomb.items() for d in ids]
+        dead = F.broadcast(spark.createDataFrame(rows, "doc_id long, run string"))
+        dl_src = dl_src.join(dead, ["doc_id", "run"], "left_anti")
+    return dl_src.groupBy("doc_id").agg(F.min("dl").alias("dl")).withColumn("run", F.lit(run_val))
+
+
+def _collect_ledger(df: DataFrame) -> dict[int, tuple[int, int]]:
+    """(bucket, n_docs, sum_dl) rows → {bucket: (n_docs, sum_dl)} (one tiny
+    collect: ≤ n_buckets rows)."""
+    return {int(r["bucket"]): (int(r["n_docs"]), int(r["sum_dl"] or 0)) for r in df.collect()}
+
+
+def _doclens_ledger(doclens: DataFrame, n_buckets: int) -> dict[int, tuple[int, int]]:
+    """Per-bucket doc ledger of a (doc_id, dl) frame."""
+    return _collect_ledger(
+        doclens.groupBy(_bucket_col(n_buckets).alias("bucket"))
+        .agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
     )
 
 
-
-def _tomb_df(spark: SparkSession, tomb: dict) -> DataFrame:
-    """(doc_id, run) DataFrame from a loaded tombstone map (for anti-joins
-    against run-partitioned ledgers)."""
-    rows = [(int(d), r) for r, ids in tomb.items() for d in ids]
-    return F.broadcast(spark.createDataFrame(rows, "doc_id long, run string"))
-
-
-def _doc_ledger_from_segments(seg: DataFrame) -> DataFrame:
-    """Exact (bucket, n_docs, sum_dl) decoded from posting blocks: one
-    narrow scan of the (bucket, n, docs, dls) columns (binary posting
-    payloads for tf stay pruned). A doc's text postings all carry the same
-    dl; keyword postings carry dl=0, so max(dl) per doc is the text dl."""
+def _doc_ledger_from_segments(seg: DataFrame) -> dict[int, tuple[int, int]]:
+    """Exact per-bucket doc ledger decoded from posting blocks: one narrow
+    scan of the (bucket, n, docs, dls) columns (binary posting payloads
+    for tf stay pruned). A doc's text postings all carry the same dl;
+    keyword postings carry dl=0, so max(dl) per doc is the text dl."""
 
     def decode(batches):
         from ..functions.codecs import varint_decode as vd
@@ -1403,9 +1436,24 @@ def _doc_ledger_from_segments(seg: DataFrame) -> DataFrame:
         .mapInPandas(decode, "bucket int, doc_id long, dl long")
     )
     per_doc = rows.groupBy("bucket", "doc_id").agg(F.max("dl").alias("dl"))
-    return per_doc.groupBy("bucket").agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
+    return _collect_ledger(
+        per_doc.groupBy("bucket").agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
     )
+
+
+def _manifest_ledger(man: pa.Table) -> dict[int, tuple[int, int]]:
+    """Per-bucket Σ n_docs / Σ sum_dl over manifest rows (fold markers,
+    bucket<0, excluded) — the ledger carried forward when nothing forces
+    an exact recount."""
+    agg = man.filter(pc.greater_equal(man["bucket"], 0)).group_by("bucket").aggregate(
+        [("n_docs", "sum"), ("sum_dl", "sum")]
+    )
+    return {
+        int(bkt): (int(n), int(sdl))
+        for bkt, n, sdl in zip(
+            agg["bucket"].to_pylist(), agg["n_docs_sum"].to_pylist(), agg["sum_dl_sum"].to_pylist()
+        )
+    }
 
 
 def _gc_tombstones(spark: SparkSession, out_dir: str, live_runs: set[str]) -> None:
@@ -1413,7 +1461,6 @@ def _gc_tombstones(spark: SparkSession, out_dir: str, live_runs: set[str]) -> No
     postings were physically purged by a fold). Clears the store when
     nothing survives; otherwise consolidates survivors into one new
     committed tombstone run."""
-    import shutil
 
     from .delete import _tomb_dir, load_tombstones
 
@@ -1431,7 +1478,6 @@ def _gc_tombstones(spark: SparkSession, out_dir: str, live_runs: set[str]) -> No
         if os.path.isdir(td):
             shutil.rmtree(td)
         return
-    import hashlib
 
     gc_id = "gc_" + hashlib.md5(
         json.dumps(sorted(s.get("tombstone_runs") or [])).encode()
@@ -1470,33 +1516,25 @@ def compact_segments(
     disjoint docID ranges, the merge never crosses buckets; the shuffle
     moves only compressed blocks.
 
-    Swap protocol (NOT a single atomic rename — posix can't rename onto a
-    non-empty dir): new segments land in ``segments_compacting``; then
-    rename(segments → segments_old), rename(tmp → segments), VERIFY the new
-    dir is readable, and only then delete segments_old. A crash between the
-    two renames leaves ``segments_old`` intact for manual recovery; a
-    concurrent reader during the swap window may fail and should retry.
+    Swap protocol (``_swap_in``): new segments land in
+    ``segments_compacting``, are renamed into place with the old tree moved
+    to ``segments_old``, and the old tree goes only once the new one reads
+    back. A concurrent reader during the swap window may fail and should
+    retry.
     Only manifest-committed runs are compacted — an in-flight streaming
     batch's uncommitted run partitions are left in place for its replay to
     overwrite. The manifest is REWRITTEN as one compacted row set (plus
-    zero tombstone rows preserving replay-idempotence for old run_ids), the
+    fold marker rows preserving replay-idempotence for old run_ids), the
     doclens deltas are folded into one deduplicated run, and stats.json is
     recounted exactly from doclens (healing any drift from re-ingested
     docs). Returns {"blocks_before": .., "blocks_after": ..}.
     """
-    import shutil
-
     stats = load_stats(out_dir)
     block_size = block_size or stats["block_size"]
     seg_dir = os.path.join(out_dir, "segments")
-    man_dir = os.path.join(out_dir, "manifest")
-    tmp_dir = os.path.join(out_dir, "segments_compacting")
-    if os.path.isdir(tmp_dir):
-        shutil.rmtree(tmp_dir)
-
-    old_man = spark.read.parquet(man_dir)
-    committed_runs = {r.run for r in old_man.select("run").distinct().collect()}
-    old_run_ids = {r.run_id for r in old_man.select("run_id").distinct().collect()}
+    tmp_dir = _compacting(seg_dir)
+    old_man = _read_manifest(os.path.join(out_dir, "manifest"))
+    committed_runs = set(old_man.column("run").to_pylist())
 
     from .delete import load_tombstones
 
@@ -1517,11 +1555,7 @@ def compact_segments(
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             shutil.copytree(d, dst)
 
-    old_dir = os.path.join(out_dir, "segments_old")
-    if os.path.isdir(old_dir):
-        shutil.rmtree(old_dir)
-    os.rename(seg_dir, old_dir)
-    os.rename(tmp_dir, seg_dir)
+    old_dir = _swap_in(tmp_dir, seg_dir)
     refresh_dictionary(spark, out_dir, stats["n_term_buckets"])
 
     seg2 = spark.read.parquet(seg_dir).where(F.col("run") == "compacted")
@@ -1529,81 +1563,42 @@ def compact_segments(
     # verified readable → the old tree can go
     shutil.rmtree(old_dir)
 
-    # exact doc ledger: doclens deltas → one deduplicated run (keep min dl,
-    # the builder's keep-first rule), recount n_docs/sum_dl per bucket
-    # the doclens sidecar only supports an exact recount when it COVERS
-    # every committed segment run (a build_index base run writes none; a
-    # mixed base+batch index has a partial sidecar — recounting from it
-    # would undercount the corpus)
+    # exact doc ledger: doclens deltas → one deduplicated run, recount
+    # n_docs/sum_dl per bucket. The doclens sidecar only supports an exact
+    # recount when it COVERS every committed segment run (a build_index
+    # base run writes none; a mixed base+batch index has a partial sidecar
+    # — recounting from it would undercount the corpus)
     dl_dir = os.path.join(out_dir, "doclens")
     dl_covers = False
     if os.path.isdir(dl_dir):
         dl_runs = {run_val for _, run_val in _run_dirs(dl_dir)}
         dl_covers = committed_runs <= dl_runs
     if dl_covers:
-        dl_src = spark.read.parquet(dl_dir)
-        if tomb:
-            # drop dead (doc, run) ledger rows — an UPDATED doc keeps its
-            # new run's row, a DELETED doc loses every row
-            dl_src = dl_src.join(_tomb_df(spark, tomb), ["doc_id", "run"], "left_anti")
-        dl = (
-            dl_src
-            .groupBy("doc_id")
-            .agg(F.min("dl").alias("dl"))
-            .withColumn("run", F.lit("compacted"))
-        )
-        dl_tmp = os.path.join(out_dir, "doclens_compacting")
-        if os.path.isdir(dl_tmp):
-            shutil.rmtree(dl_tmp)
-        dl.write.partitionBy("run").parquet(dl_tmp)
-        dl_old = os.path.join(out_dir, "doclens_old")
-        if os.path.isdir(dl_old):
-            shutil.rmtree(dl_old)
-        os.rename(dl_dir, dl_old)
-        os.rename(dl_tmp, dl_dir)
-        shutil.rmtree(dl_old)
-        doc_stats = (
-            spark.read.parquet(dl_dir)
-            .groupBy(_bucket_col(stats["n_buckets"]).alias("bucket"))
-            .agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
-        )
+        dl_tmp = _compacting(dl_dir)
+        _fold_doclens(spark, spark.read.parquet(dl_dir), tomb, "compacted").write.partitionBy(
+            "run"
+        ).parquet(dl_tmp)
+        shutil.rmtree(_swap_in(dl_tmp, dl_dir))
+        ledger = _doclens_ledger(spark.read.parquet(dl_dir), stats["n_buckets"])
     elif tomb or os.path.isdir(dl_dir):
         # deletes happened and/or the sidecar is partial: recount EXACTLY
         # from the purged compacted postings (one narrow docs/dls scan);
         # a partial sidecar is discarded (the compacted recount supersedes)
-        doc_stats = _doc_ledger_from_segments(seg2)
+        ledger = _doc_ledger_from_segments(seg2)
         if os.path.isdir(dl_dir):
             shutil.rmtree(dl_dir)
     else:
         # no doclens sidecar (plain build_index output): carry the ledger
         # sums forward per bucket
-        doc_stats = old_man.groupBy("bucket").agg(
-            F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
-        ).where(F.col("bucket") >= 0)
+        ledger = _manifest_ledger(old_man)
 
-    man = _manifest_for_run(seg2, doc_stats, "compact", "compacted")
-    # tombstones keep _committed_runs() recognizing pre-compaction batch ids
-    # (a replayed foreachBatch epoch must stay a no-op after compaction)
-    had_tombstones = bool(tomb)
-    spark_rows = [(int(-1), 0, 0, 0, 0, 0, 0, rid, "compacted") for rid in sorted(old_run_ids)]
-    fold_markers = spark.createDataFrame(
-        spark_rows,
-        "bucket int, n_terms long, n_blocks long, n_postings long, checksum long, "
-        "n_docs long, sum_dl long, run_id string, run string",
-    ).withColumn("committed_at", F.lit(time.time()).cast("timestamp"))
-    new_man = man.unionByName(fold_markers, allowMissingColumns=True)
-    man_tmp = os.path.join(out_dir, "manifest_compacting")
-    if os.path.isdir(man_tmp):
-        shutil.rmtree(man_tmp)
-    new_man.write.parquet(man_tmp)
-    man_old = os.path.join(out_dir, "manifest_old")
-    if os.path.isdir(man_old):
-        shutil.rmtree(man_old)
-    os.rename(man_dir, man_old)
-    os.rename(man_tmp, man_dir)
-    shutil.rmtree(man_old)
+    _rewrite_manifest(
+        out_dir, None,
+        _manifest_for_run(_delta_manifest_rows(seg2), ledger, "compact", "compacted")
+        + _fold_markers(set(old_man.column("run_id").to_pylist()), "compacted"),
+    )
     refresh_stats(spark, out_dir)
-    if had_tombstones:
+    if tomb:
         # every pre-compaction run was replaced — consumed tombstones go
         live = {run_val for _, run_val in _run_dirs(seg_dir)}
         _gc_tombstones(spark, out_dir, live)
@@ -1649,9 +1644,6 @@ def compact_runs(
 
     Returns {"folded_runs": .., "blocks_before": .., "blocks_after": ..}.
     """
-    import hashlib
-    import shutil
-
     stats = load_stats(out_dir)
     block_size = block_size or stats["block_size"]
     seg_dir = os.path.join(out_dir, "segments")
@@ -1659,8 +1651,8 @@ def compact_runs(
     runs = sorted(set(runs))
     new_run = "tier-" + hashlib.md5("|".join(runs).encode()).hexdigest()[:12]
 
-    old_man = spark.read.parquet(man_dir)
-    committed = {r.run for r in old_man.select("run").distinct().collect()}
+    old_man = _read_manifest(man_dir)
+    committed = set(old_man.column("run").to_pylist())
     present = [r for r in runs if r in committed]
     if present != runs:
         missing = sorted(set(runs) - set(present))
@@ -1699,59 +1691,26 @@ def compact_runs(
         dl_runs = {run_val for _, run_val in _run_dirs(dl_dir)}
         if set(runs) & dl_runs:
             dl_src = spark.read.parquet(dl_dir).where(F.col("run").isin(runs))
-            if tomb_folded:
-                dl_src = dl_src.join(
-                    _tomb_df(spark, tomb_folded), ["doc_id", "run"], "left_anti"
-                )
-            dl = (
-                dl_src
-                .groupBy("doc_id")
-                .agg(F.min("dl").alias("dl"))
-                .withColumn("run", F.lit(new_run))
-            )
-            _dyn_overwrite(dl, dl_dir, ("run",))
+            _dyn_overwrite(_fold_doclens(spark, dl_src, tomb_folded, new_run), dl_dir, ("run",))
             folded_dl = True
 
     # --- 2. manifest swap = the commit
-    folded_rows = old_man.where(F.col("run").isin(runs))
-    folded_ids = sorted(
-        r.run_id for r in folded_rows.select("run_id").distinct().collect()
-    )
+    folded_rows = old_man.filter(pc.is_in(old_man["run"], pa.array(runs, pa.string())))
     if tomb_folded and folded_dl:
         # exact: recount the folded portion from its purged doclens
-        doc_stats = (
-            spark.read.parquet(dl_dir)
-            .where(F.col("run") == new_run)
-            .groupBy(_bucket_col(stats["n_buckets"]).alias("bucket"))
-            .agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
+        ledger = _doclens_ledger(
+            spark.read.parquet(dl_dir).where(F.col("run") == new_run), stats["n_buckets"]
         )
     elif tomb_folded:
         # exact: recount from the purged compacted postings themselves
-        doc_stats = _doc_ledger_from_segments(new_seg)
+        ledger = _doc_ledger_from_segments(new_seg)
     else:
-        doc_stats = folded_rows.groupBy("bucket").agg(
-            F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
-        ).where(F.col("bucket") >= 0)
-    man_new = _manifest_for_run(new_seg, doc_stats, new_run, new_run)
-    tomb = spark.createDataFrame(
-        [(int(-1), 0, 0, 0, 0, 0, 0, rid, new_run) for rid in folded_ids],
-        "bucket int, n_terms long, n_blocks long, n_postings long, checksum long, "
-        "n_docs long, sum_dl long, run_id string, run string",
-    ).withColumn("committed_at", F.lit(time.time()).cast("timestamp"))
-    kept = old_man.where(~F.col("run").isin(runs))
-    new_man = kept.unionByName(man_new, allowMissingColumns=True).unionByName(
-        tomb, allowMissingColumns=True
+        ledger = _manifest_ledger(folded_rows)
+    _rewrite_manifest(
+        out_dir, runs,
+        _manifest_for_run(_delta_manifest_rows(new_seg), ledger, new_run, new_run)
+        + _fold_markers(set(folded_rows.column("run_id").to_pylist()), new_run),
     )
-    man_tmp = os.path.join(out_dir, "manifest_compacting")
-    if os.path.isdir(man_tmp):
-        shutil.rmtree(man_tmp)
-    new_man.write.parquet(man_tmp)
-    man_old = os.path.join(out_dir, "manifest_old")
-    if os.path.isdir(man_old):
-        shutil.rmtree(man_old)
-    os.rename(man_dir, man_old)
-    os.rename(man_tmp, man_dir)
-    shutil.rmtree(man_old)
 
     # --- 3. reclaim the folded runs' partitions
     roots = ["segments", "dictionary", "term_index", FUZZY_DELETES_DIR] + (
@@ -1796,18 +1755,15 @@ def pick_tier(spark: SparkSession, out_dir: str, max_runs: int = 8) -> list[str]
     """Tiered-merge policy helper: when more than ``max_runs`` committed
     runs exist, return the smallest-by-postings half (≥2) to fold next —
     call ``compact_runs`` on the result. Reads only the manifest ledger."""
-    man = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    sizes = (
-        man.where(F.col("bucket") >= 0)
-        .groupBy("run")
-        .agg(F.sum("n_postings").alias("np"))
-        .collect()
+    man = _read_manifest(os.path.join(out_dir, "manifest"), ["bucket", "run", "n_postings"])
+    agg = man.filter(pc.greater_equal(man["bucket"], 0)).group_by("run").aggregate(
+        [("n_postings", "sum")]
     )
+    sizes = sorted(zip(agg["n_postings_sum"].to_pylist(), agg["run"].to_pylist()))
     if len(sizes) <= max_runs:
         return []
-    sizes.sort(key=lambda r: (int(r.np), r.run))
     k = max(2, len(sizes) - max_runs + 1)
-    return [r.run for r in sizes[:k]]
+    return [run for _, run in sizes[:k]]
 
 
 def reindex(

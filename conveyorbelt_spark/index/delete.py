@@ -67,9 +67,13 @@ def delete_docs(
     """Tombstone ``doc_ids`` (list of ints or a DataFrame with a doc_id
     column) across ``runs`` (default: every committed segment run). Returns
     the number of (doc_id, run) tombstone rows written. Idempotent per
-    ``op_id`` (default: deterministic from the ids+runs)."""
+    ``op_id`` (default: deterministic from the ids+runs), which must match
+    ``[A-Za-z0-9_-]+``: it names a partition directory, and characters
+    Spark escapes there would commit tombstones the row count can't find."""
     from .build import load_stats
 
+    if op_id is not None and not re.fullmatch(r"[A-Za-z0-9_-]+", op_id):
+        raise ValueError(f"op_id must match [A-Za-z0-9_-]+, got {op_id!r}")
     stats = load_stats(out_dir)
     runs = sorted(runs if runs is not None else stats.get("committed_runs") or [])
     if not runs:

@@ -9,18 +9,26 @@ Reference analogues:
 - idempotent re-delivery via deterministic ids (NestBatchPusher.cs:71)
   → manifest-gated batch commits (a replayed foreachBatch epoch is a no-op)
 
-``incremental_index_stream`` turns the batch index builder into a streaming
-conveyor: each micro-batch appends ONE run of delta segments + a delta
-dictionary + manifest rows, all derived from the batch's own data —
-O(delta) work per micro-batch, independent of total index size (Lucene-
-style segment model; ``compact_segments`` folds deltas back periodically).
+``index_batch`` turns one batch of documents into one committed delta run
+through the same write path as ``build_index`` (``index/build.py``): the
+shared input normaliser and tokenize → (term, bucket) shuffle → block
+builder pipeline (text, keyword and analyzed-field postings all use the
+index's analyzer), then the block reorg every batch takes. All of it
+derives from the batch's own data — O(delta) work per micro-batch,
+independent of total index size (Lucene-style segment model;
+``compact_runs``/``compact_segments`` fold deltas back periodically).
+``index_stream`` and ``incremental_index_stream`` call it once per
+foreachBatch micro-batch, turning the builder into a streaming conveyor.
 df/idf come from the merge-on-read dictionary, avgdl from the manifest
 ledger in stats.json, so a query over base+delta segments scores exactly.
 
-Idempotence: every artifact (segments, dictionary, doclens) is written as a
-dynamic-partition overwrite keyed by the batch's run — a foreachBatch epoch
-replayed after a crash anywhere before the manifest append simply rewrites
-its own partitions; after the append, the run_id gate makes it a no-op.
+Commit order: doclens + segments → dictionary delta (overlapped with the
+two ledger collects, joined before the commit — and on any failure) →
+manifest append (THE commit) → stats.json → docstore. Every artifact is
+a dynamic-partition overwrite keyed by the batch's run, so a
+foreachBatch epoch replayed after a crash anywhere before the manifest
+append simply rewrites its own partitions; after the append, the run_id
+gate (a driver-side manifest read, no Spark job) makes it a no-op.
 """
 
 from __future__ import annotations
@@ -30,19 +38,22 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..functions.tokenize import tokenize_to_postings, tokenize_to_postings_pos, with_doc_id
+from ..functions.tokenize import tokenize_to_postings
 from ..index.build import (
-    BLOCKS_POS_SCHEMA,
-    BLOCKS_SCHEMA,
     DEFAULT_BLOCK_SIZE,
     DEFAULT_N_BUCKETS,
     DEFAULT_TERM_BUCKETS,
     _append_manifest,
-    _bucket_col,
     _delta_manifest_rows,
     _doclens_kernel,
+    _doclens_ledger,
     _dyn_overwrite,
-    _make_block_builder,
+    _manifest_for_run,
+    _normalise_docs,
+    _Overlap,
+    _read_manifest,
+    _reorg,
+    _run_blocks,
     load_stats,
     refresh_stats,
     write_dictionary_delta,
@@ -51,9 +62,7 @@ from ..textutils import BM25_B, BM25_K1
 
 
 def _committed_runs(spark: SparkSession, man_dir: str) -> set[str]:
-    if not os.path.isdir(man_dir):
-        return set()
-    return {r.run_id for r in spark.read.parquet(man_dir).select("run_id").distinct().collect()}
+    return set(_read_manifest(man_dir, ["run_id"]).column("run_id").to_pylist())
 
 
 def index_batch(
@@ -113,22 +122,7 @@ def index_batch(
         return False
 
     docs_in = docs
-    kw_resolved = [
-        kc if isinstance(kc, tuple) else (kc, F.col(kc).cast("string"))
-        for kc in keyword_cols
-    ]
-    kw_cols = [(name, F.col(f"__kw_{name}")) for name, _ in kw_resolved]
-    ff_resolved = [
-        fc if isinstance(fc, tuple) else (fc, F.col(fc).cast("string"))
-        for fc in field_cols
-    ]
-    ff_cols = [(name, F.col(f"__ff_{name}")) for name, _ in ff_resolved]
-    # url_col=None → the input already carries a stable doc_id column
-    docs = (with_doc_id(docs, url_col) if url_col else docs).select(
-        "doc_id", F.col(text_col).alias("text"),
-        *[expr.cast("string").alias(f"__kw_{name}") for name, expr in kw_resolved],
-        *[expr.cast("string").alias(f"__ff_{name}") for name, expr in ff_resolved],
-    )
+    docs, kw_cols, ff_cols = _normalise_docs(docs, url_col, text_col, keyword_cols, field_cols)
 
     # --- doclens delta (O(batch)); persisted: it feeds both the run write
     # and the per-bucket doc ledger
@@ -165,85 +159,35 @@ def index_batch(
     doclens = doclens.persist()
     _dyn_overwrite(doclens.withColumn("run", F.lit(run_id)), dl_dir, ("run",))
 
-    # --- posting blocks for this run (the one wide shuffle)
-    tokenizer = tokenize_to_postings_pos if cfg["positions"] else tokenize_to_postings
-    tokens = (
-        tokenizer(docs, "doc_id", "text", analyzer=cfg["analyzer"])
-        if cfg.get("analyzer")
-        else tokenizer(docs, "doc_id", "text")
-    )
-    if kw_cols:
-        from ..index.build import keyword_postings
-
-        tokens = tokens.unionByName(keyword_postings(docs, kw_cols, cfg["positions"]))
-    if ff_cols:
-        from ..index.build import field_postings
-
-        tokens = tokens.unionByName(field_postings(docs, ff_cols, cfg["positions"]))
-    tokens = tokens.withColumn("bucket", _bucket_col(cfg["n_buckets"]))
-    builder = _make_block_builder(cfg["block_size"], with_positions=cfg["positions"])
-    blocks = (
-        tokens.repartition("term", "bucket")
-        .sortWithinPartitions("term", "bucket", "doc_id", "tf", "dl")
-        .mapInPandas(builder, schema=BLOCKS_POS_SCHEMA if cfg["positions"] else BLOCKS_SCHEMA)
-        .withColumn("tb", F.pmod(F.xxhash64("term"), F.lit(cfg["n_term_buckets"])).cast("int"))
-        .withColumn("run", F.lit(run_id))
-        .repartition(cfg["n_term_buckets"], "tb")
-        .sortWithinPartitions("term", "bucket", "blk")
+    # --- posting blocks for this run (the one wide shuffle); a batch always
+    # takes the block reorg: one file per tb dir keeps serving probes flat
+    # as runs accumulate between compactions
+    blocks = _run_blocks(
+        docs, kw_cols, ff_cols, run_id, n_buckets=cfg["n_buckets"],
+        block_size=cfg["block_size"], n_term_buckets=cfg["n_term_buckets"],
+        positions=cfg["positions"], analyzer=cfg["analyzer"],
     )
     seg_dir = os.path.join(out_dir, "segments")
-    _dyn_overwrite(blocks, seg_dir, ("tb", "run"))
+    _dyn_overwrite(_reorg(blocks, cfg["n_term_buckets"]), seg_dir, ("tb", "run"))
 
     # --- delta-only derived artifacts (partition-pruned read of run=<this>).
-    # The dictionary delta is independent of the manifest commit below, so
-    # it runs as a concurrent driver thread (guide §2.6) overlapping the
-    # two ledger collects; it is joined BEFORE the commit so the crash
-    # ordering (segments → derived deltas → manifest append) is unchanged.
+    # The dictionary delta is independent of the ledger collects, so it
+    # overlaps them; it is joined BEFORE the commit so the crash ordering
+    # (segments → derived deltas → manifest append) is unchanged.
     delta = spark.read.parquet(seg_dir).where(F.col("run") == run_id)
-    dict_fut = None
-    if refresh_dict:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _pool = ThreadPoolExecutor(max_workers=1)
-        dict_fut = _pool.submit(
-            write_dictionary_delta, delta, out_dir, cfg["n_term_buckets"], run_id
-        )
-        _pool.shutdown(wait=False)
-
-    # two tiny collects (≤ n_buckets rows each) + a driver-side parquet
-    # append replace the old agg → full_outer join → write job chain.
-    # sum_dl/n_docs come from DOCLENS (not the blocks): under exact_stats
-    # the anti-joined ledger counts only NEW docs while the blocks carry
-    # every posting — the ledger side is authoritative.
-    ds_rows = {
-        int(r["bucket"]): r
-        for r in doclens.groupBy(_bucket_col(cfg["n_buckets"]).alias("bucket"))
-        .agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
-        .collect()
-    }
-    blk_rows = {int(r["bucket"]): r for r in _delta_manifest_rows(delta)}
-    import time as _time
-
-    now = _time.time()
-    man_rows = []
-    for bkt in sorted(set(ds_rows) | set(blk_rows)):
-        a, d = blk_rows.get(bkt), ds_rows.get(bkt)
-        man_rows.append(
-            {
-                "bucket": bkt,
-                "n_terms": int(a["n_terms"]) if a else 0,
-                "n_blocks": int(a["n_blocks"]) if a else 0,
-                "n_postings": int(a["n_postings"]) if a else 0,
-                "checksum": int(a["checksum"]) if a else 0,
-                "sum_dl": int(d["sum_dl"]) if d else 0,
-                "n_docs": int(d["n_docs"]) if d else 0,
-                "committed_at": now,
-                "run_id": run_id,
-                "run": run_id,
-            }
-        )
-    if dict_fut is not None:
-        dict_fut.result()  # derived deltas land before the commit
+    with _Overlap() as bg:
+        dict_fut = None
+        if refresh_dict:
+            dict_fut = bg.submit(
+                write_dictionary_delta, delta, out_dir, cfg["n_term_buckets"], run_id
+            )
+        # sum_dl/n_docs come from DOCLENS (not the blocks): under
+        # exact_stats the anti-joined ledger counts only NEW docs while the
+        # blocks carry every posting — the ledger side is authoritative.
+        ledger = _doclens_ledger(doclens, cfg["n_buckets"])
+        man_rows = _manifest_for_run(_delta_manifest_rows(delta), ledger, run_id, run_id)
+        if dict_fut is not None:
+            dict_fut.result()  # derived deltas land before the commit
     _append_manifest(man_dir, man_rows)  # ← THE commit
     doclens.unpersist()
     refresh_stats(spark, out_dir, defaults=cfg)
