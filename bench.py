@@ -342,16 +342,11 @@ def _daily90_bench(spark) -> dict:
         t0 = time.time()
         ds.search_rows("term00001 term00456", 10)
         out["daily90_window_warm_sec"] = round(time.time() - t0, 4)
-        # metadata-only cost over the 90 days: merged stats + the ONE
-        # dictionary dataset probe (a warm handle pays no stats reads)
-        from conveyorbelt_spark.index.daily import list_days
-
-        days = list_days(root)
+        # metadata-only cost over the 90 days: the window Searcher (merged
+        # stats from the warm per-day cache) + its ONE dictionary dataset
+        # probe for the two terms (a warm handle pays no stats reads)
         t0 = time.time()
-        stats = ds._merged_stats(days)
-        ds._merged_lookup(days, stats["n_term_buckets"])(
-            ["term00001", "term00456"]
-        )
+        ds._window(None)._entries(["term00001", "term00456"])
         out["daily90_metadata_warm_sec"] = round(time.time() - t0, 4)
     finally:
         shutil.rmtree(root, ignore_errors=True)

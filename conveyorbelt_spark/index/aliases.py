@@ -15,8 +15,9 @@ node merges by score. ``search_body_multi`` reproduces exactly that:
 per-index ``search_body`` (each a pruned distributed plan over that
 index), then a driver merge of the size+from heads — the same shape as
 the ES coordinating-node reduce. For merged-statistics ranking over a
-time window, ``DailySearcher``/``search_body_daily`` is the
-dfs_query_then_fetch-grade path (index/daily.py).
+time window (dfs_query_then_fetch-grade), ``DailySearcher`` and
+``search_body_daily`` build one ``Searcher`` over the selected day
+indexes, scoring with their summed statistics (index/daily.py).
 """
 
 from __future__ import annotations

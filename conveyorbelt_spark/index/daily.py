@@ -18,9 +18,12 @@ ordinary builder. That buys, with zero new index machinery:
 - **ingest routing**: an incremental batch splits by event day and lands
   in its days' sub-indexes (normally 1–2 thanks to the grace window).
 
-Scoring semantics: corpus statistics (n_docs, total_tokens → avgdl, and
-per-term df) are MERGED across the selected days before scoring — exact
-global stats over the queried window, the equivalent of Elasticsearch's
+Serving: ``DailySearcher`` is a window view. Each query selects the days
+overlapping its ``time_range`` and builds a ``query.Searcher`` over them —
+the same serving searcher a single index uses, reading a list of day
+roots. Scoring uses corpus statistics (n_docs, total_tokens → avgdl, and
+per-term df) MERGED across the selected days — exact global stats over
+the queried window, the equivalent of Elasticsearch's
 ``dfs_query_then_fetch`` (plain ES daily indexes score with per-shard df;
 merged stats are strictly more consistent and are what the DuckDB oracle
 computes). Day partitions slice the corpus disjointly (a doc belongs to its
@@ -31,10 +34,11 @@ Granularity is the reference's: a daily index holds its whole day, so a
 filtering add a range filter on a stored ts column — same as ES).
 
 Scale: selecting d days of a y-day corpus reads d/y of the segment bytes
-before any term pruning even starts; the per-day probes are driver-side
-metadata reads (~1 parquet footer per term bucket per day). The scoring
-kernel is unchanged — per-bucket groups simply concatenate blocks from
-several days' runs, the multi-run shape it already handles.
+before any term pruning even starts; per-day stats and tombstones are
+cached by stats.json mtime, and the window's dictionary probe is one
+dataset read over every selected day. Per-bucket groups simply
+concatenate blocks from several days' runs, the multi-run shape the
+kernel already handles.
 """
 
 from __future__ import annotations
@@ -48,16 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
 from .build import build_index, load_stats, write_docstore
-from .query import (
-    _bool_plan,
-    _committed,
-    _lookup_terms,
-    _read_blocks_local,
-    _score_kernel,
-    _score_local,
-    _tombs,
-    _BLOCK_COLS,
-)
+from .query import _BLOCK_COLS, Searcher, _bool_plan, _Root, _score_kernel, _tombs
 
 DAY_FMT = "yyyyMMdd"  # IndexNamer.cs:27 rendering (prefix-yyyyMMdd)
 
@@ -261,51 +256,21 @@ def _merged_stats(root: str, days: list[str], loader=None) -> dict:
     return merged
 
 
-def _merged_lookup(spark, root: str, days: list[str], n_term_buckets: int, loader=None):
-    """Dictionary probe across the selected days: Σ df / Σ cf per term —
-    ONE pyarrow dataset read over every selected day's committed,
-    tb-pruned dictionary files (``query._lookup_terms_multi``), not a
-    per-day loop: a multi-year window costs one probe, not hundreds of
-    sequential round-trips before the first job. Non-posix paths fall
-    back to the per-day Spark-pruned probe."""
-    from .query import _lookup_terms_multi
-
-    loader = loader or (lambda d: load_stats(day_dir(root, d)))
-    dirs = [(day_dir(root, d), _committed(loader(d))) for d in days]
-
-    def lookup(terms: list[str]) -> list[dict]:
-        out = _lookup_terms_multi(dirs, terms, n_term_buckets)
-        if out is not None:
-            return out
-        merged: dict[str, dict] = {}
-        for d_dir, committed in dirs:
-            for e in _lookup_terms(
-                spark, d_dir, terms, n_term_buckets, committed=committed
-            ):
-                m = merged.setdefault(
-                    e["term"],
-                    {"term": e["term"], "df": 0, "cf": 0, "n_blocks": 0, "tb": e["tb"]},
-                )
-                m["df"] += e["df"]
-                m["cf"] += e["cf"]
-                m["n_blocks"] += e["n_blocks"]
-        return list(merged.values())
-
-    return lookup
-
-
 class DailySearcher:
-    """Query handle over a daily-index root: every search takes a
-    ``time_range=(lo, hi)`` (datetimes; either side None = open) and prunes
-    to the overlapping day sub-indexes BEFORE any file is opened. Scores
-    use merged window stats, so results are rank-identical to a single
-    index built over exactly the window's documents (asserted in tests and
-    by the q32 DuckDB oracle)."""
+    """Window view over a daily-index root: every search takes a
+    ``time_range=(lo, hi)`` (datetimes; either side None = open), selects
+    the overlapping day sub-indexes BEFORE any file is opened, and builds a
+    ``query.Searcher`` over them (``_window``). The serving methods —
+    ``search_rows``, ``phrase_rows``, ``multi_match_rows``, ``mlt_terms``,
+    ``more_like_this``, ``search_docs`` — are that Searcher's, so results
+    are rank-identical to a single index built over exactly the window's
+    documents (asserted in tests and by the q32 DuckDB oracle). The Spark
+    window plans (``search``, ``bool_doc_ids``, aggregations, sorted
+    export) union the selected days' scans in one plan."""
 
-    def __init__(self, spark: SparkSession, root: str, mode: str = "auto"):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.mode = mode
         # per-day metadata caches keyed by the day's stats.json mtime (the
         # index version stamp): a long-lived serving handle reads each
         # day's stats/tombstones ONCE, not once per query per day
@@ -333,45 +298,21 @@ class DailySearcher:
         self._tomb_cache[day] = (m, t)
         return t
 
-    def _merged_stats(self, days: list[str]) -> dict:
-        return _merged_stats(self.root, days, loader=self._day_stats)
-
-    def _merged_lookup(self, days: list[str], n_term_buckets: int):
-        return _merged_lookup(
-            self.spark, self.root, days, n_term_buckets, loader=self._day_stats
-        )
-
-    def _plan(
-        self, time_range, query, must, must_not, filters=None, ranges=None,
-        or_groups=None, not_atoms=None,
-    ):
+    def _window(self, time_range) -> Searcher | None:
+        """A Searcher over the days overlapping ``time_range`` (None when
+        no day does), scoring with their merged stats. Built per query from
+        the mtime-cached day metadata, so it holds no term cache across
+        calls and a warm window reads no stats.json."""
         days = select_days(self.root, time_range)
         if not days:
             return None
-        stats = self._merged_stats(days)
-        lookup = self._merged_lookup(days, stats["n_term_buckets"])
-        plan = _bool_plan(
-            self.spark, self.root, stats, query, must, must_not, lookup=lookup,
-            filters=filters, ranges=ranges,
-            range_expand=self._range_expand(days),
-            or_groups=or_groups, not_atoms=not_atoms,
-        )
-        if plan is None:
-            return None
-        return days, stats, plan
-
-    def _range_expand(self, days: list[str]):
-        """Window keyword-range expansion: ONE dataset probe over the
-        selected days' sidecar-pruned term_index files
-        (``query._term_range_multi``) — not a per-day loop."""
-        from .query import _term_range_multi
-
-        def range_expand(lo: str, hi: str) -> list[str]:
-            return _term_range_multi(
-                [day_dir(self.root, d) for d in days], lo, hi
-            )
-
-        return range_expand
+        roots: dict[str, _Root] = {}
+        for d in days:
+            tomb = self._day_tombs(d)  # refreshes the day's cached stats first
+            m, s = self._stats_cache[d]
+            roots[d] = _Root(day_dir(self.root, d), s, tomb, m)
+        stats = _merged_stats(self.root, days, loader=lambda d: roots[d].stats)
+        return Searcher._over(self.spark, self.root, stats, list(roots.values()))
 
     def search_rows(
         self, query: str, k: int = 10, *,
@@ -382,54 +323,15 @@ class DailySearcher:
         or_groups: list | None = None, not_atoms: list | None = None,
         after: tuple[float, int] | None = None,
     ) -> list[tuple[int, float]]:
-        """Serving path: per-day pruned pyarrow block reads concatenated,
-        one kernel pass (buckets merge across days — the multi-run shape).
-        Zero Spark jobs. ``filters``/``ranges`` = ES filter context over
-        keyword fields (see ``bm25_topk``); ``or_groups``/``not_atoms`` =
-        the nested-bool atom forms (``query._atom_terms``); ``after`` =
-        (score, doc_id) score-order search_after."""
-        p = self._plan(
-            time_range, query, must, must_not, filters, ranges,
-            or_groups, not_atoms,
+        """``Searcher.search_rows`` over the window: zero Spark jobs."""
+        w = self._window(time_range)
+        if w is None:
+            return []
+        return w.search_rows(
+            query, k, prune, must=must, must_not=must_not, min_should=min_should,
+            filters=filters, ranges=ranges, or_groups=or_groups,
+            not_atoms=not_atoms, after=after,
         )
-        if p is None:
-            return []
-        days, stats, (term_idf, must_terms, not_terms, tbs, scan_terms, sp, fgroups) = p
-        if min_should > len(sp):
-            return []
-        blocks = self._window_blocks(days, tbs, scan_terms)
-        if blocks is None or not len(blocks):
-            return []
-        return _score_local(
-            blocks, term_idf, k, stats, prune,
-            must_terms=must_terms, not_terms=not_terms, filter_groups=fgroups,
-            should_terms=sp, min_should=min_should, after=after,
-        )
-
-    def _window_blocks(self, days, tbs, scan_terms, columns=None):
-        """Concatenated per-day pruned pyarrow block reads with each day's
-        delete snapshot applied — the window serving-path scan (zero Spark
-        jobs). None when some day is not locally readable."""
-        frames = []
-        for day in days:
-            d_dir = day_dir(self.root, day)
-            d_stats = self._day_stats(day)
-            d_tomb = self._day_tombs(day)
-            b = _read_blocks_local(
-                d_dir, tbs, scan_terms, columns=columns,
-                committed=_committed(d_stats), with_run=bool(d_tomb),
-            )
-            if b is None:
-                raise FileNotFoundError(f"{d_dir}/segments is not locally readable")
-            if d_tomb and len(b):
-                from .delete import apply_tombstones
-
-                b = apply_tombstones(b, d_tomb).drop(columns=["run"])
-            if len(b):
-                frames.append(b)
-        if not frames:
-            return pd.DataFrame()
-        return pd.concat(frames, ignore_index=True)
 
     def search(
         self, query: str, k: int = 10, *,
@@ -441,27 +343,32 @@ class DailySearcher:
         segment dirs (pruning by path construction + tb partitions + term
         row groups), same kernel, global top-k."""
         empty = self.spark.createDataFrame([], "doc_id long, score double")
-        p = self._plan(time_range, query, must, must_not, filters, ranges)
-        if p is None:
+        w = self._window(time_range)
+        if w is None:
             return empty
-        days, stats, (term_idf, must_terms, not_terms, tbs, scan_terms, _sp, fgroups) = p
+        plan = _bool_plan(
+            self.spark, self.root, w.stats, query, must, must_not,
+            lookup=w._entries, filters=filters, ranges=ranges,
+            range_expand=w._range_expand,
+        )
+        if plan is None:
+            return empty
+        term_idf, must_terms, not_terms, tbs, scan_terms, _sp, fgroups = plan
         # one pruned read per selected day, unioned (a multi-root read trips
         # partition discovery on the day= ancestor dirs); each read keeps
         # its own tb-partition + term row-group pruning
         from functools import reduce
 
-        def one_day(d):
+        def one_day(r):
             from .query import _seg_scan
 
-            d_stats = self._day_stats(d)
             # _seg_scan: committed-run snapshot + EXPLICIT schema (no
             # per-day 1-task parquet schema-inference job)
-            seg = _seg_scan(self.spark, day_dir(self.root, d), d_stats).where(
+            seg = _seg_scan(self.spark, r.dir, r.stats).where(
                 F.col("tb").isin(tbs) & F.col("term").isin(scan_terms)
             )
             base = seg.select(*_BLOCK_COLS)
-            tomb_d = self._day_tombs(d)
-            if tomb_d:
+            if r.tomb:
                 # deletes apply PER DAY before the union: day sub-indexes
                 # reuse run names (full-g0, batch_N), so one merged
                 # tombstone map would cross-contaminate days; block surgery
@@ -470,7 +377,7 @@ class DailySearcher:
 
                 withrun = seg.select(*_BLOCK_COLS, "run")
 
-                def strip(it, _t=tomb_d):
+                def strip(it, _t=r.tomb):
                     for pdf in it:
                         out = apply_tombstones(pdf, _t)
                         yield out.drop(columns=["run"])
@@ -478,12 +385,12 @@ class DailySearcher:
                 base = withrun.mapInPandas(strip, schema=base.schema)
             return base
 
-        seg = reduce(DataFrame.unionByName, [one_day(d) for d in days])
+        seg = reduce(DataFrame.unionByName, [one_day(r) for r in w._roots])
         kern = _score_kernel(
             term_idf, k, prune=prune, must_terms=must_terms, not_terms=not_terms,
             filter_groups=fgroups,
         )
-        kern.k1, kern.b, kern.avgdl = stats["k1"], stats["b"], stats["avgdl"]
+        kern.k1, kern.b, kern.avgdl = w.stats["k1"], w.stats["b"], w.stats["avgdl"]
         local = seg.groupBy("bucket").applyInPandas(kern, schema="doc_id long, score double")
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -515,17 +422,16 @@ class DailySearcher:
         )
 
         empty = self.spark.createDataFrame([], "doc_id long")
-        days = select_days(self.root, time_range)
-        if not days:
+        w = self._window(time_range)
+        if w is None:
             return empty
-        stats = self._merged_stats(days)
-        az = stats.get("analyzer")
+        az = w.stats.get("analyzer")
         should_terms = sorted(set(analyze(query, az))) if query else []
         must_terms = sorted(set(analyze(must, az))) if must else []
         not_terms = sorted(set(analyze(must_not, az))) if must_not else []
         # keyword terms are day-independent strings: the window's expansion
         # is the union of each day's range-sidecar probe
-        range_expand = self._range_expand(days)
+        range_expand = w._range_expand
         if not_atoms:
             not_terms = sorted(
                 set(not_terms) | set(_expand_atoms(not_atoms, range_expand))
@@ -540,22 +446,14 @@ class DailySearcher:
         if not scoring and not fgroups:
             return empty
         if must_terms:
-            lookup = _merged_lookup(
-                self.spark, self.root, days, stats["n_term_buckets"]
-            )
-            present = {e["term"] for e in lookup(must_terms)}
+            present = {e["term"] for e in w._entries(must_terms)}
             if any(mt not in present for mt in must_terms):
                 return empty  # provably empty across the whole window
         flat = sorted({t for g in fgroups for t in g})
         all_terms = sorted(set(scoring) | set(not_terms) | set(flat))
         pairs = reduce(
             DataFrame.unionByName,
-            [
-                term_doc_pairs(
-                    self.spark, day_dir(self.root, d), all_terms, distinct=False
-                )
-                for d in days
-            ],
+            [term_doc_pairs(self.spark, d, all_terms, distinct=False) for d in w._dirs],
         ).distinct()
         return _bool_match_ids(
             pairs, should_terms, must_terms, not_terms, min_should, fgroups
@@ -689,106 +587,25 @@ class DailySearcher:
         self, phrase: str, k: int = 10, *, time_range: tuple | None = None,
         after: tuple[float, int] | None = None, slop: int = 0,
     ) -> list[tuple[int, float]]:
-        """Day-pruned phrase search (positional daily indexes): merged
-        window stats + the same per-bucket phrase kernel over the selected
-        days' pruned block reads — zero Spark jobs. ``slop`` = ES
-        proximity (see ``query._phrase_kernel``)."""
-        from .query import _phrase_kernel, _phrase_plan
-
-        days = select_days(self.root, time_range)
-        if not days:
+        """``Searcher.phrase_rows`` over the window (positional daily
+        indexes): zero Spark jobs."""
+        w = self._window(time_range)
+        if w is None:
             return []
-        stats = self._merged_stats(days)
-        lookup = self._merged_lookup(days, stats["n_term_buckets"])
-        plan = _phrase_plan(self.spark, self.root, stats, phrase, lookup=lookup)
-        if plan is None:
-            return []
-        phrase_tokens, idf_sum, tbs, distinct = plan
-        blocks = self._window_blocks(days, tbs, distinct, columns=_BLOCK_COLS + ["poss"])
-        if blocks is None or not len(blocks):
-            return []
-        kern = _phrase_kernel(phrase_tokens, idf_sum, k, after=after, slop=slop)
-        kern.k1, kern.b, kern.avgdl = stats["k1"], stats["b"], stats["avgdl"]
-        outs = [kern(grp) for _, grp in blocks.groupby("bucket", sort=True)]
-        outs = [o for o in outs if len(o)]
-        if not outs:
-            return []
-        allr = pd.concat(outs, ignore_index=True)
-        allr = allr.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        )
-        return [(int(r.doc_id), float(r.score)) for r in allr.head(k).itertuples()]
+        return w.phrase_rows(phrase, k, after=after, slop=slop)
 
     def multi_match_rows(
         self, query: str, fields: list[str], k: int = 10, *,
         type: str = "best_fields",  # noqa: A002 — the ES parameter name
         prune: bool = True, time_range: tuple | None = None,
     ) -> list[tuple[int, float]]:
-        """Windowed ES multi_match: per-field BM25 with WINDOW-merged
-        stats — per-term df from the merged dictionary probe, per-field
-        avgdl = Σ over the selected days of the field's term-range cf sums
-        / merged n_docs (each day probe is a sidecar-pruned metadata
-        read). Scoring runs over the concatenated per-day pruned block
-        reads — zero Spark jobs, dis_max (best_fields) or one-pass
-        per-term norms (most_fields) exactly like the single-index path."""
-        import pandas as _pd
-
-        from .build import KEYWORD_SEP
-        from .query import (
-            _merge_best_fields,
-            _multi_match_plan,
-            _range_cf_sum_multi,
-            _range_hi,
-            _score_kernel,
-        )
-
-        days = select_days(self.root, time_range)
-        if not days:
+        """``Searcher.multi_match_rows`` over the window: per-term df and
+        per-field avgdl (Σ field cf / n_docs) both merge across the
+        selected days."""
+        w = self._window(time_range)
+        if w is None:
             return []
-        stats = self._merged_stats(days)
-        lookup = self._merged_lookup(days, stats["n_term_buckets"])
-
-        def field_avg(fname: str) -> float:
-            lo = fname + KEYWORD_SEP
-            total = _range_cf_sum_multi(
-                [day_dir(self.root, d) for d in days], lo, _range_hi(lo)
-            )
-            n = stats.get("n_docs") or 0
-            return (total / n) if n else 0.0
-
-        plan = _multi_match_plan(
-            self.spark, self.root, stats, query, fields,
-            lookup=lookup, field_avg=field_avg,
-        )
-        if plan is None:
-            return []
-        per_field, tbs, scan_terms = plan
-        blocks = self._window_blocks(days, tbs, scan_terms)
-        if blocks is None or not len(blocks):
-            return []
-        if type == "most_fields":
-            term_idf = {t: v for _, _, ti, _ in per_field for t, v in ti.items()}
-            abt = {t: av for _, _, ti, av in per_field for t in ti}
-            kern = _score_kernel(term_idf, k, prune=prune)
-            kern.k1, kern.b, kern.avgdl = stats["k1"], stats["b"], stats["avgdl"]
-            kern.max_candidates = None
-            kern.avgdl_by_term = abt
-            outs = [kern(grp) for _, grp in blocks.groupby("bucket", sort=True)]
-            outs = [o for o in outs if len(o)]
-            if not outs:
-                return []
-            allr = _pd.concat(outs, ignore_index=True).sort_values(
-                ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-            )
-            return [(int(r.doc_id), float(r.score)) for r in allr.head(k).itertuples()]
-        if type != "best_fields":
-            raise ValueError(f"unsupported multi_match type {type!r}")
-        rows_per_field = []
-        for _fname, _boost, term_idf, avgdl in per_field:
-            f_blocks = blocks[blocks["term"].isin(set(term_idf))]
-            st = dict(stats, avgdl=avgdl)
-            rows_per_field.append(_score_local(f_blocks, term_idf, k, st, prune))
-        return [(int(d), float(s)) for d, s in _merge_best_fields(rows_per_field, k)]
+        return w.multi_match_rows(query, fields, k, type=type, prune=prune)
 
     def expand_terms(
         self, kind: str, value: str, *,
@@ -801,8 +618,6 @@ class DailySearcher:
         pruned), dfs SUM per term across the disjoint day corpora, and the
         ES df-desc ranking applies ONCE to the merged frame — exact global
         ranking (a union of per-day top-N would not be)."""
-        import pandas as _pd
-
         from .query import _rank_expansions, expansion_candidates
 
         days = select_days(self.root, time_range)
@@ -819,7 +634,7 @@ class DailySearcher:
         if not frames:
             return []
         merged = (
-            _pd.concat(frames, ignore_index=True)
+            pd.concat(frames, ignore_index=True)
             .groupby("term", as_index=False, sort=True)["df"].sum()
         )
         return _rank_expansions(merged, max_expansions, value.lower())
@@ -845,95 +660,39 @@ class DailySearcher:
         max_query_terms: int = 25, min_doc_freq: int = 2, min_term_freq: int = 1,
         exclude_self: bool = True,
     ) -> list[tuple[int, float]]:
-        """Windowed more_like_this: term interestingness (tf·idf) against
-        the WINDOW-merged dictionary (Σ df across the selected days),
-        executed as a SHOULD bag over the window. ``like`` is raw text or
-        a doc_id resolved from the selected days' docstores."""
-        sel, self_id = self.mlt_terms(
-            like, time_range=time_range, max_query_terms=max_query_terms,
-            min_doc_freq=min_doc_freq, min_term_freq=min_term_freq,
-        )
-        if not sel:
+        """``Searcher.more_like_this`` over the window: interestingness
+        against the window-merged dictionary; a doc_id ``like`` resolves
+        from the selected days' docstores."""
+        w = self._window(time_range)
+        if w is None:
             return []
-        rows = self.search_rows(
-            " ".join(sel), k + (1 if exclude_self else 0), time_range=time_range
+        return w.more_like_this(
+            like, k, max_query_terms=max_query_terms, min_doc_freq=min_doc_freq,
+            min_term_freq=min_term_freq, exclude_self=exclude_self,
         )
-        if exclude_self and self_id is not None:
-            rows = [(d, s) for d, s in rows if d != self_id]
-        return rows[:k]
 
     def mlt_terms(
         self, like, *, time_range: tuple | None = None,
         max_query_terms: int = 25, min_doc_freq: int = 2, min_term_freq: int = 1,
     ) -> tuple[list[str], int | None]:
-        """The windowed MLT term selection (window-merged interestingness)
-        — factored out so exact totals can count the same bag."""
-        from collections import Counter
-
-        from ..textutils import analyze
-        from .build import lookup_docs
-        from .query import idf
-
-        days = select_days(self.root, time_range)
-        if not days:
+        """``Searcher.mlt_terms`` over the window (the bag exact totals
+        count)."""
+        w = self._window(time_range)
+        if w is None:
             return [], None
-        stats = self._merged_stats(days)
-        self_id = None
-        if isinstance(like, int):
-            self_id = like
-            text = None
-            for d in days:
-                row = lookup_docs(day_dir(self.root, d), [like]).get(like)
-                if row is not None and row.get("text") is not None:
-                    text = row["text"]
-                    break
-            if text is None:
-                raise ValueError(
-                    f"doc {like} has no stored text in the selected days — "
-                    "build the day docstores with extra_cols=('text',)"
-                )
-        else:
-            text = like
-        tf = Counter(analyze(text, stats.get("analyzer")))
-        if not tf:
-            return [], self_id
-        lookup = self._merged_lookup(days, stats["n_term_buckets"])
-        entries = {e["term"]: e for e in lookup(sorted(tf))}
-        scored_terms = []
-        for t, f in tf.items():
-            e = entries.get(t)
-            if e is None or f < min_term_freq or int(e["df"]) < min_doc_freq:
-                continue
-            scored_terms.append((f * idf(stats["n_docs"], int(e["df"])), t))
-        scored_terms.sort(key=lambda iv: (-iv[0], iv[1]))
-        return [t for _, t in scored_terms[:max_query_terms]], self_id
+        return w.mlt_terms(
+            like, max_query_terms=max_query_terms, min_doc_freq=min_doc_freq,
+            min_term_freq=min_term_freq,
+        )
 
     def search_docs(
         self, query: str, k: int = 10, *,
         time_range: tuple | None = None,
         must: str | None = None, must_not: str | None = None,
     ) -> list[dict]:
-        """Day-pruned search with stored columns resolved from the selected
-        days' docstores."""
-        from .build import lookup_docs
-
-        rows = self.search_rows(
-            query, k, time_range=time_range, must=must, must_not=must_not
-        )
-        days = select_days(self.root, time_range)
-        meta: dict[int, dict] = {}
-        missing = [d for d, _ in rows]
-        for day in days:
-            if not missing:
-                break
-            found = lookup_docs(day_dir(self.root, day), missing)
-            meta.update(found)
-            missing = [d for d in missing if d not in meta]
-        out = []
-        for d, s in rows:
-            row = dict(meta.get(d, {}))
-            row.pop("bucket", None)
-            row.pop("run", None)
-            row.update({"doc_id": d, "score": s})
-            out.append(row)
-        return out
+        """``Searcher.search_docs`` over the window: stored columns resolve
+        from the selected days' docstores."""
+        w = self._window(time_range)
+        if w is None:
+            return []
+        return w.search_docs(query, k, must=must, must_not=must_not)

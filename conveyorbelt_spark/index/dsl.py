@@ -570,6 +570,7 @@ def _parse_bool_core(body: dict, plan: dict, analyzer, top: bool = False) -> _Bo
         _parse_filter_not(clause, plan, ctx, analyzer)
 
     own_shoulds: list[str] = []
+    n_features = 0  # feature clauses in THIS should list (not plan-wide)
     for clause in should_clauses:
         k2, b2 = _one(clause)
         if k2 == "match":
@@ -608,6 +609,7 @@ def _parse_bool_core(body: dict, plan: dict, analyzer, top: bool = False) -> _Bo
                 _parse_rank_feature(b2) if k2 == "rank_feature"
                 else _parse_distance_feature(b2)
             )
+            n_features += 1
             continue
         elif k2 == "bool":
             raise UnsupportedDSL(
@@ -624,22 +626,22 @@ def _parse_bool_core(body: dict, plan: dict, analyzer, top: bool = False) -> _Bo
     if msm is None:
         msm = 0 if (body.get("must") or body.get("filter")) else (1 if should_clauses else 0)
     msm = int(msm or 0)
+    if kw_should and own_shoulds:
+        raise UnsupportedDSL(
+            "mixing match and term/terms clauses in one should list is "
+            "unsupported (scoring vs filter semantics diverge)"
+        )
+    if n_features and msm >= 1 and (kw_should or own_shoulds):
+        # in ES a doc could satisfy the required-should group via the
+        # feature clause alone; we treat features as pure boosts, so that
+        # shape would silently shrink the matching set — reject. Feature
+        # clauses of a sibling or outer bool are not in this group.
+        raise UnsupportedDSL(
+            "rank_feature/distance_feature inside a REQUIRED should "
+            "group is unsupported — move the scoring clause to must "
+            "(features then boost, exactly like ES's common shape)"
+        )
     if kw_should:
-        if own_shoulds:
-            raise UnsupportedDSL(
-                "mixing match and term/terms clauses in one should list is "
-                "unsupported (scoring vs filter semantics diverge)"
-            )
-        if plan["rf_boosts"] and msm >= 1:
-            # same hazard as the own_shoulds guard below: in ES a doc can
-            # satisfy the required-should group via the feature clause
-            # alone; treating features as pure boosts would silently
-            # shrink the matching set — reject
-            raise UnsupportedDSL(
-                "rank_feature/distance_feature inside a REQUIRED should "
-                "group is unsupported — move the scoring clause to must "
-                "(features then boost, exactly like ES's common shape)"
-            )
         if msm == 0:
             pass  # ES: optional keyword shoulds only add constant score — dropped
         elif msm == 1:
@@ -652,15 +654,6 @@ def _parse_bool_core(body: dict, plan: dict, analyzer, top: bool = False) -> _Bo
                 "minimum_should_match > 1 over term/terms should clauses is unsupported"
             )
     elif own_shoulds:
-        if plan["rf_boosts"] and msm >= 1:
-            # in ES a doc could satisfy the required-should group via the
-            # feature clause alone; we treat features as pure boosts, so
-            # that shape would silently shrink the matching set — reject
-            raise UnsupportedDSL(
-                "rank_feature/distance_feature inside a REQUIRED should "
-                "group is unsupported — move the scoring clause to must "
-                "(features then boost, exactly like ES's common shape)"
-            )
         sub = _BoolCtx()
         sub.shoulds = own_shoulds
         sub.min_should = msm
@@ -3913,7 +3906,8 @@ def search_body_daily(
         else DailySearcher(spark, root)
     )
     sel_days = select_days(root, time_range)
-    az = ds._merged_stats(sel_days).get("analyzer") if sel_days else None
+    win = ds._window(time_range)
+    az = win.stats.get("analyzer") if win is not None else None
     plan = parse_query(body.get("query"), analyzer=az)
     if plan["match_none"]:
         return {"hits": {"total": {"value": 0, "relation": "eq"}, "hits": []}}
@@ -4074,12 +4068,11 @@ def search_body_daily(
             n = _union_count(lambda dd: phrase_doc_ids(
                 spark, dd, plan["phrase"], slop=plan["phrase_slop"]))
         elif plan["mm"] is not None:
-            stats = ds._merged_stats(days) if days else None
             mm_plan = _multi_match_plan(
-                spark, root, stats, plan["mm"]["query"], plan["mm"]["fields"],
-                lookup=ds._merged_lookup(days, stats["n_term_buckets"]),
+                spark, root, win.stats, plan["mm"]["query"], plan["mm"]["fields"],
+                lookup=win._entries,
                 field_avg=lambda _f: 1.0,  # totals need terms only, not norms
-            ) if days else None
+            ) if win is not None else None
             n = 0 if mm_plan is None else _union_count(
                 lambda dd: posting_docs_terms(spark, dd, mm_plan[2])
             )

@@ -11,8 +11,9 @@ Two paths:
   order in float64 — bit-identical to the oracle (SURVEY §7 Phase 4
   rank-identity requirement).
 
-- ``bm25_topk_sql`` (oracle mode): the same result via plain exploded
-  DataFrame joins/agg — used for cross-checks, not speed.
+- ``Searcher`` (the serving path): the same plan and kernel on the
+  driver over pyarrow block reads — zero Spark jobs per query — for one
+  index dir or a window of day indexes (``index.daily``).
 
 Scale: a query touches only the parquet partitions of its terms' hash
 buckets (partition pruning on ``tb``) and only matching ``term`` row groups
@@ -23,6 +24,7 @@ from __future__ import annotations
 
 import math
 import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -67,69 +69,77 @@ def _filter_committed_files(files: list[str], committed: set[str] | None) -> lis
 
 
 def _lookup_terms(
-    spark: SparkSession, out_dir: str, terms: list[str], n_term_buckets: int,
-    committed: set[str] | None = None,
+    spark: SparkSession, out_dir: str | list[str], terms: list[str],
+    n_term_buckets: int, committed: set[str] | None | list = None,
 ) -> list[dict]:
     """Driver-side dictionary probe (J1: tiny side — broadcast by value).
 
     Term buckets are computed with the pure-Python xxh64 twin, so the probe
     is partition-pruned (tb=...) before anything runs. For local/posix paths
-    the pruned files are read directly with pyarrow on the driver — ZERO
-    Spark jobs per query; non-posix paths fall back to a pruned Spark read
-    (term-sorted row groups → min/max pushdown).
+    the pruned files are read directly with pyarrow on the driver in ONE
+    dataset read — ZERO Spark jobs per query; non-posix paths fall back to
+    a pruned Spark read per dir (term-sorted row groups → min/max pushdown).
 
     The dictionary may hold one full run plus per-batch delta runs
     (dictionary/tb=K/run=R/): entries are merged on read — Σ df / Σ cf /
-    Σ n_blocks per term. A query touches only its terms' tb partitions, so
-    the merge cost is per-query O(matched rows), never O(dictionary)."""
+    Σ n_blocks per term. ``out_dir`` may be a list of index dirs (a window
+    of day indexes, ``committed`` then the list of their read snapshots):
+    the sums run across every dir, still in one dataset read. A query
+    touches only its terms' tb partitions, so the merge cost is per-query
+    O(matched rows), never O(dictionary)."""
     import glob
 
     from ..functions.hashing import term_bucket
 
     if not terms:
         return []
-    by_tb: dict[int, list[str]] = {}
-    for t in terms:
-        by_tb.setdefault(term_bucket(t, n_term_buckets), []).append(t)
+    one = isinstance(out_dir, str)
+    dirs = [out_dir] if one else list(out_dir)
+    snaps = [committed] if one else list(committed or [None] * len(dirs))
+    tb_of = {t: term_bucket(t, n_term_buckets) for t in terms}
+    tbs = sorted(set(tb_of.values()))
+    merged: dict[str, dict] = {}
 
-    dict_dir = f"{out_dir}/dictionary"
-    if os.path.isdir(dict_dir):
+    def add(rows) -> None:
+        for row in rows:
+            t = row["term"]
+            e = merged.setdefault(
+                t, {"term": t, "df": 0, "cf": 0, "n_blocks": 0, "tb": tb_of[t]}
+            )
+            e["df"] += row["df"]
+            e["cf"] += row["cf"]
+            e["n_blocks"] += row["n_blocks"]
+
+    if all(os.path.isdir(f"{d}/dictionary") for d in dirs):
         import pyarrow.dataset as ds
 
-        out: list[dict] = []
-        for tb, tb_terms in sorted(by_tb.items()):
-            files = _filter_committed_files(
-                glob.glob(f"{dict_dir}/tb={tb}/run=*/*.parquet"), committed
-            ) + glob.glob(f"{dict_dir}/tb={tb}/*.parquet")  # legacy flat layout
-            if not files:
-                continue
-            tbl = ds.dataset(files, format="parquet").to_table(
-                filter=ds.field("term").isin(tb_terms)
-            )
-            merged: dict[str, dict] = {}
-            for row in tbl.to_pylist():
-                e = merged.setdefault(
-                    row["term"],
-                    {"term": row["term"], "df": 0, "cf": 0, "n_blocks": 0, "tb": tb},
-                )
-                e["df"] += row["df"]
-                e["cf"] += row["cf"]
-                e["n_blocks"] += row["n_blocks"]
-            out.extend(merged.values())
-        return out
+        files = [
+            f
+            for d, snap in zip(dirs, snaps)
+            for tb in tbs
+            for f in _filter_committed_files(
+                glob.glob(f"{d}/dictionary/tb={tb}/run=*/*.parquet"), snap
+            ) + glob.glob(f"{d}/dictionary/tb={tb}/*.parquet")  # legacy flat layout
+        ]
+        if files:
+            add(ds.dataset(files, format="parquet").to_table(
+                filter=ds.field("term").isin(sorted(tb_of))
+            ).to_pylist())
+        return list(merged.values())
 
-    tbs = sorted(by_tb)
-    d = spark.read.parquet(dict_dir).where(
-        F.col("tb").isin(tbs) & F.col("term").isin(terms)
-    )
-    if committed is not None and "run" in d.columns:
-        d = d.where(F.col("run").isin(sorted(committed)))
-    d = (
-        d.groupBy("term", "tb")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"), F.sum("n_blocks").alias("n_blocks"))
-        .collect()
-    )
-    return [r.asDict() for r in d]
+    for d, snap in zip(dirs, snaps):
+        df = spark.read.parquet(f"{d}/dictionary").where(
+            F.col("tb").isin(tbs) & F.col("term").isin(terms)
+        )
+        if snap is not None and "run" in df.columns:
+            df = df.where(F.col("run").isin(sorted(snap)))
+        add(r.asDict() for r in (
+            df.groupBy("term")
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"),
+                 F.sum("n_blocks").alias("n_blocks"))
+            .collect()
+        ))
+    return list(merged.values())
 
 
 class _TermPostings:
@@ -5128,142 +5138,6 @@ def _ti_files(out_dir: str, lo: str | None, hi: str | None) -> list[str] | None:
     ]
 
 
-def _term_range_multi(dirs: list[str], lo: str | None, hi: str | None) -> list[str]:
-    """Window keyword-range expansion across SEVERAL index dirs in ONE
-    dataset probe (the DailySearcher metadata path): each dir's range
-    sidecar prunes its term_index files, the pruned lists union into one
-    pyarrow dataset read — one probe per query, not one per day. Dirs
-    predating the term_index layout fall back to their per-dir scan."""
-    import pyarrow.dataset as ds
-
-    files: list[str] = []
-    fallback: list[str] = []
-    for d in dirs:
-        fl = _ti_files(d, lo, hi)
-        if fl is None:
-            fallback.append(d)
-        else:
-            files.extend(fl)
-    terms: set[str] = set()
-    if files:
-        flt = None
-        if lo is not None:
-            flt = ds.field("term") >= lo
-        if hi is not None:
-            f2 = ds.field("term") < hi
-            flt = f2 if flt is None else (flt & f2)
-        tbl = ds.dataset(files, format="parquet").to_table(filter=flt, columns=["term"])
-        terms.update(tbl["term"].to_pylist())
-    for d in fallback:
-        terms.update(_term_range(d, lo, hi)["term"].tolist())
-    return sorted(terms)
-
-
-def _lookup_terms_multi(
-    dirs: list[tuple[str, set | None]], terms: list[str], n_term_buckets: int
-) -> list[dict] | None:
-    """Window dictionary probe across SEVERAL index dirs in ONE pyarrow
-    dataset read (the DailySearcher metadata path): per-dir committed-run
-    file pruning + tb-partition pruning build one file list, one scan
-    resolves every term's window-merged (Σ df / Σ cf / Σ n_blocks) entry —
-    O(1) dataset opens per query instead of O(days) sequential probes.
-    ``dirs`` is [(index_dir, committed_runs)]. Returns None when some dir
-    has no locally readable dictionary (caller falls back per day)."""
-    import glob
-
-    import pyarrow.dataset as ds
-
-    from ..functions.hashing import term_bucket
-
-    if not terms:
-        return []
-    by_tb: dict[int, list[str]] = {}
-    for t in terms:
-        by_tb.setdefault(term_bucket(t, n_term_buckets), []).append(t)
-    files: list[str] = []
-    for d, committed in dirs:
-        dict_dir = f"{d}/dictionary"
-        if not os.path.isdir(dict_dir):
-            return None
-        for tb in by_tb:
-            files.extend(
-                _filter_committed_files(
-                    glob.glob(f"{dict_dir}/tb={tb}/run=*/*.parquet"), committed
-                )
-                + glob.glob(f"{dict_dir}/tb={tb}/*.parquet")  # legacy flat layout
-            )
-    if not files:
-        return []
-    tbl = ds.dataset(files, format="parquet").to_table(
-        filter=ds.field("term").isin(sorted(set(terms)))
-    )
-    merged: dict[str, dict] = {}
-    for row in tbl.to_pylist():
-        t = row["term"]
-        e = merged.setdefault(
-            t,
-            {"term": t, "df": 0, "cf": 0, "n_blocks": 0,
-             "tb": term_bucket(t, n_term_buckets)},
-        )
-        e["df"] += row["df"]
-        e["cf"] += row["cf"]
-        e["n_blocks"] += row["n_blocks"]
-    return list(merged.values())
-
-
-def _term_index_scan(out_dir: str, lo: str | None, hi: str | None):
-    """(term, df) rows from the term-SORTED dictionary copy, pruned by the
-    range sidecar: only files whose recorded [min, max] overlaps [lo, hi)
-    are opened — no footer reads at query time. Returns None when the
-    index predates the term_index layout (caller falls back to the hash
-    dictionary scan). Duplicate terms across runs are df-summed."""
-    import pyarrow.dataset as ds
-
-    files = _ti_files(out_dir, lo, hi)
-    if files is None:
-        return None
-    if not files:
-        return pd.DataFrame({"term": pd.Series(dtype=object), "df": pd.Series(dtype="int64")})
-    flt = None
-    if lo is not None:
-        flt = ds.field("term") >= lo
-    if hi is not None:
-        f2 = ds.field("term") < hi
-        flt = f2 if flt is None else (flt & f2)
-    tbl = ds.dataset(files, format="parquet").to_table(filter=flt, columns=["term", "df"])
-    pdf = tbl.to_pandas()
-    if len(pdf):
-        pdf = pdf.groupby("term", as_index=False, sort=True)["df"].sum()
-    return pdf
-
-
-def _dictionary_scan(out_dir: str, lo: str | None, hi: str | None) -> pd.DataFrame:
-    """Fallback for pre-term_index layouts: column-pruned scan of every
-    hash-dictionary file (term-sorted row groups still prune via parquet
-    min/max stats, but all footers are opened)."""
-    import glob as _glob
-
-    import pyarrow.dataset as ds
-
-    dict_dir = f"{out_dir}/dictionary"
-    files = _glob.glob(f"{dict_dir}/tb=*/run=*/*.parquet") + _glob.glob(
-        f"{dict_dir}/tb=*/*.parquet"
-    )
-    if not files:
-        return pd.DataFrame({"term": pd.Series(dtype=object), "df": pd.Series(dtype="int64")})
-    flt = None
-    if lo is not None:
-        flt = ds.field("term") >= lo
-    if hi is not None:
-        f2 = ds.field("term") < hi
-        flt = f2 if flt is None else (flt & f2)
-    tbl = ds.dataset(files, format="parquet").to_table(filter=flt, columns=["term", "df"])
-    pdf = tbl.to_pandas()
-    if len(pdf):
-        pdf = pdf.groupby("term", as_index=False, sort=True)["df"].sum()
-    return pdf
-
-
 def field_caps(out_dir: str) -> dict:
     """ES ``_field_caps``: per-field capabilities derived from the index
     itself — the docstore's parquet schema supplies stored/aggregatable
@@ -5306,86 +5180,84 @@ def field_caps(out_dir: str) -> dict:
     return {"fields": caps}
 
 
-def _term_range(out_dir: str, lo: str | None, hi: str | None) -> pd.DataFrame:
-    pdf = _term_index_scan(out_dir, lo, hi)
-    if pdf is None:
-        pdf = _dictionary_scan(out_dir, lo, hi)
-    return pdf
-
-
-def _range_cf_sum_multi(dirs: list[str], lo: str, hi: str) -> int:
-    """Window Σ cf over a term range — ONE dataset probe over every dir's
-    sidecar-pruned term_index files (DailySearcher multi_match field
-    norms). Dirs without the cf-bearing term_index layout fall back to
-    their per-dir scan."""
-    import pyarrow.dataset as ds
-
-    files: list[str] = []
-    fallback: list[str] = []
-    for d in dirs:
-        fl = _ti_files(d, lo, hi)
-        if fl is None:
-            fallback.append(d)
-        else:
-            files.extend(fl)
-    total = 0
-    if files:
-        try:
-            tbl = ds.dataset(files, format="parquet").to_table(
-                filter=(ds.field("term") >= lo) & (ds.field("term") < hi),
-                columns=["cf"],
-            )
-            total += int(pd.Series(tbl["cf"].to_pandas()).sum()) if tbl.num_rows else 0
-        except Exception:  # noqa: BLE001 — pre-cf term_index layout
-            fallback.extend(d for d in dirs if d not in fallback)
-    return total + sum(_range_cf_sum(d, lo, hi) for d in fallback)
-
-
-def _range_cf_sum(out_dir: str, lo: str, hi: str) -> int:
-    """Σ collection frequency over the [lo, hi) term range — the per-field
-    total-token count for multi_match norms. Served from the sorted
-    term_index (sidecar-pruned, cf column) when present; pre-cf layouts
-    fall back to the hash-dictionary scan (cf always stored there)."""
+def _dict_files(out_dir: str) -> list[str]:
+    """Every hash-dictionary file of an index dir (all runs)."""
     import glob as _glob
-    import json as _json
 
-    import pyarrow.dataset as ds
-
-    from .build import TERM_RANGES_FILE
-
-    ti_dir = os.path.join(out_dir, "term_index")
-    sidecar = os.path.join(out_dir, TERM_RANGES_FILE)
-    if os.path.isdir(ti_dir) and os.path.exists(sidecar):
-        with open(sidecar) as f:
-            ranges = _json.load(f)
-        files = [
-            os.path.join(ti_dir, rel)
-            for rel, (mn, mx) in sorted(ranges.items())
-            if mn < hi and mx >= lo
-        ]
-        if files:
-            try:
-                tbl = ds.dataset(files, format="parquet").to_table(
-                    filter=(ds.field("term") >= lo) & (ds.field("term") < hi),
-                    columns=["cf"],
-                )
-                return int(pd.Series(tbl["cf"].to_pandas()).sum()) if tbl.num_rows else 0
-            except Exception:  # noqa: BLE001 — pre-cf term_index layout
-                pass
-        else:
-            return 0
-    dict_files = _glob.glob(f"{out_dir}/dictionary/tb=*/run=*/*.parquet") + _glob.glob(
+    return _glob.glob(f"{out_dir}/dictionary/tb=*/run=*/*.parquet") + _glob.glob(
         f"{out_dir}/dictionary/tb=*/*.parquet"
     )
-    if not dict_files:
-        return 0
-    tbl = ds.dataset(dict_files, format="parquet").to_table(
-        filter=(ds.field("term") >= lo) & (ds.field("term") < hi), columns=["cf"]
-    )
-    return int(pd.Series(tbl["cf"].to_pandas()).sum()) if tbl.num_rows else 0
 
 
-def field_avgdl(out_dir: str, field: str, stats: dict) -> float:
+def _range_files(dirs: list[str], lo: str | None, hi: str | None):
+    """Files to scan for a [lo, hi) term range over index dirs: each dir's
+    sidecar-pruned term_index files, or — for a dir predating the
+    term_index layout — every hash-dictionary file (term-sorted row groups
+    still prune via parquet min/max stats, but all footers are opened).
+    Returns (term_index files, dictionary files)."""
+    ti, dct = [], []
+    for d in dirs:
+        files = _ti_files(d, lo, hi)
+        if files is None:
+            dct += _dict_files(d)
+        else:
+            ti += files
+    return ti, dct
+
+
+def _range_scan(files: list[str], lo: str | None, hi: str | None, columns: list[str]):
+    """One pyarrow dataset read of ``columns`` over ``files``, filtered to
+    the [lo, hi) term range (None bounds are open)."""
+    import pyarrow.dataset as ds
+
+    flt = None
+    if lo is not None:
+        flt = ds.field("term") >= lo
+    if hi is not None:
+        f2 = ds.field("term") < hi
+        flt = f2 if flt is None else (flt & f2)
+    return ds.dataset(files, format="parquet").to_table(filter=flt, columns=columns)
+
+
+def _term_range(out_dir: str | list[str], lo: str | None, hi: str | None) -> pd.DataFrame:
+    """(term, df) rows over the [lo, hi) term range, term-sorted, df summed
+    across runs — and across dirs when ``out_dir`` is a list (a window of
+    day indexes: one dataset read over every dir's pruned files, not one
+    probe per day)."""
+    dirs = [out_dir] if isinstance(out_dir, str) else out_dir
+    frames = [
+        _range_scan(files, lo, hi, ["term", "df"]).to_pandas()
+        for files in _range_files(dirs, lo, hi) if files
+    ]
+    frames = [f for f in frames if len(f)]
+    if not frames:
+        return pd.DataFrame({"term": pd.Series(dtype=object), "df": pd.Series(dtype="int64")})
+    pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+    return pdf.groupby("term", as_index=False, sort=True)["df"].sum()
+
+
+def _range_cf_sum(out_dir: str | list[str], lo: str, hi: str) -> int:
+    """Σ collection frequency over the [lo, hi) term range — the per-field
+    total-token count for multi_match norms — over one dir or a list of
+    them. Served from the sorted term_index (sidecar-pruned, cf column)
+    when present; pre-cf layouts fall back to the hash-dictionary scan (cf
+    always stored there)."""
+    dirs = [out_dir] if isinstance(out_dir, str) else out_dir
+    ti, dct = _range_files(dirs, lo, hi)
+    total = 0
+    if ti:
+        try:
+            tbl = _range_scan(ti, lo, hi, ["cf"])
+            total = int(pd.Series(tbl["cf"].to_pandas()).sum()) if tbl.num_rows else 0
+        except Exception:  # noqa: BLE001 — pre-cf term_index layout
+            dct = [f for d in dirs for f in _dict_files(d)]
+    if dct:
+        tbl = _range_scan(dct, lo, hi, ["cf"])
+        total += int(pd.Series(tbl["cf"].to_pandas()).sum()) if tbl.num_rows else 0
+    return total
+
+
+def field_avgdl(out_dir: str | list[str], field: str, stats: dict) -> float:
     """The field's average length for BM25 norms: Σ cf over its term range
     ÷ corpus n_docs (docs without the field count as length 0 — the
     deterministic convention; ES's per-field docCount refinement would need
@@ -5789,66 +5661,14 @@ def cat_indices(index_dirs: list[str]) -> list[dict]:
     return rows
 
 
-def bm25_topk_sql(spark: SparkSession, out_dir: str, query: str, k: int = 10) -> DataFrame:
-    """Oracle-mode scoring via exploded postings + joins (J2/J3 analogue)."""
-    from ..textutils import analyze
+class _Root(NamedTuple):
+    """One index dir a Searcher reads: its stats.json snapshot, the delete
+    snapshot derived from it, and the stats.json mtime it was read at."""
 
-    stats = load_stats(out_dir)
-    terms = sorted(set(analyze(query, stats.get("analyzer"))))
-    entries = _lookup_terms(
-        spark, out_dir, terms, stats["n_term_buckets"], committed=_committed(stats)
-    )
-    if not entries:
-        return spark.createDataFrame([], "doc_id long, score double")
-    term_idf = {e["term"]: idf(stats["n_docs"], int(e["df"])) for e in entries}
-    tbs = sorted({int(e["tb"]) for e in entries})
-    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
-
-    tomb = _tombs(out_dir, stats)
-    seg = (
-        _seg_scan(spark, out_dir, stats)
-        .where(F.col("tb").isin(tbs) & F.col("term").isin(sorted(term_idf)))
-        .select("term", "n", "docs", "tfs", "dls", *(["run"] if tomb else []))
-    )
-
-    def explode(batches):
-        for pdf in batches:
-            outs = []
-            runs = pdf["run"] if tomb else [None] * len(pdf)
-            for term, bb, tb, db, n, run in zip(
-                pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"], pdf["n"], runs
-            ):
-                docs = np.cumsum(varint_decode(bb, int(n))).astype(np.int64)
-                tf = varint_decode(tb, int(n)).astype(np.int64)
-                dl = varint_decode(db, int(n)).astype(np.int64)
-                if tomb:
-                    ids = tomb.get(run)
-                    if ids is not None and len(ids):
-                        alive = ~_in_sorted(docs, ids)
-                        docs, tf, dl = docs[alive], tf[alive], dl[alive]
-                if len(docs):
-                    outs.append(
-                        pd.DataFrame({"term": term, "doc_id": docs, "tf": tf, "dl": dl})
-                    )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    postings = seg.mapInPandas(explode, schema="term string, doc_id long, tf long, dl long")
-    idf_df = spark.createDataFrame(
-        [(t, v) for t, v in term_idf.items()], "term string, idf double"
-    )
-    scored = (
-        postings.join(F.broadcast(idf_df), "term")
-        .withColumn(
-            "s",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * (F.col("dl") / avgdl))),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("s").alias("score"))
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    dir: str
+    stats: dict
+    tomb: dict
+    mtime: float
 
 
 class Searcher:
@@ -5861,7 +5681,16 @@ class Searcher:
     ZERO Spark jobs per query, the right architecture for a serving node
     (Spark builds the index; queries read it). ``mode='spark'`` forces the
     distributed scan (remote storage / huge candidate sets); results are
-    identical (asserted in tests).
+    identical (asserted in tests). ``mode='local'`` never falls back: an
+    index that is not locally readable raises FileNotFoundError.
+
+    Roots: a Searcher reads a list of index roots. ``Searcher(spark,
+    out_dir)`` is the one-root case; ``index.daily.DailySearcher`` builds a
+    window handle over the selected day indexes (``_over``). There the
+    window's merged stats score, the dictionary probe, range expansion and
+    field norms each read every day dir in one dataset read, and each
+    day's blocks are read with its own committed runs and tombstones
+    before they concatenate — the multi-run shape the kernel handles.
 
     Staleness: every index mutation (index_batch, build_index,
     compact_segments) finishes by rewriting stats.json, so its mtime is the
@@ -5886,11 +5715,30 @@ class Searcher:
         # mutations committed after the snapshot stay invisible
         self._frozen = frozen_stats is not None
         self.stats = frozen_stats if self._frozen else load_stats(out_dir)
-        self._stats_mtime = os.path.getmtime(os.path.join(out_dir, "stats.json"))
-        self._term_cache: dict[str, dict | None] = {}
-        self._tomb = _tombs(out_dir, self.stats)
+        mtime = os.path.getmtime(os.path.join(out_dir, "stats.json"))
+        self._roots = [_Root(out_dir, self.stats, _tombs(out_dir, self.stats), mtime)]
+        self._reset_caches()
+
+    @classmethod
+    def _over(
+        cls, spark: SparkSession, out_dir: str, stats: dict, roots: list[_Root]
+    ) -> "Searcher":
+        """Window handle over several index roots (``out_dir`` names their
+        parent; ``stats`` are their merged stats). It is built per query
+        from the caller's cached metadata, so it never reloads, and it runs
+        in local mode."""
+        s = cls.__new__(cls)
+        s.spark, s.out_dir, s.mode = spark, out_dir, "local"
+        s.max_candidates, s.cache_terms, s.cache_bytes = None, 4096, 64 << 20
+        s._frozen, s.stats, s._roots = True, stats, roots
+        s._reset_caches()
+        return s
+
+    def _reset_caches(self) -> None:
+        """Fresh per-snapshot caches (at open and on every stats reload)."""
         from collections import OrderedDict
 
+        self._term_cache: dict[str, dict | None] = {}
         # (term, with_poss) → post-tombstone block frame; the ES node-
         # query-cache analogue. Bounded LRU with a BYTE budget (default
         # 64 MiB, summed over the varint buffer columns) plus a term-count
@@ -5908,11 +5756,21 @@ class Searcher:
         # (bucket, term, with_poss) -> decoded _TermPostings (serving
         # path): byte-accounted LRU with its own sibling budget — decoded
         # int64 arrays outweigh the varint frames the block LRU accounts
-        self._tp_cache = _TpCache(cache_bytes)
+        self._tp_cache = _TpCache(self.cache_bytes)
         # field -> (value_counts over the WHOLE docstore, total rows):
         # the significant_terms background, one pyarrow column read per
         # field per stats snapshot (mtime-invalidated like the rest)
         self._bg_cache: dict[str, tuple[pd.Series, int]] = {}
+
+    @property
+    def _dirs(self) -> list[str]:
+        return [r.dir for r in self._roots]
+
+    @property
+    def _tomb(self) -> dict:
+        """Delete snapshot of a one-root handle (the Spark fallbacks and
+        point lookups only run on one root)."""
+        return self._roots[0].tomb
 
     def _maybe_invalidate(self) -> None:
         if self._frozen:
@@ -5921,17 +5779,10 @@ class Searcher:
             m = os.path.getmtime(os.path.join(self.out_dir, "stats.json"))
         except OSError:
             return
-        if m != self._stats_mtime:
+        if m != self._roots[0].mtime:
             self.stats = load_stats(self.out_dir)
-            self._stats_mtime = m
-            self._term_cache.clear()
-            self._block_cache.clear()
-            self._block_cache_sizes.clear()
-            self._block_cache_total = 0
-            self._range_cache.clear()
-            self._tp_cache.clear()
-            self._bg_cache.clear()
-            self._tomb = _tombs(self.out_dir, self.stats)
+            self._reset_caches()
+            self._roots = [_Root(self.out_dir, self.stats, _tombs(self.out_dir, self.stats), m)]
 
     def _is_dead(self, doc_id: int, row: dict) -> bool:
         """Point-lookup liveness under this snapshot: is the doc's newest
@@ -5949,8 +5800,22 @@ class Searcher:
     def _range_expand(self, lo: str, hi: str) -> list[str]:
         key = (lo, hi)
         if key not in self._range_cache:
-            self._range_cache[key] = _term_range(self.out_dir, lo, hi)["term"].tolist()
+            self._range_cache[key] = _term_range(self._dirs, lo, hi)["term"].tolist()
         return self._range_cache[key]
+
+    def _lookup_docs(self, doc_ids: list[int]) -> dict[int, dict]:
+        """Stored rows of ``doc_ids`` from each root's docstore in turn
+        (day corpora are doc-disjoint; stops once every id is found)."""
+        from .build import lookup_docs
+
+        meta: dict[int, dict] = {}
+        missing = list(doc_ids)
+        for r in self._roots:
+            meta.update(lookup_docs(r.dir, missing))
+            missing = [d for d in missing if d not in meta]
+            if not missing:
+                break
+        return meta
 
     def _background_counts(self, field: str) -> tuple[pd.Series, int]:
         """significant_terms background: per-key doc counts of a stored
@@ -6027,16 +5892,25 @@ class Searcher:
             # no touch); callers pass the union, so re-derive from entries
             ents = {e["term"]: e for e in self._entries(missing)}
             miss_tbs = sorted({int(e["tb"]) for e in ents.values()}) or list(tbs)
-            blocks = _read_blocks_local(
-                self.out_dir, miss_tbs, missing, columns=columns,
-                committed=_committed(self.stats), with_run=bool(self._tomb),
-            )
-            if blocks is None:
-                return None  # not locally readable — caller falls back
-            if self._tomb and len(blocks):
-                from .delete import apply_tombstones
+            parts = []
+            for r in self._roots:
+                b = _read_blocks_local(
+                    r.dir, miss_tbs, missing, columns=columns,
+                    committed=_committed(r.stats), with_run=bool(r.tomb),
+                )
+                if b is None:
+                    if self.mode == "local":
+                        raise FileNotFoundError(f"{r.dir}/segments is not locally readable")
+                    return None  # not locally readable — caller falls back
+                if r.tomb and len(b):
+                    # per root: day indexes reuse run names (full-g0,
+                    # batch_N), so one merged tombstone map would mix days
+                    from .delete import apply_tombstones
 
-                blocks = apply_tombstones(blocks, self._tomb).drop(columns=["run"])
+                    b = apply_tombstones(b, r.tomb).drop(columns=["run"])
+                parts.append(b)
+            parts = [b for b in parts if len(b)] or parts[:1]
+            blocks = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
             by_term = {t: g for t, g in blocks.groupby("term")} if len(blocks) else {}
             for t in missing:
                 f = by_term.get(t)
@@ -6058,8 +5932,8 @@ class Searcher:
         missing = [t for t in terms if t not in self._term_cache]
         if missing:
             found = {e["term"]: e for e in _lookup_terms(
-                self.spark, self.out_dir, missing, self.stats["n_term_buckets"],
-                committed=_committed(self.stats),
+                self.spark, self._dirs, missing, self.stats["n_term_buckets"],
+                committed=[_committed(r.stats) for r in self._roots],
             )}
             for t in missing:
                 self._term_cache[t] = found.get(t)
@@ -6123,8 +5997,6 @@ class Searcher:
                     filter_groups=fgroups, tp_cache=self._tp_cache,
                     after=after, slice_mod=slice_mod,
                 )
-            if self.mode == "local":
-                raise FileNotFoundError(f"{self.out_dir}/segments is not locally readable")
         return [
             (r.doc_id, r.score)
             for r in bm25_topk(
@@ -6143,10 +6015,8 @@ class Searcher:
         (url, …): the ES-user experience — documents back, not internal
         ids. Requires the index to have been built/batched with
         ``store_docs=True`` (ids without a docstore row come back bare)."""
-        from .build import lookup_docs
-
         rows = self.search_rows(query, k, prune, must=must, must_not=must_not)
-        meta = lookup_docs(self.out_dir, [d for d, _ in rows])
+        meta = self._lookup_docs([d for d, _ in rows])
         out = []
         for d, s in rows:
             row = dict(meta.get(d, {}))
@@ -6621,7 +6491,8 @@ class Searcher:
         a locally readable index."""
         self._maybe_invalidate()
         plan = _multi_match_plan(
-            self.spark, self.out_dir, self.stats, query, fields, lookup=self._entries
+            self.spark, self.out_dir, self.stats, query, fields, lookup=self._entries,
+            field_avg=lambda f: field_avgdl(self._dirs, f, self.stats),
         )
         if plan is None:
             return []
@@ -6717,10 +6588,8 @@ class Searcher:
         self._maybe_invalidate()
         self_id = None
         if isinstance(like, int):
-            from .build import lookup_docs
-
             self_id = like
-            row = lookup_docs(self.out_dir, [like]).get(like)
+            row = self._lookup_docs([like]).get(like)
             if row is None or "text" not in row or row["text"] is None:
                 raise ValueError(
                     f"doc {like} has no stored text — build the docstore with "
@@ -6892,8 +6761,6 @@ class Searcher:
                     filter_groups=fgroups,
                 )
                 return self.spark.createDataFrame(rows, "doc_id long, score double")
-            if self.mode == "local":
-                raise FileNotFoundError(f"{self.out_dir}/segments is not locally readable")
 
         seg = (
             _seg_scan(self.spark, self.out_dir, self.stats)

@@ -34,7 +34,6 @@ from conveyorbelt_spark.index.delete import (
 from conveyorbelt_spark.index.query import (
     Searcher,
     bm25_topk,
-    bm25_topk_sql,
     bool_doc_ids,
     index_info,
 )
@@ -67,11 +66,9 @@ def test_delete_excludes_everywhere_without_rescoring(spark, built):
     after = dict(s.search_rows("spark join", 500))  # mtime-invalidated
     assert set(after) == set(base) - set(victims)
     assert all(abs(after[d] - base[d]) < 1e-12 for d in after)
-    # spark kernel path, sql-mode path, bool set ops all agree
+    # spark kernel path and bool set ops agree
     sp = {r.doc_id for r in bm25_topk(spark, out, "spark join", 500).collect()}
     assert sp == set(after)
-    sql = {r.doc_id for r in bm25_topk_sql(spark, out, "spark join", 500).collect()}
-    assert sql == set(after)
     ids = {r.doc_id for r in bool_doc_ids(spark, out, "spark join").collect()}
     assert not (ids & set(victims))
     assert index_info(spark, out)["n_deleted"] == 5

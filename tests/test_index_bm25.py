@@ -4,8 +4,6 @@ reference query set)."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -13,7 +11,7 @@ from conveyorbelt_spark.corpus import corpus_spark_df, reference_query_set
 from conveyorbelt_spark.functions.tokenize import with_doc_id
 from conveyorbelt_spark.index.build import build_index, load_stats
 from conveyorbelt_spark.index.oracle import BM25Oracle
-from conveyorbelt_spark.index.query import bm25_topk, bm25_topk_sql
+from conveyorbelt_spark.index.query import bm25_topk
 
 N_DOCS = 2000
 
@@ -93,15 +91,6 @@ def test_searcher_local_rank_identical(spark, index_dir, oracle, case):
     via_spark = [(r.doc_id, r.score) for r in s_spark.search(case["q"], case["k"]).collect()]
     assert got == via_spark
     assert s_local.search_rows(case["q"], case["k"]) == want
-
-
-def test_sql_mode_agrees(spark, index_dir, oracle):
-    case = {"q": "term00000 term00123", "k": 10}
-    got = [(r.doc_id, r.score) for r in bm25_topk_sql(spark, index_dir, case["q"], case["k"]).collect()]
-    want = oracle.search(case["q"], case["k"])
-    assert [d for d, _ in got] == [d for d, _ in want]
-    for (_, gs), (_, ws) in zip(got, want):
-        assert math.isclose(gs, ws, rel_tol=1e-12)
 
 
 def test_absent_term_empty(spark, index_dir):

@@ -234,6 +234,48 @@ def test_rejections(spark, rfroot):
         }, op_id="rf-del")
 
 
+def test_required_should_guard_is_per_bool(spark, rfroot):
+    """The feature guard looks at its OWN should list: a feature clause in
+    a sibling bool does not reject a required keyword group (in either
+    clause order), while a feature clause in the same should list as the
+    required group still does."""
+    out, rows = rfroot
+    feat = {"rank_feature": {"field": "pop", "log": {"scaling_factor": 1}, "boost": 0.25}}
+    scored = {"bool": {"must": [{"match": {"text": "spark join"}}], "should": [feat]}}
+    langs = {"bool": {"should": [
+        {"term": {"lang": "en"}}, {"term": {"lang": "zz"}},
+    ]}}
+    resp = search_body(spark, out, {
+        "query": {"bool": {"must": [scored, langs]}}, "size": 7,
+    })
+    swapped = search_body(spark, out, {
+        "query": {"bool": {"must": [langs, scored]}}, "size": 7,
+    })
+    s = Searcher(spark, out)
+    base = dict(s.search_rows("spark join", BIG, must="spark join", prune=False))
+    en = {i for i, _, _, _, lang in rows if lang == "en"}
+    pop = {i: p for i, _, p, _, _ in rows}
+    want = sorted(
+        (
+            (d, sc + (0.25 * math.log(1 + pop[d]) if pop[d] > 0 else 0.0))
+            for d, sc in base.items() if d in en
+        ),
+        key=lambda t: (-t[1], t[0]),
+    )
+    for r in (resp, swapped):
+        got = _hits(r)
+        assert [d for d, _ in got] == [d for d, _ in want[:7]]
+        for (_, a), (_, b) in zip(got, want[:7]):
+            assert a == pytest.approx(b, rel=1e-9)
+    with pytest.raises(UnsupportedDSL, match="REQUIRED should"):
+        search_body(spark, out, {"query": {"bool": {"must": [
+            {"match": {"text": "spark join"}},
+            {"bool": {"should": [
+                {"term": {"lang": "en"}}, {"term": {"lang": "zz"}}, feat,
+            ]}},
+        ]}}})
+
+
 def test_rrf_retriever(spark, rfroot):
     """RRF fusion: score = Σ 1/(k + rank); ranking verified against the
     two sub-retrievers' own result lists; standard-only retriever passes
