@@ -727,6 +727,11 @@ def build_index(
     written without a manifest commit (the crash window between the segment
     write and the manifest append), so re-running a killed build yields
     identical segments with no duplicated blocks (tests/test_resume.py).
+    A resume hashes terms with the bucket count the committed groups
+    used: ``layout.json`` records it before the first commit group and is
+    deleted once stats.json holds it; a resume without ``n_term_buckets``
+    reads it from there, and one passing a different value raises
+    ValueError.
     """
     # NO dropDuplicates here: a global dedup would shuffle the full text
     # twice. Duplicate urls are removed where they're already adjacent —
@@ -741,19 +746,32 @@ def build_index(
 
     seg_dir = os.path.join(out_dir, "segments")
     man_dir = os.path.join(out_dir, "manifest")
+    layout_path = os.path.join(out_dir, "layout.json")
     done: set[int] = set()
+    committed_tb = None  # the term-hash bucket count of the committed groups
     if resume and os.path.isdir(man_dir):
         man_prev = _read_manifest(man_dir, ["bucket", "run"])
         done = set(man_prev.column("bucket").to_pylist())
+        for p in (os.path.join(out_dir, "stats.json"), layout_path):
+            if os.path.exists(p):
+                with open(p) as f:
+                    committed_tb = json.load(f).get("n_term_buckets", DEFAULT_TERM_BUCKETS)
+                break
+        if n_term_buckets is not None and committed_tb not in (None, n_term_buckets):
+            raise ValueError(
+                f"resume with n_term_buckets={n_term_buckets}, but the committed "
+                f"groups of {out_dir} hash terms into {committed_tb}"
+            )
         _clean_uncommitted_runs(seg_dir, set(man_prev.column("run").to_pylist()))
     else:
         for sub in ("segments", "manifest", "dictionary", "doclens"):
             p = os.path.join(out_dir, sub)
             if os.path.isdir(p):
                 shutil.rmtree(p)
-        stats_path = os.path.join(out_dir, "stats.json")
-        if os.path.exists(stats_path):
-            os.remove(stats_path)  # a stale config must not outlive its index
+        for name in ("stats.json", "layout.json"):
+            p = os.path.join(out_dir, name)
+            if os.path.exists(p):
+                os.remove(p)  # a stale config must not outlive its index
 
     with _Overlap() as bg:
         # the docstore is independent of every index artifact — its
@@ -779,17 +797,19 @@ def build_index(
 
         total_docs = sum(bstats.values())
         if n_term_buckets is None:
-            # resuming an existing index must keep ITS layout; otherwise
-            # derive the term-hash bucket count from the corpus size pass 1
-            # just gave us (guide §2: scale-adaptive partitioning)
-            prev_stats_path = os.path.join(out_dir, "stats.json")
-            if resume and os.path.exists(prev_stats_path):
-                with open(prev_stats_path) as f:
-                    n_term_buckets = json.load(f).get(
-                        "n_term_buckets", DEFAULT_TERM_BUCKETS
-                    )
-            else:
-                n_term_buckets = _adaptive_term_buckets(total_docs)
+            # resuming must hash terms like the groups already committed;
+            # otherwise derive the term-hash bucket count from the corpus
+            # size pass 1 just gave us (guide §2: scale-adaptive
+            # partitioning)
+            n_term_buckets = (
+                committed_tb if committed_tb is not None
+                else _adaptive_term_buckets(total_docs)
+            )
+        # stats.json lands only when the build finishes: until then this
+        # records the count for a resume
+        os.makedirs(out_dir, exist_ok=True)
+        with open(layout_path, "w") as f:
+            json.dump({"n_term_buckets": n_term_buckets}, f)
 
         # ---- pass 2: postings → blocks, committed bucket-group at a time
         all_buckets = [bkt for bkt in range(n_buckets) if bkt not in done]
@@ -856,6 +876,7 @@ def build_index(
                 "analyzer": analyzer,
             },
         )
+        os.remove(layout_path)  # stats.json records the count now
         if fuzzy_deletes:
             kw = fuzzy_deletes if isinstance(fuzzy_deletes, dict) else {}
             enable_fuzzy_deletes(spark, out_dir, **kw)

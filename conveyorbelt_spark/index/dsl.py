@@ -108,7 +108,12 @@ filter context (inside bool.filter / bool.must, or top-level):
 request level: "size", "from", "sort" ([{"field": "desc"}] or ["field"]),
 "search_after", "aggs" (the search_aggs shape, incl. arbitrarily nested
 sub-"aggs" with metric siblings per level — the Kibana split-series
-tree — and significant_terms with its whole-index background),
+tree — and significant_terms with its whole-index background; answered
+by ``Searcher.aggs_rows``: a request built only from the serving kinds —
+terms / histogram, stats, avg / sum / min / max / value_count,
+significant_terms — runs on the driver with zero Spark jobs, and any
+other kind at any depth (date_histogram included), or a hit set that
+saturates the kernel, runs the distributed ``search_aggs``),
 "highlight" {"fields": {col: {}}}, "_source" (bool),
 "track_total_hits" (bool — True runs the uncapped distributed count),
 "explain" (bool — per-hit Lucene-style BM25 decomposition, see
@@ -158,7 +163,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from .query import Searcher, search_aggs, search_sorted
+from .query import Searcher, search_sorted
 
 
 class UnsupportedDSL(ValueError):
@@ -3831,48 +3836,14 @@ def search_body(
             "filtered request instead)"
         )
     if body.get("aggs"):
-        kinds = set()
-
-        def _collect_kinds(specs: dict) -> None:
-            for spec in specs.values():
-                kinds.update(k for k in spec if k != "aggs")
-                if isinstance(spec.get("aggs"), dict):
-                    _collect_kinds(spec["aggs"])
-
-        _collect_kinds(body["aggs"])
-        if kinds <= {
-            "terms", "date_histogram", "histogram", "stats",
-            "avg", "sum", "min", "max", "value_count", "range",
-            "filter", "filters", "missing", "top_hits", "composite",
-            "significant_terms", "multi_terms", "rare_terms", "date_range",
-            "adjacency_matrix", "auto_date_histogram", "top_metrics",
-            "global", "avg_bucket", "sum_bucket", "min_bucket",
-            "max_bucket", "stats_bucket", "derivative", "cumulative_sum",
-            "extended_stats", "weighted_avg", "percentile_ranks",
-            "median_absolute_deviation", "string_stats",
-            "bucket_script", "bucket_selector", "bucket_sort",
-            "moving_fn", "serial_diff",
-        }:
-            # serving fast path: row-for-row identical to the distributed
-            # plan for these kinds (escalates itself past max_hits);
-            # cardinality/percentiles keep ES's approximate semantics on
-            # the distributed path below
-            resp["aggregations"] = s.aggs_rows(
-                body["aggs"], plan["query"], must=plan["must"],
-                must_not=plan["must_not"], min_should=plan["min_should"],
-                filters=filters, ranges=ranges,
-                or_groups=or_groups, not_atoms=not_atoms,
-            )
-        else:
-            aggs = search_aggs(
-                spark, out_dir, body["aggs"], plan["query"],
-                must=plan["must"], must_not=plan["must_not"],
-                min_should=plan["min_should"], filters=filters, ranges=ranges,
-                or_groups=or_groups, not_atoms=not_atoms,
-            )
-            resp["aggregations"] = {
-                name: [r.asDict() for r in df.collect()] for name, df in aggs.items()
-            }
+        # the Searcher picks the engine per request (serving kinds on the
+        # driver, every other kind and saturation on the distributed plan)
+        resp["aggregations"] = s.aggs_rows(
+            body["aggs"], plan["query"], must=plan["must"],
+            must_not=plan["must_not"], min_should=plan["min_should"],
+            filters=filters, ranges=ranges,
+            or_groups=or_groups, not_atoms=not_atoms,
+        )
     if body.get("suggest"):
         resp["suggest"] = _suggest_section(s, body["suggest"])
     return resp

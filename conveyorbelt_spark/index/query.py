@@ -2438,9 +2438,9 @@ _DH_MAX_EMPTY_BUCKETS = 100_000
 
 def _dh_bucket_range(lo, hi, spec: tuple) -> list:
     """Every bucket key from floor(lo) to floor(hi) inclusive — the
-    densified axis for ``min_doc_count: 0`` (shared by the Spark and
-    pandas twins so gap-filling can never drift). Bounded: a range that
-    would yield > 100k empty buckets raises (a chart never wants it)."""
+    densified axis for ``min_doc_count: 0`` (``_densify_dh_df``).
+    Bounded: a range that would yield > 100k empty buckets raises (a
+    chart never wants it)."""
     import datetime as dt
 
     kind, p = spec
@@ -2709,6 +2709,14 @@ def _bucket_expr(kind: str, body: dict):
     raise ValueError(f"agg kind {kind!r} is not a bucketing agg (cannot hold sub-aggs)")
 
 
+def _keyed(df: DataFrame, kind: str, body: dict) -> DataFrame:
+    """ES bucketing aggs skip docs missing the bucket field — unless a
+    terms ``missing`` substitute value is configured."""
+    if kind == "terms" and body.get("missing") is not None:
+        return df
+    return df.where(F.col(body["field"]).isNotNull())
+
+
 _TREE_BUCKETS = ("terms", "date_histogram", "histogram")
 _TREE_TERMINALS = ("range", "top_hits")
 
@@ -2862,8 +2870,9 @@ def _terms_order_keys(
 def _terms_incl_excl_col(key, body: dict):
     """ES terms-agg ``include``/``exclude`` → a Column predicate over the
     bucket key (list = exact membership, string = anchored regex — Java
-    regex via rlike; the pandas twin uses re.fullmatch, same anchoring).
-    Returns None when neither option is set."""
+    regex via rlike; the serving engine's ``_terms_incl_excl_ok`` uses
+    re.fullmatch, same anchoring). Returns None when neither option is
+    set."""
     conds = []
     inc, exc = body.get("include"), body.get("exclude")
     for spec, negate in ((inc, False), (exc, True)):
@@ -3097,12 +3106,7 @@ def aggs_over_join(
         if kind == "terms":
             crits = _terms_order_keys(name, body, None, prefixed=True)
             flatcol = {"_count": "n", "_key": "key"}
-            sel_t = joined
-            if body.get("missing") is None:
-                # ES terms aggs ignore docs missing the field (the serving
-                # twin's dropna; the "missing" agg counts them instead —
-                # unless a "missing" substitute value is configured)
-                sel_t = sel_t.where(F.col(col).isNotNull())
+            sel_t = _keyed(joined, kind, body)
             ie = _terms_incl_excl_col(_bucket_expr(kind, body), body)
             if ie is not None:
                 sel_t = sel_t.where(ie)
@@ -3120,20 +3124,15 @@ def aggs_over_join(
             # a driver OOM an ES user never hits). size=0 = explicit all.
             size = int(body.get("size", 10))
             out[name] = df.limit(size) if size else df
-        elif kind == "date_histogram":
+        elif kind in ("date_histogram", "histogram"):
             base = (
-                joined.groupBy(_bucket_expr(kind, body).alias("key"))
+                _keyed(joined, kind, body)
+                .groupBy(_bucket_expr(kind, body).alias("key"))
                 .agg(F.count("*").alias("n"))
             )
+            densify = _densify_dh_df if kind == "date_histogram" else _densify_hist_df
             if int(body.get("min_doc_count", 1)) == 0:
-                out[name] = _densify_dh_df(joined.sparkSession, base, body)
-            else:
-                out[name] = base.orderBy("key")
-        elif kind == "histogram":
-            key = _bucket_expr(kind, body).alias("key")
-            base = joined.groupBy(key).agg(F.count("*").alias("n"))
-            if int(body.get("min_doc_count", 1)) == 0:
-                out[name] = _densify_hist_df(joined.sparkSession, base, body)
+                out[name] = densify(joined.sparkSession, base, body)
             else:
                 out[name] = base.orderBy("key")
         elif kind == "stats":
@@ -3565,36 +3564,19 @@ def eval_doc_script(node, params: dict, row: dict):
         return None
 
 
-def _script_eval_row(node, row: dict, colmap: dict):
-    """Serving-path script evaluation over one bucket row: any null
-    operand or a zero divisor yields None (the Spark twin's null)."""
-    vals = {p: row.get(c) for p, c in colmap.items()}
-    if any(v is None for v in vals.values()):
-        return None
-    try:
-        return _script_val(node, vals)
-    except ZeroDivisionError:
-        return None
-
-
 def _metric_colname(cols, metric: str) -> str:
     """buckets_path metric segment → bucket-frame column: ``_count`` is
-    the doc count ``n``; a named metric matches its column, falling back
+    the bucket doc count (``doc_count`` on a parent holding sub-aggs,
+    ``n`` on a flat one); a named metric matches its column, falling back
     to the legacy unprefixed ``value`` a single metric child keeps."""
     if metric in ("_count", ""):
-        return "n"
+        return "doc_count" if "doc_count" in cols else "n"
     if metric in cols:
         return metric
     if "value" in cols:
         return "value"
     raise ValueError(
         f"buckets_path metric {metric!r} is not a column (has {sorted(cols)})"
-    )
-
-
-def _frame_cols(fr) -> list:
-    return list(fr.columns) if hasattr(fr, "columns") else (
-        list(fr[0]) if fr else []
     )
 
 
@@ -3613,10 +3595,7 @@ def _bucket_paths(out: dict, name: str, paths) -> tuple[str, dict]:
                 f"earlier bucket agg in this request"
             )
         parents.add(parent)
-        cols = _frame_cols(out[parent])
-        colmap[p] = _metric_colname(set(cols), metric) if cols else (
-            "n" if metric in ("_count", "") else metric
-        )
+        colmap[p] = _metric_colname(set(out[parent].columns), metric)
     if len(parents) != 1:
         raise ValueError(
             f"agg {name!r}: bucket_script paths must share one parent, "
@@ -3669,14 +3648,7 @@ def _pipeline_parent(out: dict, name: str, body: dict):
             f"agg {name!r}: buckets_path parent {parent!r} is not an "
             f"earlier bucket agg in this request"
         )
-    pdfr = out[parent]
-    cols = _frame_cols(pdfr)
-    # an empty serving bucket list has no keys to validate against — the
-    # pipeline then yields the ES null value downstream
-    colname = _metric_colname(set(cols), metric) if cols else (
-        "n" if metric in ("_count", "") else metric
-    )
-    return pdfr, colname
+    return out[parent], _metric_colname(set(out[parent].columns), metric)
 
 
 _METRIC_FNS = {
@@ -3891,7 +3863,8 @@ def _filter_agg_df(
     if ckind in ("terms", "date_histogram", "histogram"):
         cnt = fsel.agg(F.count("*").alias("doc_count"))
         df = (
-            fsel.groupBy(_bucket_expr(ckind, cbody).alias("key"))
+            _keyed(fsel, ckind, cbody)
+            .groupBy(_bucket_expr(ckind, cbody).alias("key"))
             .agg(F.count("*").alias("n"))
         )
         if ckind == "terms":
@@ -4039,49 +4012,6 @@ def _composite_agg_df(joined: DataFrame, name: str, body: dict) -> DataFrame:
     return df.orderBy(*order).limit(size)
 
 
-def _composite_agg_pandas(pdf: pd.DataFrame, name: str, body: dict) -> list[dict]:
-    """pandas twin of ``_composite_agg_df`` — identical rows, identical
-    order."""
-    parts = _composite_parts(body)
-    keys = pd.DataFrame({
-        nm: _pd_bucket_key(pdf, k, b) for nm, k, b, _ in parts
-    })
-    keys = keys.dropna()
-    names = [nm for nm, *_ in parts]
-    if len(keys):
-        grouped = keys.groupby(names, sort=False).size().reset_index(name="doc_count")
-    else:
-        grouped = pd.DataFrame(columns=[*names, "doc_count"])
-    rows = [
-        {**{nm: _key_out(r[nm]) for nm in names}, "doc_count": int(r["doc_count"])}
-        for _, r in grouped.iterrows()
-    ]
-    ascs = {nm: asc for nm, _k, _b, asc in parts}
-    after = body.get("after")
-    if after:
-        def beyond(row):
-            for nm in names:
-                a, v = after[nm], row[nm]
-                a = pd.to_datetime(a).to_pydatetime() if hasattr(v, "year") and isinstance(a, str) else a
-                if v == a:
-                    continue
-                return (v > a) if ascs[nm] else (v < a)
-            return False
-        rows = [r for r in rows if beyond(r)]
-    import functools
-
-    def cmp(a, b):
-        for nm in names:
-            if a[nm] == b[nm]:
-                continue
-            lt = a[nm] < b[nm]
-            return (-1 if lt else 1) if ascs[nm] else (1 if lt else -1)
-        return 0
-
-    rows.sort(key=functools.cmp_to_key(cmp))
-    return rows[: int(body.get("size", 10))]
-
-
 def _th_sort(cbody: dict) -> list[tuple[str, bool]]:
     """ES top_hits sort spec → [(field, ascending)]. The hits reaching a
     sub-agg are an unscored matching SET (the agg path never ranks), so
@@ -4167,12 +4097,7 @@ def _sub_bucket_df(
         for cname, ckind, cbody in metrics:
             mexprs += _metric_exprs(cname, ckind, cbody, prefixed=not legacy)
         mnames = _metric_names(metrics, prefixed=not legacy)
-        # ES: docs missing the bucket field skip this level's buckets
-        # (unless a terms "missing" substitute value is configured)
-        keyed = sel
-        if not (kind == "terms" and body.get("missing") is not None):
-            keyed = keyed.where(F.col(body["field"]).isNotNull())
-        keyed = keyed.withColumn(keycol, _bucket_expr(kind, body))
+        keyed = _keyed(sel, kind, body).withColumn(keycol, _bucket_expr(kind, body))
         if kind == "terms":
             ie = _terms_incl_excl_col(F.col(keycol), body)
             if ie is not None:
@@ -4252,8 +4177,8 @@ def _sub_bucket_df(
 
 
 def _metric_names(metrics: list, *, prefixed: bool) -> list[str]:
-    """The output column names `_metric_exprs` produces, in order —
-    shared with the pandas twin so the two paths can never drift."""
+    """The output column names `_metric_exprs` produces, in order (the
+    serving engine's `_pd_metric_cells` uses the same names)."""
     names: list[str] = []
     for cname, ckind, cbody in metrics:
         p = f"{cname}_" if prefixed else ""
@@ -4269,8 +4194,8 @@ def _metric_names(metrics: list, *, prefixed: bool) -> list[str]:
 
 def _pd_bucket_key(pdf: pd.DataFrame, kind: str, body: dict) -> pd.Series:
     """pandas twin of ``_bucket_expr``: the bucket-key series, aligned
-    with ``pdf``'s index (nulls propagate; counting drops them — same as
-    Spark's groupBy on a null key being excluded by value_counts)."""
+    with ``pdf``'s index (nulls propagate and counting drops them, as
+    ``_keyed`` drops them on the Spark side)."""
     import numpy as np
 
     col = body["field"]
@@ -4279,28 +4204,6 @@ def _pd_bucket_key(pdf: pd.DataFrame, kind: str, body: dict) -> pd.Series:
         if body.get("missing") is not None:
             return vals.fillna(body["missing"]) if len(vals) else vals
         return vals
-    if kind == "date_histogram":
-        dh_kind, unit = _dh_spec(body)
-        ts = pd.to_datetime(vals)
-        if dh_kind == "fixed":
-            # epoch-aligned floor, exactly the Spark expression's math
-            # (NaT-safe: floor only the present values, NaT propagates)
-            out_ts = pd.Series(pd.NaT, index=ts.index, dtype="datetime64[ns]")
-            nn = ts.notna()
-            if nn.any():
-                secs = ts[nn].astype("int64") / 1e9
-                out_ts[nn] = pd.to_datetime(
-                    (np.floor(secs / unit) * unit * 1e9).round().astype("int64")
-                )
-            return out_ts
-        if unit in ("minute", "hour", "day"):
-            return ts.dt.floor({"minute": "min", "hour": "h", "day": "D"}[unit])
-        if unit == "week":
-            # Spark date_trunc('week') = Monday start
-            return (ts - pd.to_timedelta(ts.dt.weekday, unit="D")).dt.normalize()
-        if unit in ("month", "year"):
-            return ts.dt.to_period("M" if unit == "month" else "Y").dt.to_timestamp()
-        raise ValueError(f"unsupported date_histogram interval {unit!r}")
     if kind == "histogram":
         step = float(body["interval"])
         off = float(body.get("offset", 0) or 0)
@@ -4316,80 +4219,40 @@ def _key_out(k):
     return k.item() if hasattr(k, "item") else k
 
 
+# the agg kinds the driver-side engine (`_aggs_pandas`) serves — the ones
+# the serving benchmarks measure; a request holding any other kind, at any
+# depth, runs on the distributed plan (`Searcher.aggs_rows`)
+_SERVING_AGG_KINDS = frozenset({
+    "terms", "histogram", "significant_terms",
+    "stats", "avg", "sum", "min", "max", "value_count",
+})
+
+
+def _agg_kinds(aggs: dict) -> set[str]:
+    """Every agg kind named in a request, sub-aggs included."""
+    kinds: set[str] = set()
+    for spec in aggs.values():
+        kinds.update(k for k in spec if k != "aggs")
+        if isinstance(spec.get("aggs"), dict):
+            kinds |= _agg_kinds(spec["aggs"])
+    return kinds
+
+
 def _aggs_pandas(
     pdf: pd.DataFrame, aggs: dict, bg_counts=None,
 ) -> dict[str, list[dict]]:
-    """Driver-side twin of ``aggs_over_join`` over a pandas frame of the
-    hits' stored columns — row-for-row identical output shapes (terms /
-    date_histogram / histogram / stats and the sub-bucket path match the
-    Spark results exactly; cardinality / percentiles are exact where the
-    Spark path approximates). ``bg_counts`` (field → (value_counts, total)
-    over the whole docstore, ``Searcher._background_counts``) supplies the
-    significant_terms background."""
-    import numpy as np
-
+    """Driver-side engine for the serving kinds (``_SERVING_AGG_KINDS``:
+    terms / histogram with gap fill, stats and the five single metrics,
+    significant_terms, and sub-agg chains of those) over a pandas frame
+    of the hits' stored columns — row-for-row identical to
+    ``aggs_over_join``. ``Searcher.aggs_rows`` sends every other kind to
+    the distributed plan before calling here. ``bg_counts`` (field →
+    (value_counts, total) over the whole docstore,
+    ``Searcher._background_counts``) supplies the significant_terms
+    background."""
     out: dict[str, list[dict]] = {}
-    pipelines: list[tuple[str, str, dict]] = []
-    bucket_kinds: dict[str, str] = {}
     for name, spec in aggs.items():
         kind, body, sub = _agg_spec(name, spec)
-        bucket_kinds[name] = kind
-        if kind in _PIPELINE_KINDS:
-            pipelines.append((name, kind, body))
-            continue
-        if kind == "global":
-            # the serving frame holds only the HITS' stored columns —
-            # whole-index scope needs the distributed path (aggs_rows
-            # escalates global requests there before reaching here)
-            raise ValueError(
-                f"agg {name!r}: global needs the distributed path"
-            )
-        if kind == "multi_terms":
-            if sub is not None:
-                raise ValueError(
-                    f"agg {name!r}: multi_terms sub-aggs are unsupported"
-                )
-            fields = [t["field"] for t in body["terms"]]
-            if len(pdf) and all(f in pdf.columns for f in fields):
-                grp = pdf.dropna(subset=fields).groupby(fields).size()
-                rows = sorted(
-                    (
-                        (tuple(_key_out(k) for k in (ks if isinstance(ks, tuple) else (ks,))), int(n))
-                        for ks, n in grp.items()
-                    ),
-                    key=lambda kv: (-kv[1], kv[0]),
-                )
-            else:
-                rows = []
-            size = int(body.get("size", 10))
-            if size:
-                rows = rows[:size]
-            out[name] = [
-                {**dict(zip(fields, ks)), "n": n} for ks, n in rows
-            ]
-            continue
-        if kind == "rare_terms":
-            if sub is not None:
-                raise ValueError(
-                    f"agg {name!r}: rare_terms sub-aggs are unsupported"
-                )
-            col = body["field"]
-            vals = pdf[col] if col in getattr(pdf, "columns", []) else pd.Series(dtype=object)
-            mdc = int(body.get("max_doc_count", 1))
-            c = vals.dropna().value_counts()
-            out[name] = [
-                {"key": k, "n": n}
-                for k, n in sorted(
-                    ((_key_out(k_), int(n_)) for k_, n_ in c.items() if n_ <= mdc),
-                    key=lambda kv: (kv[1], kv[0]),
-                )
-            ]
-            continue
-        if kind == "date_range":
-            col = body["field"]
-            vals = pdf[col] if col in getattr(pdf, "columns", []) else pd.Series(dtype=object)
-            out[name] = _pd_date_range_rows(vals, body["ranges"])
-            continue
         if kind == "significant_terms":
             if sub is not None:
                 raise ValueError(
@@ -4397,123 +4260,11 @@ def _aggs_pandas(
                 )
             out[name] = _sig_terms_pandas(pdf, name, body, bg_counts)
             continue
-        if kind == "filter":
-            out[name] = _filter_agg_pandas(pdf, name, body, sub)
-            continue
-        if kind == "composite":
-            if sub is not None:
-                raise ValueError(
-                    f"agg {name!r}: composite sub-aggs are unsupported"
-                )
-            out[name] = _composite_agg_pandas(pdf, name, body)
-            continue
-        if kind == "filters":
-            out[name] = [
-                {"key": str(nm), "n": int(_pd_filter_mask(pdf, c).sum())}
-                for nm, c in body["filters"].items()
-            ]
-            continue
-        if kind == "adjacency_matrix":
-            if sub is not None:
-                raise ValueError(
-                    f"agg {name!r}: adjacency_matrix sub-aggs are unsupported"
-                )
-            sep = str(body.get("separator", "&"))
-            names_ = list(body["filters"])
-            masks = {
-                nm: _pd_filter_mask(pdf, c) for nm, c in body["filters"].items()
-            }
-            rows = []
-            for i, a in enumerate(names_):
-                for key, mask in [(a, masks[a])] + [
-                    (f"{a}{sep}{b}", masks[a] & masks[b])
-                    for b in names_[i + 1:]
-                ]:
-                    n = int(mask.sum())
-                    if n:
-                        rows.append((key, n))
-            out[name] = [{"key": k_, "n": n} for k_, n in sorted(rows)]
-            continue
-        if kind == "auto_date_histogram":
-            if sub is not None:
-                raise ValueError(
-                    f"agg {name!r}: auto_date_histogram sub-aggs are "
-                    "unsupported"
-                )
-            col = body["field"]
-            vals = pd.to_datetime(
-                pdf[col] if col in getattr(pdf, "columns", [])
-                else pd.Series(dtype="datetime64[ns]")
-            ).dropna()
-            unit = _auto_dh_unit(
-                vals.min() if len(vals) else None,
-                vals.max() if len(vals) else None,
-                int(body.get("buckets", 10)),
-            )
-            key = _pd_bucket_key(
-                pdf, "date_histogram", {"field": col, "interval": unit}
-            )
-            c = key.value_counts().sort_index()
-            out[name] = [
-                {"key": _key_out(k_), "n": int(n), "interval": unit}
-                for k_, n in c.items()
-            ]
-            continue
-        if kind == "weighted_avg":
-            vf, wf = body["value"]["field"], body["weight"]["field"]
-            cols_ = getattr(pdf, "columns", [])
-            if vf in cols_ and wf in cols_ and len(pdf):
-                both = pdf[[vf, wf]].dropna()
-                v = pd.to_numeric(both[vf])
-                w = pd.to_numeric(both[wf])
-                ws = float(w.sum()) if len(both) else 0.0
-                out[name] = [
-                    {"value": (float((v * w).sum()) / ws) if ws else None}
-                ]
-            else:
-                out[name] = [{"value": None}]
-            continue
-        if kind == "top_metrics":
-            if sub is not None:
-                raise ValueError(
-                    f"agg {name!r}: top_metrics sub-aggs are unsupported"
-                )
-            srt = body["sort"]
-            if isinstance(srt, dict):
-                ((sf, sdir),) = srt.items()
-                if isinstance(sdir, dict):
-                    sdir = sdir.get("order", "asc")
-            else:
-                sf, sdir = str(srt), "asc"
-            mflds = [m["field"] for m in body.get("metrics") or []]
-            if not mflds:
-                raise ValueError(f"agg {name!r}: top_metrics needs metrics")
-            tsize = int(body.get("size", 1))
-            cols_ = getattr(pdf, "columns", [])
-            if sf not in cols_ or not len(pdf):
-                out[name] = []
-                continue
-            nn = pdf[pdf[sf].notna()]
-            top = nn.sort_values(
-                by=[sf, "doc_id"], ascending=[str(sdir) != "desc", True]
-            ).head(tsize)
-            out[name] = [
-                {"sort": _key_out(r[sf]),
-                 **{m: _key_out(r[m]) for m in mflds}}
-                for _, r in top.iterrows()
-            ]
-            continue
         if sub is not None:
             out[name] = _sub_bucket_pandas(pdf, name, kind, body, sub)
             continue
-        col = body["field"]
-        vals = pdf[col] if col in getattr(pdf, "columns", []) else pd.Series(dtype=object)
-        if kind == "missing":
-            out[name] = [{"n": len(pdf) - int(vals.notna().sum())}]
-            continue
         if kind == "terms":
-            if body.get("missing") is not None and len(vals):
-                vals = vals.fillna(body["missing"])
+            vals = _pd_bucket_key(pdf, kind, body)
             c = vals.dropna().value_counts()
             # native key types (numpy scalars unwrapped): tie order (n desc,
             # key asc) must match the Spark path's — string-sorting a
@@ -4530,265 +4281,46 @@ def _aggs_pandas(
             if size:
                 rows = rows[:size]
             out[name] = [{"key": k_, "n": n} for k_, n in rows]
-        elif kind in ("date_histogram", "histogram"):
-            key = _pd_bucket_key(pdf, kind, body)
-            c = key.value_counts().sort_index()
-            rows_kn = [(_key_out(k_), int(n)) for k_, n in c.items()]
-            if int(body.get("min_doc_count", 1)) == 0:
-                eb = body.get("extended_bounds") or {}
-                got = dict(rows_kn)
-                if kind == "date_histogram":
-                    lo = min(got) if got else None
-                    hi = max(got) if got else None
-                    if eb.get("min") is not None:
-                        b = _dh_parse_bound(eb["min"])
-                        lo = b if lo is None else min(lo, b)
-                    if eb.get("max") is not None:
-                        b = _dh_parse_bound(eb["max"])
-                        hi = b if hi is None else max(hi, b)
-                    axis = (
-                        _dh_bucket_range(lo, hi, _dh_spec(body))
-                        if lo is not None and hi is not None else []
-                    )
-                else:
-                    lo = min(got) if got else None
-                    hi = max(got) if got else None
-                    if eb.get("min") is not None:
-                        lo = float(eb["min"]) if lo is None else min(lo, float(eb["min"]))
-                    if eb.get("max") is not None:
-                        hi = float(eb["max"]) if hi is None else max(hi, float(eb["max"]))
-                    axis = (
-                        _hist_bucket_range(
-                            float(lo), float(hi), float(body["interval"]),
-                            float(body.get("offset", 0) or 0),
-                        )
-                        if lo is not None and hi is not None else []
-                    )
-                if axis and kind != "date_histogram":
-                    # float-key dict lookups share the Spark twin's 1-ulp
-                    # hazard — match buckets by integer ordinal instead
-                    step_ = float(body["interval"])
-                    a0_ = float(axis[0])
-                    got_o = {
-                        int(round((float(k_) - a0_) / step_)): n
-                        for k_, n in got.items()
-                    }
-                    rows_kn = [
-                        (k_, got_o.get(int(round((float(k_) - a0_) / step_)), 0))
-                        for k_ in axis
-                    ]
-                else:
-                    rows_kn = [(k_, got.get(k_, 0)) for k_ in axis] or rows_kn
-            out[name] = [{"key": k_, "n": n} for k_, n in rows_kn]
-        elif kind == "stats":
-            v = pd.to_numeric(vals.dropna())
-            out[name] = [{
-                "count": int(v.count()),
-                "min": None if not len(v) else v.min().item(),
-                "max": None if not len(v) else v.max().item(),
-                "avg": None if not len(v) else float(v.mean()),
-                "sum": None if not len(v) else v.sum().item(),
-            }]
-        elif kind == "cardinality":
-            out[name] = [{"value": int(vals.dropna().nunique())}]
-        elif kind in _METRIC_FNS:
-            out[name] = [{"value": _pd_metric(kind, vals)}]
-        elif kind == "range":
-            out[name] = _pd_range_rows(vals, body["ranges"])
-        elif kind == "percentiles":
-            pcts = [float(p) for p in body.get("percents", [50.0, 95.0, 99.0])]
-            v = pd.to_numeric(vals.dropna()).to_numpy()
-            out[name] = [{
-                f"p{p:g}": (float(np.percentile(v, p)) if len(v) else None)
-                for p in pcts
-            }]
-        elif kind == "extended_stats":
-            v = pd.to_numeric(vals.dropna())
-            n = int(v.count())
-            out[name] = [{
-                "count": n,
-                "min": None if not n else v.min().item(),
-                "max": None if not n else v.max().item(),
-                "avg": None if not n else float(v.mean()),
-                "sum": None if not n else v.sum().item(),
-                "sum_of_squares": None if not n else float(
-                    (v.astype(float) * v.astype(float)).sum()
-                ),
-                "variance": None if not n else float(v.var(ddof=0)),
-                "std_deviation": None if not n else float(v.std(ddof=0)),
-            }]
-        elif kind == "percentile_ranks":
-            v = np.sort(pd.to_numeric(vals.dropna()).to_numpy(dtype=float))
-            out[name] = [{
-                f"r{float(x):g}": (
-                    float(np.searchsorted(v, float(x), side="right"))
-                    * 100.0 / len(v)
-                    if len(v) else None
-                )
-                for x in body["values"]
-            }]
-        elif kind == "median_absolute_deviation":
-            v = pd.to_numeric(vals.dropna())
-            out[name] = [{
-                "value": None if not len(v)
-                else float((v - v.median()).abs().median())
-            }]
-        elif kind == "string_stats":
-            import math
-            from collections import Counter
-
-            s = vals.dropna().astype(str)
-            lens = s.str.len()
-            cnt: Counter = Counter()
-            for t in s:
-                cnt.update(t)
-            total = sum(cnt.values())
-            out[name] = [{
-                "count": int(len(s)),
-                "min_length": int(lens.min()) if len(s) else None,
-                "max_length": int(lens.max()) if len(s) else None,
-                "avg_length": float(lens.mean()) if len(s) else None,
-                "entropy": (
-                    math.log2(total)
-                    - sum(n_ * math.log2(n_) for n_ in cnt.values()) / total
-                ) if total else None,
-            }]
+        elif kind == "histogram":
+            out[name] = _pd_histogram_rows(pdf, body)
+        elif kind == "stats" or kind in _METRIC_FNS:
+            out[name] = [_pd_metric_cells(name, kind, body, False, pdf)]
         else:
             raise ValueError(f"unsupported agg type {kind!r} in {name!r}")
-    for name, kind, body in pipelines:
-        if kind == "bucket_script":
-            parent, colmap = _bucket_paths(out, name, body["buckets_path"])
-            node = _parse_script(body["script"])
-            out[name] = [
-                {
-                    "key": r.get("key"),
-                    "value": (
-                        None if (v := _script_eval_row(node, r, colmap))
-                        is None else float(v)
-                    ),
-                }
-                for r in out[parent]
-            ]
-            continue
-        if kind == "bucket_selector":
-            parent, colmap = _bucket_paths(out, name, body["buckets_path"])
-            node = _parse_script(body["script"])
-            out[parent] = [
-                r for r in out[parent]
-                if bool(_script_eval_row(node, r, colmap))
-            ]
-            continue
-        if kind == "bucket_sort":
-            parent = str(body["buckets_path"])
-            if parent not in out:
-                raise ValueError(
-                    f"agg {name!r}: buckets_path parent {parent!r} is not "
-                    f"an earlier bucket agg in this request"
-                )
-            rows = list(out[parent])
-            cols = set(rows[0]) if rows else set()
-            for s in reversed(body.get("sort", [])):
-                f_, spec = (
-                    next(iter(s.items())) if isinstance(s, dict) else (s, {})
-                )
-                cn = "key" if f_ == "_key" else (
-                    _metric_colname(cols, f_) if cols else f_
-                )
-                rows.sort(
-                    key=lambda r: r[cn],
-                    reverse=(spec or {}).get("order", "asc") == "desc",
-                )
-            rows = rows[int(body.get("from", 0)):]
-            if body.get("size") is not None:
-                rows = rows[: int(body["size"])]
-            out[parent] = rows
-            continue
-        rows, colname = _pipeline_parent(out, name, body)
-        if kind in ("moving_fn", "serial_diff"):
-            _series_parent_check(name, kind, body, bucket_kinds)
-            if kind == "serial_diff":
-                lagn = int(body.get("lag", 1))
-                vs = [r.get(colname) for r in rows]
-                out[name] = [
-                    {
-                        "key": r["key"],
-                        "value": (
-                            None
-                            if i < lagn or vs[i] is None or vs[i - lagn] is None
-                            else vs[i] - vs[i - lagn]
-                        ),
-                    }
-                    for i, r in enumerate(rows)
-                ]
-            else:
-                wsz = int(body["window"])
-                fname = _moving_fn_name(body["script"])
-                vs = [r.get(colname) for r in rows]
-                res = []
-                for i, r in enumerate(rows):
-                    win = [v for v in vs[max(0, i - wsz):i] if v is not None]
-                    if not win:
-                        res.append({"key": r["key"], "value": None})
-                    elif fname == "unweightedAvg":
-                        res.append(
-                            {"key": r["key"], "value": sum(win) / len(win)}
-                        )
-                    else:
-                        fn = {"sum": sum, "min": min, "max": max}[fname]
-                        res.append({"key": r["key"], "value": fn(win)})
-                out[name] = res
-            continue
-        if kind in ("derivative", "cumulative_sum"):
-            _series_parent_check(name, kind, body, bucket_kinds)
-            res: list[dict] = []
-            run = 0.0
-            prev = None
-            for r in rows:
-                v = r.get(colname)
-                if kind == "derivative":
-                    res.append({
-                        "key": r["key"],
-                        "value": None if prev is None else v - prev,
-                    })
-                    prev = v
-                else:
-                    run += v
-                    res.append({"key": r["key"], "value": run})
-            out[name] = res
-            continue
-        vals = [r[colname] for r in rows if r.get(colname) is not None]
-        if kind == "stats_bucket":
-            out[name] = [{
-                "count": len(vals),
-                "min": min(vals) if vals else None,
-                "max": max(vals) if vals else None,
-                "avg": (sum(vals) / len(vals)) if vals else None,
-                "sum": sum(vals) if vals else None,
-            }]
-        elif not vals:
-            out[name] = [{"value": None}]
-        elif kind == "avg_bucket":
-            out[name] = [{"value": sum(vals) / len(vals)}]
-        else:
-            fn = {"sum_bucket": sum, "min_bucket": min, "max_bucket": max}[kind]
-            out[name] = [{"value": fn(vals)}]
     return out
 
 
-def _pd_date_range_rows(vals: pd.Series, ranges: list[dict]) -> list[dict]:
-    """pandas twin of the date_range agg: ISO-string bounds, from
-    inclusive / to exclusive, overlap allowed, bucket order = spec
-    order."""
-    v = pd.to_datetime(vals.dropna())
-    rows = []
-    for spec in ranges:
-        mask = pd.Series(True, index=v.index)
-        if "from" in spec:
-            mask &= v >= pd.to_datetime(str(spec["from"]))
-        if "to" in spec:
-            mask &= v < pd.to_datetime(str(spec["to"]))
-        rows.append({"key": _date_range_key(spec), "n": int(mask.sum())})
-    return rows
+def _pd_histogram_rows(pdf: pd.DataFrame, body: dict) -> list[dict]:
+    """Flat histogram buckets in key order, gap-filled across the data
+    range and ``extended_bounds`` when ``min_doc_count`` is 0 (the
+    ``_densify_hist_df`` axis)."""
+    c = _pd_bucket_key(pdf, "histogram", body).value_counts().sort_index()
+    rows_kn = [(_key_out(k_), int(n)) for k_, n in c.items()]
+    if int(body.get("min_doc_count", 1)) == 0:
+        eb = body.get("extended_bounds") or {}
+        got = dict(rows_kn)
+        lo = min(got) if got else None
+        hi = max(got) if got else None
+        if eb.get("min") is not None:
+            lo = float(eb["min"]) if lo is None else min(lo, float(eb["min"]))
+        if eb.get("max") is not None:
+            hi = float(eb["max"]) if hi is None else max(hi, float(eb["max"]))
+        if lo is not None and hi is not None:
+            step = float(body["interval"])
+            axis = _hist_bucket_range(
+                float(lo), float(hi), step, float(body.get("offset", 0) or 0),
+            )
+            # float-key dict lookups share the Spark path's 1-ulp
+            # hazard — match buckets by integer ordinal instead
+            a0 = float(axis[0])
+            got_o = {
+                int(round((float(k_) - a0) / step)): n for k_, n in got.items()
+            }
+            rows_kn = [
+                (k_, got_o.get(int(round((float(k_) - a0) / step)), 0))
+                for k_ in axis
+            ]
+    return [{"key": k_, "n": n} for k_, n in rows_kn]
 
 
 def _sig_terms_pandas(
@@ -4841,151 +4373,12 @@ def _pd_metric(kind: str, vals: pd.Series):
     )
 
 
-def _pd_range_rows(vals: pd.Series, ranges: list[dict]) -> list[dict]:
-    """pandas twin of the range agg: from inclusive, to exclusive, ranges
-    may overlap, bucket order = spec order."""
-    v = pd.to_numeric(vals.dropna())
-    rows = []
-    for spec in ranges:
-        mask = pd.Series(True, index=v.index)
-        if "from" in spec:
-            mask &= v >= float(spec["from"])
-        if "to" in spec:
-            mask &= v < float(spec["to"])
-        rows.append({"key": _range_key(spec), "n": int(mask.sum())})
-    return rows
-
-
-def _pd_filter_mask(pdf: pd.DataFrame, clause: dict) -> pd.Series:
-    """pandas twin of ``_filter_cond``: a boolean mask over the hits
-    frame, nulls → False (so must_not matches missing-field docs, same as
-    the coalesced Spark condition)."""
-    if len(clause) != 1:
-        raise ValueError(
-            f"filter clause must have exactly one key, got {list(clause)}"
-        )
-    kind, body = next(iter(clause.items()))
-    cols = getattr(pdf, "columns", [])
-
-    def series(f):
-        return pdf[f] if f in cols else pd.Series(index=pdf.index, dtype=object)
-
-    def coerce(s, v):
-        # Spark compares a timestamp column to a string literal by cast;
-        # mirror that here so range/term specs can use ISO strings
-        return pd.to_datetime(v) if pd.api.types.is_datetime64_any_dtype(s) else v
-
-    if kind == "term":
-        f, v = next(iter(body.items()))
-        v = v["value"] if isinstance(v, dict) else v
-        s = series(f)
-        return (s == coerce(s, v)).fillna(False)
-    if kind == "terms":
-        f, vs = next(iter(body.items()))
-        s = series(f)
-        return s.isin([coerce(s, v) for v in vs]).fillna(False)
-    if kind == "range":
-        f, spec = next(iter(body.items()))
-        s = series(f)
-        mask = s.notna()
-        ops = {"gte": "ge", "gt": "gt", "lte": "le", "lt": "lt"}
-        for op, v in spec.items():
-            if op not in ops:
-                raise ValueError(f"unsupported range operator {op!r} on {f!r}")
-            mask &= getattr(s, ops[op])(coerce(s, v)).fillna(False)
-        return mask
-    if kind == "exists":
-        return series(body["field"]).notna()
-    if kind == "bool":
-        mask = pd.Series(True, index=pdf.index)
-        for c in _clause_list(body.get("must")) + _clause_list(body.get("filter")):
-            mask &= _pd_filter_mask(pdf, c)
-        shoulds = _clause_list(body.get("should"))
-        if shoulds:
-            om = pd.Series(False, index=pdf.index)
-            for c in shoulds:
-                om |= _pd_filter_mask(pdf, c)
-            mask &= om
-        for c in _clause_list(body.get("must_not")):
-            mask &= ~_pd_filter_mask(pdf, c)
-        return mask
-    raise ValueError(f"unsupported filter-agg clause {kind!r}")
-
-
-def _filter_agg_pandas(
-    pdf: pd.DataFrame, name: str, clause: dict, sub: dict | None
-) -> list[dict]:
-    """pandas twin of ``_filter_agg_df`` — identical rows in identical
-    order."""
-    import numpy as np
-
-    mask = _pd_filter_mask(pdf, clause)
-    dc = int(mask.sum())
-    if sub is None:
-        return [{"n": dc}]
-    if len(sub) != 1:
-        raise ValueError(
-            f"agg {name!r}: exactly one sub-agg is supported, got {list(sub)}"
-        )
-    ((cname, cspec),) = sub.items()
-    ckind, cbody, csub = _agg_spec(cname, cspec)
-    if csub is not None:
-        raise ValueError(f"agg {name!r}: sub-aggs nest one level only")
-    sel = pdf[mask] if len(pdf) else pdf
-    if ckind in ("terms", "date_histogram", "histogram"):
-        cc = _pd_bucket_key(sel, ckind, cbody).value_counts()
-        children = [(_key_out(ck), int(cn)) for ck, cn in cc.items()]
-        if ckind == "terms":
-            children.sort(key=lambda kv: (-kv[1], kv[0]))
-            csize = int(cbody.get("size", 10))
-            if csize:
-                children = children[:csize]
-        else:
-            children.sort(key=lambda kv: kv[0])
-        return [
-            {"doc_count": dc, "key": ck, "n": cn} for ck, cn in children
-        ]
-    col = cbody["field"]
-    vals = sel[col] if col in getattr(sel, "columns", []) else pd.Series(dtype=object)
-    if ckind == "stats":
-        v = pd.to_numeric(vals.dropna())
-        return [{
-            "doc_count": dc,
-            "count": int(v.count()),
-            "min": None if not len(v) else v.min().item(),
-            "max": None if not len(v) else v.max().item(),
-            "avg": None if not len(v) else float(v.mean()),
-            "sum": None if not len(v) else v.sum().item(),
-        }]
-    if ckind == "cardinality":
-        return [{"doc_count": dc, "value": int(vals.dropna().nunique())}]
-    if ckind in _METRIC_FNS:
-        return [{"doc_count": dc, "value": _pd_metric(ckind, vals)}]
-    if ckind == "range":
-        return [
-            {"doc_count": dc, "key": rr["key"], "n": rr["n"]}
-            for rr in _pd_range_rows(vals, cbody["ranges"])
-        ]
-    if ckind == "percentiles":
-        pcts = [float(p) for p in cbody.get("percents", [50.0, 95.0, 99.0])]
-        v = pd.to_numeric(vals.dropna()).to_numpy()
-        return [{
-            "doc_count": dc,
-            **{
-                f"p{p:g}": (float(np.percentile(v, p)) if len(v) else None)
-                for p in pcts
-            },
-        }]
-    raise ValueError(f"unsupported sub-agg type {ckind!r} in {name!r}")
-
-
 def _pd_metric_cells(
     cname: str, ckind: str, cbody: dict, prefixed: bool, sel: pd.DataFrame
 ) -> dict:
-    """pandas twin of `_metric_exprs` — one metric sibling's cells, names
-    from `_metric_names` so the paths can never drift."""
-    import numpy as np
-
+    """pandas twin of `_metric_exprs` for the serving metrics (stats and
+    the single-value kinds): one metric's cells, named as `_metric_names`
+    names them."""
     p = f"{cname}_" if prefixed else ""
     col = cbody["field"]
     vals = sel[col] if col in getattr(sel, "columns", []) else pd.Series(dtype=object)
@@ -4998,38 +4391,26 @@ def _pd_metric_cells(
             f"{p}avg": None if not len(v) else float(v.mean()),
             f"{p}sum": None if not len(v) else v.sum().item(),
         }
-    if ckind == "cardinality":
-        return {(cname if prefixed else "value"): int(vals.dropna().nunique())}
-    if ckind == "percentiles":
-        pcts = [float(x) for x in cbody.get("percents", [50.0, 95.0, 99.0])]
-        v = pd.to_numeric(vals.dropna()).to_numpy()
-        return {
-            f"{p}p{x:g}": (float(np.percentile(v, x)) if len(v) else None)
-            for x in pcts
-        }
     return {(cname if prefixed else "value"): _pd_metric(ckind, vals)}
 
 
 def _sub_bucket_pandas(
     pdf: pd.DataFrame, name: str, pkind: str, pbody: dict, sub: dict
 ) -> list[dict]:
-    """pandas twin of ``_sub_bucket_df`` — identical flattened rows in
-    identical order, for the zero-Spark-job serving path (recursive over
-    the agg chain; serving frames are top-k-bounded so a per-bucket loop
-    is fine here)."""
+    """pandas twin of ``_sub_bucket_df`` for chains of serving kinds (no
+    ``range`` / ``top_hits`` terminal — those escalate) — identical
+    flattened rows in identical order, for the zero-Spark-job serving path
+    (recursive over the agg chain; serving frames are top-k-bounded so a
+    per-bucket loop is fine here)."""
     levels = _parse_agg_chain(name, pkind, pbody, sub)
-    legacy = (
-        len(levels) == 1 and len(levels[0][2]) == 1 and levels[0][3] is None
-    )
+    legacy = len(levels) == 1 and len(levels[0][2]) == 1
 
     def rec(sel: pd.DataFrame, i: int, prefix: dict) -> list[dict]:
-        kind, body, metrics, terminal = levels[i]
+        kind, body, metrics, _terminal = levels[i]
         lvl = i + 1
         deepest = i == len(levels) - 1
         keycol = _tree_key_col(lvl)
-        cnt = "doc_count" if lvl == 1 else (
-            "n" if deepest and terminal is None else f"doc_count{lvl}"
-        )
+        cnt = "doc_count" if lvl == 1 else ("n" if deepest else f"doc_count{lvl}")
         pk = _pd_bucket_key(sel, kind, body)
         pc = pk.value_counts()
         buckets = [(k_, int(n)) for k_, n in pc.items()]
@@ -5077,36 +4458,10 @@ def _sub_bucket_pandas(
                 row.update(
                     _pd_metric_cells(cname, ckind, cbody, not legacy, bsel)
                 )
-            if not deepest:
-                rows.extend(rec(bsel, i + 1, row))
-                continue
-            if terminal is None:
+            if deepest:
                 rows.append(row)
-                continue
-            cname, ckind, cbody = terminal
-            tkey = _tree_key_col(lvl + 1)
-            if ckind == "range":
-                rows.extend(
-                    {**row, tkey: rr["key"], "n": rr["n"]}
-                    for rr in _pd_range_rows(bsel[cbody["field"]], cbody["ranges"])
-                )
-            else:  # top_hits
-                size = int(cbody.get("size", 3))
-                sort = _th_sort(cbody)
-                by = [f for f, _ in sort] + ["doc_id"]
-                asc = [a for _, a in sort] + [True]
-                top = bsel.sort_values(by=by, ascending=asc).head(size)
-                src = [
-                    c for c in _th_source(cbody, list(bsel.columns))
-                    if c not in row and c != "rank"
-                ]
-                rows.extend(
-                    {
-                        **row, "rank": j + 1, "doc_id": int(r["doc_id"]),
-                        **{c: _key_out(r[c]) for c in src},
-                    }
-                    for j, (_, r) in enumerate(top.iterrows())
-                )
+            else:
+                rows.extend(rec(bsel, i + 1, row))
         return rows
 
     return rec(pdf, 0, {})
@@ -6696,39 +6051,42 @@ class Searcher:
         or_groups: list | None = None, not_atoms: list | None = None,
         max_hits: int = 100_000,
     ) -> dict[str, list[dict]]:
-        """Serving-path search aggregations (the dashboard workload): the
-        bool kernel enumerates hits, the bucket-pruned docstore resolves
-        the agg fields, and pandas computes the aggregations — zero Spark
-        jobs. Semantics mirror ``search_aggs`` exactly for terms /
-        date_histogram / histogram / stats; ``cardinality`` and
-        ``percentiles`` are EXACT here (the distributed path approximates
-        like ES — HLL++ / t-digest). If the matching set saturates
-        ``max_hits`` the counts would be silently wrong, so it escalates
-        to the fully distributed ``search_aggs`` instead."""
+        """Search aggregations with the serving-path engine where it is
+        measured (the dashboard workload): when every agg kind in
+        ``aggs``, sub-aggs included, is a serving kind (terms /
+        histogram, stats, avg / sum / min / max / value_count,
+        significant_terms — ``_SERVING_AGG_KINDS``), the bool
+        kernel enumerates hits, the bucket-pruned docstore resolves the
+        agg fields, and pandas computes the aggregations — zero Spark
+        jobs, rows identical to ``search_aggs``. Any other kind, a
+        filter-only (match_all) request, and a matching set that
+        saturates ``max_hits`` run the fully distributed ``search_aggs``
+        instead, decided before the kernel runs, with its ES semantics
+        (``cardinality`` approximates unless ``"exact": true``,
+        ``percentiles`` approximates)."""
         scoring = bool((query or "").strip() or (must or "").strip())
-        kinds = {k for spec in aggs.values() for k in spec if k != "aggs"}
-        has_global = "global" in kinds
-        rows = self.search_rows(
-            query, max_hits, must=must, must_not=must_not,
-            min_should=min_should, filters=filters, ranges=ranges,
-            or_groups=or_groups, not_atoms=not_atoms,
-        ) if scoring and not has_global else []
-        if not scoring or has_global or len(rows) >= max_hits:
-            # filter-only (match_all) requests have no scoring terms for
-            # the kernel to enumerate — candidates come from the keyword
-            # postings on the distributed path; saturation escalates too
-            out = search_aggs(
-                self.spark, self.out_dir, aggs, query, must=must,
-                must_not=must_not, min_should=min_should,
-                filters=filters, ranges=ranges, or_groups=or_groups,
-                not_atoms=not_atoms,
+        if scoring and _agg_kinds(aggs) <= _SERVING_AGG_KINDS:
+            rows = self.search_rows(
+                query, max_hits, must=must, must_not=must_not,
+                min_should=min_should, filters=filters, ranges=ranges,
+                or_groups=or_groups, not_atoms=not_atoms,
             )
-            return {name: [r.asDict() for r in df.collect()] for name, df in out.items()}
-        from .build import lookup_docs
+            if len(rows) < max_hits:
+                from .build import lookup_docs
 
-        meta = lookup_docs(self.out_dir, [d for d, _ in rows])
-        pdf = pd.DataFrame(list(meta.values())) if meta else pd.DataFrame()
-        return _aggs_pandas(pdf, aggs, bg_counts=self._background_counts)
+                meta = lookup_docs(self.out_dir, [d for d, _ in rows])
+                pdf = pd.DataFrame(list(meta.values())) if meta else pd.DataFrame()
+                return _aggs_pandas(pdf, aggs, bg_counts=self._background_counts)
+        # filter-only requests have no scoring terms for the kernel to
+        # enumerate — candidates come from the keyword postings on the
+        # distributed path
+        out = search_aggs(
+            self.spark, self.out_dir, aggs, query, must=must,
+            must_not=must_not, min_should=min_should,
+            filters=filters, ranges=ranges, or_groups=or_groups,
+            not_atoms=not_atoms,
+        )
+        return {name: [r.asDict() for r in df.collect()] for name, df in out.items()}
 
     def search(
         self, query: str, k: int = 10, prune: bool = True,

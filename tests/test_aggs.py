@@ -147,10 +147,12 @@ def test_bad_agg_spec_raises(spark, aroot):
 
 
 def test_aggs_rows_serving_path_matches_spark(spark, aroot):
-    """Zero-Spark-job serving aggregations: Searcher.aggs_rows matches the
-    distributed search_aggs row-for-row on terms / date_histogram /
-    histogram / stats, is EXACT on cardinality/percentiles, and escalates
-    to the distributed path when the matching set saturates max_hits."""
+    """Escalation only: the cardinality and date_histogram aggs in this
+    spec send the whole aggs_rows request to the distributed search_aggs,
+    with or without max_hits saturation, so both asserts compare
+    search_aggs with itself. Serving-engine parity is covered by
+    tests/test_aggs_differential.py (seeded serving specs, zero Spark
+    jobs) and saturation by test_significant_terms_serving_parity."""
     from conveyorbelt_spark.index.query import Searcher, search_aggs
 
     out, rows, _matching = aroot
@@ -206,8 +208,9 @@ def test_terms_agg_default_size_is_es_10(spark, aroot):
 def test_sub_bucket_aggs(spark, aroot):
     """ES sub-aggregations, one nesting level (terms → date_histogram,
     terms → stats): the Kibana split-series shape. Spark rows vs a
-    hand-computed truth, serving twin row-identical, parent top-size
-    selection before the child breakdown, and the depth guard."""
+    hand-computed truth, aggs_rows (the date_histogram child escalates
+    it to the distributed path) row-identical, parent top-size selection
+    before the child breakdown, and the depth guard."""
     from collections import Counter
 
     from conveyorbelt_spark.index.query import Searcher
@@ -254,7 +257,8 @@ def test_metric_and_range_aggs(spark, aroot):
     """The remaining common ES agg kinds: single metrics (avg/sum/min/max/
     value_count) and the range bucket agg (from inclusive, to exclusive,
     OVERLAPPING ranges allowed — one conditional-sum pass, not a groupBy),
-    flat and as terms children, Spark vs pandas serving twin vs truth."""
+    flat and as terms children, Spark vs truth; aggs_rows (range sends
+    the request to the distributed path) returns the same rows."""
     from conveyorbelt_spark.index.query import Searcher
 
     out, rows, matching = aroot
@@ -324,7 +328,7 @@ def test_filter_filters_missing_aggs(spark, aroot):
     """ES filter / filters / missing bucket aggs: a single-filter bucket,
     overlapping named-filter buckets (one conditional-sum pass, spec
     order), and the missing-field bucket — pandas truths from the raw
-    rows, serving path row-identical."""
+    rows; aggs_rows (escalated to the distributed path) row-identical."""
     from conveyorbelt_spark.index.query import Searcher
 
     out, rows, matching = aroot
@@ -359,7 +363,8 @@ def test_filter_filters_missing_aggs(spark, aroot):
 def test_filter_agg_children(spark, aroot):
     """filter agg with a child: bucketing child rows carry the bucket's
     doc_count (broadcast single-row join, no shuffle); metric/stats
-    children fold into the same single agg row. Serving twin identical."""
+    children fold into the same single agg row. aggs_rows (escalated to
+    the distributed path) identical."""
     from conveyorbelt_spark.index.query import Searcher
 
     out, rows, matching = aroot
@@ -434,7 +439,8 @@ def test_missing_agg_counts_nulls(spark, tmp_path):
 def test_top_hits_sub_agg(spark, aroot):
     """ES top_hits sub-agg: per-parent top-N docs by a stored-field sort
     (window row_number — one extra shuffle key, never a per-bucket scan),
-    doc_id tiebreak, ES missing-last null order. Serving twin identical."""
+    doc_id tiebreak, ES missing-last null order. aggs_rows (the top_hits
+    child escalates it to the distributed path) identical."""
     from conveyorbelt_spark.index.query import Searcher
 
     out, rows, matching = aroot
@@ -635,7 +641,8 @@ def test_significant_terms_guards(spark, sigroot):
 def test_extended_bucket_aggs(spark, aroot):
     """multi_terms (compound keys), rare_terms (long-tail), date_range
     (ISO bounds, from inclusive / to exclusive, custom keys) — verified
-    against python truths, serving path row-identical."""
+    against python truths; aggs_rows (escalated to the distributed path)
+    row-identical."""
     from conveyorbelt_spark.index.query import Searcher
 
     out, rows, matching = aroot
@@ -692,8 +699,9 @@ def test_extended_bucket_aggs(spark, aroot):
 def test_global_and_pipeline_aggs(spark, aroot):
     """global runs its child over the WHOLE index (query ignored);
     sibling pipeline aggs (avg/max/stats_bucket over buckets_path
-    parent>_count) aggregate the parent's returned buckets. Serving path
-    identical (global escalates itself to the distributed plan)."""
+    parent>_count) aggregate the parent's returned buckets. aggs_rows
+    identical (global and the pipelines escalate to the distributed
+    plan)."""
     from conveyorbelt_spark.index.query import Searcher
 
     out, rows, matching = aroot
@@ -910,9 +918,9 @@ def test_series_pipeline_aggs(spark, aroot):
 def test_extended_metric_aggs_and_serving_parity(spark, aroot):
     """Round-5 metric kinds — extended_stats / weighted_avg /
     percentile_ranks (exact rank) / median_absolute_deviation (exact MAD)
-    / string_stats (length stats + Shannon entropy) — distributed vs the
-    zero-job serving twin to float tolerance, each against a numpy truth
-    computed from the raw rows."""
+    / string_stats (length stats + Shannon entropy) — distributed vs
+    aggs_rows (which escalates these kinds) to float tolerance, each
+    against a numpy truth computed from the raw rows."""
     import math
     from collections import Counter
 
@@ -966,8 +974,8 @@ def test_bucket_pipeline_aggs(spark, aroot):
     """bucket_script / bucket_selector / bucket_sort / moving_fn /
     serial_diff against python truths from the raw rows. selector and
     sort mutate the PARENT frame (ES drops/pages the parent's buckets);
-    script/moving/diff emit their own (key, value) series; the zero-job
-    serving twin matches the distributed path row for row."""
+    script/moving/diff emit their own (key, value) series; aggs_rows
+    (escalated) matches the distributed path row for row."""
     from conveyorbelt_spark.index.query import Searcher, search_aggs
 
     out, rows, matching = aroot
@@ -1033,7 +1041,8 @@ def test_bucket_pipeline_aggs(spark, aroot):
 def test_adjacency_matrix_agg(spark, aroot):
     """adjacency_matrix: a bucket per named filter plus one per unordered
     pair (key "a&b", intersection count), empty buckets omitted, key-asc
-    order; serving twin matches the one-pass Spark stack row-for-row."""
+    order; aggs_rows (escalated) matches the one-pass Spark stack
+    row-for-row."""
     from conveyorbelt_spark.index.query import Searcher, search_aggs
 
     out, rows, matching = aroot
@@ -1064,8 +1073,8 @@ def test_adjacency_matrix_agg(spark, aroot):
 
 def test_auto_date_histogram_agg(spark, aroot):
     """auto_date_histogram picks the smallest date_trunc unit fitting the
-    buckets target (deterministic in min/max/buckets); serving twin
-    matches including the chosen interval."""
+    buckets target (deterministic in min/max/buckets); aggs_rows
+    (escalated) matches including the chosen interval."""
     from conveyorbelt_spark.index.query import Searcher, search_aggs
 
     out, rows, matching = aroot
@@ -1157,7 +1166,8 @@ def test_terms_order_rejections(spark, aroot):
 def test_fixed_interval_and_gap_fill(spark, aroot):
     """fixed_interval epoch-aligned bucketing, min_doc_count:0 gap
     filling across extended_bounds, and terms `missing` — Spark path and
-    zero-job serving twin row-identical."""
+    aggs_rows (the date_histograms escalate it to the distributed path)
+    row-identical."""
     from conveyorbelt_spark.index.query import Searcher
 
     out, rows, matching = aroot

@@ -5,6 +5,8 @@ MinuteTableShardScheduler.cs:44)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -74,3 +76,53 @@ def test_manifest_counts(spark, docs, tmp_path_factory):
     total_postings = man.agg(F.sum("n_postings")).collect()[0][0]
     seg_postings = spark.read.parquet(f"{out}/segments").agg(F.sum("n")).collect()[0][0]
     assert total_postings == seg_postings
+
+
+def test_resume_keeps_explicit_term_buckets(spark, docs, tmp_path_factory, monkeypatch):
+    """A build given n_term_buckets=16 that dies after its first commit
+    group resumes with 16, not the adaptive count for this corpus (8):
+    every group hashes terms with one modulus, so searches match a clean
+    build. A resume passing another count is refused before it touches
+    the index, and the finished build keeps the count in stats.json only."""
+    import conveyorbelt_spark.index.build as B
+    from conveyorbelt_spark.index.query import Searcher
+
+    assert B._adaptive_term_buckets(N_DOCS) == 8
+    clean = str(tmp_path_factory.mktemp("tb_clean"))
+    build_index(spark, docs, clean, n_buckets=8, n_term_buckets=16)
+
+    part = str(tmp_path_factory.mktemp("tb_part"))
+
+    class Boom(RuntimeError):
+        pass
+
+    orig = B.tokenize_to_postings
+    calls = {"n": 0}
+
+    def flaky(*a, **kw):
+        calls["n"] += 1
+        if calls["n"] > 1:  # group 0 commits, group 1 dies
+            raise Boom()
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(B, "tokenize_to_postings", flaky)
+    with pytest.raises(Boom):
+        build_index(spark, docs, part, n_buckets=8, n_term_buckets=16, commit_groups=4)
+    monkeypatch.setattr(B, "tokenize_to_postings", orig)
+
+    with pytest.raises(ValueError, match="n_term_buckets=8"):
+        build_index(
+            spark, docs, part, n_buckets=8, n_term_buckets=8, commit_groups=4,
+            resume=True,
+        )
+    stats = build_index(spark, docs, part, n_buckets=8, commit_groups=4, resume=True)
+    assert stats["n_term_buckets"] == 16
+    assert B.load_stats(part)["n_term_buckets"] == 16
+    assert not os.path.exists(os.path.join(part, "layout.json"))
+    queries = [
+        " ".join(r.text.split()[:3]) for r in docs.select("text").limit(6).collect()
+    ]
+    want, got = Searcher(spark, clean), Searcher(spark, part)
+    for q in queries:
+        rows = want.search_rows(q, 10)
+        assert rows and got.search_rows(q, 10) == rows, q
