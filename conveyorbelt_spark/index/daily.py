@@ -18,10 +18,17 @@ ordinary builder. That buys, with zero new index machinery:
 - **ingest routing**: an incremental batch splits by event day and lands
   in its days' sub-indexes (normally 1–2 thanks to the grace window).
 
-Serving: ``DailySearcher`` is a window view. Each query selects the days
+Serving: ``DailySearcher`` is a window view holding only day selection,
+the per-day mtime caches and ``_window``. Each query selects the days
 overlapping its ``time_range`` and builds a ``query.Searcher`` over them —
 the same serving searcher a single index uses, reading a list of day
-roots. Scoring uses corpus statistics (n_docs, total_tokens → avgdl, and
+roots — and every method delegates to it: the driver paths are its
+methods, the Spark plans (``bm25_topk``, ``bool_doc_ids``,
+``facet_counts_spark``, ``search_aggs``, ``search_sorted``) take it in
+place of an index dir, and ``dsl.search_body_daily`` hands it to
+``dsl.search_body``. This module holds no query plan.
+
+Scoring uses corpus statistics (n_docs, total_tokens → avgdl, and
 per-term df) MERGED across the selected days — exact global stats over
 the queried window, the equivalent of Elasticsearch's
 ``dfs_query_then_fetch`` (plain ES daily indexes score with per-shard df;
@@ -38,7 +45,10 @@ before any term pruning even starts; per-day stats and tombstones are
 cached by stats.json mtime, and the window's dictionary probe is one
 dataset read over every selected day. Per-bucket groups simply
 concatenate blocks from several days' runs, the multi-run shape the
-kernel already handles.
+kernel already handles; a distributed plan unions the days' pruned scans
+(each day's committed runs and tombstones applied first) before its one
+dedup, aggregation or sort, so its Spark job count does not grow with
+the window.
 """
 
 from __future__ import annotations
@@ -47,12 +57,20 @@ import datetime as dt
 import glob
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
-from .build import build_index, load_stats, write_docstore
-from .query import _BLOCK_COLS, Searcher, _bool_plan, _Root, _score_kernel, _tombs
+from .build import build_index, load_stats
+from .query import (
+    Searcher,
+    _Root,
+    _tombs,
+    bm25_topk,
+    bool_doc_ids,
+    facet_counts_spark,
+    search_aggs,
+    search_sorted,
+)
 
 DAY_FMT = "yyyyMMdd"  # IndexNamer.cs:27 rendering (prefix-yyyyMMdd)
 
@@ -257,16 +275,16 @@ def _merged_stats(root: str, days: list[str], loader=None) -> dict:
 
 
 class DailySearcher:
-    """Window view over a daily-index root: every search takes a
+    """Window view over a daily-index root. It holds only day selection,
+    the per-day mtime caches and ``_window``: every query takes a
     ``time_range=(lo, hi)`` (datetimes; either side None = open), selects
     the overlapping day sub-indexes BEFORE any file is opened, and builds a
-    ``query.Searcher`` over them (``_window``). The serving methods —
-    ``search_rows``, ``phrase_rows``, ``multi_match_rows``, ``mlt_terms``,
-    ``more_like_this``, ``search_docs`` — are that Searcher's, so results
-    are rank-identical to a single index built over exactly the window's
-    documents (asserted in tests and by the q32 DuckDB oracle). The Spark
-    window plans (``search``, ``bool_doc_ids``, aggregations, sorted
-    export) union the selected days' scans in one plan."""
+    ``query.Searcher`` over them. Each method delegates to that window
+    Searcher (or hands it to the module plan of the same name — the plans
+    take a Searcher in place of an index dir), so results are
+    rank-identical to a single index built over exactly the window's
+    documents (asserted in tests and by the q32 DuckDB oracle). An empty
+    window answers empty."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -339,60 +357,15 @@ class DailySearcher:
         must: str | None = None, must_not: str | None = None,
         filters: dict | None = None, ranges: dict | None = None,
     ) -> DataFrame:
-        """Distributed path: one Spark scan over ONLY the selected days'
-        segment dirs (pruning by path construction + tb partitions + term
-        row groups), same kernel, global top-k."""
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
+        """``query.bm25_topk`` over the window: one Spark scan over ONLY
+        the selected days' segment dirs, global top-k."""
         w = self._window(time_range)
         if w is None:
-            return empty
-        plan = _bool_plan(
-            self.spark, self.root, w.stats, query, must, must_not,
-            lookup=w._entries, filters=filters, ranges=ranges,
-            range_expand=w._range_expand,
+            return self.spark.createDataFrame([], "doc_id long, score double")
+        return bm25_topk(
+            self.spark, w, query, k, prune, must=must, must_not=must_not,
+            filters=filters, ranges=ranges,
         )
-        if plan is None:
-            return empty
-        term_idf, must_terms, not_terms, tbs, scan_terms, _sp, fgroups = plan
-        # one pruned read per selected day, unioned (a multi-root read trips
-        # partition discovery on the day= ancestor dirs); each read keeps
-        # its own tb-partition + term row-group pruning
-        from functools import reduce
-
-        def one_day(r):
-            from .query import _seg_scan
-
-            # _seg_scan: committed-run snapshot + EXPLICIT schema (no
-            # per-day 1-task parquet schema-inference job)
-            seg = _seg_scan(self.spark, r.dir, r.stats).where(
-                F.col("tb").isin(tbs) & F.col("term").isin(scan_terms)
-            )
-            base = seg.select(*_BLOCK_COLS)
-            if r.tomb:
-                # deletes apply PER DAY before the union: day sub-indexes
-                # reuse run names (full-g0, batch_N), so one merged
-                # tombstone map would cross-contaminate days; block surgery
-                # is row-local — no grouping needed here
-                from .delete import apply_tombstones
-
-                withrun = seg.select(*_BLOCK_COLS, "run")
-
-                def strip(it, _t=r.tomb):
-                    for pdf in it:
-                        out = apply_tombstones(pdf, _t)
-                        yield out.drop(columns=["run"])
-
-                base = withrun.mapInPandas(strip, schema=base.schema)
-            return base
-
-        seg = reduce(DataFrame.unionByName, [one_day(r) for r in w._roots])
-        kern = _score_kernel(
-            term_idf, k, prune=prune, must_terms=must_terms, not_terms=not_terms,
-            filter_groups=fgroups,
-        )
-        kern.k1, kern.b, kern.avgdl = w.stats["k1"], w.stats["b"], w.stats["avgdl"]
-        local = seg.groupBy("bucket").applyInPandas(kern, schema="doc_id long, score double")
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def bool_doc_ids(
         self, query: str = "", *,
@@ -402,61 +375,15 @@ class DailySearcher:
         or_groups: list | None = None, not_atoms: list | None = None,
         time_range: tuple | None = None,
     ) -> DataFrame:
-        """Windowed ``bool_doc_ids``: ONE plan over the whole window. The
-        selected days' pruned (term, doc_id) scans are unioned (narrow —
-        no per-day shuffle), deduplicated once, and pushed through the
-        single bool hash aggregation. Day corpora are doc-disjoint, so the
-        union is exact; every driver step (dictionary probes, range
-        expansion, must-presence) is a metadata read — the whole thing
-        costs one Spark action regardless of the day count (vs one job
-        wave per day in the per-day formulation: a 90-day Kibana window is
-        one scan, not 90 sequential waves of fixed overhead)."""
-        from functools import reduce
-
-        from ..textutils import analyze
-        from .query import (
-            _bool_match_ids,
-            _expand_atoms,
-            _filter_want,
-            term_doc_pairs,
-        )
-
-        empty = self.spark.createDataFrame([], "doc_id long")
+        """``query.bool_doc_ids`` over the window: ONE plan, one Spark
+        action whatever the day count."""
         w = self._window(time_range)
         if w is None:
-            return empty
-        az = w.stats.get("analyzer")
-        should_terms = sorted(set(analyze(query, az))) if query else []
-        must_terms = sorted(set(analyze(must, az))) if must else []
-        not_terms = sorted(set(analyze(must_not, az))) if must_not else []
-        # keyword terms are day-independent strings: the window's expansion
-        # is the union of each day's range-sidecar probe
-        range_expand = w._range_expand
-        if not_atoms:
-            not_terms = sorted(
-                set(not_terms) | set(_expand_atoms(not_atoms, range_expand))
-            )
-        scoring = sorted(set(should_terms) | set(must_terms))
-        fgroups: list[list[str]] = []
-        if filters or ranges or or_groups:
-            want = _filter_want(filters, ranges, range_expand, or_groups)
-            if want is None:
-                return empty
-            fgroups = want
-        if not scoring and not fgroups:
-            return empty
-        if must_terms:
-            present = {e["term"] for e in w._entries(must_terms)}
-            if any(mt not in present for mt in must_terms):
-                return empty  # provably empty across the whole window
-        flat = sorted({t for g in fgroups for t in g})
-        all_terms = sorted(set(scoring) | set(not_terms) | set(flat))
-        pairs = reduce(
-            DataFrame.unionByName,
-            [term_doc_pairs(self.spark, d, all_terms, distinct=False) for d in w._dirs],
-        ).distinct()
-        return _bool_match_ids(
-            pairs, should_terms, must_terms, not_terms, min_should, fgroups
+            return self.spark.createDataFrame([], "doc_id long")
+        return bool_doc_ids(
+            self.spark, w, query, must=must, must_not=must_not,
+            min_should=min_should, filters=filters, ranges=ranges,
+            or_groups=or_groups, not_atoms=not_atoms,
         )
 
     def facet_counts(
@@ -466,63 +393,18 @@ class DailySearcher:
         filters: dict | None = None, ranges: dict | None = None,
         k: int | None = None,
     ) -> list[tuple]:
-        """Windowed ES terms-aggregation — the Kibana time-chart-breakdown
-        shape ("top N <field> over the last 3 days") as ONE distributed
-        plan: the window's matching ids (``bool_doc_ids`` above — unioned
-        pruned scans, one dedup, one bool aggregation) join the unioned
-        day docstores and hash-aggregate once. Counts over disjoint day
-        corpora are additive, so one aggregation is exact at any
-        matching-set size; job count is independent of the window width.
-        Requires day indexes built with ``store_cols=(facet_col, ...)``."""
-        days = select_days(self.root, time_range)
-        if not days:
+        """``query.facet_counts_spark`` over the window — the Kibana
+        "top N <field> over the last 3 days" shape as ONE distributed plan
+        whose job count is independent of the window width. Requires day
+        indexes built with ``store_cols=(facet_col, ...)``."""
+        w = self._window(time_range)
+        if w is None:
             return []
-        hits = self.bool_doc_ids(
-            query, must=must, must_not=must_not,
-            filters=filters, ranges=ranges, time_range=time_range,
-        )
-        out = (
-            self._window_docstore(days).join(hits, "doc_id")
-            .groupBy(F.col(facet_col).alias("facet"))
-            .agg(F.count("*").alias("n"))
-            .orderBy(F.desc("n"), F.asc("facet"))
-        )
-        rows = (out.limit(k) if k else out).collect()
+        rows = facet_counts_spark(
+            self.spark, w, facet_col, query, must=must, must_not=must_not,
+            k=k, filters=filters, ranges=ranges,
+        ).collect()
         return [(r.facet, int(r.n)) for r in rows]
-
-    def _window_docstore(self, days: list[str]) -> DataFrame:
-        """Union of the selected days' docstores: one lazy read per day
-        dir (a multi-path read trips partition discovery on the day=
-        ancestor dirs), narrow union — still one plan, one action. Schema
-        comes from ONE driver-side pyarrow footer probe (day configs agree
-        — enforced by _merged_stats) so no per-day schema-inference Spark
-        job runs. Each day's scan resolves updated docs latest-version-
-        wins (``_dedup_docstore_df`` — a no-op for single-run days)."""
-        from functools import reduce
-
-        import pyarrow.dataset as pds
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        from .query import _dedup_docstore_df
-
-        store_schema = from_arrow_schema(
-            pds.dataset(
-                os.path.join(day_dir(self.root, days[0]), "docstore"),
-                format="parquet", partitioning="hive",
-            ).schema
-        )
-        return reduce(
-            DataFrame.unionByName,
-            [
-                _dedup_docstore_df(
-                    self.spark.read.schema(store_schema).parquet(
-                        os.path.join(day_dir(self.root, d), "docstore")
-                    ),
-                    day_dir(self.root, d),
-                )
-                for d in days
-            ],
-        )
 
     def search_aggs(
         self, aggs: dict, query: str = "", *,
@@ -532,28 +414,19 @@ class DailySearcher:
         filters: dict | None = None, ranges: dict | None = None,
         or_groups: list | None = None, not_atoms: list | None = None,
     ) -> dict[str, DataFrame]:
-        """Windowed ES search aggregations — THE Kibana workload
+        """``query.search_aggs`` over the window — THE Kibana workload
         (date_histogram / terms / stats / cardinality / percentiles over
-        "the last N days"): the window's matching ids (one unioned plan,
-        ``bool_doc_ids``) join the unioned day docstores once, then one
-        hash aggregation per agg (``query.aggs_over_join``). Aggregations
-        over disjoint day corpora compose exactly — same spec shape as the
-        single-index ``search_aggs``."""
-        from .query import aggs_over_join
-
-        days = select_days(self.root, time_range)
-        if not days:
+        "the last N days"); the significant_terms background is the
+        window's corpus."""
+        w = self._window(time_range)
+        if w is None:
             return {name: self.spark.createDataFrame([], "key string, n long")
                     for name in aggs}
-        hits = self.bool_doc_ids(
-            query, must=must, must_not=must_not, min_should=min_should,
-            filters=filters, ranges=ranges, or_groups=or_groups,
-            not_atoms=not_atoms, time_range=time_range,
+        return search_aggs(
+            self.spark, w, aggs, query, must=must, must_not=must_not,
+            min_should=min_should, filters=filters, ranges=ranges,
+            or_groups=or_groups, not_atoms=not_atoms,
         )
-        store = self._window_docstore(days)
-        # background for significant_terms = the WINDOW's corpus (the day
-        # dirs the query selected), matching ES's per-index background
-        return aggs_over_join(store.join(hits, "doc_id"), aggs, background=store)
 
     def search_sorted(
         self, query: str, sort: list[tuple[str, str]], k: int = 10, *,
@@ -564,23 +437,15 @@ class DailySearcher:
         search_after: tuple | None = None,
         or_groups: list | None = None, not_atoms: list | None = None,
     ) -> DataFrame:
-        """Windowed sort-by-field + search_after export (the ES
-        PIT/search_after deep-pagination shape over a time window): the
-        window's matching ids join the unioned day docstores, then the
-        direction-aware order + lexicographic after-predicate
-        (``query.sorted_over_join``) — page N+1 costs the same as page 1."""
-        from .query import sorted_over_join
-
-        days = select_days(self.root, time_range)
-        if not days:
+        """``query.search_sorted`` over the window (sort-by-field +
+        search_after export: page N+1 costs the same as page 1)."""
+        w = self._window(time_range)
+        if w is None:
             return self.spark.createDataFrame([], "doc_id long")
-        hits = self.bool_doc_ids(
-            query, must=must, must_not=must_not, min_should=min_should,
-            filters=filters, ranges=ranges, or_groups=or_groups,
-            not_atoms=not_atoms, time_range=time_range,
-        )
-        return sorted_over_join(
-            self._window_docstore(days).join(hits, "doc_id"), sort, k, search_after
+        return search_sorted(
+            self.spark, w, query, sort, k, must=must, must_not=must_not,
+            min_should=min_should, filters=filters, ranges=ranges,
+            search_after=search_after, or_groups=or_groups, not_atoms=not_atoms,
         )
 
     def phrase_rows(
@@ -612,47 +477,29 @@ class DailySearcher:
         fuzziness: int = 1, prefix_length: int = 1, max_expansions: int = 50,
         time_range: tuple | None = None,
     ) -> list[str]:
-        """Windowed prefix/wildcard/regexp/fuzzy expansion: each selected
-        day contributes its UNRANKED (term, df) candidates
-        (``query.expansion_candidates`` — range-sidecar / k-deletes
-        pruned), dfs SUM per term across the disjoint day corpora, and the
-        ES df-desc ranking applies ONCE to the merged frame — exact global
-        ranking (a union of per-day top-N would not be)."""
-        from .query import _rank_expansions, expansion_candidates
-
-        days = select_days(self.root, time_range)
-        if not days:
+        """``Searcher.expand_terms`` over the window: dfs sum per term
+        across the disjoint day corpora before the one df-desc ranking."""
+        w = self._window(time_range)
+        if w is None:
             return []
-        frames = [
-            expansion_candidates(
-                day_dir(self.root, d), kind, value,
-                fuzziness=fuzziness, prefix_length=prefix_length,
-            )
-            for d in days
-        ]
-        frames = [f for f in frames if len(f)]
-        if not frames:
-            return []
-        merged = (
-            pd.concat(frames, ignore_index=True)
-            .groupby("term", as_index=False, sort=True)["df"].sum()
+        return w.expand_terms(
+            kind, value, fuzziness=fuzziness, prefix_length=prefix_length,
+            max_expansions=max_expansions,
         )
-        return _rank_expansions(merged, max_expansions, value.lower())
 
     def expansion_rows(
         self, kind: str, value: str, k: int = 10, *,
         fuzziness: int = 1, prefix_length: int = 1, max_expansions: int = 50,
         time_range: tuple | None = None,
     ) -> list[tuple[int, float]]:
-        """Windowed expansion query: the merged expansion bag scored as a
-        SHOULD bag over the window (window-merged stats)."""
-        terms = self.expand_terms(
-            kind, value, fuzziness=fuzziness, prefix_length=prefix_length,
-            max_expansions=max_expansions, time_range=time_range,
-        )
-        if not terms:
+        """``Searcher.expansion_rows`` over the window."""
+        w = self._window(time_range)
+        if w is None:
             return []
-        return self.search_rows(" ".join(terms), k, time_range=time_range)
+        return w.expansion_rows(
+            kind, value, k, fuzziness=fuzziness, prefix_length=prefix_length,
+            max_expansions=max_expansions,
+        )
 
     def more_like_this(
         self, like, k: int = 10, *,

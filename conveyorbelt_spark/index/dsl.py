@@ -774,7 +774,7 @@ def _parse_nested(body: dict) -> dict:
 
 
 def _expand_keyword_values(
-    out_dir: str, kind: str, field: str, val: str, spec: dict,
+    out_dir: str | list[str], kind: str, field: str, val: str, spec: dict,
 ) -> list[str]:
     """prefix/wildcard/fuzzy/regexp on a KEYWORD field: expand the
     matching stored values over the range-pruned sorted term_index
@@ -812,18 +812,21 @@ def _expand_keyword_values(
 
 import contextvars as _contextvars
 
-_PARSE_DIR: "_contextvars.ContextVar[str | None]" = _contextvars.ContextVar(
+_PARSE_DIR: "_contextvars.ContextVar[str | list[str] | None]" = _contextvars.ContextVar(
     "cb_parse_dir", default=None
 )
 
 
-def parse_query(query: dict, analyzer=None, out_dir: str | None = None) -> dict:
+def parse_query(
+    query: dict, analyzer=None, out_dir: str | list[str] | None = None
+) -> dict:
     """The query-context half of a request body → engine arguments.
     ``analyzer`` is the index's analyzer config (stats.json), used to
     tokenize filter-context match clauses exactly like the index did.
-    ``out_dir`` enables the clause shapes that must probe the index at
-    parse time (keyword-field prefix/wildcard/fuzzy/regexp expansion) —
-    carried to the nested filter-context parsers via a contextvar."""
+    ``out_dir`` (an index dir, or a Searcher's list of roots) enables the
+    clause shapes that must probe the index at parse time (keyword-field
+    prefix/wildcard/fuzzy/regexp expansion) — carried to the nested
+    filter-context parsers via a contextvar."""
     token = _PARSE_DIR.set(out_dir)
     try:
         return _parse_query_impl(query, analyzer, out_dir)
@@ -831,7 +834,9 @@ def parse_query(query: dict, analyzer=None, out_dir: str | None = None) -> dict:
         _PARSE_DIR.reset(token)
 
 
-def _parse_query_impl(query: dict, analyzer=None, out_dir: str | None = None) -> dict:
+def _parse_query_impl(
+    query: dict, analyzer=None, out_dir: str | list[str] | None = None
+) -> dict:
     plan: dict[str, Any] = {
         "query": "", "must": None, "must_not": None, "min_should": 0,
         "filters": {}, "ranges": {}, "phrase": None, "phrase_slop": 0, "mm": None,
@@ -1529,16 +1534,17 @@ def delete_script(scripts_dir: str, script_id: str) -> dict:
     raise KeyError(f"stored script {script_id!r} not found")
 
 
-def _resolve_terms_lookups(q, default_dir: str):
+def _resolve_terms_lookups(q, s: Searcher):
     """ES terms lookup — ``{"terms": {field: {"index": <dir>, "id": n,
     "path": <stored column>}}}`` — resolves the term list from another
     document's stored column (one driver-side bucket-pruned pyarrow
     lookup, zero Spark jobs) and replaces it inline, so every terms site
     (filter context, bools, counts, deletes) sees a plain list. ``index``
-    is an index directory; absent = this index. A missing doc or column
-    resolves to [] — matches nothing, exactly ES."""
+    is an index directory; absent = the searched index (every root of
+    ``s``). A missing doc or column resolves to [] — matches nothing,
+    exactly ES."""
     if isinstance(q, list):
-        return [_resolve_terms_lookups(x, default_dir) for x in q]
+        return [_resolve_terms_lookups(x, s) for x in q]
     if not isinstance(q, dict):
         return q
     out = {}
@@ -1550,8 +1556,12 @@ def _resolve_terms_lookups(q, default_dir: str):
             if isinstance(spec, dict) and "id" in spec and "path" in spec:
                 from .build import lookup_docs
 
-                idx = str(spec.get("index") or default_dir)
-                doc = lookup_docs(idx, [int(spec["id"])]).get(int(spec["id"])) or {}
+                did = int(spec["id"])
+                rows = (
+                    lookup_docs(str(spec["index"]), [did]) if spec.get("index")
+                    else s._lookup_docs([did])
+                )
+                doc = rows.get(did) or {}
                 vals = doc.get(str(spec["path"]))
                 if vals is None:
                     vals = []
@@ -1559,7 +1569,7 @@ def _resolve_terms_lookups(q, default_dir: str):
                     vals = [vals]
                 out[k] = {f: [str(x) for x in vals]}
                 continue
-        out[k] = _resolve_terms_lookups(v, default_dir)
+        out[k] = _resolve_terms_lookups(v, s)
     return out
 
 
@@ -2575,7 +2585,7 @@ def count_body(
         else Searcher(spark, out_dir)
     q = (body or {}).get("query")
     if q is not None:
-        q = _resolve_terms_lookups(q, out_dir)
+        q = _resolve_terms_lookups(q, s)
     plan = parse_query(q, analyzer=s.stats.get("analyzer"), out_dir=out_dir)
     if plan["match_none"]:
         return {"count": 0}
@@ -2603,8 +2613,7 @@ def count_body(
         return {"count": int(s.stats["n_docs"]) - n_tombstoned(out_dir, s.stats)}
     return {
         "count": _exact_total(
-            spark, out_dir, s, plan, filters, ranges,
-            or_groups=or_groups, not_atoms=not_atoms,
+            s, plan, filters, ranges, or_groups=or_groups, not_atoms=not_atoms,
         )
     }
 
@@ -2625,7 +2634,7 @@ def delete_by_query_body(
 
     s = Searcher(spark, out_dir)
     plan = parse_query(
-        _resolve_terms_lookups((body or {}).get("query"), out_dir),
+        _resolve_terms_lookups((body or {}).get("query"), s),
         s.stats.get("analyzer"), out_dir=out_dir,
     )
     blocked = [
@@ -2843,7 +2852,7 @@ def update_by_query_body(
 
     s = Searcher(spark, out_dir)
     plan = parse_query(
-        _resolve_terms_lookups((body or {}).get("query"), out_dir),
+        _resolve_terms_lookups((body or {}).get("query"), s),
         s.stats.get("analyzer"), out_dir=out_dir,
     )
     blocked = [
@@ -3207,6 +3216,31 @@ def scroll_body(
         after = hits[-1]["sort"]
 
 
+# Request keys and parsed query shapes served from ONE index dir (its
+# docstore, dictionary or a sidecar) rather than from a Searcher's roots:
+# over a window Searcher (``search_body_daily``) each raises, never drops
+_ONE_INDEX_ONLY = {
+    "pit": "pit", "knn": "knn", "retriever": "retriever", "suggest": "suggest",
+    "span_near": "span_near / span_* / intervals", "terms_set": "terms_set",
+    "nested": "nested", "dis_max": "dis_max", "boosting": "boosting",
+    "fscore": "function_score", "script_score": "script_score",
+    "phrase_prefix": "match_phrase_prefix",
+    "rank_feature": "rank_feature / distance_feature",
+    "rf_boosts": "rank_feature / distance_feature", "pinned": "pinned",
+}
+
+
+def _one_index_guard(part: dict) -> None:
+    """Reject a request body or parsed plan holding an ``_ONE_INDEX_ONLY``
+    key (called only for a window Searcher)."""
+    hit = next((k for k in _ONE_INDEX_ONLY if part.get(k)), None)
+    if hit is not None:
+        raise UnsupportedDSL(
+            f"{_ONE_INDEX_ONLY[hit]} over a day window is unsupported "
+            "(send it to the day index directly)"
+        )
+
+
 def search_body(
     spark: SparkSession, out_dir: str | None, body: dict, *,
     searcher: Searcher | None = None,
@@ -3215,6 +3249,16 @@ def search_body(
     Pass a long-lived ``searcher`` to serve repeated bodies from its warm
     block / decoded-postings / term caches (it mtime-invalidates itself on
     index mutation); omitted, each call builds a cold handle.
+
+    A window ``searcher`` (``DailySearcher._window``, with ``out_dir`` its
+    daily root — what ``search_body_daily`` sends) runs the same request
+    path over its day roots: every per-index step — dictionary, blocks,
+    doc fetch, aggs, exact totals, sort, collapse, keyword expansion —
+    comes from the Searcher. Shapes that read one index dir instead raise
+    UnsupportedDSL (``_ONE_INDEX_ONLY``): pit, knn, retriever, suggest,
+    span_* / intervals, terms_set, nested, dis_max, boosting,
+    function_score, script_score, match_phrase_prefix and rank_feature /
+    distance_feature (standalone or as boosts), pinned.
 
     ``{"pit": {"id": ...}}`` (from ``pit.open_pit``) executes against
     that frozen snapshot — ``out_dir`` may then be None, the ES
@@ -3226,6 +3270,12 @@ def search_body(
     mlt, compound, suggest, knn) reject under a PIT."""
     body = dict(body or {})
     _prof_t0 = _time.time() if body.get("profile") else None
+    window = (
+        searcher is not None and searcher.out_dir == out_dir
+        and searcher._dirs != [out_dir]
+    )
+    if window:
+        _one_index_guard(body)
     pit_runs: list[str] | None = None
     if body.get("pit") is not None:
         from .pit import resolve_pit
@@ -3265,10 +3315,12 @@ def search_body(
             "suggest": _suggest_section(s, body["suggest"]),
         }
     if body.get("query") is not None:
-        body["query"] = _resolve_terms_lookups(body["query"], out_dir)
+        body["query"] = _resolve_terms_lookups(body["query"], s)
     plan = parse_query(
-        body.get("query"), analyzer=s.stats.get("analyzer"), out_dir=out_dir,
+        body.get("query"), analyzer=s.stats.get("analyzer"), out_dir=s._dirs,
     )
+    if window:
+        _one_index_guard(plan)
     if plan["match_none"]:
         # the empty set by definition — no index probe at all
         return {"hits": {"total": {"value": 0, "relation": "eq"}, "hits": []}}
@@ -3446,7 +3498,7 @@ def search_body(
         sorted_rows_cols = [
             tuple(r)
             for r in search_sorted(
-                spark, out_dir, plan["query"] or plan["must"] or "", keys,
+                spark, s, plan["query"] or plan["must"] or "", keys,
                 size, must=plan["must"], must_not=plan["must_not"],
                 min_should=plan["min_should"], filters=filters, ranges=ranges,
                 or_groups=or_groups, not_atoms=not_atoms,
@@ -3503,16 +3555,9 @@ def search_body(
                 "score-order search_after supports match/bool/match_phrase"
             )
         kind, val, spec = plan["expand"]
-        if kind == "prefix":
-            rows = s.prefix_rows(val, size + from_)[from_:]
-        elif kind == "wildcard":
-            rows = s.wildcard_rows(val, size + from_)[from_:]
-        elif kind == "regexp":
-            rows = s.regexp_rows(val, size + from_)[from_:]
-        else:
-            rows = s.fuzzy_rows(
-                val, size + from_, fuzziness=_fuzz_n(spec.get("fuzziness", 1), val),
-            )[from_:]
+        rows = s.expansion_rows(
+            kind, val, size + from_, fuzziness=_fuzz_n(spec.get("fuzziness", 1), val),
+        )[from_:]
     elif plan["mlt"] is not None:
         if after is not None:
             raise UnsupportedDSL(
@@ -3525,9 +3570,7 @@ def search_body(
         }
         rows = s.more_like_this(plan["mlt"]["like"], size + from_, **knobs)[from_:]
     elif plan["ids"] is not None:
-        from .build import lookup_docs
-
-        present = lookup_docs(out_dir, plan["ids"])
+        present = s._live_docs(plan["ids"])
         rows = [
             (d, plan["boost"]) for d in sorted(set(plan["ids"])) if d in present
         ][from_ : from_ + size]
@@ -3571,10 +3614,8 @@ def search_body(
                 "search_after, aggs, or exact totals — its matching set "
                 "is the organic ∪ pinned union)"
             )
-        from .build import lookup_docs
-
         pids = plan["pinned"]["ids"]
-        present = lookup_docs(out_dir, pids)
+        present = s._live_docs(pids)
         pinned_rows = [
             (d, 1.0e9 - j) for j, d in enumerate(pids) if d in present
         ]
@@ -3605,7 +3646,7 @@ def search_body(
             base = {
                 int(r.doc_id): 0.0
                 for r in bool_doc_ids(
-                    spark, out_dir, "", must_not=plan["must_not"],
+                    spark, s, "", must_not=plan["must_not"],
                     filters=filters, ranges=ranges,
                     or_groups=or_groups, not_atoms=not_atoms,
                 ).collect()
@@ -3636,7 +3677,7 @@ def search_body(
 
         ids = (
             bool_doc_ids(
-                spark, out_dir, "", must_not=plan["must_not"],
+                spark, s, "", must_not=plan["must_not"],
                 filters=filters, ranges=ranges,
                 or_groups=or_groups, not_atoms=not_atoms,
             )
@@ -3657,7 +3698,7 @@ def search_body(
             ih_name = str(ih.get("name", "inner"))
             ih_size = int(ih.get("size", 3))
             grows = collapse_groups(
-                spark, out_dir, plan["query"] or "", cfield, size + from_,
+                spark, s, plan["query"] or "", cfield, size + from_,
                 max(ih_size, 1),
                 must=plan["must"], must_not=plan["must_not"],
                 min_should=plan["min_should"], filters=filters, ranges=ranges,
@@ -3687,7 +3728,7 @@ def search_body(
             rows = [(d, sc) for d, sc, _v in heads][from_:]
         else:
             crows = collapse_topk(
-                spark, out_dir, plan["query"] or "", cfield, size + from_,
+                spark, s, plan["query"] or "", cfield, size + from_,
                 must=plan["must"], must_not=plan["must_not"],
                 min_should=plan["min_should"], filters=filters, ranges=ranges,
                 or_groups=or_groups, not_atoms=not_atoms,
@@ -3738,9 +3779,7 @@ def search_body(
     script_fields, fields_req = _parse_hit_fields(body)
     meta = {}
     if want_source or body.get("highlight") or script_fields or fields_req:
-        from .build import lookup_docs
-
-        meta = lookup_docs(out_dir, [d for d, _ in rows], runs=pit_runs)
+        meta = s._lookup_docs([d for d, _ in rows], runs=pit_runs)
     hl_cols = list((body.get("highlight") or {}).get("fields") or {})
     hl_query = " ".join(x for x in (plan["query"], plan["must"]) if x)
     for i, (d, sc) in enumerate(rows):
@@ -3811,8 +3850,7 @@ def search_body(
     elif body.get("track_total_hits"):
         total = {
             "value": _exact_total(
-                spark, out_dir, s, plan, filters, ranges,
-                or_groups=or_groups, not_atoms=not_atoms,
+                s, plan, filters, ranges, or_groups=or_groups, not_atoms=not_atoms,
             ),
             "relation": "eq",
         }
@@ -3856,274 +3894,38 @@ def search_body_daily(
     """Execute an ES-shaped request body against a DAILY index root with a
     time window — the Kibana shape (an index pattern like
     ``logs-2016.09.*`` selects day indexes; here ``time_range`` does,
-    pruning to the overlapping day dirs before any file opens). Supported
-    subset: match / bool (+ filter context), match_phrase, match_all +
-    filters, sort + search_after, aggs, track_total_hits — each dispatched
-    to the DailySearcher one-plan window path. multi_match / expansion
-    (prefix/wildcard/regexp/fuzzy) / more_like_this are supported over
-    windows too — their per-field stats, dictionary expansions, and MLT
-    interestingness merge across the selected days (window-exact, see
-    ``DailySearcher.multi_match_rows`` / ``expand_terms`` /
-    ``mlt_terms``)."""
-    from .daily import DailySearcher, select_days
-    from .query import phrase_doc_ids
+    pruning to the overlapping day dirs before any file opens). The
+    window Searcher (``DailySearcher._window``; pass a long-lived
+    ``searcher`` DailySearcher to reuse its per-day caches) then runs
+    ``search_body``, so a window answers every shape exactly like one
+    index built over the window's documents, with the window guard of
+    ``search_body``: pit, knn, retriever, suggest, span_* / intervals,
+    terms_set, nested, dis_max, boosting, function_score, script_score,
+    match_phrase_prefix, rank_feature / distance_feature and pinned raise
+    UnsupportedDSL. A window selecting no day answers empty."""
+    from .daily import DailySearcher
 
-    body = dict(body or {})
-    # a long-lived DailySearcher serves repeated windows from its per-day
-    # stats/tombstone mtime caches (same contract as search_body's handle)
     ds = (
         searcher
         if searcher is not None and searcher.root == root
         else DailySearcher(spark, root)
     )
-    sel_days = select_days(root, time_range)
-    win = ds._window(time_range)
-    az = win.stats.get("analyzer") if win is not None else None
-    plan = parse_query(body.get("query"), analyzer=az)
-    if plan["match_none"]:
-        return {"hits": {"total": {"value": 0, "relation": "eq"}, "hits": []}}
-    size = int(body.get("size", 10))
-    from_ = int(body.get("from", 0))
-    filters = plan["filters"] or None
-    ranges = plan["ranges"] or None
-    or_groups = plan["or_groups"] or None
-    not_atoms = plan["not_atoms"] or None
-    bounded = bool(filters or ranges or or_groups)
-
-    sort_spec = body.get("sort")
-    score_sorted = False
-    after: tuple[float, int] | None = None
-    if sort_spec and _score_sort(sort_spec):
-        score_sorted, sort_spec = True, None
-        after = _score_after(body, from_)
-    rows: list[tuple[int, float]]
-    sorted_rows_cols: list[tuple] | None = None
-    if sort_spec:
-        keys = []
-        for item in sort_spec:
-            if isinstance(item, str):
-                keys.append((item, "asc"))
-            else:
-                f, d = _one(item)
-                keys.append((f, d.get("order", "asc") if isinstance(d, dict) else str(d)))
-        if (
-            plan["match_all"] and not plan["query"] and not plan["must"]
-            and not bounded
-        ):
-            raise UnsupportedDSL(
-                "sorted match_all needs at least a filter or match clause"
-            )
-        sorted_rows_cols = [
-            tuple(r)
-            for r in ds.search_sorted(
-                plan["query"] or plan["must"] or "", keys, size,
-                time_range=time_range, must=plan["must"],
-                must_not=plan["must_not"], min_should=plan["min_should"],
-                filters=filters, ranges=ranges,
-                or_groups=or_groups, not_atoms=not_atoms,
-                search_after=tuple(body["search_after"]) if body.get("search_after") else None,
-            ).collect()
-        ]
-        rows = [(r[0], float("nan")) for r in sorted_rows_cols]
-    elif plan["phrase"] is not None:
-        rows = ds.phrase_rows(
-            plan["phrase"], size + from_, time_range=time_range, after=after,
-            slop=plan["phrase_slop"],
-        )[from_:]
-    elif plan["mm"] is not None:
-        if after is not None:
-            raise UnsupportedDSL(
-                "score-order search_after supports match/bool/match_phrase"
-            )
-        rows = ds.multi_match_rows(
-            plan["mm"]["query"], plan["mm"]["fields"], size + from_,
-            type=plan["mm"]["type"], time_range=time_range,
-        )[from_:]
-    elif plan["expand"] is not None:
-        if after is not None:
-            raise UnsupportedDSL(
-                "score-order search_after supports match/bool/match_phrase"
-            )
-        kind, val, spec = plan["expand"]
-        rows = ds.expansion_rows(
-            kind, val, size + from_,
-            fuzziness=_fuzz_n(spec.get("fuzziness", 1), val) if isinstance(spec, dict) else 1,
-            time_range=time_range,
-        )[from_:]
-    elif plan["mlt"] is not None:
-        if after is not None:
-            raise UnsupportedDSL(
-                "score-order search_after supports match/bool/match_phrase"
-            )
-        knobs = {
-            kk: plan["mlt"][kk]
-            for kk in ("max_query_terms", "min_doc_freq", "min_term_freq")
-            if kk in plan["mlt"]
+    w = ds._window(time_range)
+    if w is None:
+        resp: dict[str, Any] = {
+            "hits": {"total": {"value": 0, "relation": "eq"}, "hits": []}
         }
-        rows = ds.more_like_this(
-            plan["mlt"]["like"], size + from_, time_range=time_range, **knobs
-        )[from_:]
-    elif plan["span_near"] is not None or plan["terms_set"] is not None or plan["nested"] is not None or plan["rf_boosts"] or any(
-        plan[kk] is not None
-        for kk in ("dis_max", "boosting", "fscore", "phrase_prefix", "rank_feature", "pinned")
-    ):
-        raise UnsupportedDSL(
-            "span_near / intervals / terms_set / dis_max / boosting / "
-            "function_score / match_phrase_prefix / rank_feature / "
-            "distance_feature over daily windows are "
-            "unsupported (send them to the day indexes directly)"
-        )
-    elif plan["ids"] is not None:
-        present = _daily_ids_present(root, sel_days, plan["ids"])
-        rows = [(d, plan["boost"]) for d in present][from_ : from_ + size]
-    elif plan["match_all"]:
-        if after is not None:
-            raise UnsupportedDSL(
-                "sort by _score with search_after needs a scoring clause"
-            )
-        if not bounded:
-            raise UnsupportedDSL(
-                "match_all without sort or filters is unbounded; add a "
-                "filter, a sort (export), or a scoring clause"
-            )
-        from pyspark.sql import functions as F  # noqa: N812
-
-        ids = (
-            ds.bool_doc_ids(
-                "", must_not=plan["must_not"],
-                filters=filters, ranges=ranges, or_groups=or_groups,
-                not_atoms=not_atoms, time_range=time_range,
-            )
-            .orderBy(F.asc("doc_id")).limit(size + from_).collect()
-        )
-        rows = [(r.doc_id, plan["boost"]) for r in ids][from_:]
-    else:
-        rows = ds.search_rows(
-            plan["query"], size + from_, must=plan["must"],
-            must_not=plan["must_not"], min_should=plan["min_should"],
-            filters=filters, ranges=ranges, or_groups=or_groups,
-            not_atoms=not_atoms, time_range=time_range, after=after,
-        )[from_:]
-
-    hits = [
-        {"_id": int(d), "_score": None if sort_spec else float(sc)}
-        for d, sc in rows
-    ]
-    if sort_spec:
-        for i, h in enumerate(hits):
-            h["sort"] = list(sorted_rows_cols[i][1:]) + [h["_id"]]
-    elif score_sorted:
-        for h, (d, sc) in zip(hits, rows):
-            h["sort"] = [float(sc), int(d)]
-
-    total = {"value": len(hits) + from_, "relation": "gte"}
-    if body.get("track_total_hits"):
-        from functools import reduce
-
-        from pyspark.sql import DataFrame as _DF
-
-        from .daily import day_dir, select_days
-        from .query import _multi_match_plan, posting_docs_terms
-
-        days = select_days(root, time_range)
-
-        def _union_count(per_day):
-            # day corpora are doc-disjoint: the union of per-day matching
-            # sets is exact, counted in one action
-            dfs = [per_day(day_dir(root, d)) for d in days]
-            return reduce(_DF.unionByName, dfs).count() if dfs else 0
-
-        if plan["ids"] is not None:
-            n = len(_daily_ids_present(root, days, plan["ids"]))
-        elif plan["phrase"] is not None:
-            n = _union_count(lambda dd: phrase_doc_ids(
-                spark, dd, plan["phrase"], slop=plan["phrase_slop"]))
-        elif plan["mm"] is not None:
-            mm_plan = _multi_match_plan(
-                spark, root, win.stats, plan["mm"]["query"], plan["mm"]["fields"],
-                lookup=win._entries,
-                field_avg=lambda _f: 1.0,  # totals need terms only, not norms
-            ) if win is not None else None
-            n = 0 if mm_plan is None else _union_count(
-                lambda dd: posting_docs_terms(spark, dd, mm_plan[2])
-            )
-        elif plan["expand"] is not None:
-            kind, val, spec = plan["expand"]
-            terms = ds.expand_terms(
-                kind, val,
-                fuzziness=_fuzz_n(spec.get("fuzziness", 1), val) if isinstance(spec, dict) else 1,
-                time_range=time_range,
-            )
-            n = 0 if not terms else _union_count(
-                lambda dd: posting_docs_terms(spark, dd, terms)
-            )
-        elif plan["mlt"] is not None:
-            # the selected interestingness bag (same terms the scoring path
-            # ran), counted as a SHOULD union minus the liked doc
-            knobs = {
-                kk: plan["mlt"][kk]
-                for kk in ("max_query_terms", "min_doc_freq", "min_term_freq")
-                if kk in plan["mlt"]
-            }
-            sel, self_id = ds.mlt_terms(plan["mlt"]["like"], time_range=time_range, **knobs)
-            if not sel:
-                n = 0
-            else:
-                from pyspark.sql import functions as _FF  # noqa: N812
-
-                ids = reduce(
-                    _DF.unionByName,
-                    [posting_docs_terms(spark, day_dir(root, d), sel) for d in days],
-                )
-                if self_id is not None:
-                    ids = ids.where(_FF.col("doc_id") != self_id)
-                n = ids.count()
-        else:
-            n = ds.bool_doc_ids(
-                plan["query"], must=plan["must"], must_not=plan["must_not"],
-                min_should=plan["min_should"], filters=filters, ranges=ranges,
-                or_groups=or_groups, not_atoms=not_atoms,
-                time_range=time_range,
-            ).count()
-        total = {"value": n, "relation": "eq"}
-
-    resp: dict[str, Any] = {"hits": {"total": total, "hits": hits}}
-    if body.get("aggs"):
-        aggs = ds.search_aggs(
-            body["aggs"], plan["query"], time_range=time_range,
-            must=plan["must"], must_not=plan["must_not"],
-            min_should=plan["min_should"], filters=filters, ranges=ranges,
-            or_groups=or_groups, not_atoms=not_atoms,
-        )
-        resp["aggregations"] = {
-            name: [r.asDict() for r in df.collect()] for name, df in aggs.items()
-        }
-    return resp
-
-
-def _daily_ids_present(root: str, days: list[str], ids: list[int]) -> list[int]:
-    """The subset of ``ids`` stored in the selected days' docstores (day
-    corpora are doc-disjoint; each probe is bucket-pruned and the loop
-    exits once every id is found)."""
-    from .build import lookup_docs
-    from .daily import day_dir
-
-    found: set[int] = set()
-    missing = sorted(set(int(v) for v in ids))
-    for d in days:
-        if not missing:
-            break
-        found |= set(lookup_docs(day_dir(root, d), missing))
-        missing = [m for m in missing if m not in found]
-    return sorted(found)
+        if (body or {}).get("aggs"):
+            resp["aggregations"] = {name: [] for name in body["aggs"]}
+        return resp
+    return search_body(spark, root, body, searcher=w)
 
 
 def _exact_total(
-    spark, out_dir: str, s: Searcher, plan: dict, filters, ranges,
-    or_groups=None, not_atoms=None,
+    s: Searcher, plan: dict, filters, ranges, or_groups=None, not_atoms=None,
 ) -> int:
     """Exact ``track_total_hits`` for EVERY supported query shape,
-    distributed and uncapped:
+    distributed and uncapped, over ``s``'s roots:
 
     - match/bool/filter → ``bool_doc_ids`` (one pruned scan + hash agg)
     - match_phrase      → ``phrase_doc_ids`` (positional kernel, top-k off)
@@ -4133,22 +3935,13 @@ def _exact_total(
                           uses, counted as a SHOULD union
     - more_like_this    → the selected interestingness terms' union, minus
                           the liked doc itself
+    - ids               → the stored ids that are not deleted
     """
-    from .query import (
-        _multi_match_plan,
-        bool_doc_ids,
-        expand_fuzzy,
-        expand_prefix,
-        expand_regexp,
-        expand_wildcard,
-        phrase_doc_ids,
-        posting_docs_terms,
-    )
+    from .query import bool_doc_ids, phrase_doc_ids, posting_docs_terms
 
+    spark, out_dir = s.spark, s.out_dir
     if plan.get("ids") is not None:
-        from .build import lookup_docs
-
-        return len(lookup_docs(out_dir, plan["ids"]))
+        return len(s._live_docs(plan["ids"]))
     if plan.get("rank_feature") is not None:
         # standalone feature query: matching set = docs holding any
         # feature field (rf_boosts never change the base set — they fall
@@ -4156,14 +3949,14 @@ def _exact_total(
         return int(_rank_feature_scored(spark, out_dir, plan["rank_feature"]).count())
     if plan["phrase"] is not None:
         return phrase_doc_ids(
-            spark, out_dir, plan["phrase"], slop=plan["phrase_slop"]
+            spark, s, plan["phrase"], slop=plan["phrase_slop"]
         ).count()
     if plan.get("span_near") is not None:
         from .query import span_near_doc_ids
 
         sn = plan["span_near"]
         return span_near_doc_ids(
-            spark, out_dir, sn["clauses"], slop=sn["slop"],
+            spark, s, sn["clauses"], slop=sn["slop"],
             in_order=sn["in_order"],
             first_end=sn.get("first_end"), exclude=sn.get("exclude"),
             pre=sn.get("pre", 0), post=sn.get("post", 0),
@@ -4172,36 +3965,29 @@ def _exact_total(
         from .query import terms_set_match
 
         ts = plan["terms_set"]
-        return terms_set_match(
-            spark, out_dir, ts["terms"], ts["msm_field"]
-        ).count()
+        return terms_set_match(spark, s, ts["terms"], ts["msm_field"]).count()
     if plan.get("nested") is not None:
         from .query import nested_filter_ids
 
         return nested_filter_ids(
-            spark, out_dir, plan["nested"]["path"], plan["nested"]["clauses"]
+            spark, s, plan["nested"]["path"], plan["nested"]["clauses"]
         ).count()
     if plan["mm"] is not None:
-        mm_plan = _multi_match_plan(
-            spark, out_dir, s.stats, plan["mm"]["query"], plan["mm"]["fields"]
-        )
+        from .query import _multi_match_plan
+
+        mm_plan = _multi_match_plan(s, plan["mm"]["query"], plan["mm"]["fields"])
         if mm_plan is None:
             return 0
         _per_field, _tbs, scan_terms = mm_plan
-        return posting_docs_terms(spark, out_dir, scan_terms).count()
+        return posting_docs_terms(spark, s, scan_terms).count()
     if plan["expand"] is not None:
         kind, val, spec = plan["expand"]
-        if kind == "prefix":
-            terms = expand_prefix(out_dir, val)
-        elif kind == "wildcard":
-            terms = expand_wildcard(out_dir, val)
-        elif kind == "regexp":
-            terms = expand_regexp(out_dir, val)
-        else:
-            terms = expand_fuzzy(out_dir, val, _fuzz_n(spec.get("fuzziness", 1), val))
+        terms = s.expand_terms(
+            kind, val, fuzziness=_fuzz_n(spec.get("fuzziness", 1), val)
+        )
         if not terms:
             return 0
-        return posting_docs_terms(spark, out_dir, terms).count()
+        return posting_docs_terms(spark, s, terms).count()
     if plan["mlt"] is not None:
         knobs = {
             k: plan["mlt"][k]
@@ -4211,14 +3997,14 @@ def _exact_total(
         sel, self_id = s.mlt_terms(plan["mlt"]["like"], **knobs)
         if not sel:
             return 0
-        ids = posting_docs_terms(spark, out_dir, sel)
+        ids = posting_docs_terms(spark, s, sel)
         if self_id is not None:
             from pyspark.sql import functions as F  # noqa: N812
 
             ids = ids.where(F.col("doc_id") != self_id)
         return ids.count()
     return bool_doc_ids(
-        spark, out_dir, plan["query"], must=plan["must"],
+        spark, s, plan["query"], must=plan["must"],
         must_not=plan["must_not"], min_should=plan["min_should"],
         filters=filters, ranges=ranges, or_groups=or_groups,
         not_atoms=not_atoms,

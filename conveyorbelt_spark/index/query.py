@@ -346,20 +346,57 @@ def _tombs(out_dir: str, stats: dict) -> dict:
     return load_tombstones(out_dir, stats)
 
 
-def _seg_scan(spark: SparkSession, out_dir: str, stats: dict) -> DataFrame:
-    """Segment scan restricted to the committed-run snapshot (see
-    ``_committed``); run is a partition column, so the filter prunes whole
-    directories. The schema is EXPLICIT (derived from the stats config) so
-    the read never runs Spark's 1-task parquet schema-inference job — a
-    fixed cost per read that multiplies across DailySearcher windows."""
+def _searcher(spark: SparkSession, out_dir: "str | Searcher") -> "Searcher":
+    """The handle a distributed plan reads: ``out_dir`` is an index dir
+    (a fresh one-root Searcher) or a Searcher (one index or a day window,
+    at its current snapshot)."""
+    if isinstance(out_dir, Searcher):
+        out_dir._maybe_invalidate()
+        return out_dir
+    return Searcher(spark, out_dir)
+
+
+def _seg_union(s: "Searcher", tbs, terms, cols: list[str]) -> DataFrame:
+    """THE per-root read rule of every distributed posting plan: each root
+    of ``s`` contributes its segment scan pruned to ``tbs`` partitions and
+    ``terms`` row groups, restricted to its committed-run snapshot (run is
+    a partition column, so whole directories prune), with ITS tombstones
+    applied by block surgery; then the roots' scans union. Day indexes
+    reuse run names (full-g0, batch_N), so one merged tombstone map would
+    mix days. Surgery is row-local and the union narrow: one plan, one
+    dedup/aggregation/sort downstream, whatever the root count. The
+    schema is EXPLICIT (from the stats config), so no read runs Spark's
+    1-task parquet schema-inference job."""
+    from functools import reduce
+
     from .build import BLOCKS_POS_SCHEMA, BLOCKS_SCHEMA
 
-    base = BLOCKS_POS_SCHEMA if stats.get("positions") else BLOCKS_SCHEMA
-    seg = spark.read.schema(base + ", tb int, run string").parquet(f"{out_dir}/segments")
-    c = _committed(stats)
-    if c is not None:
-        seg = seg.where(F.col("run").isin(sorted(c)))
-    return seg
+    parts = []
+    for r in s._roots:
+        base = BLOCKS_POS_SCHEMA if r.stats.get("positions") else BLOCKS_SCHEMA
+        seg = s.spark.read.schema(base + ", tb int, run string").parquet(
+            f"{r.dir}/segments"
+        )
+        c = _committed(r.stats)
+        if c is not None:
+            seg = seg.where(F.col("run").isin(sorted(c)))
+        seg = seg.where(F.col("tb").isin(tbs) & F.col("term").isin(terms))
+        if not r.tomb:
+            parts.append(seg.select(*cols))
+            continue
+
+        def strip(it, _t=r.tomb):
+            from .delete import apply_tombstones
+
+            for pdf in it:
+                yield apply_tombstones(pdf, _t)[cols]
+
+        # surgery rebuilds a touched block from its full block columns
+        read = list(dict.fromkeys([*cols, *_BLOCK_COLS, "run"]))
+        parts.append(
+            seg.select(*read).mapInPandas(strip, schema=seg.select(*cols).schema)
+        )
+    return reduce(DataFrame.unionByName, parts)
 
 
 
@@ -892,7 +929,7 @@ def _filter_want(filters, ranges, range_expand, or_groups=None) -> list[list[str
     return want
 
 
-def _resolve_filters(stats, filters, ranges, lookup, range_expand, or_groups=None):
+def _resolve_filters(filters, ranges, lookup, range_expand, or_groups=None):
     """Probe the filter groups against the dictionary. Returns
     (filter_groups, extra_tbs, extra_scan_terms), or None when some group
     has no indexed member (no document can match)."""
@@ -915,12 +952,9 @@ def _resolve_filters(stats, filters, ranges, lookup, range_expand, or_groups=Non
 
 
 def _bool_plan(
-    spark: SparkSession, out_dir: str, stats: dict,
-    query: str, must: str | None, must_not: str | None,
-    lookup=None,
+    s: "Searcher", query: str, must: str | None, must_not: str | None,
     filters: dict | None = None,
     ranges: dict | None = None,
-    range_expand=None,
     or_groups: list | None = None,
     not_atoms: list | None = None,
 ):
@@ -931,29 +965,22 @@ def _bool_plan(
     filter group with no indexed member). ``or_groups`` adds cross-field
     OR filter groups and ``not_atoms`` keyword-level exclusions (both in
     ATOM form — see ``_atom_terms``; the nested-bool DSL compiles to
-    these)."""
+    these). Stats, dictionary probe and range expansion are ``s``'s."""
     from ..textutils import analyze
 
-    az = stats.get("analyzer")
+    az = s.stats.get("analyzer")
     should_terms = set(analyze(query, az)) if query else set()
     must_terms = set(analyze(must, az)) if must else set()
     not_terms = set(analyze(must_not, az)) if must_not else set()
-    if range_expand is None:
-        range_expand = lambda lo, hi: _term_range(out_dir, lo, hi)["term"].tolist()  # noqa: E731
     if not_atoms:
         # keyword-level must_not (raw index terms, never analyzed): they
         # ride the same not-set as analyzed text exclusions
-        not_terms |= set(_expand_atoms(not_atoms, range_expand))
+        not_terms |= set(_expand_atoms(not_atoms, s._range_expand))
     scoring = sorted(should_terms | must_terms)  # ES: must terms also score
-    lookup = lookup or (
-        lambda ts: _lookup_terms(
-            spark, out_dir, ts, stats["n_term_buckets"], committed=_committed(stats)
-        )
-    )
-    entries = lookup(sorted(set(scoring) | not_terms))
+    entries = s._entries(sorted(set(scoring) | not_terms))
     by_term = {e["term"]: e for e in entries}
     term_idf = {
-        t: idf(stats["n_docs"], int(by_term[t]["df"])) for t in scoring if t in by_term
+        t: idf(s.stats["n_docs"], int(by_term[t]["df"])) for t in scoring if t in by_term
     }
     if not term_idf:
         return None
@@ -965,7 +992,7 @@ def _bool_plan(
     filter_groups: tuple[tuple[str, ...], ...] = ()
     if filters or ranges or or_groups:
         resolved = _resolve_filters(
-            stats, filters, ranges, lookup, range_expand, or_groups
+            filters, ranges, s._entries, s._range_expand, or_groups
         )
         if resolved is None:
             return None
@@ -982,7 +1009,7 @@ def _bool_plan(
 
 def bm25_topk(
     spark: SparkSession,
-    out_dir: str,
+    out_dir: "str | Searcher",
     query: str,
     k: int | None = 10,
     prune: bool = True,
@@ -1016,11 +1043,14 @@ def bm25_topk(
     indexed values (expanded against the sorted term_index — encode
     numerics with ``sortable_int``). Filter terms never contribute score
     (ES filter-context semantics) — hits keep exactly the scores they'd
-    have unfiltered."""
-    stats = load_stats(out_dir)
+    have unfiltered.
+
+    ``out_dir`` is an index dir or a Searcher (one index or a day window:
+    every root's scan unions before the one kernel shuffle, ``_seg_union``)."""
+    s = _searcher(spark, out_dir)
     empty = spark.createDataFrame([], "doc_id long, score double")
     plan = _bool_plan(
-        spark, out_dir, stats, query, must, must_not, filters=filters,
+        s, query, must, must_not, filters=filters,
         ranges=ranges, or_groups=or_groups, not_atoms=not_atoms,
     )
     if plan is None:
@@ -1029,12 +1059,7 @@ def bm25_topk(
     if min_should > len(should_present):
         return empty  # fewer indexed SHOULD terms than required matches
 
-    tomb = _tombs(out_dir, stats)
-    seg = (
-        _seg_scan(spark, out_dir, stats)
-        .where(F.col("tb").isin(tbs) & F.col("term").isin(scan_terms))
-        .select(*_BLOCK_COLS, *(["run"] if tomb else []))
-    )
+    seg = _seg_union(s, tbs, scan_terms, _BLOCK_COLS)
     kern = _score_kernel(
         # k=None = the FULL scored matching set (collapse / rescore
         # consumers): the kernel skips per-bucket truncation and pruning
@@ -1045,12 +1070,9 @@ def bm25_topk(
         should_terms=should_present, min_should=min_should, filter_groups=fgroups,
         after=after, slice_mod=slice_mod,
     )
-    kern.k1 = stats["k1"]
-    kern.b = stats["b"]
-    kern.avgdl = stats["avgdl"]
+    kern.k1, kern.b, kern.avgdl = s.stats["k1"], s.stats["b"], s.stats["avgdl"]
     kern.max_candidates = max_candidates
-    func = kern if not tomb else _with_tombstones(kern, tomb)
-    local = seg.groupBy("bucket").applyInPandas(func, schema="doc_id long, score double")
+    local = seg.groupBy("bucket").applyInPandas(kern, schema="doc_id long, score double")
     if k is None:
         return local
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1070,23 +1092,19 @@ def _parse_fields(fields) -> list[tuple[str | None, float]]:
     return out
 
 
-def _multi_match_plan(spark, out_dir, stats, query, fields, lookup=None, field_avg=None):
-    """Per-field term/idf/avgdl resolution for multi_match. Returns
-    (per_field, tbs, scan_terms) where per_field = [(field, boost,
-    term_idf, avgdl)] keeping only fields with ≥1 indexed term; None when
-    nothing matches anywhere."""
+def _multi_match_plan(s: "Searcher", query, fields):
+    """Per-field term/idf/avgdl resolution for multi_match over ``s``'s
+    roots. Returns (per_field, tbs, scan_terms) where per_field = [(field,
+    boost, term_idf, avgdl)] keeping only fields with ≥1 indexed term;
+    None when nothing matches anywhere."""
     from ..textutils import analyze
     from .build import KEYWORD_SEP
 
+    stats = s.stats
     toks = analyze(query, stats.get("analyzer"))
     if not toks:
         return None
     parsed = _parse_fields(fields)
-    lookup = lookup or (
-        lambda ts: _lookup_terms(
-            spark, out_dir, ts, stats["n_term_buckets"], committed=_committed(stats)
-        )
-    )
     want: dict[str, list[str]] = {}
     all_terms: set[str] = set()
     for fname, _ in parsed:
@@ -1095,7 +1113,7 @@ def _multi_match_plan(spark, out_dir, stats, query, fields, lookup=None, field_a
         ]
         want[fname or ""] = qual
         all_terms.update(qual)
-    by_term = {e["term"]: e for e in lookup(sorted(all_terms))}
+    by_term = {e["term"]: e for e in s._entries(sorted(all_terms))}
     per_field, tbs, scan = [], set(), set()
     for fname, boost in parsed:
         qual = [t for t in want[fname or ""] if t in by_term]
@@ -1104,11 +1122,7 @@ def _multi_match_plan(spark, out_dir, stats, query, fields, lookup=None, field_a
         term_idf = {
             t: boost * idf(stats["n_docs"], int(by_term[t]["df"])) for t in qual
         }
-        avgdl = (
-            stats["avgdl"]
-            if fname is None
-            else (field_avg(fname) if field_avg else field_avgdl(out_dir, fname, stats))
-        )
+        avgdl = stats["avgdl"] if fname is None else field_avgdl(s._dirs, fname, stats)
         per_field.append((fname, boost, term_idf, avgdl))
         scan.update(qual)
         tbs.update(int(by_term[t]["tb"]) for t in qual)
@@ -1134,7 +1148,7 @@ def _merge_best_fields(per_field_rows: list[list[tuple[int, float]]], k: int):
 
 def multi_match_topk(
     spark: SparkSession,
-    out_dir: str,
+    out_dir: "str | Searcher",
     query: str,
     fields: list[str],
     k: int = 10,
@@ -1150,18 +1164,14 @@ def multi_match_topk(
     kernel pass (each field-qualified term normalized by ITS field's
     avgdl). Distributed path; `Searcher.multi_match_rows` is the serving
     twin (asserted identical in tests)."""
-    stats = load_stats(out_dir)
+    s = _searcher(spark, out_dir)
+    stats = s.stats
     empty = spark.createDataFrame([], "doc_id long, score double")
-    plan = _multi_match_plan(spark, out_dir, stats, query, fields)
+    plan = _multi_match_plan(s, query, fields)
     if plan is None:
         return empty
     per_field, tbs, scan_terms = plan
-    tomb = _tombs(out_dir, stats)
-    seg = (
-        _seg_scan(spark, out_dir, stats)
-        .where(F.col("tb").isin(tbs) & F.col("term").isin(scan_terms))
-        .select(*_BLOCK_COLS, *(["run"] if tomb else []))
-    )
+    seg = _seg_union(s, tbs, scan_terms, _BLOCK_COLS)
     if type == "most_fields":
         term_idf = {t: v for _, _, ti, _ in per_field for t, v in ti.items()}
         abt = {t: av for _, _, ti, av in per_field for t in ti}
@@ -1169,9 +1179,8 @@ def multi_match_topk(
         kern.k1, kern.b, kern.avgdl = stats["k1"], stats["b"], stats["avgdl"]
         kern.max_candidates = None
         kern.avgdl_by_term = abt
-        func = kern if not tomb else _with_tombstones(kern, tomb)
         local = seg.groupBy("bucket").applyInPandas(
-            func, schema="doc_id long, score double"
+            kern, schema="doc_id long, score double"
         )
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     if type != "best_fields":
@@ -1185,9 +1194,8 @@ def multi_match_topk(
         kern = _score_kernel(term_idf, k, prune=prune)
         kern.k1, kern.b, kern.avgdl = stats["k1"], stats["b"], avgdl
         kern.max_candidates = None
-        func = kern if not tomb else _with_tombstones(kern, tomb)
         local = f_seg.groupBy("bucket").applyInPandas(
-            func, schema="doc_id long, score double"
+            kern, schema="doc_id long, score double"
         )
         rows_per_field.append(
             [(r.doc_id, r.score) for r in
@@ -1199,18 +1207,6 @@ def multi_match_topk(
     return spark.createDataFrame(
         [(int(d), float(s)) for d, s in merged], "doc_id long, score double"
     ).orderBy(F.desc("score"), F.asc("doc_id"))
-
-
-def _with_tombstones(kern, tomb: dict):
-    """Wrap a per-bucket kernel so it scores the tombstone-purged view of
-    its block frame (the kernel itself stays delete-unaware)."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .delete import apply_tombstones
-
-        return kern(apply_tombstones(pdf, tomb).drop(columns=["run"]))
-
-    return run
 
 
 _POS_KEY_SHIFT = 33  # doc-index key space above the position bits
@@ -1354,7 +1350,8 @@ def _phrase_kernel(
     return phrase_bucket
 
 
-def _phrase_plan(spark, out_dir, stats, phrase, lookup=None):
+def _phrase_plan(s: "Searcher", phrase):
+    stats = s.stats
     if not stats.get("positions"):
         raise ValueError("phrase queries need an index built with positions=True")
     from ..textutils import analyze_with_slots
@@ -1366,14 +1363,9 @@ def _phrase_plan(spark, out_dir, stats, phrase, lookup=None):
     if not tok_slots:
         return None
     base = tok_slots[0][1]
-    phrase_tokens = [(t, s - base) for t, s in tok_slots]
+    phrase_tokens = [(t, slot - base) for t, slot in tok_slots]
     distinct = sorted({t for t, _ in phrase_tokens})
-    lookup = lookup or (
-        lambda ts: _lookup_terms(
-            spark, out_dir, ts, stats["n_term_buckets"], committed=_committed(stats)
-        )
-    )
-    entries = {e["term"]: e for e in lookup(distinct)}
+    entries = {e["term"]: e for e in s._entries(distinct)}
     if any(t not in entries for t in distinct):
         return None  # some phrase term indexed nowhere → no hits
     idf_sum = sum(idf(stats["n_docs"], int(entries[t]["df"])) for t, _ in phrase_tokens)
@@ -1382,7 +1374,7 @@ def _phrase_plan(spark, out_dir, stats, phrase, lookup=None):
 
 
 def phrase_topk(
-    spark: SparkSession, out_dir: str, phrase: str, k: int = 10,
+    spark: SparkSession, out_dir: "str | Searcher", phrase: str, k: int = 10,
     after: tuple[float, int] | None = None, slop: int = 0,
 ) -> DataFrame:
     """Distributed phrase search over a positional index: top-k docs
@@ -1391,51 +1383,39 @@ def phrase_topk(
     (score, doc_id) pages by score-order search_after (the predicate
     applies inside the kernel, pre-top-k — page N+1 costs page 1).
     ``slop`` relaxes to ES proximity matching (see ``_phrase_kernel``)."""
-    stats = load_stats(out_dir)
+    s = _searcher(spark, out_dir)
     empty = spark.createDataFrame([], "doc_id long, score double")
-    plan = _phrase_plan(spark, out_dir, stats, phrase)
+    plan = _phrase_plan(s, phrase)
     if plan is None:
         return empty
     phrase_tokens, idf_sum, tbs, distinct = plan
-    tomb = _tombs(out_dir, stats)
-    seg = (
-        _seg_scan(spark, out_dir, stats)
-        .where(F.col("tb").isin(tbs) & F.col("term").isin(distinct))
-        .select(*_BLOCK_COLS, "poss", *(["run"] if tomb else []))
-    )
+    seg = _seg_union(s, tbs, distinct, _BLOCK_COLS + ["poss"])
     kern = _phrase_kernel(phrase_tokens, idf_sum, k, after=after, slop=slop)
-    kern.k1, kern.b, kern.avgdl = stats["k1"], stats["b"], stats["avgdl"]
-    func = kern if not tomb else _with_tombstones(kern, tomb)
-    local = seg.groupBy("bucket").applyInPandas(func, schema="doc_id long, score double")
+    kern.k1, kern.b, kern.avgdl = s.stats["k1"], s.stats["b"], s.stats["avgdl"]
+    local = seg.groupBy("bucket").applyInPandas(kern, schema="doc_id long, score double")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def phrase_doc_ids(
-    spark: SparkSession, out_dir: str, phrase: str, slop: int = 0
+    spark: SparkSession, out_dir: "str | Searcher", phrase: str, slop: int = 0
 ) -> DataFrame:
     """EVERY doc containing the phrase (no top-k, no cap) — the positional
     twin of ``bool_doc_ids``, distributed end to end: the same pruned
     positional scan and per-bucket phrase kernel as ``phrase_topk``, with
     the top-k slicing disabled. Feeds exact ``track_total_hits`` for
-    match_phrase requests."""
-    stats = load_stats(out_dir)
+    match_phrase requests (over every root of a window Searcher too)."""
+    s = _searcher(spark, out_dir)
     empty = spark.createDataFrame([], "doc_id long")
-    plan = _phrase_plan(spark, out_dir, stats, phrase)
+    plan = _phrase_plan(s, phrase)
     if plan is None:
         return empty
     phrase_tokens, idf_sum, tbs, distinct = plan
-    tomb = _tombs(out_dir, stats)
-    seg = (
-        _seg_scan(spark, out_dir, stats)
-        .where(F.col("tb").isin(tbs) & F.col("term").isin(distinct))
-        .select(*_BLOCK_COLS, "poss", *(["run"] if tomb else []))
-    )
+    seg = _seg_union(s, tbs, distinct, _BLOCK_COLS + ["poss"])
     kern = _phrase_kernel(phrase_tokens, idf_sum, None, slop=slop)
-    kern.k1, kern.b, kern.avgdl = stats["k1"], stats["b"], stats["avgdl"]
-    func = kern if not tomb else _with_tombstones(kern, tomb)
+    kern.k1, kern.b, kern.avgdl = s.stats["k1"], s.stats["b"], s.stats["avgdl"]
     return (
         seg.groupBy("bucket")
-        .applyInPandas(func, schema="doc_id long, score double")
+        .applyInPandas(kern, schema="doc_id long, score double")
         .select("doc_id")
     )
 
@@ -1597,8 +1577,7 @@ def _span_kernel(
     return span_bucket
 
 
-def _span_plan(spark, out_dir, stats, clause_texts, lookup=None,
-               exclude_texts=None):
+def _span_plan(s: "Searcher", clause_texts, exclude_texts=None):
     """span clause values → (clauses, exclude_terms, idf_sum, tbs).
     ``clause_texts`` items are a single span_term text or a LIST of texts
     (a span_or group — the clause's position set is the union); each text
@@ -1610,6 +1589,7 @@ def _span_plan(spark, out_dir, stats, clause_texts, lookup=None,
     Clause idf = max over indexed members (the dominant synonym — pinned
     in tests and oracle twins); a clause with NO indexed member matches
     nothing → None."""
+    stats = s.stats
     if not stats.get("positions"):
         raise ValueError("span queries need an index built with positions=True")
     from ..textutils import analyze_with_slots
@@ -1633,13 +1613,8 @@ def _span_plan(spark, out_dir, stats, clause_texts, lookup=None,
     if len(set(flat)) != len(flat):
         raise ValueError("span queries with duplicate clause terms are unsupported")
     ex_terms = sorted({_one_token(x) for x in (exclude_texts or [])})
-    lookup = lookup or (
-        lambda ts: _lookup_terms(
-            spark, out_dir, ts, stats["n_term_buckets"], committed=_committed(stats)
-        )
-    )
     entries = {
-        e["term"]: e for e in lookup(sorted(set(flat) | set(ex_terms)))
+        e["term"]: e for e in s._entries(sorted(set(flat) | set(ex_terms)))
     }
     kept: list[tuple[str, ...]] = []
     idf_sum = 0.0
@@ -1658,7 +1633,7 @@ def _span_plan(spark, out_dir, stats, clause_texts, lookup=None,
 
 
 def span_near_topk(
-    spark: SparkSession, out_dir: str, clauses: list, k: int = 10,
+    spark: SparkSession, out_dir: "str | Searcher", clauses: list, k: int = 10,
     *, slop: int = 0, in_order: bool = True,
     after: tuple[float, int] | None = None,
     first_end: int | None = None,
@@ -1670,33 +1645,27 @@ def span_near_topk(
     tfNorm(spanFreq, dl), ranked (score desc, doc_id asc). ``first_end``
     (span_first) and ``exclude``/``pre``/``post`` (span_not) take a
     single clause. Semantics in ``_span_kernel``."""
-    stats = load_stats(out_dir)
+    s = _searcher(spark, out_dir)
     empty = spark.createDataFrame([], "doc_id long, score double")
-    plan = _span_plan(spark, out_dir, stats, clauses, exclude_texts=exclude)
+    plan = _span_plan(s, clauses, exclude_texts=exclude)
     if plan is None:
         return empty
     kept, ex_present, idf_sum, tbs = plan
     scan_terms = sorted({t for cl in kept for t in cl} | set(ex_present))
-    tomb = _tombs(out_dir, stats)
-    seg = (
-        _seg_scan(spark, out_dir, stats)
-        .where(F.col("tb").isin(tbs) & F.col("term").isin(scan_terms))
-        .select(*_BLOCK_COLS, "poss", *(["run"] if tomb else []))
-    )
+    seg = _seg_union(s, tbs, scan_terms, _BLOCK_COLS + ["poss"])
     kern = _span_kernel(
         kept, slop, in_order, idf_sum, k, after=after, first_end=first_end,
         exclude=(ex_present, pre, post) if exclude is not None else None,
     )
-    kern.k1, kern.b, kern.avgdl = stats["k1"], stats["b"], stats["avgdl"]
-    func = kern if not tomb else _with_tombstones(kern, tomb)
+    kern.k1, kern.b, kern.avgdl = s.stats["k1"], s.stats["b"], s.stats["avgdl"]
     local = seg.groupBy("bucket").applyInPandas(
-        func, schema="doc_id long, score double"
+        kern, schema="doc_id long, score double"
     )
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def span_near_doc_ids(
-    spark: SparkSession, out_dir: str, clauses: list, *,
+    spark: SparkSession, out_dir: "str | Searcher", clauses: list, *,
     slop: int = 0, in_order: bool = True,
     first_end: int | None = None,
     exclude: list | None = None, pre: int = 0, post: int = 0,
@@ -1704,28 +1673,22 @@ def span_near_doc_ids(
     """EVERY doc with a qualifying span (top-k off) — exact
     ``track_total_hits`` for span requests, same pruned positional
     scan and kernel as ``span_near_topk``."""
-    stats = load_stats(out_dir)
+    s = _searcher(spark, out_dir)
     empty = spark.createDataFrame([], "doc_id long")
-    plan = _span_plan(spark, out_dir, stats, clauses, exclude_texts=exclude)
+    plan = _span_plan(s, clauses, exclude_texts=exclude)
     if plan is None:
         return empty
     kept, ex_present, idf_sum, tbs = plan
     scan_terms = sorted({t for cl in kept for t in cl} | set(ex_present))
-    tomb = _tombs(out_dir, stats)
-    seg = (
-        _seg_scan(spark, out_dir, stats)
-        .where(F.col("tb").isin(tbs) & F.col("term").isin(scan_terms))
-        .select(*_BLOCK_COLS, "poss", *(["run"] if tomb else []))
-    )
+    seg = _seg_union(s, tbs, scan_terms, _BLOCK_COLS + ["poss"])
     kern = _span_kernel(
         kept, slop, in_order, idf_sum, None, first_end=first_end,
         exclude=(ex_present, pre, post) if exclude is not None else None,
     )
-    kern.k1, kern.b, kern.avgdl = stats["k1"], stats["b"], stats["avgdl"]
-    func = kern if not tomb else _with_tombstones(kern, tomb)
+    kern.k1, kern.b, kern.avgdl = s.stats["k1"], s.stats["b"], s.stats["avgdl"]
     return (
         seg.groupBy("bucket")
-        .applyInPandas(func, schema="doc_id long, score double")
+        .applyInPandas(kern, schema="doc_id long, score double")
         .select("doc_id")
     )
 
@@ -1736,95 +1699,57 @@ def posting_docs(spark: SparkSession, out_dir: str, terms_query: str) -> DataFra
     and for boolean set ops."""
     from ..textutils import analyze
 
-    stats = load_stats(out_dir)
-    terms = sorted(set(analyze(terms_query, stats.get("analyzer"))))
-    return posting_docs_terms(spark, out_dir, terms)
+    s = _searcher(spark, out_dir)
+    terms = sorted(set(analyze(terms_query, s.stats.get("analyzer"))))
+    return posting_docs_terms(spark, s, terms)
 
 
-def posting_docs_terms(spark: SparkSession, out_dir: str, terms: list[str]) -> DataFrame:
+def _term_scan(s: "Searcher", terms: list[str], cols: list[str]) -> DataFrame | None:
+    """``_seg_union`` over the indexed subset of RAW ``terms`` (None when
+    none is indexed anywhere in ``s``'s roots)."""
+    entries = s._entries(sorted(set(terms)))
+    if not entries:
+        return None
+    tbs = sorted({int(e["tb"]) for e in entries})
+    return _seg_union(s, tbs, sorted({e["term"] for e in entries}), cols)
+
+
+def posting_docs_terms(
+    spark: SparkSession, out_dir: "str | Searcher", terms: list[str]
+) -> DataFrame:
     """``posting_docs`` over RAW index terms (no query-side analysis) —
     the form multi_match totals need, whose field-qualified terms
     (``field␟token``) must not round-trip through the tokenizer."""
-    stats = load_stats(out_dir)
-    terms = sorted(set(terms))
-    entries = _lookup_terms(
-        spark, out_dir, terms, stats["n_term_buckets"], committed=_committed(stats)
-    )
-    if not entries:
+    seg = _term_scan(_searcher(spark, out_dir), terms, ["n", "docs"])
+    if seg is None:
         return spark.createDataFrame([], "doc_id long")
-    tbs = sorted({int(e["tb"]) for e in entries})
-    present = sorted({e["term"] for e in entries})
-    tomb = _tombs(out_dir, stats)
-    seg = (
-        _seg_scan(spark, out_dir, stats)
-        .where(F.col("tb").isin(tbs) & F.col("term").isin(present))
-        .select("n", "docs", *(["run"] if tomb else []))
-    )
 
     def decode(batches):
         for pdf in batches:
-            runs = pdf["run"] if tomb else [None] * len(pdf)
-            outs = []
-            for bb, n, run in zip(pdf["docs"], pdf["n"], runs):
-                d = np.cumsum(varint_decode(bb, int(n))).astype(np.int64)
-                if tomb:
-                    d = _drop_dead(d, run, tomb)
-                if len(d):
-                    outs.append(d)
+            outs = [
+                np.cumsum(varint_decode(bb, int(n))).astype(np.int64)
+                for bb, n in zip(pdf["docs"], pdf["n"])
+            ]
             if outs:
                 yield pd.DataFrame({"doc_id": np.unique(np.concatenate(outs))})
 
     return seg.mapInPandas(decode, schema="doc_id long").distinct()
 
 
-def _drop_dead(docs: np.ndarray, run, tomb: dict) -> np.ndarray:
-    """Sorted doc-id array minus the run's tombstoned ids."""
-    ids = tomb.get(run)
-    if ids is None or not len(ids):
-        return docs
-    return docs[~_in_sorted(docs, ids)]
-
-
 def term_doc_pairs(
-    spark: SparkSession, out_dir: str, terms: list[str], *, distinct: bool = True
+    spark: SparkSession, out_dir: "str | Searcher", terms: list[str]
 ) -> DataFrame:
     """Distinct (term, doc_id) pairs for the given terms — one pruned
-    segment scan (tb partitions + term row groups), docs-column decode only
-    (tf/dl/poss pruned away). The building block for distributed boolean
-    set algebra over arbitrarily large matching sets.
-
-    ``distinct=False`` skips the dedup shuffle — for callers that union
-    several indexes' pairs and dedup ONCE globally (DailySearcher windows:
-    one wide shuffle instead of one per day)."""
-    stats = load_stats(out_dir)
-    terms = sorted(set(terms))
-    entries = _lookup_terms(
-        spark, out_dir, terms, stats["n_term_buckets"], committed=_committed(stats)
-    )
-    if not entries:
+    segment scan per root (tb partitions + term row groups), docs-column
+    decode only (tf/dl/poss pruned away), one dedup over the union. The
+    building block for distributed boolean set algebra over arbitrarily
+    large matching sets."""
+    seg = _term_scan(_searcher(spark, out_dir), terms, ["term", "n", "docs"])
+    if seg is None:
         return spark.createDataFrame([], "term string, doc_id long")
-    tbs = sorted({int(e["tb"]) for e in entries})
-    present = sorted({e["term"] for e in entries})
-    tomb = _tombs(out_dir, stats)
-    seg = (
-        _seg_scan(spark, out_dir, stats)
-        .where(F.col("tb").isin(tbs) & F.col("term").isin(present))
-        .select("term", "n", "docs", *(["run"] if tomb else []))
-    )
 
     def decode(batches):
         for pdf in batches:
-            if tomb:
-                outs = []
-                for t, bb, n, run in zip(pdf["term"], pdf["docs"], pdf["n"], pdf["run"]):
-                    d = _drop_dead(
-                        np.cumsum(varint_decode(bb, int(n))).astype(np.int64), run, tomb
-                    )
-                    if len(d):
-                        outs.append(pd.DataFrame({"term": t, "doc_id": d}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-                continue
             outs = [
                 pd.DataFrame(
                     {
@@ -1837,55 +1762,37 @@ def term_doc_pairs(
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    out = seg.mapInPandas(decode, schema="term string, doc_id long")
-    return out.distinct() if distinct else out
+    return seg.mapInPandas(decode, schema="term string, doc_id long").distinct()
 
 
 def term_doc_stats(
-    spark: SparkSession, out_dir: str, terms: list[str]
+    spark: SparkSession, out_dir: "str | Searcher", terms: list[str]
 ) -> DataFrame:
     """(term, doc_id, tf, dl) rows for the given RAW index terms — the
     scored sibling of ``term_doc_pairs``: the same pruned segment scan
     (tb partitions + term row groups) also decoding the tf/dl varint
-    frames, tombstones applied per run. The building block for scored
+    frames, tombstones applied per root. The building block for scored
     set algebra whose per-doc term counts matter (terms_set)."""
-    stats = load_stats(out_dir)
-    terms = sorted(set(terms))
-    entries = _lookup_terms(
-        spark, out_dir, terms, stats["n_term_buckets"], committed=_committed(stats)
-    )
     schema = "term string, doc_id long, tf long, dl long"
-    if not entries:
-        return spark.createDataFrame([], schema)
-    tbs = sorted({int(e["tb"]) for e in entries})
-    present = sorted({e["term"] for e in entries})
-    tomb = _tombs(out_dir, stats)
-    seg = (
-        _seg_scan(spark, out_dir, stats)
-        .where(F.col("tb").isin(tbs) & F.col("term").isin(present))
-        .select("term", "n", "docs", "tfs", "dls", *(["run"] if tomb else []))
+    seg = _term_scan(
+        _searcher(spark, out_dir), terms, ["term", "n", "docs", "tfs", "dls"]
     )
+    if seg is None:
+        return spark.createDataFrame([], schema)
 
     def decode(batches):
         for pdf in batches:
-            runs = pdf["run"] if tomb else [None] * len(pdf)
             outs = []
-            for t, bb, tb_, db_, n, run in zip(
-                pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"], pdf["n"], runs
+            for t, bb, tb_, db_, n in zip(
+                pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"], pdf["n"]
             ):
                 n = int(n)
-                d = np.cumsum(varint_decode(bb, n)).astype(np.int64)
-                tf = varint_decode(tb_, n).astype(np.int64)
-                dl = varint_decode(db_, n).astype(np.int64)
-                if tomb:
-                    ids = tomb.get(run)
-                    if ids is not None and len(ids):
-                        alive = ~_in_sorted(d, ids)
-                        d, tf, dl = d[alive], tf[alive], dl[alive]
-                if len(d):
-                    outs.append(
-                        pd.DataFrame({"term": t, "doc_id": d, "tf": tf, "dl": dl})
-                    )
+                outs.append(pd.DataFrame({
+                    "term": t,
+                    "doc_id": np.cumsum(varint_decode(bb, n)).astype(np.int64),
+                    "tf": varint_decode(tb_, n).astype(np.int64),
+                    "dl": varint_decode(db_, n).astype(np.int64),
+                }))
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
@@ -1908,16 +1815,14 @@ def terms_set_match(
     broadcasts the aggregated side when small). Docs missing the field
     never match (ES raises per-shard; we drop — documented). Returns an
     unordered (doc_id, score) frame; callers top-k or count it."""
-    stats = load_stats(out_dir)
-    terms = sorted({str(t) for t in terms})
-    entries = _lookup_terms(
-        spark, out_dir, terms, stats["n_term_buckets"], committed=_committed(stats)
-    )
+    s = _searcher(spark, out_dir)
+    stats = s.stats
+    entries = s._entries(sorted({str(t) for t in terms}))
     if not entries:
         return spark.createDataFrame([], "doc_id long, score double")
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
     idf_map = {e["term"]: idf(stats["n_docs"], int(e["df"])) for e in entries}
-    pairs = term_doc_stats(spark, out_dir, sorted(idf_map))
+    pairs = term_doc_stats(spark, s, sorted(idf_map))
     imap = F.create_map(
         *[F.lit(x) for t, v in sorted(idf_map.items()) for x in (t, float(v))]
     )
@@ -1939,7 +1844,7 @@ def terms_set_match(
             ).alias("score"),
         )
     )
-    store = _docstore_scan(spark, out_dir).select(
+    store = _docstore_scan(spark, s).select(
         "doc_id", F.col(msm_field).cast("long").alias("_m")
     )
     return (
@@ -2011,7 +1916,7 @@ def terms_set_topk(
 
 def bool_doc_ids(
     spark: SparkSession,
-    out_dir: str,
+    out_dir: "str | Searcher",
     query: str = "",
     must: str | None = None,
     must_not: str | None = None,
@@ -2027,58 +1932,42 @@ def bool_doc_ids(
     conditions (``min_should`` = ES minimum_should_match). The candidate
     generator for terms-aggregations (facets) and boolean set ops over
     matching sets too large to enumerate on the driver. ``or_groups`` /
-    ``not_atoms`` are the nested-bool atom forms (see ``_atom_terms``)."""
+    ``not_atoms`` are the nested-bool atom forms (see ``_atom_terms``).
+    Over a window Searcher the days' pruned scans union before the one
+    dedup and aggregation (day corpora are doc-disjoint, so it stays
+    exact): one Spark action whatever the window width; every driver step
+    (dictionary probe, range expansion, must-presence) is a metadata
+    read."""
     from ..textutils import analyze
 
-    range_expand = lambda lo, hi: _term_range(out_dir, lo, hi)["term"].tolist()  # noqa: E731
-    az = load_stats(out_dir).get("analyzer")
+    s = _searcher(spark, out_dir)
+    empty = spark.createDataFrame([], "doc_id long")
+    az = s.stats.get("analyzer")
     should_terms = sorted(set(analyze(query, az))) if query else []
     must_terms = sorted(set(analyze(must, az))) if must else []
     not_terms = sorted(set(analyze(must_not, az))) if must_not else []
     if not_atoms:
-        not_terms = sorted(set(not_terms) | set(_expand_atoms(not_atoms, range_expand)))
+        not_terms = sorted(set(not_terms) | set(_expand_atoms(not_atoms, s._range_expand)))
     scoring = sorted(set(should_terms) | set(must_terms))
     fgroups: list[list[str]] = []
     if filters or ranges or or_groups:
-        want = _filter_want(filters, ranges, range_expand, or_groups)
+        want = _filter_want(filters, ranges, s._range_expand, or_groups)
         if want is None:
-            return spark.createDataFrame([], "doc_id long")
+            return empty
         fgroups = want
     if not scoring and not fgroups:
-        return spark.createDataFrame([], "doc_id long")
-    flat_filters = sorted({t for g in fgroups for t in g})
-    pairs = term_doc_pairs(
-        spark, out_dir, sorted(set(scoring) | set(not_terms) | set(flat_filters))
-    )
+        return empty
     if must_terms:
         # a must term indexed nowhere ⇒ provably empty (cheap driver check)
-        stats = load_stats(out_dir)
-        present = {
-            e["term"]
-            for e in _lookup_terms(
-                spark, out_dir, must_terms, stats["n_term_buckets"],
-                committed=_committed(stats),
-            )
-        }
+        present = {e["term"] for e in s._entries(must_terms)}
         if any(mt not in present for mt in must_terms):
-            return spark.createDataFrame([], "doc_id long")
-    return _bool_match_ids(pairs, should_terms, must_terms, not_terms, min_should, fgroups)
-
-
-def _bool_match_ids(
-    pairs: DataFrame,
-    should_terms: list[str],
-    must_terms: list[str],
-    not_terms: list[str],
-    min_should: int,
-    fgroups: list[list[str]],
-) -> DataFrame:
-    """The single hash aggregation at the heart of ``bool_doc_ids``:
-    DISTINCT (term, doc_id) pairs in, matching doc_ids out. Shared by the
-    single-index path and the DailySearcher window path (which unions
-    several days' pruned pair scans first — day corpora are doc-disjoint,
-    so one aggregation stays exact)."""
-    scoring = sorted(set(should_terms) | set(must_terms))
+            return empty
+    flat_filters = sorted({t for g in fgroups for t in g})
+    pairs = term_doc_pairs(
+        spark, s, sorted(set(scoring) | set(not_terms) | set(flat_filters))
+    )
+    # the single hash aggregation: DISTINCT (term, doc_id) pairs in,
+    # matching doc_ids out
     agg_cols = [
         F.sum(F.when(F.col("term").isin(must_terms), 1).otherwise(0)).alias("n_must"),
         F.max(F.when(F.col("term").isin(scoring), 1).otherwise(0)).alias("any_should"),
@@ -2105,54 +1994,57 @@ def _bool_match_ids(
     return agg.where(cond).select("doc_id")
 
 
+def _docstore_scan(spark: SparkSession, out_dir: "str | Searcher") -> DataFrame:
+    """Docstore read over an index dir or every root of a Searcher, with an
+    EXPLICIT schema from one driver-side pyarrow footer probe (the first
+    root's — window days share a config) — skips Spark's 1-task parquet
+    schema-inference job on every facet/sort/agg query.
 
-def _docstore_scan(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Docstore read with an EXPLICIT schema from one driver-side pyarrow
-    footer probe — skips Spark's 1-task parquet schema-inference job on
-    every facet/sort/agg query (same treatment as ``_seg_scan``).
+    Per root, multi-run docstores (incremental/update deltas) resolve each
+    doc_id to that root's NEWEST run's row (manifest committed_at order) —
+    an updated doc must surface its new stored version exactly once,
+    matching the posting layer where the old version's postings are
+    tombstoned. The single-run common case takes the plain scan, zero
+    extra work; the dedup window only appears once deltas exist (a doc's
+    versions share a bucket — doc-id top bits — so the exchange is
+    bucket-local). The roots' scans then union (one lazy read per dir: a
+    multi-path read trips partition discovery on the day= ancestors)."""
+    from functools import reduce
 
-    Multi-run docstores (incremental/update deltas) resolve each doc_id
-    to its NEWEST run's row (manifest committed_at order) — an updated
-    doc must surface its new stored version exactly once, matching the
-    posting layer where the old version's postings are tombstoned. The
-    single-run common case takes the plain scan, zero extra work; the
-    dedup window only appears once deltas exist (a doc's versions share
-    a bucket — doc-id top bits — so the exchange is bucket-local)."""
     import pyarrow.dataset as pds
+    from pyspark.sql import Window
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    path = os.path.join(out_dir, "docstore")
-    schema = from_arrow_schema(
-        pds.dataset(path, format="parquet", partitioning="hive").schema
-    )
-    df = spark.read.schema(schema).parquet(path)
-    return _dedup_docstore_df(df, out_dir)
-
-
-def _dedup_docstore_df(df: DataFrame, out_dir: str) -> DataFrame:
-    """Latest-version-wins over a docstore scan (no-op single-run fast
-    path) — shared by ``_docstore_scan`` and the daily window union."""
     from .build import docstore_run_rank
 
-    rank = docstore_run_rank(out_dir)
-    if len(rank) <= 1:
-        return df
-    from pyspark.sql import Window
+    dirs = out_dir._dirs if isinstance(out_dir, Searcher) else [out_dir]
+    schema = from_arrow_schema(
+        pds.dataset(
+            os.path.join(dirs[0], "docstore"), format="parquet", partitioning="hive"
+        ).schema
+    )
+    parts = []
+    for d in dirs:
+        df = spark.read.schema(schema).parquet(os.path.join(d, "docstore"))
+        rank = docstore_run_rank(d)
+        if len(rank) > 1:
+            m = F.create_map(
+                *[F.lit(x) for r, i in sorted(rank.items()) for x in (r, i)]
+            )
+            w = Window.partitionBy("doc_id").orderBy(F.desc("_ver"))
+            df = (
+                df.withColumn("_ver", m[F.col("run")])
+                .withColumn("_vn", F.row_number().over(w))
+                .where(F.col("_vn") == 1)
+                .drop("_ver", "_vn")
+            )
+        parts.append(df)
+    return reduce(DataFrame.unionByName, parts)
 
-    m = F.create_map(
-        *[F.lit(x) for r, i in sorted(rank.items()) for x in (r, i)]
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("_ver"))
-    return (
-        df.withColumn("_ver", m[F.col("run")])
-        .withColumn("_vn", F.row_number().over(w))
-        .where(F.col("_vn") == 1)
-        .drop("_ver", "_vn")
-    )
 
 def facet_counts_spark(
     spark: SparkSession,
-    out_dir: str,
+    out_dir: "str | Searcher",
     facet_col: str,
     query: str,
     *,
@@ -2168,12 +2060,15 @@ def facet_counts_spark(
     no hit cap — correct when a popular term matches 10^8 docs (the
     driver-side ``Searcher.facet_counts`` fast path saturates and escalates
     here instead of silently truncating). Ordered (count desc, value asc);
-    ``k`` limits AFTER the full count (ES size semantics)."""
+    ``k`` limits AFTER the full count (ES size semantics). Over a window
+    Searcher, counts over the disjoint day corpora add up in the one
+    aggregation."""
+    s = _searcher(spark, out_dir)
     hits = bool_doc_ids(
-        spark, out_dir, query, must=must, must_not=must_not,
+        spark, s, query, must=must, must_not=must_not,
         filters=filters, ranges=ranges,
     )
-    store = _docstore_scan(spark, out_dir)
+    store = _docstore_scan(spark, s)
     out = (
         store.join(hits, "doc_id")
         .groupBy(F.col(facet_col).alias("facet"))
@@ -2185,7 +2080,7 @@ def facet_counts_spark(
 
 def collapse_topk(
     spark: SparkSession,
-    out_dir: str,
+    out_dir: "str | Searcher",
     query: str,
     field: str,
     k: int = 10,
@@ -2229,7 +2124,7 @@ def collapse_topk(
 
 def collapse_groups(
     spark: SparkSession,
-    out_dir: str,
+    out_dir: "str | Searcher",
     query: str,
     field: str,
     k: int = 10,
@@ -2279,7 +2174,7 @@ def collapse_groups(
 
 def search_sorted(
     spark: SparkSession,
-    out_dir: str,
+    out_dir: "str | Searcher",
     query: str,
     sort: list[tuple[str, str]],
     k: int = 10,
@@ -2303,24 +2198,13 @@ def search_sorted(
     page N+1 costs the same as page 1 — unlike from/size, which re-ranks
     offset+k rows. Fully distributed: matching ids (no cap) ⋈ docstore →
     filter → global sort → limit."""
+    s = _searcher(spark, out_dir)
     hits = bool_doc_ids(
-        spark, out_dir, query, must=must, must_not=must_not,
+        spark, s, query, must=must, must_not=must_not,
         min_should=min_should, filters=filters, ranges=ranges,
         or_groups=or_groups, not_atoms=not_atoms,
     )
-    store = _docstore_scan(spark, out_dir)
-    return sorted_over_join(store.join(hits, "doc_id"), sort, k, search_after)
-
-
-def sorted_over_join(
-    joined: DataFrame,
-    sort: list[tuple[str, str]],
-    k: int,
-    search_after: tuple | None = None,
-) -> DataFrame:
-    """The sort half of ``search_sorted``: direction-aware order + the
-    lexicographic after-predicate over an already-joined (matching ids ⋈
-    stored columns) frame. Shared with the DailySearcher window path."""
+    joined = _docstore_scan(spark, s).join(hits, "doc_id")
     keys = list(sort) + [("doc_id", "asc")]
     joined = joined.select("doc_id", *[f for f, _ in sort if f != "doc_id"])
     if search_after is not None:
@@ -2560,7 +2444,7 @@ def _hist_bucket_range(
 
 def search_aggs(
     spark: SparkSession,
-    out_dir: str,
+    out_dir: "str | Searcher",
     aggs: dict,
     query: str = "",
     *,
@@ -2592,28 +2476,30 @@ def search_aggs(
     ``approx_count_distinct`` like ES (pass ``"exact": True`` for a true
     countDistinct); ``percentiles`` uses ``percentile_approx`` (ES's
     t-digest analogue). Fields come from the docstore's stored columns
-    (``write_docstore(extra_cols=...)``)."""
+    (``write_docstore(extra_cols=...)``). Over a window Searcher the
+    aggregations run once over the days' unioned join (aggregations over
+    disjoint day corpora compose exactly), and the significant_terms /
+    significant_text background is the window's corpus."""
+    s = _searcher(spark, out_dir)
     hits = bool_doc_ids(
-        spark, out_dir, query, must=must, must_not=must_not,
+        spark, s, query, must=must, must_not=must_not,
         min_should=min_should, filters=filters, ranges=ranges,
         or_groups=or_groups, not_atoms=not_atoms,
     )
-    store = _docstore_scan(spark, out_dir)
+    store = _docstore_scan(spark, s)
     joined = store.join(hits, "doc_id")
     # significant_text needs the index itself (dictionary background) —
     # split it out of the joined-frame agg set
-    st = {n: s for n, s in aggs.items() if "significant_text" in s}
-    rest = {n: s for n, s in aggs.items() if n not in st}
+    st = {n: sp for n, sp in aggs.items() if "significant_text" in sp}
+    rest = {n: sp for n, sp in aggs.items() if n not in st}
     out = aggs_over_join(joined, rest, background=store) if rest else {}
-    for n, s in st.items():
-        out[n] = _significant_text_df(
-            spark, out_dir, joined, n, s["significant_text"]
-        )
+    for n, spec in st.items():
+        out[n] = _significant_text_df(s, joined, n, spec["significant_text"])
     return out
 
 
 def _significant_text_df(
-    spark: SparkSession, out_dir: str, joined: DataFrame, name: str, body: dict,
+    s: "Searcher", joined: DataFrame, name: str, body: dict,
 ) -> DataFrame:
     """ES significant_text: the analyzed TEXT terms that characterize the
     matching set vs the whole index (JLH, like significant_terms) — "what
@@ -2624,9 +2510,11 @@ def _significant_text_df(
     analyzer chain only: a stopword/stemmer config would make the
     re-tokenization diverge from the dictionary's terms — reject, never
     mis-count. Rows: (key, doc_count, bg_count, score)."""
-    from .build import KEYWORD_SEP, load_stats
+    from functools import reduce
 
-    stats = load_stats(out_dir)
+    from .build import KEYWORD_SEP
+
+    stats = s.stats
     if stats.get("analyzer"):
         raise ValueError(
             f"agg {name!r}: significant_text over an analyzer-configured "
@@ -2656,7 +2544,9 @@ def _significant_text_df(
         .groupBy("key").agg(F.count("*").alias("doc_count"))
     )
     bg = (
-        spark.read.parquet(os.path.join(out_dir, "dictionary"))
+        reduce(DataFrame.unionByName, [
+            s.spark.read.parquet(os.path.join(d, "dictionary")) for d in s._dirs
+        ])
         .where(~F.col("term").contains(KEYWORD_SEP))
         .groupBy(F.col("term").alias("key"))
         .agg(F.sum("df").alias("bg_count"))
@@ -2925,11 +2815,11 @@ def aggs_over_join(
     joined: DataFrame, aggs: dict, background: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """The aggregation half of ``search_aggs``: ES-shaped agg specs over an
-    already-joined (matching ids ⋈ stored columns) frame. Shared with the
-    DailySearcher window path, whose join unions several days' docstores.
-    A bucketing spec may carry ES sub-aggregations (``"aggs"``) nested to
-    any depth with multiple metric siblings per level — the full Kibana
-    split-series shape; see ``_sub_bucket_df`` for the flattening rules."""
+    already-joined (matching ids ⋈ stored columns) frame — one index's or
+    a day window's union (``_docstore_scan``). A bucketing spec may carry
+    ES sub-aggregations (``"aggs"``) nested to any depth with multiple
+    metric siblings per level — the full Kibana split-series shape; see
+    ``_sub_bucket_df`` for the flattening rules."""
     if len(aggs) > 1:
         # each agg is its own Spark action — materialize the matching-set
         # join once instead of re-running the posting scan per agg
@@ -4580,10 +4470,14 @@ def _term_range(out_dir: str | list[str], lo: str | None, hi: str | None) -> pd.
     day indexes: one dataset read over every dir's pruned files, not one
     probe per day)."""
     dirs = [out_dir] if isinstance(out_dir, str) else out_dir
-    frames = [
+    return _sum_df([
         _range_scan(files, lo, hi, ["term", "df"]).to_pandas()
         for files in _range_files(dirs, lo, hi) if files
-    ]
+    ])
+
+
+def _sum_df(frames: list[pd.DataFrame]) -> pd.DataFrame:
+    """(term, df) frames → one term-sorted frame, df summed per term."""
     frames = [f for f in frames if len(f)]
     if not frames:
         return pd.DataFrame({"term": pd.Series(dtype=object), "df": pd.Series(dtype="int64")})
@@ -4664,14 +4558,14 @@ def terms_enum(out_dir: str, string: str, size: int = 10) -> dict:
 
 
 def expansion_candidates(
-    out_dir: str, kind: str, value: str, *,
+    out_dir: str | list[str], kind: str, value: str, *,
     fuzziness: int = 1, prefix_length: int = 1,
 ) -> pd.DataFrame:
-    """UNRANKED (term, df) expansion candidates for ONE index — the
-    per-index half of every term expansion. ``expand_*`` rank these for a
-    single index; the DailySearcher window path unions several days'
-    candidate frames, SUMS df per term, and ranks once (exact global
-    df-desc ranking — per-day top-N unions would not be)."""
+    """UNRANKED (term, df) expansion candidates — the probe half of every
+    term expansion, which ``expand_*`` rank. Over a list of index dirs (a
+    day window) df SUMS per term across the disjoint day corpora, so the
+    one ranking after it is the exact global df-desc order (a union of
+    per-day top-N would not be)."""
     import re as _re
 
     value = value.lower()
@@ -4701,9 +4595,10 @@ def expansion_candidates(
         fuzziness = min(int(fuzziness), 2)
         pdf = None
         if prefix_length <= 0:
-            probed = _fuzzy_deletes_probe(out_dir, value, fuzziness)
-            if probed is not None:
-                pdf = probed[0]
+            dirs = [out_dir] if isinstance(out_dir, str) else out_dir
+            probes = [_fuzzy_deletes_probe(d, value, fuzziness) for d in dirs]
+            if all(p is not None for p in probes):
+                pdf = _sum_df([p[0] for p in probes])
         if pdf is None:
             if prefix_length > 0:
                 lit = value[:prefix_length]
@@ -4722,7 +4617,9 @@ def expansion_candidates(
     raise ValueError(f"unknown expansion kind {kind!r}")
 
 
-def expand_prefix(out_dir: str, prefix: str, max_expansions: int = 50) -> list[str]:
+def expand_prefix(
+    out_dir: str | list[str], prefix: str, max_expansions: int = 50
+) -> list[str]:
     """Terms starting with ``prefix``, highest document frequency first,
     capped at ``max_expansions`` (the ES prefix-query expansion rule).
     Served from the term-sorted ``term_index`` copy via the range sidecar
@@ -4734,7 +4631,9 @@ def expand_prefix(out_dir: str, prefix: str, max_expansions: int = 50) -> list[s
     )
 
 
-def expand_wildcard(out_dir: str, pattern: str, max_expansions: int = 50) -> list[str]:
+def expand_wildcard(
+    out_dir: str | list[str], pattern: str, max_expansions: int = 50
+) -> list[str]:
     """ES wildcard-query expansion: ``*`` = any run, ``?`` = one char.
     The literal prefix before the first wildcard range-prunes the sorted
     term_index scan (``te*m`` reads only the ``te`` range); a leading
@@ -4746,7 +4645,9 @@ def expand_wildcard(out_dir: str, pattern: str, max_expansions: int = 50) -> lis
     )
 
 
-def expand_regexp(out_dir: str, pattern: str, max_expansions: int = 50) -> list[str]:
+def expand_regexp(
+    out_dir: str | list[str], pattern: str, max_expansions: int = 50
+) -> list[str]:
     """ES regexp-query expansion: dictionary terms fully matching the
     pattern (Python re syntax; ES uses Lucene's — the common operators
     agree). The literal prefix before the first metacharacter range-prunes
@@ -4923,7 +4824,7 @@ def _fuzzy_deletes_probe(
 
 
 def expand_fuzzy(
-    out_dir: str,
+    out_dir: str | list[str],
     term: str,
     fuzziness: int = 1,
     prefix_length: int = 1,
@@ -4956,25 +4857,34 @@ def expand_fuzzy(
 
 def index_info(spark: SparkSession, out_dir: str) -> dict:
     """Operational snapshot (the ES _stats/_cat analogue): corpus stats +
-    per-run segment/posting counts from the manifest ledger — metadata
-    reads only, no posting decode."""
-    stats = load_stats(out_dir)
-    man = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    runs = [
-        r.asDict()
-        for r in man.groupBy("run_id")
-        .agg(
-            F.sum("n_postings").alias("n_postings"),
-            F.sum("n_blocks").alias("n_blocks"),
-            F.sum("n_docs").alias("n_docs"),
-            F.max("committed_at").alias("committed_at"),
-        )
-        .orderBy("run_id")
-        .collect()
-    ]
-    for r in runs:
-        r["committed_at"] = str(r["committed_at"])
+    per-run segment/posting counts from the manifest ledger — driver-side
+    metadata reads only (one pyarrow manifest read), zero Spark jobs."""
+    import datetime as dt
+
+    from .build import _read_manifest
     from .delete import n_tombstoned
+
+    def as_collected(ts) -> str:
+        # the string a Spark collect() of the int96 column renders:
+        # microsecond truncation, then local time (TimestampType.fromInternal)
+        us = int(ts.value // 1000)
+        return str(dt.datetime.fromtimestamp(us // 10**6).replace(microsecond=us % 10**6))
+
+    stats = load_stats(out_dir)
+    man = _read_manifest(
+        os.path.join(out_dir, "manifest"),
+        ["run_id", "n_postings", "n_blocks", "n_docs", "committed_at"],
+    ).to_pandas()
+    runs = [
+        {
+            "run_id": run_id,
+            "n_postings": int(g["n_postings"].sum()),
+            "n_blocks": int(g["n_blocks"].sum()),
+            "n_docs": int(g["n_docs"].sum()),
+            "committed_at": as_collected(g["committed_at"].max()),
+        }
+        for run_id, g in man.groupby("run_id", sort=True)
+    ]
 
     return {
         "stats": stats,
@@ -5042,10 +4952,15 @@ class Searcher:
     Roots: a Searcher reads a list of index roots. ``Searcher(spark,
     out_dir)`` is the one-root case; ``index.daily.DailySearcher`` builds a
     window handle over the selected day indexes (``_over``). There the
-    window's merged stats score, the dictionary probe, range expansion and
-    field norms each read every day dir in one dataset read, and each
-    day's blocks are read with its own committed runs and tombstones
-    before they concatenate — the multi-run shape the kernel handles.
+    window's merged stats score, the dictionary probe, range expansion,
+    term expansions and field norms each read every day dir in one dataset
+    read; the docstore fetch, point-lookup liveness and significant_terms
+    background read each day's docstore in turn. Each day's blocks are
+    read with its own committed runs and tombstones before they
+    concatenate (the multi-run shape the kernel handles), and every
+    distributed plan takes the handle in place of an index dir and reads
+    its roots the same way (``_seg_union``, ``_docstore_scan``), so
+    ``dsl.search_body`` serves a window through the same request path.
 
     Staleness: every index mutation (index_batch, build_index,
     compact_segments) finishes by rewriting stats.json, so its mtime is the
@@ -5121,12 +5036,6 @@ class Searcher:
     def _dirs(self) -> list[str]:
         return [r.dir for r in self._roots]
 
-    @property
-    def _tomb(self) -> dict:
-        """Delete snapshot of a one-root handle (the Spark fallbacks and
-        point lookups only run on one root)."""
-        return self._roots[0].tomb
-
     def _maybe_invalidate(self) -> None:
         if self._frozen:
             return
@@ -5139,63 +5048,77 @@ class Searcher:
             self._reset_caches()
             self._roots = [_Root(self.out_dir, self.stats, _tombs(self.out_dir, self.stats), m)]
 
-    def _is_dead(self, doc_id: int, row: dict) -> bool:
-        """Point-lookup liveness under this snapshot: is the doc's newest
-        stored version (``row`` from ``lookup_docs``) fully deleted —
-        every committed segment run it maps to tombstoned
-        (``dead_lookup_ids``)."""
-        from .delete import dead_lookup_ids
-
-        return bool(
-            dead_lookup_ids(
-                self.out_dir, {int(doc_id): row}, self.stats, tomb=self._tomb
-            )
-        )
-
     def _range_expand(self, lo: str, hi: str) -> list[str]:
         key = (lo, hi)
         if key not in self._range_cache:
             self._range_cache[key] = _term_range(self._dirs, lo, hi)["term"].tolist()
         return self._range_cache[key]
 
-    def _lookup_docs(self, doc_ids: list[int]) -> dict[int, dict]:
+    def _lookup_docs(
+        self, doc_ids: list[int], runs: list[str] | None = None
+    ) -> dict[int, dict]:
         """Stored rows of ``doc_ids`` from each root's docstore in turn
-        (day corpora are doc-disjoint; stops once every id is found)."""
+        (day corpora are doc-disjoint; stops once every id is found).
+        ``runs`` pins the docstore runs a PIT snapshot sees."""
         from .build import lookup_docs
 
         meta: dict[int, dict] = {}
         missing = list(doc_ids)
         for r in self._roots:
-            meta.update(lookup_docs(r.dir, missing))
+            meta.update(lookup_docs(r.dir, missing, runs=runs))
             missing = [d for d in missing if d not in meta]
             if not missing:
                 break
         return meta
 
+    def _live_docs(self, doc_ids: list[int]) -> dict[int, dict]:
+        """Point lookups under this snapshot's liveness rule: the stored
+        rows of ``doc_ids`` minus the fully deleted ones — each root's
+        rows judged by that root's tombstones (``dead_lookup_ids``, the
+        rule mget and termvectors serve)."""
+        from .build import lookup_docs
+        from .delete import dead_lookup_ids
+
+        live: dict[int, dict] = {}
+        missing = sorted({int(d) for d in doc_ids})
+        for r in self._roots:
+            rows = lookup_docs(r.dir, missing)
+            dead = dead_lookup_ids(r.dir, rows, r.stats, tomb=r.tomb)
+            live.update((d, row) for d, row in rows.items() if d not in dead)
+            missing = [d for d in missing if d not in rows]
+            if not missing:
+                break
+        return live
+
     def _background_counts(self, field: str) -> tuple[pd.Series, int]:
         """significant_terms background: per-key doc counts of a stored
-        field over the WHOLE docstore plus the total row count — one
-        pyarrow single-column read (zero Spark jobs), cached per field
-        until the next stats snapshot. Matches the distributed path's
-        ``_docstore_scan`` exactly (every bucket/run partition, deleted
-        docs included on both sides)."""
+        field over EVERY root's whole docstore plus the total row count —
+        one pyarrow single-column read per root (zero Spark jobs), cached
+        per field until the next stats snapshot. Matches the distributed
+        path's ``_docstore_scan`` exactly (every bucket/run partition, each
+        root's latest version per doc, deleted docs included on both
+        sides)."""
         if field not in self._bg_cache:
             import pyarrow.dataset as pds
 
             from .build import docstore_run_rank
 
-            store = os.path.join(self.out_dir, "docstore")
-            rank = docstore_run_rank(self.out_dir)
-            dset = pds.dataset(store, format="parquet", partitioning="hive")
-            if len(rank) > 1:
-                t = dset.to_table(columns=[field, "doc_id", "run"]).to_pandas()
-                t["_v"] = t["run"].map(rank)
-                s = t.sort_values(["doc_id", "_v"]).drop_duplicates(
-                    "doc_id", keep="last"
-                )[field]
-            else:
-                s = dset.to_table(columns=[field]).column(field).to_pandas()
-            self._bg_cache[field] = (s.dropna().value_counts(), len(s))
+            cols = []
+            for r in self._roots:
+                rank = docstore_run_rank(r.dir)
+                dset = pds.dataset(
+                    os.path.join(r.dir, "docstore"), format="parquet", partitioning="hive"
+                )
+                if len(rank) > 1:
+                    t = dset.to_table(columns=[field, "doc_id", "run"]).to_pandas()
+                    t["_v"] = t["run"].map(rank)
+                    cols.append(t.sort_values(["doc_id", "_v"]).drop_duplicates(
+                        "doc_id", keep="last"
+                    )[field])
+                else:
+                    cols.append(dset.to_table(columns=[field]).column(field).to_pandas())
+            col = cols[0] if len(cols) == 1 else pd.concat(cols, ignore_index=True)
+            self._bg_cache[field] = (col.dropna().value_counts(), len(col))
         return self._bg_cache[field]
 
     @staticmethod
@@ -5331,10 +5254,8 @@ class Searcher:
             return rows[offset : offset + k]
         self._maybe_invalidate()
         plan = _bool_plan(
-            self.spark, self.out_dir, self.stats, query, must, must_not,
-            lookup=self._entries, filters=filters, ranges=ranges,
-            range_expand=self._range_expand, or_groups=or_groups,
-            not_atoms=not_atoms,
+            self, query, must, must_not, filters=filters, ranges=ranges,
+            or_groups=or_groups, not_atoms=not_atoms,
         )
         if plan is None:
             return []
@@ -5355,7 +5276,7 @@ class Searcher:
         return [
             (r.doc_id, r.score)
             for r in bm25_topk(
-                self.spark, self.out_dir, query, k, prune, must_not=must_not, must=must,
+                self.spark, self, query, k, prune, must_not=must_not, must=must,
                 max_candidates=self.max_candidates, min_should=min_should,
                 filters=filters, ranges=ranges, or_groups=or_groups,
                 not_atoms=not_atoms, after=after, slice_mod=slice_mod,
@@ -5391,9 +5312,7 @@ class Searcher:
         doc_id) pages by score-order search_after; ``slop`` = ES proximity
         (see ``_phrase_kernel``)."""
         self._maybe_invalidate()
-        plan = _phrase_plan(
-            self.spark, self.out_dir, self.stats, phrase, lookup=self._entries
-        )
+        plan = _phrase_plan(self, phrase)
         if plan is None:
             return []
         phrase_tokens, idf_sum, tbs, distinct = plan
@@ -5402,7 +5321,7 @@ class Searcher:
             return [
                 (r.doc_id, r.score)
                 for r in phrase_topk(
-                    self.spark, self.out_dir, phrase, k, after=after, slop=slop
+                    self.spark, self, phrase, k, after=after, slop=slop
                 ).collect()
             ]
         kern = _phrase_kernel(phrase_tokens, idf_sum, k, after=after, slop=slop)
@@ -5428,11 +5347,10 @@ class Searcher:
         scan — the one O(terms) stat, a distributed agg once the
         dictionary outgrows the driver). Zero Spark jobs."""
         from ..textutils import analyze_with_slots
-        from .build import lookup_docs
 
         self._maybe_invalidate()
-        row = lookup_docs(self.out_dir, [int(doc_id)]).get(int(doc_id))
-        if row is None or self._is_dead(doc_id, row):
+        row = self._live_docs([int(doc_id)]).get(int(doc_id))
+        if row is None:
             return {"_id": int(doc_id), "found": False}
         if row.get("text") is None:
             raise ValueError(
@@ -5476,17 +5394,16 @@ class Searcher:
 
         import pyarrow.parquet as pq
 
-        committed = _committed(self.stats)
         total = 0
-        for f in _glob.glob(
-            os.path.join(self.out_dir, "dictionary", "tb=*", "run=*", "*.parquet")
-        ):
-            run = f.split("run=")[-1].split(os.sep)[0]
-            if committed is not None and run not in committed:
-                continue
-            tbl = pq.read_table(f, columns=["df"])
-            s = tbl["df"].to_pandas().sum()
-            total += int(s) if len(tbl) else 0
+        for r in self._roots:
+            committed = _committed(r.stats)
+            for f in _glob.glob(
+                os.path.join(r.dir, "dictionary", "tb=*", "run=*", "*.parquet")
+            ):
+                if committed is not None and _run_of(f) not in committed:
+                    continue
+                tbl = pq.read_table(f, columns=["df"])
+                total += int(tbl["df"].to_pandas().sum()) if len(tbl) else 0
         self._sdf_cache = total
         return total
 
@@ -5502,10 +5419,7 @@ class Searcher:
         reads — zero Spark jobs (semantics in ``_span_kernel``; clauses
         may be span_or lists; first_end/exclude = span_first/span_not)."""
         self._maybe_invalidate()
-        plan = _span_plan(
-            self.spark, self.out_dir, self.stats, clauses,
-            lookup=self._entries, exclude_texts=exclude,
-        )
+        plan = _span_plan(self, clauses, exclude_texts=exclude)
         if plan is None:
             return []
         kept, ex_present, idf_sum, tbs = plan
@@ -5517,7 +5431,7 @@ class Searcher:
             return [
                 (r.doc_id, r.score)
                 for r in span_near_topk(
-                    self.spark, self.out_dir, clauses, k,
+                    self.spark, self, clauses, k,
                     slop=slop, in_order=in_order, after=after,
                     first_end=first_end, exclude=exclude, pre=pre, post=post,
                 ).collect()
@@ -5541,38 +5455,56 @@ class Searcher:
         )
         return [(int(r.doc_id), float(r.score)) for r in allr.head(k).itertuples()]
 
-    def prefix_rows(
-        self, prefix: str, k: int = 10, max_expansions: int = 50
+    def expand_terms(
+        self, kind: str, value: str, *,
+        fuzziness: int = 1, prefix_length: int = 1, max_expansions: int = 50,
+    ) -> list[str]:
+        """prefix/wildcard/regexp/fuzzy expansion over every root: the
+        candidates' df sums across roots, then the ES df-desc ranking
+        applies once (``expansion_candidates``)."""
+        value = value.lower()
+        return _rank_expansions(
+            expansion_candidates(
+                self._dirs, kind, value,
+                fuzziness=fuzziness, prefix_length=prefix_length,
+            ),
+            max_expansions, value,
+        )
+
+    def expansion_rows(
+        self, kind: str, value: str, k: int = 10, *,
+        fuzziness: int = 1, prefix_length: int = 1, max_expansions: int = 50,
     ) -> list[tuple[int, float]]:
-        """ES prefix-query analogue: expand the prefix to its
-        highest-df terms (≤ max_expansions) and score them as a SHOULD
-        bag."""
-        terms = expand_prefix(self.out_dir, prefix, max_expansions)
+        """ES prefix/wildcard/regexp/fuzzy query: the expansion
+        (``expand_terms``) scored as a SHOULD bag."""
+        terms = self.expand_terms(
+            kind, value, fuzziness=fuzziness, prefix_length=prefix_length,
+            max_expansions=max_expansions,
+        )
         if not terms:
             return []
         return self.search_rows(" ".join(terms), k)
+
+    def prefix_rows(
+        self, prefix: str, k: int = 10, max_expansions: int = 50
+    ) -> list[tuple[int, float]]:
+        """ES prefix-query analogue: the prefix's highest-df terms (≤
+        max_expansions) as a SHOULD bag."""
+        return self.expansion_rows("prefix", prefix, k, max_expansions=max_expansions)
 
     def wildcard_rows(
         self, pattern: str, k: int = 10, max_expansions: int = 50
     ) -> list[tuple[int, float]]:
-        """ES wildcard-query analogue (``*``/``?``): expand against the
-        sorted term_index (literal prefix range-pruned) and score the
-        expansion as a SHOULD bag."""
-        terms = expand_wildcard(self.out_dir, pattern, max_expansions)
-        if not terms:
-            return []
-        return self.search_rows(" ".join(terms), k)
+        """ES wildcard-query analogue (``*``/``?``; the literal prefix
+        range-prunes the sorted term_index)."""
+        return self.expansion_rows("wildcard", pattern, k, max_expansions=max_expansions)
 
     def regexp_rows(
         self, pattern: str, k: int = 10, max_expansions: int = 50
     ) -> list[tuple[int, float]]:
-        """ES regexp-query analogue: expand against the sorted term_index
-        (literal-prefix range-pruned) and score the expansion as a SHOULD
-        bag."""
-        terms = expand_regexp(self.out_dir, pattern, max_expansions)
-        if not terms:
-            return []
-        return self.search_rows(" ".join(terms), k)
+        """ES regexp-query analogue (the literal prefix range-prunes the
+        sorted term_index)."""
+        return self.expansion_rows("regexp", pattern, k, max_expansions=max_expansions)
 
     def term_suggest(self, text: str, **kw) -> list[dict]:
         """ES term suggester ("did you mean") over this index — see
@@ -5607,10 +5539,8 @@ class Searcher:
             "matched": False, "value": 0.0, "description": why, "details": [],
         }
         plan = _bool_plan(
-            self.spark, self.out_dir, self.stats, query, must, must_not,
-            lookup=self._entries, filters=filters, ranges=ranges,
-            range_expand=self._range_expand, or_groups=or_groups,
-            not_atoms=not_atoms,
+            self, query, must, must_not, filters=filters, ranges=ranges,
+            or_groups=or_groups, not_atoms=not_atoms,
         )
         if plan is None:
             return nomatch("no query term is indexed")
@@ -5688,9 +5618,7 @@ class Searcher:
         freq-mode phrase kernel over pruned local block reads (zero Spark
         jobs warm). Needs an index built with positions=True."""
         self._maybe_invalidate()
-        plan = _phrase_plan(
-            self.spark, self.out_dir, self.stats, phrase, lookup=self._entries
-        )
+        plan = _phrase_plan(self, phrase)
         if plan is None:
             return 0
         phrase_tokens, idf_sum, tbs, distinct = plan
@@ -5701,15 +5629,9 @@ class Searcher:
         blocks = self._local_blocks(tbs, distinct, columns=_BLOCK_COLS + ["poss"])
         if blocks is None:
             # not locally readable — one distributed freq job instead
-            tomb = self._tomb
-            seg = (
-                _seg_scan(self.spark, self.out_dir, self.stats)
-                .where(F.col("tb").isin(tbs) & F.col("term").isin(distinct))
-                .select(*_BLOCK_COLS, "poss", *(["run"] if tomb else []))
-            )
-            func = kern if not tomb else _with_tombstones(kern, tomb)
+            seg = _seg_union(self, tbs, distinct, _BLOCK_COLS + ["poss"])
             local = seg.groupBy("bucket").applyInPandas(
-                func, schema="doc_id long, score double"
+                kern, schema="doc_id long, score double"
             )
             val = local.agg(F.sum("score")).collect()[0][0]
             return int(val or 0)
@@ -5828,12 +5750,10 @@ class Searcher:
     ) -> list[tuple[int, float]]:
         """ES fuzzy-query analogue: edit-distance-≤ fuzziness expansion
         (shared prefix_length chars), scored as a SHOULD bag."""
-        terms = expand_fuzzy(
-            self.out_dir, term, fuzziness, prefix_length, max_expansions
+        return self.expansion_rows(
+            "fuzzy", term, k, fuzziness=fuzziness, prefix_length=prefix_length,
+            max_expansions=max_expansions,
         )
-        if not terms:
-            return []
-        return self.search_rows(" ".join(terms), k)
 
     def multi_match_rows(
         self, query: str, fields: list[str], k: int = 10, *,
@@ -5845,17 +5765,14 @@ class Searcher:
         one-pass sum with per-field norms (most_fields). Zero Spark jobs on
         a locally readable index."""
         self._maybe_invalidate()
-        plan = _multi_match_plan(
-            self.spark, self.out_dir, self.stats, query, fields, lookup=self._entries,
-            field_avg=lambda f: field_avgdl(self._dirs, f, self.stats),
-        )
+        plan = _multi_match_plan(self, query, fields)
         if plan is None:
             return []
         per_field, tbs, scan_terms = plan
         blocks = self._local_blocks(tbs, scan_terms)
         if blocks is None:
             rows = multi_match_topk(
-                self.spark, self.out_dir, query, fields, k, type=type, prune=prune
+                self.spark, self, query, fields, k, type=type, prune=prune
             ).collect()
             return [(r.doc_id, r.score) for r in rows]
         if type == "most_fields":
@@ -5901,7 +5818,7 @@ class Searcher:
         distributed path regardless of mode — the serving fast path only
         covers relevance ranking, where per-bucket top-k bounds the work."""
         df = search_sorted(
-            self.spark, self.out_dir, query, sort, k,
+            self.spark, self, query, sort, k,
             must=must, must_not=must_not, filters=filters, ranges=ranges,
             search_after=search_after, or_groups=or_groups, not_atoms=not_atoms,
         )
@@ -5982,15 +5899,13 @@ class Searcher:
         case-insensitive — the analyzer's tokenization rule)."""
         import re as _re
 
-        from .build import lookup_docs
-
         terms = sorted(set(tokenize(query)) | (set(tokenize(must)) if must else set()))
         rx = _re.compile(
             r"(?<![a-z0-9])(" + "|".join(_re.escape(t) for t in terms) + r")(?![a-z0-9])",
             _re.IGNORECASE,
         )
         rows = self.search_rows(query, k, must=must, must_not=must_not)
-        meta = lookup_docs(self.out_dir, [d for d, _ in rows])
+        meta = self._lookup_docs([d for d, _ in rows])
         out = []
         for d, s in rows:
             row = {"doc_id": d, "score": s}
@@ -6026,18 +5941,16 @@ class Searcher:
         ordering, exact over any hit count)."""
         from collections import Counter
 
-        from .build import lookup_docs
-
         rows = self.search_rows(query, max_hits, must=must, must_not=must_not)
         if len(rows) >= max_hits:
             return [
                 (r["facet"], int(r["n"]))
                 for r in facet_counts_spark(
-                    self.spark, self.out_dir, facet_col, query,
+                    self.spark, self, facet_col, query,
                     must=must, must_not=must_not, k=k,
                 ).collect()
             ]
-        meta = lookup_docs(self.out_dir, [d for d, _ in rows])
+        meta = self._lookup_docs([d for d, _ in rows])
         c = Counter(
             meta[d][facet_col] for d, _ in rows if d in meta and facet_col in meta[d]
         )
@@ -6072,16 +5985,14 @@ class Searcher:
                 or_groups=or_groups, not_atoms=not_atoms,
             )
             if len(rows) < max_hits:
-                from .build import lookup_docs
-
-                meta = lookup_docs(self.out_dir, [d for d, _ in rows])
+                meta = self._lookup_docs([d for d, _ in rows])
                 pdf = pd.DataFrame(list(meta.values())) if meta else pd.DataFrame()
                 return _aggs_pandas(pdf, aggs, bg_counts=self._background_counts)
         # filter-only requests have no scoring terms for the kernel to
         # enumerate — candidates come from the keyword postings on the
         # distributed path
         out = search_aggs(
-            self.spark, self.out_dir, aggs, query, must=must,
+            self.spark, self, aggs, query, must=must,
             must_not=must_not, min_should=min_should,
             filters=filters, ranges=ranges, or_groups=or_groups,
             not_atoms=not_atoms,
@@ -6095,42 +6006,17 @@ class Searcher:
         filters: dict | None = None, ranges: dict | None = None,
         or_groups: list | None = None, not_atoms: list | None = None,
     ) -> DataFrame:
-        self._maybe_invalidate()
-        plan = _bool_plan(
-            self.spark, self.out_dir, self.stats, query, must, must_not,
-            lookup=self._entries, filters=filters, ranges=ranges,
-            range_expand=self._range_expand, or_groups=or_groups,
-            not_atoms=not_atoms,
+        """``search_rows`` as a (doc_id, score) DataFrame; ``mode='spark'``
+        returns the distributed ``bm25_topk`` plan over this handle."""
+        kw = dict(
+            must=must, must_not=must_not, min_should=min_should, filters=filters,
+            ranges=ranges, or_groups=or_groups, not_atoms=not_atoms,
         )
-        if plan is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        term_idf, must_terms, not_terms, tbs, scan_terms, should_present, fgroups = plan
-        if min_should > len(should_present):
-            return self.spark.createDataFrame([], "doc_id long, score double")
-
-        if self.mode in ("auto", "local"):
-            blocks = self._local_blocks(tbs, scan_terms)
-            if blocks is not None:
-                rows = _score_local(
-                    blocks, term_idf, k, self.stats, prune,
-                    must_terms=must_terms, not_terms=not_terms,
-                    max_candidates=self.max_candidates,
-                    should_terms=should_present, min_should=min_should,
-                    filter_groups=fgroups,
-                )
-                return self.spark.createDataFrame(rows, "doc_id long, score double")
-
-        seg = (
-            _seg_scan(self.spark, self.out_dir, self.stats)
-            .where(F.col("tb").isin(tbs) & F.col("term").isin(scan_terms))
-            .select(*_BLOCK_COLS, *(["run"] if self._tomb else []))
+        if self.mode == "spark":
+            return bm25_topk(
+                self.spark, self, query, k, prune,
+                max_candidates=self.max_candidates, **kw,
+            )
+        return self.spark.createDataFrame(
+            self.search_rows(query, k, prune, **kw), "doc_id long, score double"
         )
-        kern = _score_kernel(
-            term_idf, k, prune=prune, must_terms=must_terms, not_terms=not_terms,
-            should_terms=should_present, min_should=min_should, filter_groups=fgroups,
-        )
-        kern.k1, kern.b, kern.avgdl = self.stats["k1"], self.stats["b"], self.stats["avgdl"]
-        kern.max_candidates = self.max_candidates
-        func = kern if not self._tomb else _with_tombstones(kern, self._tomb)
-        local = seg.groupBy("bucket").applyInPandas(func, schema="doc_id long, score double")
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -9,6 +9,11 @@
         [--fields "title^2,text" [--mm-type most_fields]]
         [--mlt <doc_id|raw text>] [--sort rank:desc,tag:asc]
         [--queries-file conveyorbelt_spark/queries.json]
+        [--body request.json] [--resolve]
+
+With --daily, --index is a daily-index root and every option is served
+from the window of day indexes that --from/--to selects; --body goes
+through ``dsl.search_body_daily``.
 """
 
 from __future__ import annotations
@@ -73,6 +78,8 @@ def main() -> None:
     sys.path.insert(0, ".")
     from conveyorbelt_spark.index.query import Searcher, bm25_topk
 
+    # the handle every branch serves from: one index, or the window of day
+    # indexes --from/--to selects (None when it selects no day)
     if args.daily:
         import datetime as dt
 
@@ -84,48 +91,44 @@ def main() -> None:
                 dt.datetime.fromisoformat(args.from_ts) if args.from_ts else None,
                 dt.datetime.fromisoformat(args.to_ts) if args.to_ts else None,
             )
-        ds = DailySearcher(spark, args.index)
-        rows = (
-            ds.phrase_rows(args.phrase, args.k, time_range=tr)
-            if args.phrase
-            else ds.search_rows(
-                args.query, args.k, time_range=tr,
-                must=args.must, must_not=args.must_not,
-                filters=filters, ranges=ranges,
-            )
+        s = DailySearcher(spark, args.index)._window(tr)
+    else:
+        s = Searcher(spark, args.index)
+
+    if args.body:
+        from conveyorbelt_spark.index.dsl import search_body, search_body_daily
+
+        with open(args.body) as f:
+            body = json.load(f)
+        resp = (
+            search_body_daily(spark, args.index, body, time_range=tr)
+            if args.daily else search_body(spark, args.index, body, searcher=s)
         )
-        for d, sc in rows:
-            print(f"{d}\t{sc}")
+        print(json.dumps(resp, default=str))
         return
+    if s is None:
+        return  # the window selects no day: no hits
 
     if args.facet:
         from conveyorbelt_spark.index.query import facet_counts_spark
 
         for r in facet_counts_spark(
-            spark, args.index, args.facet, args.query,
+            spark, s, args.facet, args.query,
             must=args.must, must_not=args.must_not, k=args.k,
             filters=filters, ranges=ranges,
         ).collect():
             print(f"{r['facet']}\t{r['n']}")
         return
 
-    if args.body:
-        from conveyorbelt_spark.index.dsl import search_body
-
-        with open(args.body) as f:
-            body = json.load(f)
-        print(json.dumps(search_body(spark, args.index, body), default=str))
-        return
-
     if args.mlt:
         like = int(args.mlt) if args.mlt.isdigit() else args.mlt
-        for d, sc in Searcher(spark, args.index).more_like_this(like, args.k):
+        for d, sc in s.more_like_this(like, args.k):
             print(f"{d}\t{sc}")
         return
 
     if args.fields:
         fields = [f.strip() for f in args.fields.split(",") if f.strip()]
-        rows = Searcher(spark, args.index).multi_match_rows(
+        rows = s.multi_match_rows(
             args.query, fields, args.k, type=args.mm_type
         )
         for d, sc in rows:
@@ -137,7 +140,7 @@ def main() -> None:
         for part in args.sort.split(","):
             f, _, d = part.partition(":")
             spec.append((f.strip(), (d or "asc").strip()))
-        for row in Searcher(spark, args.index).sorted_rows(
+        for row in s.sorted_rows(
             args.query, spec, args.k, must=args.must, must_not=args.must_not,
             filters=filters, ranges=ranges,
         ):
@@ -147,37 +150,36 @@ def main() -> None:
     if args.queries_file:
         with open(args.queries_file) as f:
             cases = json.load(f)
-        searcher = Searcher(spark, args.index)
         for case in cases:
             t0 = time.time()
-            rows = searcher.search(case["q"], case.get("k", args.k)).collect()
+            rows = s.search(case["q"], case.get("k", args.k)).collect()
             print(json.dumps({
                 "q": case["q"], "k": case.get("k", args.k),
                 "sec": round(time.time() - t0, 4),
                 "hits": [(r.doc_id, r.score) for r in rows],
             }))
     elif args.phrase:
-        for d, sc in Searcher(spark, args.index).phrase_rows(args.phrase, args.k):
+        for d, sc in s.phrase_rows(args.phrase, args.k):
             print(f"{d}\t{sc}")
     elif args.prefix:
-        for d, sc in Searcher(spark, args.index).prefix_rows(args.prefix, args.k):
+        for d, sc in s.prefix_rows(args.prefix, args.k):
             print(f"{d}\t{sc}")
     elif args.wildcard:
-        for d, sc in Searcher(spark, args.index).wildcard_rows(args.wildcard, args.k):
+        for d, sc in s.wildcard_rows(args.wildcard, args.k):
             print(f"{d}\t{sc}")
     elif args.fuzzy:
-        for d, sc in Searcher(spark, args.index).fuzzy_rows(
+        for d, sc in s.fuzzy_rows(
             args.fuzzy, args.k, fuzziness=args.fuzziness
         ):
             print(f"{d}\t{sc}")
     elif args.resolve:
-        for hit in Searcher(spark, args.index).search_docs(
+        for hit in s.search_docs(
             args.query, args.k, must=args.must, must_not=args.must_not
         ):
             print(json.dumps(hit))
     else:
         rows = bm25_topk(
-            spark, args.index, args.query, args.k,
+            spark, s, args.query, args.k,
             must=args.must, must_not=args.must_not, min_should=args.min_should,
             filters=filters, ranges=ranges,
         ).collect()

@@ -66,7 +66,14 @@ def test_facets_and_index_info(spark, tmp_path_factory):
     want_d = {r.lang: r["count"] for r in want}
     assert dict(facets) == dict(sorted(want_d.items(), key=lambda kv: (-kv[1], kv[0]))[:5])
 
-    info = index_info(spark, out)
+    sc = spark.sparkContext
+    sc.setJobGroup("index-info", "index-info")
+    try:
+        info = index_info(spark, out)
+    finally:
+        sc.setJobGroup(None, None)
+    # a metadata snapshot: the manifest is read on the driver, no Spark job
+    assert len(sc.statusTracker().getJobIdsForGroup("index-info")) == 0
     assert info["stats"]["n_docs"] == 400
     assert info["n_runs"] == 1 and info["total_postings"] > 0
 
