@@ -1004,7 +1004,8 @@ def compact_docstore(spark: SparkSession, out_dir: str, *,
 
 
 def lookup_docs(
-    out_dir: str, doc_ids: list[int], runs: list[str] | None = None
+    out_dir: str, doc_ids: list[int], runs: list[str] | None = None,
+    stats: dict | None = None,
 ) -> dict[int, dict]:
     """Driver-side pyarrow resolve of doc ids → stored columns, pruned to
     the ids' bucket partitions (zero Spark jobs, serving-path companion to
@@ -1012,13 +1013,15 @@ def lookup_docs(
     docstore run) resolve to the NEWEST run's row — same rule as the
     distributed ``_docstore_scan``. ``runs`` restricts visibility to the
     named docstore runs (a point-in-time snapshot — see ``index.pit``):
-    versions written after the snapshot resolve to the OLD row."""
+    versions written after the snapshot resolve to the OLD row. ``stats``
+    is the caller's stats.json snapshot (a Searcher's), read when None."""
     import pyarrow.dataset as ds
 
     store = os.path.join(out_dir, "docstore")
     if not os.path.isdir(store) or not doc_ids:
         return {}
-    stats = load_stats(out_dir)
+    if stats is None:
+        stats = load_stats(out_dir)
     bits = int(np.log2(stats["n_buckets"]))
     rank = docstore_run_rank(out_dir)
     run_set = None if runs is None else {str(r) for r in runs}

@@ -12,8 +12,10 @@ Two paths:
   rank-identity requirement).
 
 - ``Searcher`` (the serving path): the same plan and kernel on the
-  driver over pyarrow block reads — zero Spark jobs per query — for one
-  index dir or a window of day indexes (``index.daily``).
+  driver — zero Spark jobs per query — for one index dir or a window of
+  day indexes (``index.daily``). The kernel runs ONCE per query over the
+  whole doc range, fed each term's decoded postings over every bucket from
+  a per-term cache; only cache misses read blocks (pyarrow).
 
 Scale: a query touches only the parquet partitions of its terms' hash
 buckets (partition pruning on ``tb``) and only matching ``term`` row groups
@@ -143,7 +145,10 @@ def _lookup_terms(
 
 
 class _TermPostings:
-    """Decoded-on-demand posting blocks of one term within one bucket."""
+    """Decoded-on-demand posting blocks of one term: within one bucket (a
+    Spark kernel task) or over every bucket (the driver). Blocks are ordered
+    by (bucket, blk), ties in read order; buckets are disjoint doc-id
+    ranges, so both shapes score the same."""
 
     __slots__ = (
         "docs", "blk_bounds", "blk_max_tf", "blk_min_dl", "tf_bufs", "dl_bufs",
@@ -151,11 +156,10 @@ class _TermPostings:
     )
 
     def __init__(self, grp: pd.DataFrame):
-        grp = grp.sort_values("blk")
+        grp = grp.sort_values(["bucket", "blk"], kind="stable")
         n_arr = grp["n"].to_numpy()
-        self.docs = np.concatenate(
-            [np.cumsum(varint_decode(bb, int(n))) for bb, n in zip(grp["docs"], n_arr)]
-        ).astype(np.int64)
+        docs = [np.cumsum(varint_decode(bb, int(n))) for bb, n in zip(grp["docs"], n_arr)]
+        self.docs = np.concatenate(docs).astype(np.int64) if docs else np.zeros(0, np.int64)
         ends = np.cumsum(n_arr)
         self.blk_bounds = np.concatenate(([0], ends))
         self.blk_max_tf = grp["max_tf"].to_numpy(dtype=np.float64)
@@ -171,14 +175,20 @@ class _TermPostings:
     def sorted_docs(self) -> np.ndarray:
         """Globally sorted copy of ``docs`` for membership (searchsorted)
         haystacks. ``docs`` itself is sorted only WITHIN each run's blocks:
-        a (term, bucket) group spanning multiple delta runs (base +
-        index_batch deltas with colliding blk numbers) concatenates in blk
-        order and is globally unsorted — binary-searching it directly
-        returns garbage membership."""
+        a term whose bucket spans multiple delta runs (base + index_batch
+        deltas with colliding blk numbers) concatenates in blk order and is
+        globally unsorted — binary-searching it directly returns garbage
+        membership."""
         if self._sorted_docs is None:
             d = self.docs
             self._sorted_docs = d if bool(np.all(d[1:] >= d[:-1])) else np.sort(d)
         return self._sorted_docs
+
+    @property
+    def has_dups(self) -> bool:
+        """A doc re-ingested in a delta run (pre-compaction) posts twice."""
+        d = self.sorted_docs
+        return bool(np.any(d[1:] == d[:-1]))
 
     def positions_for(self, sel_mask: np.ndarray):
         """Positions of the postings selected by ``sel_mask`` (boolean over
@@ -250,9 +260,11 @@ class _TermPostings:
 
 
 class _TpCache:
-    """Byte-accounted LRU over decoded ``_TermPostings`` — the level below
-    the Searcher's block-frame LRU. Decoded postings (int64 numpy arrays)
-    are strictly LARGER than the varint frames they came from, so an
+    """Byte-accounted LRU over decoded ``_TermPostings``, one entry per
+    (term, with_poss) holding that term's blocks over every bucket — the
+    level above the Searcher's block-frame LRU: a warm driver query reads
+    its postings here and never touches a frame. Decoded postings (int64
+    numpy arrays) are strictly LARGER than the varint frames they came from, so an
     entry-count bound leaves real memory unbounded (a ~270-term range
     expansion of stopword-grade terms can hold GBs before a count guard
     trips, then drop everything at once — a latency cliff). Here every
@@ -311,29 +323,30 @@ class _TpCache:
         return len(self._d)
 
 
-def _tp_for(grp: pd.DataFrame, term: str, cache) -> _TermPostings:
-    """Decoded postings for one (term, bucket) frame, memoized in ``cache``
-    when given (serving path: the Searcher owns a ``_TpCache`` and clears
-    it with its other caches on index mutation). Key includes the bucket
-    and whether the frame carries positions — bag and phrase frames
-    differ."""
-    if cache is None:
-        return _TermPostings(grp)
-    key = (
-        int(grp["bucket"].iloc[0]) if "bucket" in grp.columns else -1,
-        term,
-        "poss" in grp.columns,
-    )
+def _tp_for(grp: pd.DataFrame, term: str, cache: _TpCache) -> _TermPostings:
+    """Decoded postings of ``term`` from its block frame, memoized in
+    ``cache`` (the Searcher's, cleared with its other caches on index
+    mutation) under (term, with_poss). ``grp`` must hold ALL of the term's
+    blocks — a Spark task's one-bucket frame or a doc-range slice is never
+    memoized. Bag and phrase frames differ (positions), hence the second
+    key part."""
+    key = (term, "poss" in grp.columns)
     tp = cache.get(key)
     if tp is None:
         tp = _TermPostings(grp)
-        if isinstance(cache, _TpCache):
-            cache.put(key, tp)
-        else:  # plain dict (ad-hoc kernel attr): keep the count guard
-            if len(cache) > 16384:
-                cache.clear()
-            cache[key] = tp
+        cache.put(key, tp)
     return tp
+
+
+def _postings_of(pdf: pd.DataFrame) -> dict[str, _TermPostings]:
+    """The Spark-side kernel adapter: one task's block frame → {term:
+    decoded postings}, the input every kernel core takes."""
+    return {term: _TermPostings(grp) for term, grp in pdf.groupby("term", sort=True)}
+
+
+def _kernel_rows(res: pd.DataFrame) -> list[tuple[int, float]]:
+    """A driver kernel result (already ranked) as [(doc_id, score)]."""
+    return list(zip(res["doc_id"].tolist(), res["score"].tolist()))
 
 
 def _tombs(out_dir: str, stats: dict) -> dict:
@@ -399,6 +412,11 @@ def _seg_union(s: "Searcher", tbs, terms, cols: list[str]) -> DataFrame:
     return reduce(DataFrame.unionByName, parts)
 
 
+# the empty kernel result (read-only: every consumer only reads it)
+_EMPTY_HITS = pd.DataFrame(
+    {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
+)
+
 
 def _topk_idx(scores: np.ndarray, doc_ids: np.ndarray, k: int) -> np.ndarray:
     """Indices of the top-k by (score desc, doc_id asc), DETERMINISTIC at
@@ -444,12 +462,17 @@ def _score_kernel(
     after: tuple[float, int] | None = None,
     slice_mod: tuple[int, int] | None = None,
 ):
-    """Per-bucket kernel: boolean candidate set + block-max WAND pruning +
+    """The BM25 kernel: boolean candidate set + block-max WAND pruning +
     exact rescoring. ES bool-query semantics: ``term_idf`` keys are the
     SCORING terms (should ∪ must); ``must_terms`` restrict candidates to
     docs containing every one; ``not_terms`` exclude docs containing any.
-    Doc-range buckets make per-bucket filtering complete (a doc lives in
-    exactly one bucket).
+
+    One core, two inputs: a Spark task passes one bucket's block frame
+    (``groupBy("bucket").applyInPandas``); the driver passes {term:
+    _TermPostings} resolved over EVERY bucket from the Searcher's tp cache,
+    one call per query. Buckets are disjoint doc-id ranges (a doc lives in
+    exactly one), so filtering is complete in either shape and the top-k
+    of the whole range equals the merge of the per-bucket top-ks.
 
     Phase 1 — θ seed: exact single-term scores (restricted to candidates)
     from the highest-idf present term; θ = its k-th best — a LOWER bound of
@@ -462,14 +485,16 @@ def _score_kernel(
     Results are provably identical to exhaustive scoring.
 
     Memory guard: ``score_bucket.max_candidates`` (attr, default None)
-    bounds the decoded-postings working set. A stopword-grade group on an
-    under-bucketed index (df ~ N_docs/n_buckets postings landing in ONE
-    kernel call) is then scored in doc-id RANGE SLICES: blocks are selected
-    by their (min_doc, max_doc) metadata BEFORE decode, each slice scores
-    only docs in its range (boundary blocks decode twice, docs never score
-    twice), and the per-slice exact top-k merge is exact because slices
-    tile the bucket's id space. Degrades gracefully instead of OOM; proper
-    sizing is still n_buckets ≳ max head-term df / max_candidates.
+    bounds the decoded-postings working set of a FRAME input. A
+    stopword-grade group on an under-bucketed index (df ~ N_docs/n_buckets
+    postings landing in ONE kernel call) is then scored in doc-id RANGE
+    SLICES: blocks are selected by their (min_doc, max_doc) metadata BEFORE
+    decode, each slice scores only docs in its range (boundary blocks
+    decode twice, docs never score twice), and the per-slice exact top-k
+    merge is exact because slices tile the frame's id space. Degrades
+    gracefully instead of OOM; proper sizing is still n_buckets ≳ max
+    head-term df / max_candidates. (The driver hands a frame, not cached
+    postings, whenever the query's dictionary df could pass the cap.)
 
     ``after`` = (score, doc_id) enables SCORE-ORDER search_after (ES deep
     relevance pagination): only docs strictly after that cursor in
@@ -492,45 +517,42 @@ def _score_kernel(
     not_terms = tuple(sorted(not_terms))
     should_terms = tuple(sorted(should_terms))
 
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-        )
+    def score_bucket(src):
+        if isinstance(src, dict):
+            return _score_postings(src)
         cap = getattr(score_bucket, "max_candidates", None)
-        total = int(pdf["n"].sum())
-        if cap and total > cap:
-            import math as _math
-
-            lo_all = int(pdf["min_doc"].min())
-            hi_all = int(pdf["max_doc"].max()) + 1
-            n_slices = int(_math.ceil(total / cap))
-            span = hi_all - lo_all
-            edges = [lo_all + span * i // n_slices for i in range(n_slices)] + [hi_all]
-            outs = []
-            mind = pdf["min_doc"].to_numpy()
-            maxd = pdf["max_doc"].to_numpy()
-            for lo, hi in zip(edges[:-1], edges[1:]):
-                if lo >= hi:
-                    continue
-                sel = (maxd >= lo) & (mind < hi)
-                if not sel.any():
-                    continue
-                part = _score_pdf(pdf[sel], doc_range=(lo, hi))
-                if len(part):
-                    outs.append(part)
-            if not outs:
-                return empty
-            allr = pd.concat(outs, ignore_index=True)
-            allr = allr.sort_values(
-                ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-            )
-            return allr.head(k).reset_index(drop=True)
-        return _score_pdf(pdf)
-
-    def _score_pdf(pdf: pd.DataFrame, doc_range: tuple[int, int] | None = None) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
+        total = int(src["n"].sum())
+        if not cap or total <= cap:
+            return _score_postings(_postings_of(src))
+        lo_all = int(src["min_doc"].min())
+        hi_all = int(src["max_doc"].max()) + 1
+        n_slices = int(math.ceil(total / cap))
+        span = hi_all - lo_all
+        edges = [lo_all + span * i // n_slices for i in range(n_slices)] + [hi_all]
+        outs = []
+        mind = src["min_doc"].to_numpy()
+        maxd = src["max_doc"].to_numpy()
+        for lo, hi in zip(edges[:-1], edges[1:]):
+            if lo >= hi:
+                continue
+            sel = (maxd >= lo) & (mind < hi)
+            if not sel.any():
+                continue
+            part = _score_postings(_postings_of(src[sel]), doc_range=(lo, hi))
+            if len(part):
+                outs.append(part)
+        if not outs:
+            return _EMPTY_HITS
+        allr = pd.concat(outs, ignore_index=True)
+        allr = allr.sort_values(
+            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
         )
+        return allr.head(k).reset_index(drop=True)
+
+    def _score_postings(
+        per_term: dict[str, _TermPostings], doc_range: tuple[int, int] | None = None
+    ) -> pd.DataFrame:
+        empty = _EMPTY_HITS
         k1, b, avgdl = score_bucket.k1, score_bucket.b, score_bucket.avgdl
         abt = getattr(score_bucket, "avgdl_by_term", None)
 
@@ -538,24 +560,16 @@ def _score_kernel(
             # multi-field queries: each field-qualified term normalizes by
             # ITS field's average length (ES per-field BM25 norms)
             return abt.get(t, avgdl) if abt else avgdl
-        # the memo key is (bucket, term) = "ALL of this term's blocks in
-        # this bucket"; the max_candidates slicing path scores block
-        # SUBSETS per doc-range slice, which must not alias the full frame
-        tp_cache = getattr(score_bucket, "tp_cache", None) if doc_range is None else None
-        per_term: dict[str, _TermPostings] = {}
-        for term, grp in pdf.groupby("term", sort=True):
-            tp = _tp_for(grp, term, tp_cache)
-            # incremental indexes may re-ingest a doc in a delta segment —
-            # dedup disables block pruning for that term (block bookkeeping
-            # no longer aligns), so fall back to exhaustive in that case
-            if len(np.unique(tp.docs)) != len(tp.docs):
-                return _exhaustive(
-                    pdf, term_idf, terms_sorted, k, k1, b, avgdl, must_terms, not_terms,
-                    doc_range=doc_range, should_terms=should_terms, min_should=min_should,
-                    filter_groups=filter_groups, avgdl_by_term=abt, after=after,
-                    slice_mod=slice_mod,
-                )
-            per_term[term] = tp
+        # incremental indexes may re-ingest a doc in a delta segment —
+        # dedup disables block pruning (block bookkeeping no longer
+        # aligns), so fall back to exhaustive in that case
+        if any(tp.has_dups for tp in per_term.values()):
+            return _exhaustive(
+                per_term, term_idf, terms_sorted, k, k1, b, avgdl, must_terms, not_terms,
+                doc_range=doc_range, should_terms=should_terms, min_should=min_should,
+                filter_groups=filter_groups, avgdl_by_term=abt, after=after,
+                slice_mod=slice_mod,
+            )
         if not any(t in per_term for t in terms_sorted):
             return empty
 
@@ -576,7 +590,7 @@ def _score_kernel(
         for mt in must_terms:
             tp = per_term.get(mt)
             if tp is None:
-                return empty  # a required term absent in this bucket
+                return empty  # a required term absent from the doc range
             cand = cand[_in_sorted(cand, tp.sorted_docs)]
         if (min_should > 1 or (min_should == 1 and must_terms)) and len(cand):
             # ES minimum_should_match: keep docs matching ≥ m SHOULD terms.
@@ -596,7 +610,7 @@ def _score_kernel(
                 cand = cand[~_in_sorted(cand, tp.sorted_docs)]
         # ES filter context: each group is an OR over keyword terms, all
         # groups AND. Keyword postings live in the same doc-range bucket as
-        # the doc's text postings, so per-bucket filtering is complete.
+        # the doc's text postings, so filtering a bucket alone is complete.
         for grp in filter_groups:
             if not len(cand):
                 return empty
@@ -608,7 +622,7 @@ def _score_kernel(
                     present = True
                     keep |= _in_sorted(cand, tp.sorted_docs)
             if not present:
-                return empty  # no doc in this bucket carries any group value
+                return empty  # no doc in the range carries any group value
             cand = cand[keep]
         if not len(cand):
             return empty
@@ -677,19 +691,18 @@ def _score_kernel(
 
 
 def _exhaustive(
-    pdf, term_idf, terms_sorted, k, k1, b, avgdl, must_terms=(), not_terms=(),
+    postings, term_idf, terms_sorted, k, k1, b, avgdl, must_terms=(), not_terms=(),
     doc_range=None, should_terms=(), min_should=0, filter_groups=(),
     avgdl_by_term=None, after=None, slice_mod=None,
 ) -> pd.DataFrame:
-    """Fallback exhaustive scorer (handles duplicate doc_ids from deltas),
-    with the same boolean candidate semantics as the pruned kernel."""
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-    )
+    """Fallback exhaustive scorer (handles duplicate doc_ids from deltas:
+    keep-first in block order), with the same boolean candidate semantics
+    as the pruned kernel, over the same {term: _TermPostings} input."""
+    empty = _EMPTY_HITS
     per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     sorted_docs: dict[str, np.ndarray] = {}
-    for term, grp in pdf.groupby("term", sort=True):
-        tp = _TermPostings(grp)
+    for term in sorted(postings):
+        tp = postings[term]
         w = tp.weights(
             k1, b, avgdl_by_term.get(term, avgdl) if avgdl_by_term else avgdl
         )
@@ -758,6 +771,7 @@ _BLOCK_COLS = [
     "bucket", "term", "blk", "n", "min_doc", "max_doc",
     "max_tf", "min_dl", "docs", "tfs", "dls",
 ]
+_POS_COLS = _BLOCK_COLS + ["poss"]
 
 
 def _read_blocks_local(
@@ -811,21 +825,19 @@ def _read_blocks_local(
 
 
 def _score_local(
-    blocks: pd.DataFrame, term_idf: dict[str, float], k: int, stats: dict, prune: bool,
+    src, term_idf: dict[str, float], k: int, stats: dict, prune: bool,
     must_terms: tuple[str, ...] = (), not_terms: tuple[str, ...] = (),
     max_candidates: int | None = None,
     should_terms: tuple[str, ...] = (), min_should: int = 0,
     filter_groups: tuple[tuple[str, ...], ...] = (),
-    tp_cache: dict | None = None,
     after: tuple[float, int] | None = None,
     slice_mod: tuple[int, int] | None = None,
+    avgdl_by_term: dict[str, float] | None = None,
 ) -> list[tuple[int, float]]:
-    """Run the SAME per-bucket scoring kernel in-driver and merge: buckets
-    are disjoint docID ranges, so concat of per-bucket top-k + one global
-    sort is exact. ``tp_cache`` (serving path only) memoizes decoded
-    _TermPostings per (bucket, term) across queries — the Searcher owns and
-    mtime-invalidates it; wide filter expansions otherwise re-decode
-    hundreds of keyword terms' blocks every request."""
+    """Run the scoring kernel in-driver, ONE call over the whole doc range:
+    ``src`` is the Searcher's {term: _TermPostings} (from its tp cache,
+    ``Searcher._kernel_input``) or, when ``max_candidates`` may bind, the
+    block frame of every bucket, which the kernel slices by doc range."""
     kern = _score_kernel(
         term_idf, k, prune=prune, must_terms=must_terms, not_terms=not_terms,
         should_terms=should_terms, min_should=min_should, filter_groups=filter_groups,
@@ -833,15 +845,8 @@ def _score_local(
     )
     kern.k1, kern.b, kern.avgdl = stats["k1"], stats["b"], stats["avgdl"]
     kern.max_candidates = max_candidates
-    if tp_cache is not None:
-        kern.tp_cache = tp_cache
-    outs = [kern(grp) for _, grp in blocks.groupby("bucket", sort=True)]
-    outs = [o for o in outs if len(o)]
-    if not outs:
-        return []
-    allr = pd.concat(outs, ignore_index=True)
-    allr = allr.sort_values(["score", "doc_id"], ascending=[False, True], kind="mergesort")
-    return [(int(r.doc_id), float(r.score)) for r in allr.head(k).itertuples()]
+    kern.avgdl_by_term = avgdl_by_term
+    return _kernel_rows(kern(src))
 
 
 MAX_RANGE_EXPANSIONS = 4096  # range filters expand to ≤ this many keyword terms
@@ -1212,12 +1217,25 @@ def multi_match_topk(
 _POS_KEY_SHIFT = 33  # doc-index key space above the position bits
 
 
+def _mark_dups(tp: _TermPostings) -> None:
+    """Delta-duplicate docs (re-ingested, pre-compaction) for the positional
+    kernels: keep the first occurrence in block order — the
+    builder/compaction keep-first rule. Memoized on ``tp``."""
+    if tp._dedup_mask is None and tp.has_dups:
+        _, first_idx = np.unique(tp.docs, return_index=True)
+        keep = np.zeros(len(tp.docs), dtype=bool)
+        keep[first_idx] = True
+        tp._dedup_mask = keep
+
+
 def _phrase_kernel(
     phrase_tokens: list[tuple[str, int]], idf_sum: float, k: int,
     after: tuple[float, int] | None = None, slop: int = 0,
     freqs: bool = False,
 ):
-    """Per-bucket phrase scorer (Lucene PhraseQuery semantics, pinned):
+    """Phrase scorer (Lucene PhraseQuery semantics, pinned) over one
+    bucket's block frame (Spark task) or the driver's {term:
+    _TermPostings} over every bucket (one call per query):
     candidates = docs containing every distinct phrase term; a hit needs a
     start position p with the token of slot s at p+s for every (token, s);
     tf := phraseFreq (the number of such starts); score = (Σ idf over
@@ -1240,23 +1258,12 @@ def _phrase_kernel(
     slop=1 — the ES-documented thresholds."""
     distinct_terms = sorted({t for t, _ in phrase_tokens})
 
-    def phrase_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-        )
+    def phrase_bucket(src):
+        empty = _EMPTY_HITS
         k1, b, avgdl = phrase_bucket.k1, phrase_bucket.b, phrase_bucket.avgdl
-        tp_cache = getattr(phrase_bucket, "tp_cache", None)
-        per_term: dict[str, _TermPostings] = {}
-        for term, grp in pdf.groupby("term", sort=True):
-            tp = _tp_for(grp, term, tp_cache)
-            if len(np.unique(tp.docs)) != len(tp.docs):
-                # delta-duplicate doc (re-ingested, pre-compaction): keep
-                # the first occurrence — the builder/compaction keep-first rule
-                uniq, first_idx = np.unique(tp.docs, return_index=True)
-                keep = np.zeros(len(tp.docs), dtype=bool)
-                keep[first_idx] = True
-                tp._dedup_mask = keep
-            per_term[term] = tp
+        per_term = src if isinstance(src, dict) else _postings_of(src)
+        for tp in per_term.values():
+            _mark_dups(tp)
         if any(t not in per_term for t in distinct_terms):
             return empty
 
@@ -1389,7 +1396,7 @@ def phrase_topk(
     if plan is None:
         return empty
     phrase_tokens, idf_sum, tbs, distinct = plan
-    seg = _seg_union(s, tbs, distinct, _BLOCK_COLS + ["poss"])
+    seg = _seg_union(s, tbs, distinct, _POS_COLS)
     kern = _phrase_kernel(phrase_tokens, idf_sum, k, after=after, slop=slop)
     kern.k1, kern.b, kern.avgdl = s.stats["k1"], s.stats["b"], s.stats["avgdl"]
     local = seg.groupBy("bucket").applyInPandas(kern, schema="doc_id long, score double")
@@ -1410,7 +1417,7 @@ def phrase_doc_ids(
     if plan is None:
         return empty
     phrase_tokens, idf_sum, tbs, distinct = plan
-    seg = _seg_union(s, tbs, distinct, _BLOCK_COLS + ["poss"])
+    seg = _seg_union(s, tbs, distinct, _POS_COLS)
     kern = _phrase_kernel(phrase_tokens, idf_sum, None, slop=slop)
     kern.k1, kern.b, kern.avgdl = s.stats["k1"], s.stats["b"], s.stats["avgdl"]
     return (
@@ -1426,7 +1433,8 @@ def _span_kernel(
     first_end: int | None = None,
     exclude: tuple[tuple[str, ...], int, int] | None = None,
 ):
-    """Per-bucket span_near scorer over the positional postings (Lucene
+    """span_near scorer over the positional postings (one bucket's frame or
+    the driver's {term: _TermPostings}, as ``_phrase_kernel``) (Lucene
     SpanNearQuery, documented simplification for SINGLE-TERM clauses —
     the reference's ES indexes accept these bodies verbatim,
     ElasticsearchClient.cs:31-135): candidates = docs containing every
@@ -1467,26 +1475,17 @@ def _span_kernel(
     ex_terms: tuple[str, ...] = tuple(exclude[0]) if exclude else ()
     W = len(clauses) - 1 + slop
 
-    def span_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-        )
+    def span_bucket(src):
+        empty = _EMPTY_HITS
         k1, b, avgdl = span_bucket.k1, span_bucket.b, span_bucket.avgdl
-        tp_cache = getattr(span_bucket, "tp_cache", None)
-        per_term: dict[str, _TermPostings] = {}
-        for term, grp in pdf.groupby("term", sort=True):
-            tp = _tp_for(grp, term, tp_cache)
-            if len(np.unique(tp.docs)) != len(tp.docs):
-                uniq, first_idx = np.unique(tp.docs, return_index=True)
-                keep = np.zeros(len(tp.docs), dtype=bool)
-                keep[first_idx] = True
-                tp._dedup_mask = keep
-            per_term[term] = tp
+        per_term = src if isinstance(src, dict) else _postings_of(src)
+        for tp in per_term.values():
+            _mark_dups(tp)
         present_clauses: list[tuple[str, ...]] = []
         for cl in clauses:
             members = tuple(t for t in cl if t in per_term)
             if not members:
-                return empty  # no member indexed in this bucket
+                return empty  # no member indexed in the doc range
             present_clauses.append(members)
         cand = None
         for cl in present_clauses:
@@ -1652,7 +1651,7 @@ def span_near_topk(
         return empty
     kept, ex_present, idf_sum, tbs = plan
     scan_terms = sorted({t for cl in kept for t in cl} | set(ex_present))
-    seg = _seg_union(s, tbs, scan_terms, _BLOCK_COLS + ["poss"])
+    seg = _seg_union(s, tbs, scan_terms, _POS_COLS)
     kern = _span_kernel(
         kept, slop, in_order, idf_sum, k, after=after, first_end=first_end,
         exclude=(ex_present, pre, post) if exclude is not None else None,
@@ -1680,7 +1679,7 @@ def span_near_doc_ids(
         return empty
     kept, ex_present, idf_sum, tbs = plan
     scan_terms = sorted({t for cl in kept for t in cl} | set(ex_present))
-    seg = _seg_union(s, tbs, scan_terms, _BLOCK_COLS + ["poss"])
+    seg = _seg_union(s, tbs, scan_terms, _POS_COLS)
     kern = _span_kernel(
         kept, slop, in_order, idf_sum, None, first_end=first_end,
         exclude=(ex_present, pre, post) if exclude is not None else None,
@@ -5023,10 +5022,13 @@ class Searcher:
         # paths re-probe the term_index sidecar otherwise (mtime-invalidated
         # with everything else)
         self._range_cache: dict[tuple[str, str], list[str]] = {}
-        # (bucket, term, with_poss) -> decoded _TermPostings (serving
-        # path): byte-accounted LRU with its own sibling budget — decoded
-        # int64 arrays outweigh the varint frames the block LRU accounts
+        # (term, with_poss) -> decoded _TermPostings over every bucket
+        # (the driver kernels' input, one per query): byte-accounted LRU
+        # with its own sibling budget — decoded int64 arrays outweigh the
+        # varint frames the block LRU accounts; only its misses read frames
         self._tp_cache = _TpCache(self.cache_bytes)
+        # Σ doc_freq over the committed dictionary (termvectors)
+        self._sdf_cache: int | None = None
         # field -> (value_counts over the WHOLE docstore, total rows):
         # the significant_terms background, one pyarrow column read per
         # field per stats snapshot (mtime-invalidated like the rest)
@@ -5065,7 +5067,7 @@ class Searcher:
         meta: dict[int, dict] = {}
         missing = list(doc_ids)
         for r in self._roots:
-            meta.update(lookup_docs(r.dir, missing, runs=runs))
+            meta.update(lookup_docs(r.dir, missing, runs=runs, stats=r.stats))
             missing = [d for d in missing if d not in meta]
             if not missing:
                 break
@@ -5082,7 +5084,7 @@ class Searcher:
         live: dict[int, dict] = {}
         missing = sorted({int(d) for d in doc_ids})
         for r in self._roots:
-            rows = lookup_docs(r.dir, missing)
+            rows = lookup_docs(r.dir, missing, stats=r.stats)
             dead = dead_lookup_ids(r.dir, rows, r.stats, tomb=r.tomb)
             live.update((d, row) for d, row in rows.items() if d not in dead)
             missing = [d for d in missing if d not in rows]
@@ -5152,8 +5154,10 @@ class Searcher:
 
     def _local_blocks(self, tbs, scan_terms, columns=None):
         """Pruned local block read with the delete snapshot applied and a
-        term-keyed LRU over the decoded block frames: repeat terms skip the
-        parquet read entirely (head terms dominate real query logs)."""
+        term-keyed LRU over the block frames: repeat terms skip the parquet
+        read entirely (head terms dominate real query logs). Driver kernels
+        reach it only for tp-cache misses (``_postings``) or a frame the
+        ``max_candidates`` guard slices (``_kernel_input``)."""
         with_poss = bool(columns) and "poss" in (columns or [])
         cached: dict[str, pd.DataFrame] = {}
         missing: list[str] = []
@@ -5205,6 +5209,36 @@ class Searcher:
                 return empty_cached.iloc[0:0]
             return pd.DataFrame(columns=list(columns or _BLOCK_COLS))
         return pd.concat(frames, ignore_index=True)
+
+    def _postings(
+        self, tbs, terms: list[str], columns=None
+    ) -> dict[str, _TermPostings] | None:
+        """{term: decoded postings over every bucket and root} — what a
+        driver kernel takes. Warm terms come from the tp cache and touch no
+        frame; misses read their frames in one ``_local_blocks`` call and
+        decode once per term. Terms with no live posting drop out. None
+        when the index is not locally readable."""
+        with_poss = bool(columns) and "poss" in columns
+        out = {t: self._tp_cache.get((t, with_poss)) for t in terms}
+        missing = [t for t, tp in out.items() if tp is None]
+        if missing:
+            blocks = self._local_blocks(tbs, missing, columns)
+            if blocks is None:
+                return None
+            by_term = {t: g for t, g in blocks.groupby("term", sort=False)}
+            for t in missing:
+                out[t] = _tp_for(by_term.get(t, blocks.iloc[0:0]), t, self._tp_cache)
+        return {t: tp for t, tp in out.items() if len(tp.docs)}
+
+    def _kernel_input(self, tbs, terms: list[str]):
+        """The scoring kernel's driver input: cached postings, or the block
+        frame when ``max_candidates`` may bind (Σ dictionary df bounds the
+        live postings), so the kernel can slice it by doc range without
+        decoding whole terms."""
+        cap = self.max_candidates
+        if cap and sum(int(e["df"]) for e in self._entries(terms)) > cap:
+            return self._local_blocks(tbs, terms)
+        return self._postings(tbs, terms)
 
     def _entries(self, terms: list[str]) -> list[dict]:
         missing = [t for t in terms if t not in self._term_cache]
@@ -5263,15 +5297,14 @@ class Searcher:
         if min_should > len(should_present):
             return []
         if self.mode in ("auto", "local"):
-            blocks = self._local_blocks(tbs, scan_terms)
-            if blocks is not None:
+            src = self._kernel_input(tbs, scan_terms)
+            if src is not None:
                 return _score_local(
-                    blocks, term_idf, k, self.stats, prune,
+                    src, term_idf, k, self.stats, prune,
                     must_terms=must_terms, not_terms=not_terms,
                     max_candidates=self.max_candidates,
                     should_terms=should_present, min_should=min_should,
-                    filter_groups=fgroups, tp_cache=self._tp_cache,
-                    after=after, slice_mod=slice_mod,
+                    filter_groups=fgroups, after=after, slice_mod=slice_mod,
                 )
         return [
             (r.doc_id, r.score)
@@ -5307,8 +5340,8 @@ class Searcher:
         after: tuple[float, int] | None = None, slop: int = 0,
     ) -> list[tuple[int, float]]:
         """Serving-path phrase search over a positional index: the same
-        per-bucket phrase kernel as ``phrase_topk``, run on the driver with
-        pruned pyarrow block reads — zero Spark jobs. ``after`` = (score,
+        phrase kernel as ``phrase_topk``, called once on the driver over
+        the cached postings — zero Spark jobs. ``after`` = (score,
         doc_id) pages by score-order search_after; ``slop`` = ES proximity
         (see ``_phrase_kernel``)."""
         self._maybe_invalidate()
@@ -5316,8 +5349,8 @@ class Searcher:
         if plan is None:
             return []
         phrase_tokens, idf_sum, tbs, distinct = plan
-        blocks = self._local_blocks(tbs, distinct, columns=_BLOCK_COLS + ["poss"])
-        if blocks is None:
+        src = self._postings(tbs, distinct, columns=_POS_COLS)
+        if src is None:
             return [
                 (r.doc_id, r.score)
                 for r in phrase_topk(
@@ -5326,14 +5359,7 @@ class Searcher:
             ]
         kern = _phrase_kernel(phrase_tokens, idf_sum, k, after=after, slop=slop)
         kern.k1, kern.b, kern.avgdl = self.stats["k1"], self.stats["b"], self.stats["avgdl"]
-        kern.tp_cache = self._tp_cache
-        outs = [kern(grp) for _, grp in blocks.groupby("bucket", sort=True)]
-        outs = [o for o in outs if len(o)]
-        if not outs:
-            return []
-        allr = pd.concat(outs, ignore_index=True)
-        allr = allr.sort_values(["score", "doc_id"], ascending=[False, True], kind="mergesort")
-        return [(int(r.doc_id), float(r.score)) for r in allr.head(k).itertuples()]
+        return _kernel_rows(kern(src))
 
     def termvectors(self, doc_id: int, *, term_statistics: bool = False) -> dict:
         """ES ``_termvectors`` (REALTIME semantics — the _source
@@ -5388,7 +5414,7 @@ class Searcher:
     def _sum_doc_freq(self) -> int:
         """Σ doc_freq over the committed dictionary (field_statistics),
         cached per Searcher snapshot."""
-        if getattr(self, "_sdf_cache", None) is not None:
+        if self._sdf_cache is not None:
             return self._sdf_cache
         import glob as _glob
 
@@ -5414,9 +5440,9 @@ class Searcher:
         first_end: int | None = None,
         exclude: list | None = None, pre: int = 0, post: int = 0,
     ) -> list[tuple[int, float]]:
-        """Serving-path span search: the same per-bucket span kernel as
-        ``span_near_topk``, run on the driver with pruned pyarrow block
-        reads — zero Spark jobs (semantics in ``_span_kernel``; clauses
+        """Serving-path span search: the same span kernel as
+        ``span_near_topk``, called once on the driver over the cached
+        postings — zero Spark jobs (semantics in ``_span_kernel``; clauses
         may be span_or lists; first_end/exclude = span_first/span_not)."""
         self._maybe_invalidate()
         plan = _span_plan(self, clauses, exclude_texts=exclude)
@@ -5424,10 +5450,8 @@ class Searcher:
             return []
         kept, ex_present, idf_sum, tbs = plan
         scan_terms = sorted({t for cl in kept for t in cl} | set(ex_present))
-        blocks = self._local_blocks(
-            tbs, scan_terms, columns=_BLOCK_COLS + ["poss"]
-        )
-        if blocks is None:
+        src = self._postings(tbs, scan_terms, columns=_POS_COLS)
+        if src is None:
             return [
                 (r.doc_id, r.score)
                 for r in span_near_topk(
@@ -5444,16 +5468,7 @@ class Searcher:
         kern.k1, kern.b, kern.avgdl = (
             self.stats["k1"], self.stats["b"], self.stats["avgdl"]
         )
-        kern.tp_cache = self._tp_cache
-        outs = [kern(grp) for _, grp in blocks.groupby("bucket", sort=True)]
-        outs = [o for o in outs if len(o)]
-        if not outs:
-            return []
-        allr = pd.concat(outs, ignore_index=True)
-        allr = allr.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        )
-        return [(int(r.doc_id), float(r.score)) for r in allr.head(k).itertuples()]
+        return _kernel_rows(kern(src))
 
     def expand_terms(
         self, kind: str, value: str, *,
@@ -5545,20 +5560,18 @@ class Searcher:
         if plan is None:
             return nomatch("no query term is indexed")
         term_idf, must_terms, not_terms, tbs, scan_terms, should_present, fgroups = plan
-        blocks = self._local_blocks(tbs, scan_terms)
-        if blocks is None:
+        postings = self._postings(tbs, scan_terms)
+        if postings is None:
             raise FileNotFoundError(
                 f"{self.out_dir}/segments is not locally readable — "
                 "explain is a serving-path API"
             )
         found: dict[str, tuple[int, int]] = {}
-        if len(blocks):
-            for term, grp in blocks.groupby("term", sort=True):
-                tp = _tp_for(grp, term, self._tp_cache)
-                idxs = np.nonzero(tp.docs == int(doc_id))[0]
-                if len(idxs):
-                    # keep-first matches the kernel's delta-duplicate rule
-                    found[term] = tp.tf_dl_at(int(idxs[0]))
+        for term, tp in postings.items():
+            idxs = np.nonzero(tp.docs == int(doc_id))[0]
+            if len(idxs):
+                # keep-first matches the kernel's delta-duplicate rule
+                found[term] = tp.tf_dl_at(int(idxs[0]))
         for t in must_terms:
             if t not in found:
                 return nomatch(f"required term {t!r} does not match")
@@ -5626,22 +5639,16 @@ class Searcher:
         kern.k1, kern.b, kern.avgdl = (
             self.stats["k1"], self.stats["b"], self.stats["avgdl"]
         )
-        blocks = self._local_blocks(tbs, distinct, columns=_BLOCK_COLS + ["poss"])
-        if blocks is None:
+        src = self._postings(tbs, distinct, columns=_POS_COLS)
+        if src is None:
             # not locally readable — one distributed freq job instead
-            seg = _seg_union(self, tbs, distinct, _BLOCK_COLS + ["poss"])
+            seg = _seg_union(self, tbs, distinct, _POS_COLS)
             local = seg.groupBy("bucket").applyInPandas(
                 kern, schema="doc_id long, score double"
             )
             val = local.agg(F.sum("score")).collect()[0][0]
             return int(val or 0)
-        kern.tp_cache = self._tp_cache
-        total = 0.0
-        for _, grp in blocks.groupby("bucket", sort=True):
-            res = kern(grp)
-            if len(res):
-                total += float(res["score"].sum())
-        return int(total)
+        return int(float(kern(src)["score"].sum()))
 
     def phrase_suggest(
         self, text: str, *, size: int = 5, max_edits: int = 2,
@@ -5769,8 +5776,10 @@ class Searcher:
         if plan is None:
             return []
         per_field, tbs, scan_terms = plan
-        blocks = self._local_blocks(tbs, scan_terms)
-        if blocks is None:
+        if type not in ("best_fields", "most_fields"):
+            raise ValueError(f"unsupported multi_match type {type!r}")
+        src = self._kernel_input(tbs, scan_terms)
+        if src is None:
             rows = multi_match_topk(
                 self.spark, self, query, fields, k, type=type, prune=prune
             ).collect()
@@ -5778,27 +5787,17 @@ class Searcher:
         if type == "most_fields":
             term_idf = {t: v for _, _, ti, _ in per_field for t, v in ti.items()}
             abt = {t: av for _, _, ti, av in per_field for t in ti}
-            kern = _score_kernel(term_idf, k, prune=prune)
-            kern.k1, kern.b, kern.avgdl = self.stats["k1"], self.stats["b"], self.stats["avgdl"]
-            kern.max_candidates = self.max_candidates
-            kern.avgdl_by_term = abt
-            outs = [kern(grp) for _, grp in blocks.groupby("bucket", sort=True)]
-            outs = [o for o in outs if len(o)]
-            if not outs:
-                return []
-            allr = pd.concat(outs, ignore_index=True).sort_values(
-                ["score", "doc_id"], ascending=[False, True], kind="mergesort"
+            return _score_local(
+                src, term_idf, k, self.stats, prune,
+                max_candidates=self.max_candidates, avgdl_by_term=abt,
             )
-            return [(int(r.doc_id), float(r.score)) for r in allr.head(k).itertuples()]
-        if type != "best_fields":
-            raise ValueError(f"unsupported multi_match type {type!r}")
         rows_per_field = []
         for _fname, _boost, term_idf, avgdl in per_field:
-            f_blocks = blocks[blocks["term"].isin(set(term_idf))]
+            # the field's own terms: cache hits after the read above
             st = dict(self.stats, avgdl=avgdl)
             rows_per_field.append(
                 _score_local(
-                    f_blocks, term_idf, k, st, prune,
+                    self._kernel_input(tbs, sorted(term_idf)), term_idf, k, st, prune,
                     max_candidates=self.max_candidates,
                 )
             )
@@ -5816,7 +5815,7 @@ class Searcher:
         """ES sort + search_after (see ``search_sorted``). Field sorting
         ranks the FULL matching set by docstore columns, so it runs on the
         distributed path regardless of mode — the serving fast path only
-        covers relevance ranking, where per-bucket top-k bounds the work."""
+        covers relevance ranking, where the kernel's top-k bounds the work."""
         df = search_sorted(
             self.spark, self, query, sort, k,
             must=must, must_not=must_not, filters=filters, ranges=ranges,
