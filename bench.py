@@ -294,7 +294,7 @@ def _es_surface_bench(spark, sf_dir: str) -> dict:
             ),
         }
         for name, fn in ops.items():
-            # cold then warm: serving nodes run warm (block LRU populated)
+            # cold then warm: serving nodes run warm (postings cache populated)
             t0 = time.time()
             fn()
             out[f"{name}_cold_sec"] = round(time.time() - t0, 4)

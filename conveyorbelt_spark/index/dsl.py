@@ -1816,21 +1816,17 @@ def _boosting_rows(s: Searcher, spec: dict) -> list[tuple[int, float]]:
     return rows
 
 
-def _fscore_rows(
-    s: Searcher, out_dir: str, spec: dict
-) -> list[tuple[int, float]]:
+def _fscore_rows(s: Searcher, spec: dict) -> list[tuple[int, float]]:
     """ES function_score with field_value_factor: fv = modifier(factor ×
     doc[field]) × weight, combined with the query score by boost_mode.
     Field values resolve through the bucket-pruned docstore for the FULL
     matching set (ranking changes, so top-k can't pre-truncate)."""
-    from .build import lookup_docs
-
     if spec["query"] is None:
         raise UnsupportedDSL("function_score needs a scoring query")
     base = _clause_scores(s, spec["query"])
     if not base:
         return []
-    meta = lookup_docs(out_dir, list(base))
+    meta = s._lookup_docs(list(base))
     mod = _FVF_MODIFIERS[spec["modifier"]]
     rows = []
     for d, sc in base.items():
@@ -2098,22 +2094,19 @@ def _apply_rf_boosts(
     return rows
 
 
-def _script_score_rows(
-    s: Searcher, out_dir: str, spec: dict,
-) -> list[tuple[int, float]]:
+def _script_score_rows(s: Searcher, spec: dict) -> list[tuple[int, float]]:
     """ES script_score: every matching doc re-scored by the painless-
     subset script (``doc['f'].value`` docstore refs, ``params.*``, and
     ``_score`` = the query's BM25 score). Ranking changes post-hoc, so
     the base is the FULL matching set (the compound pattern) + one
     bucket-pruned docstore lookup. Negative scores raise, like ES; the
     body-level ``min_score`` drops docs below the floor."""
-    from .build import lookup_docs
     from .query import eval_doc_script
 
     base = _clause_scores(s, spec["query"])
     if not base:
         return []
-    meta = lookup_docs(out_dir, list(base))
+    meta = s._lookup_docs(list(base))
     rows = []
     floor = spec.get("min_score")
     for d, sc in base.items():
@@ -2293,9 +2286,7 @@ def _rrf_search(spark: SparkSession, out_dir: str, body: dict, s: Searcher) -> d
         {"_id": int(d), "_score": float(sc)} for d, sc in rows[from_ : from_ + size]
     ]
     if body.get("_source"):
-        from .build import lookup_docs
-
-        meta = lookup_docs(out_dir, [h["_id"] for h in hits])
+        meta = s._lookup_docs([h["_id"] for h in hits])
         for h in hits:
             if h["_id"] in meta:
                 h["_source"] = {
@@ -3247,7 +3238,7 @@ def search_body(
 ) -> dict:
     """Execute an ES-shaped request body; returns an ES-shaped response.
     Pass a long-lived ``searcher`` to serve repeated bodies from its warm
-    block / decoded-postings / term caches (it mtime-invalidates itself on
+    decoded-postings / term caches (it mtime-invalidates itself on
     index mutation); omitted, each call builds a cold handle.
 
     A window ``searcher`` (``DailySearcher._window``, with ``out_dir`` its
@@ -3586,9 +3577,9 @@ def search_body(
         elif plan["boosting"] is not None:
             full = _boosting_rows(s, plan["boosting"])
         elif plan["fscore"] is not None:
-            full = _fscore_rows(s, out_dir, plan["fscore"])
+            full = _fscore_rows(s, plan["fscore"])
         elif plan["script_score"] is not None:
-            full = _script_score_rows(s, out_dir, plan["script_score"])
+            full = _script_score_rows(s, plan["script_score"])
         else:
             full = _phrase_prefix_rows(s, out_dir, plan["phrase_prefix"])
         compound_total = len(full)

@@ -259,21 +259,25 @@ class _TermPostings:
         return w
 
 
-class _TpCache:
-    """Byte-accounted LRU over decoded ``_TermPostings``, one entry per
-    (term, with_poss) holding that term's blocks over every bucket — the
-    level above the Searcher's block-frame LRU: a warm driver query reads
-    its postings here and never touches a frame. Decoded postings (int64
-    numpy arrays) are strictly LARGER than the varint frames they came from, so an
-    entry-count bound leaves real memory unbounded (a ~270-term range
-    expansion of stopword-grade terms can hold GBs before a count guard
-    trips, then drop everything at once — a latency cliff). Here every
-    put is charged its ndarray ``.nbytes`` + buffer bytes and the
-    least-recently-used entries are evicted until the budget holds; warm
-    results stay bit-identical through any eviction pattern (entries are
-    pure decode products of immutable frames)."""
+# Byte budget of a Searcher's one serving cache (``_TpCache``)
+SERVING_CACHE_BYTES = 64 << 20
 
-    def __init__(self, budget_bytes: int = 64 << 20):
+
+class _TpCache:
+    """A Searcher's serving cache: byte-accounted LRU over decoded
+    ``_TermPostings``, one entry per (term, with_poss) holding that term's
+    post-tombstone blocks over every bucket and root. A warm driver query
+    reads its postings here and touches no frame; a miss reads the term's
+    frames from Parquet (``Searcher._local_blocks``) and decodes them once.
+    Decoded postings (int64 numpy arrays) are LARGER than the varint frames
+    they came from, and one stopword-grade term can outweigh thousands of
+    rare ones, so the bound is bytes, not entries: every put is charged its
+    ndarray ``.nbytes`` + buffer bytes and the least-recently-used entries
+    are evicted until the budget holds. Warm results stay bit-identical
+    through any eviction pattern (entries are pure decode products of
+    immutable frames)."""
+
+    def __init__(self, budget_bytes: int = SERVING_CACHE_BYTES):
         from collections import OrderedDict
 
         self.budget = budget_bytes
@@ -314,28 +318,11 @@ class _TpCache:
             k, _ = self._d.popitem(last=False)
             self.total -= self._sizes.pop(k, 0)
 
-    def clear(self) -> None:
-        self._d.clear()
-        self._sizes.clear()
-        self.total = 0
-
     def __len__(self) -> int:
         return len(self._d)
 
-
-def _tp_for(grp: pd.DataFrame, term: str, cache: _TpCache) -> _TermPostings:
-    """Decoded postings of ``term`` from its block frame, memoized in
-    ``cache`` (the Searcher's, cleared with its other caches on index
-    mutation) under (term, with_poss). ``grp`` must hold ALL of the term's
-    blocks — a Spark task's one-bucket frame or a doc-range slice is never
-    memoized. Bag and phrase frames differ (positions), hence the second
-    key part."""
-    key = (term, "poss" in grp.columns)
-    tp = cache.get(key)
-    if tp is None:
-        tp = _TermPostings(grp)
-        cache.put(key, tp)
-    return tp
+    def __contains__(self, key) -> bool:
+        return key in self._d
 
 
 def _postings_of(pdf: pd.DataFrame) -> dict[str, _TermPostings]:
@@ -469,10 +456,10 @@ def _score_kernel(
 
     One core, two inputs: a Spark task passes one bucket's block frame
     (``groupBy("bucket").applyInPandas``); the driver passes {term:
-    _TermPostings} resolved over EVERY bucket from the Searcher's tp cache,
-    one call per query. Buckets are disjoint doc-id ranges (a doc lives in
-    exactly one), so filtering is complete in either shape and the top-k
-    of the whole range equals the merge of the per-bucket top-ks.
+    _TermPostings} resolved over EVERY bucket from the Searcher's serving
+    cache, one call per query. Buckets are disjoint doc-id ranges (a doc
+    lives in exactly one), so filtering is complete in either shape and the
+    top-k of the whole range equals the merge of the per-bucket top-ks.
 
     Phase 1 — θ seed: exact single-term scores (restricted to candidates)
     from the highest-idf present term; θ = its k-th best — a LOWER bound of
@@ -835,9 +822,10 @@ def _score_local(
     avgdl_by_term: dict[str, float] | None = None,
 ) -> list[tuple[int, float]]:
     """Run the scoring kernel in-driver, ONE call over the whole doc range:
-    ``src`` is the Searcher's {term: _TermPostings} (from its tp cache,
-    ``Searcher._kernel_input``) or, when ``max_candidates`` may bind, the
-    block frame of every bucket, which the kernel slices by doc range."""
+    ``src`` is the Searcher's {term: _TermPostings} (from its serving
+    cache, ``Searcher._kernel_input``) or, when ``max_candidates`` may
+    bind, the block frame of every bucket read from Parquet, which the
+    kernel slices by doc range."""
     kern = _score_kernel(
         term_idf, k, prune=prune, must_terms=must_terms, not_terms=not_terms,
         should_terms=should_terms, min_should=min_should, filter_groups=filter_groups,
@@ -4936,7 +4924,8 @@ class _Root(NamedTuple):
 
 
 class Searcher:
-    """Reusable query handle: caches stats + dictionary probes.
+    """Reusable query handle: holds the index's stats snapshot and caches
+    dictionary probes, range expansions and decoded postings.
 
     Serving mode (``mode='auto'``, default): when the index is a locally
     readable posix path, a query runs ENTIRELY on the driver — pyarrow
@@ -4964,20 +4953,21 @@ class Searcher:
     Staleness: every index mutation (index_batch, build_index,
     compact_segments) finishes by rewriting stats.json, so its mtime is the
     index's version stamp — each search checks it and, on change, reloads
-    stats and drops the term cache (a long-lived Searcher then scores
-    identically to a fresh ``bm25_topk`` on the same index)."""
+    stats and drops every per-snapshot cache (a long-lived Searcher then
+    scores identically to a fresh ``bm25_topk`` on the same index).
+
+    Memory: the decoded postings live in ONE byte-budgeted LRU,
+    ``_block_cache`` (``_TpCache``, ``SERVING_CACHE_BYTES``); block frames
+    are read from Parquet per miss and never kept."""
 
     def __init__(
         self, spark: SparkSession, out_dir: str, mode: str = "auto",
-        max_candidates: int | None = None, cache_terms: int = 4096,
-        cache_bytes: int = 64 << 20, frozen_stats: dict | None = None,
+        max_candidates: int | None = None, frozen_stats: dict | None = None,
     ):
         self.spark = spark
         self.out_dir = out_dir
         self.mode = mode
         self.max_candidates = max_candidates
-        self.cache_terms = cache_terms
-        self.cache_bytes = cache_bytes
         # frozen_stats = a point-in-time snapshot (see index.pit): the
         # handle pins this visibility state (committed runs, tombstone
         # set, BM25 stats) and NEVER invalidates on stats.json mtime —
@@ -4998,41 +4988,34 @@ class Searcher:
         in local mode."""
         s = cls.__new__(cls)
         s.spark, s.out_dir, s.mode = spark, out_dir, "local"
-        s.max_candidates, s.cache_terms, s.cache_bytes = None, 4096, 64 << 20
+        s.max_candidates = None
         s._frozen, s.stats, s._roots = True, stats, roots
         s._reset_caches()
         return s
 
     def _reset_caches(self) -> None:
-        """Fresh per-snapshot caches (at open and on every stats reload)."""
-        from collections import OrderedDict
-
+        """Fresh per-snapshot caches (at open and on every stats reload:
+        deletes, batches and compactions drop them via the mtime)."""
         self._term_cache: dict[str, dict | None] = {}
-        # (term, with_poss) → post-tombstone block frame; the ES node-
-        # query-cache analogue. Bounded LRU with a BYTE budget (default
-        # 64 MiB, summed over the varint buffer columns) plus a term-count
-        # cap: a stopword-grade term's block frame can be orders of
-        # magnitude bigger than a rare term's, so counting terms alone
-        # leaves the real memory unbounded. Invalidated with the stats
-        # snapshot (deletes/batches/compactions clear it via mtime).
-        self._block_cache: OrderedDict[tuple[str, bool], pd.DataFrame] = OrderedDict()
-        self._block_cache_sizes: dict[tuple[str, bool], int] = {}
-        self._block_cache_total = 0
+        # (term, with_poss) -> decoded post-tombstone _TermPostings over
+        # every bucket and root: the serving cache (the ES node-query-cache
+        # analogue) and the driver kernels' input. perfbench/ reads it by
+        # these names (``_block_cache``, ``_block_cache_total``).
+        self._block_cache = _TpCache()
         # (lo, hi) -> expanded keyword terms; range filters on hot serving
-        # paths re-probe the term_index sidecar otherwise (mtime-invalidated
-        # with everything else)
+        # paths re-probe the term_index sidecar otherwise
         self._range_cache: dict[tuple[str, str], list[str]] = {}
-        # (term, with_poss) -> decoded _TermPostings over every bucket
-        # (the driver kernels' input, one per query): byte-accounted LRU
-        # with its own sibling budget — decoded int64 arrays outweigh the
-        # varint frames the block LRU accounts; only its misses read frames
-        self._tp_cache = _TpCache(self.cache_bytes)
         # Σ doc_freq over the committed dictionary (termvectors)
         self._sdf_cache: int | None = None
         # field -> (value_counts over the WHOLE docstore, total rows):
         # the significant_terms background, one pyarrow column read per
         # field per stats snapshot (mtime-invalidated like the rest)
         self._bg_cache: dict[str, tuple[pd.Series, int]] = {}
+
+    @property
+    def _block_cache_total(self) -> int:
+        """Bytes held by the serving cache."""
+        return self._block_cache.total
 
     @property
     def _dirs(self) -> list[str]:
@@ -5123,103 +5106,50 @@ class Searcher:
             self._bg_cache[field] = (col.dropna().value_counts(), len(col))
         return self._bg_cache[field]
 
-    @staticmethod
-    def _frame_bytes(f: pd.DataFrame) -> int:
-        """Byte accounting for one cached block frame: the varint buffer
-        columns dominate; scalar columns cost ~8 B each per row."""
-        n = len(f)
-        total = 12 * 8 * n  # the scalar block columns
-        for c in ("docs", "tfs", "dls", "poss"):
-            if c in f.columns and n:
-                total += int(sum(len(v) for v in f[c] if v is not None))
-        return total
-
-    def _cache_put(self, key: tuple[str, bool], f: pd.DataFrame) -> None:
-        old = self._block_cache_sizes.pop(key, None)
-        if old is not None:
-            self._block_cache_total -= old
-            self._block_cache.pop(key, None)
-        size = self._frame_bytes(f)
-        self._block_cache[key] = f
-        self._block_cache_sizes[key] = size
-        self._block_cache_total += size
-        while self._block_cache and (
-            self._block_cache_total > self.cache_bytes
-            or len(self._block_cache) > self.cache_terms
-        ):
-            if len(self._block_cache) == 1 and self._block_cache_total <= self.cache_bytes:
-                break
-            k, _ = self._block_cache.popitem(last=False)
-            self._block_cache_total -= self._block_cache_sizes.pop(k, 0)
-
     def _local_blocks(self, tbs, scan_terms, columns=None):
-        """Pruned local block read with the delete snapshot applied and a
-        term-keyed LRU over the block frames: repeat terms skip the parquet
-        read entirely (head terms dominate real query logs). Driver kernels
-        reach it only for tp-cache misses (``_postings``) or a frame the
-        ``max_candidates`` guard slices (``_kernel_input``)."""
-        with_poss = bool(columns) and "poss" in (columns or [])
-        cached: dict[str, pd.DataFrame] = {}
-        missing: list[str] = []
-        for t in scan_terms:
-            key = (t, with_poss)
-            if key in self._block_cache:
-                self._block_cache.move_to_end(key)
-                cached[t] = self._block_cache[key]
-            else:
-                missing.append(t)
-        frames = [f for f in cached.values() if len(f)]
-        if missing:
-            # tbs for ONLY the missing terms (the cached ones' tb dirs need
-            # no touch); callers pass the union, so re-derive from entries
-            ents = {e["term"]: e for e in self._entries(missing)}
-            miss_tbs = sorted({int(e["tb"]) for e in ents.values()}) or list(tbs)
-            parts = []
-            for r in self._roots:
-                b = _read_blocks_local(
-                    r.dir, miss_tbs, missing, columns=columns,
-                    committed=_committed(r.stats), with_run=bool(r.tomb),
-                )
-                if b is None:
-                    if self.mode == "local":
-                        raise FileNotFoundError(f"{r.dir}/segments is not locally readable")
-                    return None  # not locally readable — caller falls back
-                if r.tomb and len(b):
-                    # per root: day indexes reuse run names (full-g0,
-                    # batch_N), so one merged tombstone map would mix days
-                    from .delete import apply_tombstones
+        """Pruned local block read of ``scan_terms`` from Parquet (tb
+        partitions + term row groups, each root's committed runs), each
+        root's tombstones applied before the roots concatenate. Uncached:
+        driver kernels reach it only for serving-cache misses
+        (``_postings``) or a frame the ``max_candidates`` guard slices
+        (``_kernel_input``). None when the index is not locally readable."""
+        # callers may pass the union of a wider query's tbs: re-derive
+        ents = self._entries(list(scan_terms))
+        read_tbs = sorted({int(e["tb"]) for e in ents}) or list(tbs)
+        parts = []
+        for r in self._roots:
+            b = _read_blocks_local(
+                r.dir, read_tbs, scan_terms, columns=columns,
+                committed=_committed(r.stats), with_run=bool(r.tomb),
+            )
+            if b is None:
+                if self.mode == "local":
+                    raise FileNotFoundError(f"{r.dir}/segments is not locally readable")
+                return None  # not locally readable — caller falls back
+            if r.tomb and len(b):
+                # per root: day indexes reuse run names (full-g0,
+                # batch_N), so one merged tombstone map would mix days
+                from .delete import apply_tombstones
 
-                    b = apply_tombstones(b, r.tomb).drop(columns=["run"])
+                b = apply_tombstones(b, r.tomb).drop(columns=["run"])
+            if len(b):
                 parts.append(b)
-            parts = [b for b in parts if len(b)] or parts[:1]
-            blocks = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-            by_term = {t: g for t, g in blocks.groupby("term")} if len(blocks) else {}
-            for t in missing:
-                f = by_term.get(t)
-                if f is None:
-                    f = blocks.iloc[0:0]
-                f = f.reset_index(drop=True)
-                self._cache_put((t, with_poss), f)
-                if len(f):
-                    frames.append(f)
-        if not frames:
-            # preserve the schema of an empty read
-            empty_cached = next(iter(cached.values()), None)
-            if empty_cached is not None:
-                return empty_cached.iloc[0:0]
+        if not parts:
             return pd.DataFrame(columns=list(columns or _BLOCK_COLS))
-        return pd.concat(frames, ignore_index=True)
+        return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
 
     def _postings(
         self, tbs, terms: list[str], columns=None
     ) -> dict[str, _TermPostings] | None:
         """{term: decoded postings over every bucket and root} — what a
-        driver kernel takes. Warm terms come from the tp cache and touch no
-        frame; misses read their frames in one ``_local_blocks`` call and
-        decode once per term. Terms with no live posting drop out. None
-        when the index is not locally readable."""
+        driver kernel takes. Warm terms come from the serving cache and
+        touch no frame; misses read their frames in one ``_local_blocks``
+        call and decode once per term (absent terms are cached empty). The
+        bag and phrase shapes are separate entries (``with_poss``). Terms
+        with no live posting drop out. None when the index is not locally
+        readable."""
         with_poss = bool(columns) and "poss" in columns
-        out = {t: self._tp_cache.get((t, with_poss)) for t in terms}
+        out = {t: self._block_cache.get((t, with_poss)) for t in terms}
         missing = [t for t, tp in out.items() if tp is None]
         if missing:
             blocks = self._local_blocks(tbs, missing, columns)
@@ -5227,14 +5157,15 @@ class Searcher:
                 return None
             by_term = {t: g for t, g in blocks.groupby("term", sort=False)}
             for t in missing:
-                out[t] = _tp_for(by_term.get(t, blocks.iloc[0:0]), t, self._tp_cache)
+                out[t] = _TermPostings(by_term.get(t, blocks.iloc[0:0]))
+                self._block_cache.put((t, with_poss), out[t])
         return {t: tp for t, tp in out.items() if len(tp.docs)}
 
     def _kernel_input(self, tbs, terms: list[str]):
         """The scoring kernel's driver input: cached postings, or the block
-        frame when ``max_candidates`` may bind (Σ dictionary df bounds the
-        live postings), so the kernel can slice it by doc range without
-        decoding whole terms."""
+        frame read from Parquet when ``max_candidates`` may bind (Σ
+        dictionary df bounds the live postings), so the kernel can slice it
+        by doc range without decoding whole terms."""
         cap = self.max_candidates
         if cap and sum(int(e["df"]) for e in self._entries(terms)) > cap:
             return self._local_blocks(tbs, terms)

@@ -4810,7 +4810,7 @@ def q80_sliced_scroll(spark, sf_dir):
         from .index.query import Searcher
 
         s = Searcher(spark, out)  # ONE warm handle: slices 2-4 serve from
-        for i in range(4):        # its block/term caches
+        for i in range(4):        # its postings/term caches
             body = {
                 "query": {"match": {"text": " ".join(BM25_QUERY_TERMS)}},
                 "size": 7, "slice": {"id": i, "max": 4},

@@ -201,3 +201,41 @@ def test_compound_guards(spark, croot):
         }}})
     with pytest.raises(UnsupportedDSL, match="queries"):
         search_body(spark, out, {"query": {"dis_max": {"queries": []}}})
+
+
+def test_warm_docstore_scorers_read_no_stats(spark, croot, monkeypatch):
+    """function_score, script_score and an rrf ``_source`` fetch resolve
+    their docstore rows through the Searcher's stats snapshot: a warm
+    request re-reads no stats.json."""
+    from conveyorbelt_spark.index import build, query
+
+    out, _ = croot
+    s = Searcher(spark, out)
+    bodies = [
+        {"query": {"function_score": {
+            "query": {"match": {"text": "shuffle plan"}},
+            "field_value_factor": {"field": "nc", "factor": 0.1, "modifier": "log1p"},
+        }}, "size": 5},
+        {"query": {"script_score": {
+            "query": {"match": {"text": "spark join"}},
+            "script": {"source": "_score + doc['nc'].value / 1000"},
+        }}, "size": 5},
+        {"retriever": {"rrf": {"retrievers": [
+            {"standard": {"query": {"match": {"text": "spark"}}}},
+            {"standard": {"query": {"match": {"text": "plan"}}}},
+        ]}}, "size": 5, "_source": True},
+    ]
+    first = [search_body(spark, out, b, searcher=s) for b in bodies]
+    assert all(r["hits"]["hits"] for r in first)
+    assert all("_source" in h for h in first[2]["hits"]["hits"])
+    reads: list = []
+    orig = build.load_stats
+
+    def counted(d):
+        reads.append(d)
+        return orig(d)
+
+    monkeypatch.setattr(build, "load_stats", counted)
+    monkeypatch.setattr(query, "load_stats", counted)
+    assert [search_body(spark, out, b, searcher=s) for b in bodies] == first
+    assert reads == []
